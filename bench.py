@@ -85,7 +85,8 @@ def main() -> None:
     from dropbox_duckdb_playground_spark.session import quiesce
 
     warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir) and os.environ.get("SPARK_GRAFT_NO_WARM") != "1":
+    no_warm = os.environ.get("SPARK_GRAFT_NO_WARM") == "1"
+    if os.path.isdir(warm_dir) and not no_warm:
         for fn in qs.values():
             try:
                 run_full(fn(spark, warm_dir))
@@ -105,8 +106,10 @@ def main() -> None:
     # interleaved median held steady; the sf1 tools already run it at
     # median-of-5 per the VOLATILE_REPS doctrine in tools/scaling.py).
     # Methodology note: this changes ONE row's rep count (2 -> 5), not
-    # what is timed or how; disclosed in OPTIMIZATION_r14.md.
-    volatile_reps = {"q105_triangle_count": 5}
+    # what is timed or how; disclosed in OPTIMIZATION_r14.md. Like the
+    # warm passes it is off under SPARK_GRAFT_NO_WARM=1, so that mode
+    # times every row alike; each row's rep count is in the output.
+    volatile_reps = {} if no_warm else {"q105_triangle_count": 5}
     # Fresh session every N queries: a single long-lived local JVM
     # degrades through hundreds of executions (GC/broadcast/shuffle
     # tracker state that quiesce() cannot fully release) — measured up
@@ -115,17 +118,18 @@ def main() -> None:
     # keeps every query's measurement a fresh-session steady state.
     restart_every = int(os.environ.get("SPARK_GRAFT_BENCH_RESTART", "40"))
     timings: dict[str, float] = {}
+    rep_counts: dict[str, int] = {}
     for qi, (name, fn) in enumerate(qs.items()):
         if qi and restart_every and qi % restart_every == 0:
             spark.stop()
             spark = get_spark("bench")
-            if os.path.isdir(warm_dir):
+            if os.path.isdir(warm_dir) and not no_warm:
                 try:  # re-JIT this query's shape before its timed reps
                     run_full(fn(spark, warm_dir))
                 except Exception:
                     pass
                 quiesce(spark)
-        if name in volatile_reps and os.environ.get("SPARK_GRAFT_NO_WARM") != "1":
+        if name in volatile_reps:
             # untimed TARGET-scale warm rep, the other half of the
             # VOLATILE_REPS doctrine (tools/scaling.py): the first
             # execution of this row's shapes in a restarted JVM pays a
@@ -137,7 +141,9 @@ def main() -> None:
                 pass
             quiesce(spark)
         best = -1.0
+        rep_counts[name] = 0
         for _ in range(max(reps, volatile_reps.get(name, 0))):
+            rep_counts[name] += 1
             t0 = time.time()
             try:
                 run_full(fn(spark, sf_dir))
@@ -161,6 +167,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "reps": rep_counts,
         "sf": float(sf) if sf else None,
     }
     if os.environ.get("SPARK_GRAFT_NO_ORACLE") != "1":

@@ -3316,10 +3316,8 @@ def q80_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a corpus-shingle-sized exchange). The digest is the COUNT key,
     so a collision would merge two grams' doc-counts: negligible below
     ~10^8 distinct grams (P < 1e-9 at 64 bits; this corpus has ~30k);
-    a corpus with truly huge gram cardinality widens the key to
-    unhex(md5(...)) — same plan, 16-byte key — via
-    ``SPARK_GRAFT_GRAM_KEY_BITS=128`` (r9 ADVICE: opt-in switch, not a
-    code edit; any value other than 128 keeps the 64-bit key).
+    a corpus with truly huge gram cardinality would widen the key to
+    unhex(md5(...)) — same plan, 16-byte key.
 
     Measured dead-end (r10, tools/decompose_q80b.py, fingerprints
     equal, interleaved 3-rep medians at sf1): replacing the window
@@ -3335,11 +3333,7 @@ def q80_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     escape hatch if gram cardinality fits the broadcast threshold."""
     d = load(spark, sf_dir, "documents")
     sh = D.shingles(d, n=3)  # distinct (doc_id, shingle)
-    if os.environ.get("SPARK_GRAFT_GRAM_KEY_BITS") == "128":
-        gram_key = F.unhex(F.md5("shingle"))
-    else:
-        gram_key = F.xxhash64("shingle")
-    sh = sh.select("doc_id", gram_key.alias("shingle"))
+    sh = sh.select("doc_id", F.xxhash64("shingle").alias("shingle"))
     wdf = sh.withColumn(
         "n_docs", F.count("*").over(Window.partitionBy("shingle"))
     )
@@ -4042,7 +4036,7 @@ def q92_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADJUDICATED STOP (r7): the residual sf0.1 gap vs the oracle is the
     local-mode job floor, not plan fat — the query runs 33 AQE jobs /
     43 stages (measured via statusTracker), ~0.06s/job launch ≈ 2s.
-    Measured-and-rejected this round: SPARK_GRAFT_MATERIALIZE=none
+    Measured-and-rejected this round: skipping both checkpoints
     (4.55s vs 2.58s — the two checkpoints earn their sync jobs) and
     skipping only the edge-table checkpoint (4.92s — per-round
     consumers re-derive the o⋈l join subtree). The final-round join is

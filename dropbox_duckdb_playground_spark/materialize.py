@@ -1,98 +1,52 @@
-"""Pluggable materialization of DataFrame intermediates.
+"""Materialization of DataFrame intermediates: one chokepoint.
 
 Iterative operators (connected components, LSH pair mining, shingle
 inverted indexes, winnowing) must cut lineage and pin an intermediate:
 re-executing the upstream plan once per downstream branch would be
-quadratic, and iterative lineage grows without bound. Round 1 used bare
-``localCheckpoint``, which stores NON-replicated blocks on executors —
-fine on ``local[*]`` where the "cluster" is one JVM, but on a real
-cluster the loss of a single executor makes the truncated lineage
-unrecoverable and fails the job (the reference never hits this because
-DuckDB is single-process; we must, because 100 TB means many executors).
+quadratic, and iterative lineage grows without bound. Bare
+``localCheckpoint`` stores NON-replicated blocks on executors — fine on
+``local[*]`` where the "cluster" is one JVM, but on a real cluster the
+loss of a single executor makes the truncated lineage unrecoverable and
+fails the job.
 
-Strategies:
+So :func:`materialize` picks one of two strategies from the session
+master (:func:`_resolve`):
 
-- ``local``    — ``df.localCheckpoint(eager=True)``. Fastest (in-memory
-                 executor blocks, no replication). Right for ``local[*]``
-                 and for clusters that accept retry-the-job semantics.
-- ``reliable`` — ``df.checkpoint(eager=True)`` into the fault-tolerant
-                 checkpoint directory (HDFS / S3A / GCS). Survives
-                 executor loss; the 100 TB default.
-- ``parquet``  — write + read back a parquet staging directory. Survives
-                 executor AND driver loss, is externally inspectable, and
-                 columnar compression often makes the re-read cheaper
-                 than deserialized block form for wide intermediates.
-- ``none``     — pass-through (debugging, tiny plans).
+- ``local``    — master starts with ``local``:
+                 ``df.localCheckpoint(eager=True)`` (in-memory executor
+                 blocks, no replication, no disk write).
+- ``reliable`` — any other master: ``df.checkpoint(eager=True)`` into
+                 the context's checkpoint directory, which a deploy
+                 points at fault-tolerant storage (HDFS / S3A / GCS) with
+                 ``SparkContext.setCheckpointDir``. Survives executor
+                 loss without any call-site change.
 
-Selection: :func:`set_materialization`, or env var
-``SPARK_GRAFT_MATERIALIZE``. The default ``auto`` resolves per-DataFrame:
-``local`` when the session master starts with ``local``, else
-``reliable`` — i.e. a cluster deployment gets fault tolerance without
-any call-site change.
+Non-iterative branch reuse goes through :func:`pin` instead, which is
+always a lazy ``persist(MEMORY_AND_DISK)``.
 """
 
 from __future__ import annotations
 
 import os
-import uuid
-import weakref
 
 from pyspark.sql import DataFrame
 
-_VALID = ("auto", "local", "reliable", "parquet", "none")
-
-_mode: str | None = None  # None -> read env each call (test-friendly)
-_directory: str | None = None
-
-# Every staging directory materialize() has written under the 'parquet'
-# policy and not yet released, paired with a weakref to the DataFrame
-# reading it. Without tracking, a long-lived session leaks one
-# stage-<uuid> directory per pinned intermediate — unbounded storage
-# growth on a cluster running thousands of queries against an object
-# store. session.quiesce() drains this via clear_staging() between
-# independent queries; the weakref lets clear_staging skip (keep) any
-# path whose DIRECT read-back frame is still reachable (r10 ADVICE).
-# The guard is best-effort only: it tracks the Python wrapper of the
-# read-back DataFrame, not plan-level reachability, so a frame DERIVED
-# from a staged intermediate (sig = materialize(sig); return
-# sig.join(...)) does not keep the path alive once the local wrapper is
-# dropped — see clear_staging's contract for when draining is safe.
-_staged_paths: list[tuple[str, "weakref.ref[DataFrame] | None"]] = []
-
-
-def set_materialization(mode: str, directory: str | None = None) -> None:
-    """Set the process-wide materialization strategy.
-
-    ``directory`` seeds the Spark checkpoint dir (``reliable``) or the
-    staging root (``parquet``). Pass ``mode="auto"`` to restore the
-    default master-based selection."""
-    if mode not in _VALID:
-        raise ValueError(f"materialization mode {mode!r} not in {_VALID}")
-    global _mode, _directory
-    _mode = mode
-    if directory is not None:
-        _directory = directory
-
-
-def get_materialization() -> str:
-    """Current strategy name (may be ``auto``)."""
-    return _mode or os.environ.get("SPARK_GRAFT_MATERIALIZE", "auto")
-
 
 def _resolve(df: DataFrame) -> str:
-    mode = get_materialization()
-    if mode == "auto":
-        master = df.sparkSession.conf.get("spark.master", "local")
-        return "local" if master.startswith("local") else "reliable"
-    return mode
+    """The strategy for ``df``'s session: ``local`` on a local master,
+    else ``reliable``."""
+    master = df.sparkSession.conf.get("spark.master", "local")
+    return "local" if master.startswith("local") else "reliable"
 
 
 def _checkpoint_dir(df: DataFrame) -> str:
+    """The context's checkpoint dir; if the deploy set none, a local
+    fallback under ``SPARK_LOCAL_DIRS`` (or ``/tmp``)."""
     sc = df.sparkSession.sparkContext
     current = sc._jsc.sc().getCheckpointDir()
     if current.isDefined():
         return current.get()
-    base = _directory or os.path.join(
+    base = os.path.join(
         os.environ.get("SPARK_LOCAL_DIRS", "/tmp"), "spark_graft_ckpt"
     )
     sc.setCheckpointDir(base)
@@ -109,162 +63,38 @@ def pin(df: DataFrame) -> DataFrame:
     fault-tolerance story for plain branch reuse — a lost block recomputes
     from lineage instead of failing the job — so ``pin`` is the scale
     path too, not a local-mode shortcut. Reserve :func:`materialize` for
-    iterative state, where unbounded lineage growth forces a real cut.
-
-    Under mode ``none`` it passes through, mode ``parquet`` delegates to
-    :func:`materialize` (externally inspectable staging)."""
-    mode = get_materialization()
-    if mode == "none":
-        return df
-    if mode == "parquet":
-        return materialize(df)
+    iterative state, where unbounded lineage growth forces a real cut."""
     from pyspark.storagelevel import StorageLevel
 
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
-# Attribute stamped on frames materialize() returns — holds the RESOLVED
-# mode string ('local'/'reliable'/'parquet'), not a bare True — so a frame
-# that flows through TWO pinning operators (e.g. one signature table fed
-# to both lsh_candidate_pairs and minhash_estimate_pairs) is checkpointed
-# once, not once per operator, AND a frame pinned under a weaker policy is
-# re-materialized when set_materialization() has since switched the
-# process to a stronger one (stamp 'local' != resolved 'reliable' ->
-# re-checkpoint). Python-object-scoped on purpose: any transformation
-# produces a NEW DataFrame without the stamp, which is exactly when the
-# pin no longer covers the plan. Read through df.__dict__ (never getattr):
-# DataFrame.__getattr__ resolves unknown attributes as COLUMNS, so a table
-# with a column literally named like the stamp must not be reachable.
+# Stamp on frames materialize() returns, so a frame that flows through
+# TWO pinning operators (e.g. one signature table fed to both
+# lsh_candidate_pairs and minhash_estimate_pairs) is checkpointed once,
+# not once per operator. Python-object-scoped on purpose: any
+# transformation produces a NEW DataFrame without the stamp, which is
+# exactly when the pin no longer covers the plan. Read through
+# df.__dict__ (never getattr): DataFrame.__getattr__ resolves unknown
+# attributes as COLUMNS, so a table with a column literally named like
+# the stamp must not be reachable.
 _DONE_ATTR = "_spark_graft_materialized"
-# Companion stamp for the 'parquet' policy only: the staging path the
-# frame reads. Lets materialize() detect a path deleted out from under
-# the stamp (external cleanup, misuse of clear_staging) and repair by
-# re-staging instead of returning a frame that fails at read time.
-_STAGE_PATH_ATTR = "_spark_graft_stage_path"
 
 
 def materialize(df: DataFrame) -> DataFrame:
     """Eagerly compute ``df``, cut its lineage, and return a DataFrame
-    whose re-scan is cheap — via the process-wide strategy (see module
-    docstring). All operators in this package pin intermediates through
-    this single chokepoint so deployments can trade speed vs fault
-    tolerance in one place. Idempotent per returned object AND per
-    resolved mode: passing a frame this function already returned under
-    the same policy is a no-op, so operators can defensively pin their
-    inputs without double-checkpointing a caller-shared intermediate;
-    a frame stamped under a different (e.g. weaker) policy is
-    re-materialized under the current one."""
-    mode = _resolve(df)
-    vanished: str | None = None
-    if df.__dict__.get(_DONE_ATTR) == mode:
-        if mode != "parquet":
-            return df
-        # 'parquet' stamp is only as good as the files behind it: if
-        # the staging dir was deleted (external cleanup, clear_staging
-        # misuse) the frame fails at read time — fall through instead of
-        # trusting the stamp (r10 ADVICE). scheme:// paths can't be
-        # cheaply probed; their liveness is guarded by the weakref in
-        # _staged_paths instead. The fall-through re-stage can only
-        # repair frames whose stamp outlived a plan that does NOT read
-        # the deleted dir (e.g. a stamp copied onto a frame with live
-        # lineage): a frame materialize() itself returned IS a read of
-        # the vanished directory, so its re-stage write replays that
-        # read and fails — we convert that failure into a clear error
-        # below rather than implying repair is possible (r11 ADVICE).
-        stamped = df.__dict__.get(_STAGE_PATH_ATTR)
-        if stamped and ("://" in stamped or os.path.isdir(stamped)):
-            return df
-        vanished = stamped
-    if mode == "none":
+    whose re-scan is cheap, via the strategy the session master selects
+    (see module docstring). All operators in this package pin
+    intermediates through this single chokepoint. Idempotent per
+    returned object: passing a frame this function already returned is
+    a no-op, so operators can defensively pin their inputs without
+    double-checkpointing a caller-shared intermediate."""
+    if df.__dict__.get(_DONE_ATTR):
         return df
-    if mode == "local":
+    if _resolve(df) == "local":
         out = df.localCheckpoint(eager=True)
-    elif mode == "reliable":
+    else:
         _checkpoint_dir(df)
         out = df.checkpoint(eager=True)
-    else:  # parquet staging
-        base = _directory or os.path.join(
-            os.environ.get("SPARK_LOCAL_DIRS", "/tmp"), "spark_graft_stage"
-        )
-        path = os.path.join(base, f"stage-{uuid.uuid4().hex}")
-        try:
-            df.write.mode("overwrite").parquet(path)
-        except Exception as exc:
-            # Only relabel the failure as the vanished-staging error
-            # when the exception actually looks like a missing-path
-            # read failure (r12 ADVICE: an unrelated disk-full or
-            # permission error during the re-stage write must not be
-            # mislabeled as 'staging directory was deleted'); anything
-            # else propagates untouched.
-            missing_markers = (
-                "Path does not exist",
-                "PATH_NOT_FOUND",
-                "FileNotFoundException",
-                "No such file",
-            )
-            looks_missing = isinstance(exc, FileNotFoundError) or any(
-                m in str(exc) for m in missing_markers
-            )
-            if vanished is not None and looks_missing:
-                raise RuntimeError(
-                    f"staging directory {vanished!r} was deleted while a "
-                    "frame reading it was still live (clear_staging "
-                    "called mid-query, or external cleanup); the frame's "
-                    "lineage reads the deleted files, so re-staging "
-                    "cannot repair it — recompute from source (the "
-                    "chained cause below is the authoritative failure)"
-                ) from exc
-            raise
-        out = df.sparkSession.read.parquet(path)
-        out.__dict__[_STAGE_PATH_ATTR] = path
-        _staged_paths.append((path, weakref.ref(out)))
-    out.__dict__[_DONE_ATTR] = mode
+    out.__dict__[_DONE_ATTR] = True
     return out
-
-
-def clear_staging(spark=None) -> int:
-    """Delete every DEAD staging directory this process has written
-    under the ``parquet`` policy and forget them. Returns how many were
-    removed.
-
-    Call only BETWEEN independent queries, after every frame built on a
-    staged intermediate is dead (``session.quiesce()`` sits at exactly
-    such a drain point). The liveness check is best-effort: the weakref
-    tracks only the direct read-back DataFrame wrapper, so it keeps the
-    path while THAT object is reachable — but a frame *derived* from a
-    staged intermediate (the normal operator pattern: ``sig =
-    materialize(sig); return sig.join(...)``) does not hold the wrapper
-    alive, and its staging dir would be deleted here while the derived
-    plan still reads it. The weakref therefore narrows the window for
-    misuse; it does not make mid-query calls safe. Scheme-aware: plain
-    paths go through
-    ``shutil``; ``scheme://`` paths need ``spark`` for the Hadoop
-    FileSystem connector (s3a/gs/hdfs) and are kept if no session is
-    given. A delete that throws (expired credentials, transient object-
-    store error) keeps its path for retry on a later call and never
-    propagates out — staging cleanup must not abort the caller's query
-    loop (r10 ADVICE)."""
-    import shutil
-
-    removed = 0
-    kept: list[tuple[str, weakref.ref | None]] = []
-    for path, ref in _staged_paths:
-        if ref is not None and ref() is not None:
-            kept.append((path, ref))  # frame still live — never delete
-            continue
-        try:
-            if "://" in path:
-                if spark is None:
-                    kept.append((path, ref))
-                    continue
-                jvm = spark.sparkContext._jvm
-                hconf = spark.sparkContext._jsc.hadoopConfiguration()
-                p = jvm.org.apache.hadoop.fs.Path(path)
-                p.getFileSystem(hconf).delete(p, True)
-            else:
-                shutil.rmtree(path, ignore_errors=True)
-            removed += 1
-        except Exception:  # keep for retry; cleanup must never raise
-            kept.append((path, ref))
-    _staged_paths[:] = kept
-    return removed

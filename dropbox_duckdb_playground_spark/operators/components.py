@@ -21,8 +21,8 @@ MapReduce"; Kiveris et al. SoCC'14):
 
 Scale notes: executor-side union-find is an Arrow-batched Pandas UDF
 (never a driver collect); every relabel join is hash-partitioned on the
-node id; each level cuts lineage via the pluggable ``materialize`` policy
-(localCheckpoint on local[*], reliable checkpoint on clusters). On typical graphs
+node id; each level cuts lineage via ``materialize`` (localCheckpoint
+on local[*], reliable checkpoint on clusters). On typical graphs
 one contraction level + one single-task solve replaces ~log(n) join
 rounds — at local[32] that's a 3-4× wall-clock win, on a cluster it
 saves the same number of full-edge-set shuffles.
@@ -409,7 +409,6 @@ def pagerank(
             and (it + 1) % checkpoint_every == 0
             and (it + 1) < iterations
         ):
-            prev = r
             r = materialize(r)
             # The checkpoint FORCED computation, so every per-round
             # cache filled and is now dead (future rounds depend only
@@ -419,14 +418,10 @@ def pagerank(
             # persists between checkpoints CANNOT be dropped earlier:
             # their cache fills only at action time, and unpersisting
             # pre-action would re-expand the shared rank subtree
-            # (3 consumers/round) into exponential recompute. Under
-            # mode 'none' materialize() is a pass-through (same object,
-            # nothing forced, lineage uncut): the caches are still
-            # unfilled AND still live — keep them.
-            if r is not prev:
-                for cached in live_caches:
-                    cached.unpersist(blocking=False)
-                live_caches.clear()
+            # (3 consumers/round) into exponential recompute.
+            for cached in live_caches:
+                cached.unpersist(blocking=False)
+            live_caches.clear()
         elif it + 1 < iterations:
             # LAZY per-round persist (no forcing action): the rank
             # vector has three consumers next round (contribution

@@ -201,10 +201,13 @@ def _bloom_positions(h: Column) -> list[Column]:
 
 def bloom_bits(items: DataFrame, col: str) -> DataFrame:
     """(bit,): the distinct set bit positions for the member set —
-    <= m rows regardless of input size, broadcastable by construction."""
+    <= m rows regardless of input size, broadcastable by construction.
+    NULL values are dropped: in SQL semantics NULL is never a member."""
     hashes = F.array(*_bloom_positions(_phash(F.col(col), "bf:")))
     return (
-        items.select(F.explode(hashes).alias("bit")).distinct()
+        items.where(F.col(col).isNotNull())
+        .select(F.explode(hashes).alias("bit"))
+        .distinct()
     )
 
 
@@ -275,12 +278,15 @@ def bloom_bitmap_from_values(values, salt: str = "bf:") -> list[int]:
     bit-identical to the Spark path: the same md5-derived 60-bit hash
     (``_phash``: conv(substring(md5(salt||v),1,15),16,10)) and the
     same Kirsch-Mitzenmacher double hashing — pinned by a parity test
-    against the DataFrame form."""
+    against the DataFrame form. ``None`` values are skipped, as
+    ``bloom_bits`` drops NULLs."""
     import hashlib
 
     mask = BLOOM_M - 1
     words = [0] * (BLOOM_M // 64)
     for v in values:
+        if v is None:
+            continue
         h = int(
             hashlib.md5((salt + str(v)).encode("utf-8")).hexdigest()[:15], 16
         )

@@ -189,7 +189,7 @@ def winnow_fingerprints(
     built, oracle-verified at sf0.001-0.1, and measured SLOWER in every
     interleaved pair: medians 1.332s (this form) vs 1.624s at sf0.1
     (-22%); still -29% after ruling out scan-split starvation with
-    SPARK_GRAFT_OPEN_COST=65536 (10 splits). The md5 work is identical
+    openCostInBytes=65536 (10 splits). The md5 work is identical
     in both; the difference is HOF lambda evaluation (interpreted,
     per-element boxing + per-gram slice allocations) vs this form's
     codegen'd gram/hash projection streaming over one sorted exchange

@@ -47,8 +47,7 @@ _DEFAULTS = {
     # 1.17s -> 0.71s; whole-catalog sf0.1 total a wash (80.6 vs 80.8s)
     # with no row slower by >0.3s. Object-store deployments where a
     # file OPEN costs real latency can restore the 4 MB default via
-    # SPARK_GRAFT_OPEN_COST — resolved at get_spark() call time (not
-    # module import) by _open_cost() below.
+    # get_spark(extra_conf={"spark.sql.files.openCostInBytes": ...}).
     "spark.sql.files.openCostInBytes": "524288",
     # Broadcast threshold: dimension tables (region/nation/mappers) are
     # small even at sf=100TB fact scale; 64 MB keeps them map-side.
@@ -56,31 +55,6 @@ _DEFAULTS = {
     "spark.ui.enabled": "false",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
 }
-
-
-def _open_cost() -> str:
-    """Resolve ``SPARK_GRAFT_OPEN_COST`` at call time (so setting the env
-    var after import still takes effect) and validate it parses as a
-    non-negative integer byte count; malformed values fall back to the
-    measured 512 KB default with a warning rather than crashing session
-    construction or silently shipping garbage to Spark."""
-    raw = os.environ.get("SPARK_GRAFT_OPEN_COST")
-    if raw is None:
-        return _DEFAULTS["spark.sql.files.openCostInBytes"]
-    try:
-        val = int(raw)
-        if val < 0:
-            raise ValueError
-    except ValueError:
-        import warnings
-
-        warnings.warn(
-            f"SPARK_GRAFT_OPEN_COST={raw!r} is not a non-negative integer; "
-            "using default 524288",
-            stacklevel=3,
-        )
-        return _DEFAULTS["spark.sql.files.openCostInBytes"]
-    return str(val)
 
 
 def s3a_conf(
@@ -203,7 +177,6 @@ def get_spark(
 
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
-    conf["spark.sql.files.openCostInBytes"] = _open_cost()
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     # local mode: driver is the only JVM — give it the memory.
     if master.startswith("local"):
@@ -251,19 +224,13 @@ def quiesce(spark: SparkSession) -> None:
     been garbage-collected.  Measured on the bench suite: without the
     Python ``gc.collect()`` the accumulated shuffle state degraded the
     final query ~4-10× (22.5s vs 6.0s); with it, steady-state timing.
+    The JVM ``System.gc()`` then runs after the Python collection, so
+    the plans whose bindings were just dropped are collectable and
+    ContextCleaner sees them this quiesce instead of the next.
     """
     import gc
 
-    from dropbox_duckdb_playground_spark.materialize import clear_staging
-
     clear_persisted(spark)
     spark.catalog.clearCache()
-    # Python cycle collection FIRST: the finished query's frames often
-    # sit in plan-object reference cycles, and clear_staging() keeps any
-    # staging dir whose frame is still reachable (weakref guard). With
-    # gc.collect() before it, dead frames are truly dead and their dirs
-    # release this quiesce instead of next; frames the caller still
-    # holds keep their files either way (see materialize.clear_staging).
     gc.collect()
-    clear_staging(spark)
     spark.sparkContext._jvm.System.gc()

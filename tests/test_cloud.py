@@ -75,21 +75,20 @@ def test_engine_over_scheme_uri_roundtrip(spark, tmp_path):
     assert sorted(_hadoop_ls(spark, f"file://{tmp_path}")) == ["t1.parquet"]
 
 
-def test_open_cost_env_resolved_at_call_time(monkeypatch):
-    """r9 ADVICE: SPARK_GRAFT_OPEN_COST must be read when the session
-    builder runs (not at module import) and validated as an integer,
-    falling back to the measured 512 KB default on garbage."""
-    import warnings
+def test_open_cost_extra_conf_lands_on_session(spark):
+    """The measured 512 KB scan-split floor is a default, not a pin: an
+    object-store deploy restores Spark's 4 MB through the public
+    ``get_spark(extra_conf=...)`` parameter."""
+    from dropbox_duckdb_playground_spark.session import get_spark
 
-    from dropbox_duckdb_playground_spark.session import _open_cost
-
-    monkeypatch.delenv("SPARK_GRAFT_OPEN_COST", raising=False)
-    assert _open_cost() == "524288"
-    monkeypatch.setenv("SPARK_GRAFT_OPEN_COST", "4194304")
-    assert _open_cost() == "4194304"  # set AFTER import -> still honored
-    for bad in ("4MB", "", "-1", "1.5e6"):
-        monkeypatch.setenv("SPARK_GRAFT_OPEN_COST", bad)
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            assert _open_cost() == "524288"
-        assert any("SPARK_GRAFT_OPEN_COST" in str(x.message) for x in w)
+    key = "spark.sql.files.openCostInBytes"
+    assert spark.conf.get(key) == "524288"
+    try:
+        s = get_spark(
+            "tests",
+            shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
+            extra_conf={key: "4194304"},
+        )
+        assert s.conf.get(key) == "4194304"
+    finally:
+        spark.conf.set(key, "524288")

@@ -1,0 +1,58 @@
+"""README's "Environment knobs" table must match the code (no Spark).
+
+Every ``SPARK_*`` environment variable the package reads has a row, and
+every variable a row names is read somewhere in the package,
+``bench.py`` or ``tools/`` — so a retired knob cannot linger in the docs
+and a new one cannot ship undocumented."""
+
+from __future__ import annotations
+
+import fnmatch
+import re
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = REPO / "dropbox_duckdb_playground_spark"
+
+_READ = re.compile(
+    r"""(?:os\.environ\.get|os\.getenv|os\.environ\.setdefault)\(\s*["'](SPARK_[A-Z0-9_]+)["']"""
+    r"""|os\.environ\[\s*["'](SPARK_[A-Z0-9_]+)["']\s*\]"""
+)
+
+
+def _reads(files) -> set[str]:
+    names: set[str] = set()
+    for f in files:
+        for m in _READ.finditer(f.read_text(encoding="utf-8")):
+            names.add(m.group(1) or m.group(2))
+    return names
+
+
+def _table_names() -> list[str]:
+    text = (REPO / "README.md").read_text(encoding="utf-8")
+    section = text.split("Environment knobs", 1)[1]
+    names: list[str] = []
+    for line in section.splitlines()[1:]:
+        if names and not line.startswith("|"):
+            break
+        if line.startswith("|"):
+            first_cell = line.split("|")[1]
+            names += re.findall(r"`(SPARK_[A-Z0-9_]+\*?)`", first_cell)
+    return names
+
+
+def test_package_env_reads_are_documented():
+    table = _table_names()
+    read = _reads(PACKAGE.rglob("*.py"))
+    assert read, "scanner found no SPARK_* reads in the package"
+    missing = sorted(
+        n for n in read if not any(fnmatch.fnmatchcase(n, t) for t in table)
+    )
+    assert not missing, f"read in the package but not in README: {missing}"
+
+
+def test_documented_knobs_are_read():
+    files = [*PACKAGE.rglob("*.py"), REPO / "bench.py", *(REPO / "tools").glob("*.py")]
+    read = _reads(files)
+    stale = [t for t in _table_names() if not fnmatch.filter(read, t)]
+    assert not stale, f"README knob rows nothing reads: {stale}"

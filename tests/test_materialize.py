@@ -1,7 +1,8 @@
-"""Materialization-policy tests: every strategy must round-trip rows and
-schema exactly, and the policy must auto-select `local` on a local
-master (reliable checkpoint on clusters is the same code path with the
-dir pointed at HDFS/S3A — asserted here via a local checkpoint dir)."""
+"""Materialization tests: both strategies must round-trip rows and
+schema exactly, and the strategy must auto-select `local` on a local
+master. The reliable checkpoint a cluster master selects is forced here
+by patching the master check, with the checkpoint dir pointed at a local
+path (a cluster points it at HDFS/S3A — same code path)."""
 
 from __future__ import annotations
 
@@ -20,10 +21,8 @@ def df(spark):
     )
 
 
-@pytest.fixture(autouse=True)
-def _restore_policy():
-    yield
-    mat.set_materialization("auto")
+def _force(monkeypatch, strategy):
+    monkeypatch.setattr(mat, "_resolve", lambda df: strategy)
 
 
 def _rows(df):
@@ -34,15 +33,15 @@ def test_auto_resolves_local_on_local_master(df):
     assert mat._resolve(df) == "local"
 
 
-def test_local_mode_roundtrip(df):
-    mat.set_materialization("local")
+def test_local_mode_roundtrip(df, monkeypatch):
+    _force(monkeypatch, "local")
     out = mat.materialize(df)
     assert out.schema == df.schema
     assert _rows(out) == _rows(df)
 
 
-def test_reliable_checkpoint(df, tmp_path):
-    mat.set_materialization("reliable", directory=str(tmp_path / "ckpt"))
+def test_reliable_checkpoint(df, tmp_path, monkeypatch):
+    _force(monkeypatch, "reliable")
     # force a fresh checkpoint dir even if a previous test set one
     df.sparkSession.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     out = mat.materialize(df)
@@ -52,29 +51,6 @@ def test_reliable_checkpoint(df, tmp_path):
     assert files, "reliable checkpoint wrote nothing to the checkpoint dir"
 
 
-def test_parquet_staging_roundtrip(df, tmp_path):
-    mat.set_materialization("parquet", directory=str(tmp_path / "stage"))
-    out = mat.materialize(df)
-    # parquet read-back widens nullability (Spark always reads nullable);
-    # names and types must survive exactly
-    assert [(f.name, f.dataType) for f in out.schema.fields] == [
-        (f.name, f.dataType) for f in df.schema.fields
-    ]
-    assert _rows(out) == _rows(df)
-    staged = list((tmp_path / "stage").glob("stage-*"))
-    assert len(staged) == 1
-
-
-def test_none_passthrough(df):
-    mat.set_materialization("none")
-    assert mat.materialize(df) is df
-
-
-def test_invalid_mode_rejected():
-    with pytest.raises(ValueError):
-        mat.set_materialization("bogus")
-
-
 def test_pin_roundtrip_and_cached(df):
     out = mat.pin(df)
     assert _rows(out) == _rows(df)
@@ -82,22 +58,10 @@ def test_pin_roundtrip_and_cached(df):
     out.unpersist()
 
 
-def test_pin_none_passthrough(df):
-    mat.set_materialization("none")
-    out = mat.pin(df)
-    assert out is df
-
-
-def test_pin_parquet_delegates(df, tmp_path):
-    mat.set_materialization("parquet", directory=str(tmp_path / "pinstage"))
-    out = mat.pin(df)
-    assert _rows(out) == _rows(df)
-    assert (tmp_path / "pinstage").exists()
-
-
-def test_operators_run_under_parquet_policy(spark, tmp_path):
+def test_operators_run_under_reliable_strategy(spark, tmp_path, monkeypatch):
     """The CC operator (heaviest materialize consumer) must be
-    strategy-agnostic: same clusters under parquet staging as local."""
+    strategy-agnostic: same clusters under the reliable checkpoint a
+    cluster master selects as under local."""
     from dropbox_duckdb_playground_spark.operators.components import (
         connected_components,
     )
@@ -106,9 +70,11 @@ def test_operators_run_under_parquet_policy(spark, tmp_path):
         [(1, 2), (2, 3), (10, 11), (20, 20)], "src int, dst int"
     )
     expected = _rows(connected_components(edges))
-    mat.set_materialization("parquet", directory=str(tmp_path / "ccstage"))
+    _force(monkeypatch, "reliable")
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "cc"))
     got = _rows(connected_components(edges))
     assert got == expected
+    assert list((tmp_path / "cc").rglob("rdd-*")), "no reliable checkpoint"
 
 
 def test_materialize_idempotent_per_object(df):
@@ -116,7 +82,6 @@ def test_materialize_idempotent_per_object(df):
     unchanged (ADVICE r8: one signature table fed to two pinning
     operators was checkpointed once per operator). Object-scoped on
     purpose: any transformation strips the stamp."""
-    mat.set_materialization("local")
     once = mat.materialize(df)
     again = mat.materialize(once)
     assert again is once, "second materialize() must be a no-op"
@@ -126,191 +91,12 @@ def test_materialize_idempotent_per_object(df):
     assert mat.materialize(derived) is not derived
 
 
-def test_materialize_policy_switch_repins(df, tmp_path):
-    """r9 ADVICE: the stamp holds the RESOLVED mode, so a frame pinned
-    under 'local' is re-materialized when the process switches to
-    'parquet' — it must not silently keep the weaker materialization."""
-    mat.set_materialization("local")
-    local_pinned = mat.materialize(df)
-    assert local_pinned.__dict__[mat._DONE_ATTR] == "local"
-    mat.set_materialization("parquet", directory=str(tmp_path / "switch"))
-    repinned = mat.materialize(local_pinned)
-    assert repinned is not local_pinned, "policy switch must re-materialize"
-    assert repinned.__dict__[mat._DONE_ATTR] == "parquet"
-    assert list((tmp_path / "switch").glob("stage-*")), "no parquet staging"
-    # and idempotent again under the NEW policy
-    assert mat.materialize(repinned) is repinned
-    assert _rows(repinned) == _rows(df)
-
-
-def test_clear_staging_removes_dead_stage_dirs(df, tmp_path):
-    """r10: 'parquet' staging dirs are tracked and released by
-    clear_staging() — a long-lived session must not leak one directory
-    per pinned intermediate."""
-    import gc
-
-    mat._staged_paths.clear()  # drain tracking from earlier tests
-    mat.set_materialization("parquet", directory=str(tmp_path / "leak"))
-    out = mat.materialize(df)
-    assert _rows(out) == _rows(df)
-    staged = list((tmp_path / "leak").glob("stage-*"))
-    assert len(staged) == 1 and staged[0].exists()
-    # r11: while `out` is reachable its staging dir must survive any
-    # number of clear_staging calls — quiesce() can no longer delete
-    # files out from under a live frame (r10 ADVICE medium).
-    assert mat.clear_staging() == 0
-    assert staged[0].exists()
-    assert _rows(out) == _rows(df)  # still readable after the drain
-    del out
-    gc.collect()  # break plan-object cycles so the weakref clears
-    assert mat.clear_staging() == 1
-    assert not staged[0].exists()
-    assert mat.clear_staging() == 0  # forgotten after release
-
-
-def test_quiesce_drains_staging(df, tmp_path):
-    from dropbox_duckdb_playground_spark.session import quiesce
-
-    mat.set_materialization("parquet", directory=str(tmp_path / "qd"))
-    mat.materialize(df).count()
-    assert list((tmp_path / "qd").glob("stage-*"))
-    quiesce(df.sparkSession)
-    assert not list((tmp_path / "qd").glob("stage-*"))
-
-
-def test_clear_staging_keeps_uri_paths_without_session():
-    """scheme:// staging needs a session for the Hadoop connector; with
-    none given the path must be KEPT for a later call, not forgotten."""
-    mat._staged_paths.append(("s3a://bucket/stage-deadbeef", None))
-    try:
-        assert mat.clear_staging() == 0
-        assert ("s3a://bucket/stage-deadbeef", None) in mat._staged_paths
-    finally:
-        mat._staged_paths.clear()
-
-
-def test_clear_staging_never_raises_and_retries(monkeypatch):
-    """r10 ADVICE low: a FileSystem delete that throws must not
-    propagate out of quiesce(); the failing path is kept for retry and
-    the other entries still process."""
-
-    class _BoomSC:
-        @property
-        def _jvm(self):
-            raise RuntimeError("expired credentials")
-
-        _jsc = None
-
-    class _BoomSpark:
-        sparkContext = _BoomSC()
-
-    mat._staged_paths.clear()
-    mat._staged_paths.append(("s3a://bucket/stage-boom", None))
-    try:
-        assert mat.clear_staging(_BoomSpark()) == 0  # swallowed, kept
-        assert ("s3a://bucket/stage-boom", None) in mat._staged_paths
-    finally:
-        mat._staged_paths.clear()
-
-
-def test_materialize_restages_when_staging_dir_vanishes(df, tmp_path):
-    """r10 ADVICE medium: a 'parquet' stamp whose staging dir no longer
-    exists must not be trusted — materialize() falls through and
-    re-stages instead of returning a frame that fails at read time."""
-    import shutil
-
-    mat._staged_paths.clear()
-    mat.set_materialization("parquet", directory=str(tmp_path / "gone"))
-    out = mat.materialize(df)
-    path = out.__dict__[mat._STAGE_PATH_ATTR]
-    assert mat.materialize(out) is out  # stamp honored while dir exists
-    # Simulate a frame with valid lineage whose stamped dir vanished
-    # (e.g. stamp survived a copy but the files were cleaned): the stamp
-    # must NOT be trusted — materialize re-stages under a fresh path.
-    fresh = df.select("*")
-    fresh.__dict__[mat._DONE_ATTR] = "parquet"
-    fresh.__dict__[mat._STAGE_PATH_ATTR] = str(tmp_path / "gone" / "nope")
-    repaired = mat.materialize(fresh)
-    assert repaired is not fresh
-    assert _rows(repaired) == _rows(df)
-    new_path = repaired.__dict__[mat._STAGE_PATH_ATTR]
-    assert new_path != str(tmp_path / "gone" / "nope")
-    shutil.rmtree(path, ignore_errors=True)
-    mat._staged_paths.clear()
-
-
-def test_vanished_dir_on_genuinely_staged_frame_raises_clearly(df, tmp_path):
-    """r11 ADVICE: a frame materialize() itself returned reads its
-    staging dir — if that dir is deleted, re-staging replays the read of
-    the deleted files and cannot repair. The fall-through must surface a
-    clear 'staging dir deleted' error, not a raw Spark read failure."""
-    import shutil
-
-    import pytest
-
-    mat._staged_paths.clear()
-    mat.set_materialization("parquet", directory=str(tmp_path / "stage"))
-    out = mat.materialize(df)
-    path = out.__dict__[mat._STAGE_PATH_ATTR]
-    shutil.rmtree(path)  # delete out from under the live frame
-    with pytest.raises(RuntimeError, match="staging directory .* deleted"):
-        mat.materialize(out)
-    mat._staged_paths.clear()
-
-
 def test_stamp_column_name_collision_safe(spark):
     """r9 ADVICE: a table with a column literally named like the stamp
     must not trip DataFrame.__getattr__ column resolution (getattr on an
     unstamped frame used to return a Column whose truthiness raises)."""
-    mat.set_materialization("local")
     tricky = spark.range(3).withColumn(mat._DONE_ATTR, F.lit("local"))
     out = mat.materialize(tricky)  # must not raise, must actually pin
     assert out is not tricky
-    assert out.__dict__[mat._DONE_ATTR] == "local"
+    assert out.__dict__[mat._DONE_ATTR] is True
     assert _rows(out) == _rows(tricky)
-
-
-def test_vanished_dir_unrelated_write_failure_not_mislabeled(df, tmp_path, monkeypatch):
-    """r12 ADVICE: when the vanished-staging fall-through is active, an
-    UNRELATED re-stage write failure (disk full, permissions) must
-    propagate as itself — only missing-path-looking errors get the
-    'staging directory was deleted' relabel."""
-    import pytest
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    mat._staged_paths.clear()
-    mat.set_materialization("parquet", directory=str(tmp_path / "stage2"))
-    fresh = df.select("*")
-    fresh.__dict__[mat._DONE_ATTR] = "parquet"
-    fresh.__dict__[mat._STAGE_PATH_ATTR] = str(tmp_path / "stage2" / "gone")
-
-    def boom(self, path, *a, **k):
-        raise RuntimeError("simulated disk full during re-stage")
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", boom)
-    with pytest.raises(RuntimeError, match="disk full"):
-        mat.materialize(fresh)
-    mat._staged_paths.clear()
-
-
-def test_vanished_dir_missing_path_failure_still_relabeled(df, tmp_path, monkeypatch):
-    """Companion to the above: a missing-path-looking write failure in
-    the fall-through DOES get the clear vanished-staging relabel, with
-    the original chained as authoritative cause."""
-    import pytest
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    mat._staged_paths.clear()
-    mat.set_materialization("parquet", directory=str(tmp_path / "stage3"))
-    fresh = df.select("*")
-    fresh.__dict__[mat._DONE_ATTR] = "parquet"
-    fresh.__dict__[mat._STAGE_PATH_ATTR] = str(tmp_path / "stage3" / "gone")
-
-    def boom(self, path, *a, **k):
-        raise RuntimeError("Job aborted: Path does not exist: file:/x")
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", boom)
-    with pytest.raises(RuntimeError, match="staging directory .* deleted") as ei:
-        mat.materialize(fresh)
-    assert "Path does not exist" in str(ei.value.__cause__)
-    mat._staged_paths.clear()

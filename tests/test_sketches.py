@@ -21,6 +21,12 @@ def ids(spark):
     return spark.range(5000).select(F.concat(F.lit("k"), "id").alias("v"))
 
 
+@pytest.fixture(scope="module")
+def ids_with_null(spark, ids):
+    # the same keys plus one NULL member
+    return ids.unionByName(spark.createDataFrame([(None,)], "v string"))
+
+
 class TestHLL:
     def test_registers_shape_and_determinism(self, spark, ids):
         r1 = SK.hll_registers(ids, "v", label="a").collect()
@@ -84,20 +90,24 @@ class TestBloom:
         bits = SK.bloom_bits(ids, "v")
         assert bits.count() <= SK.BLOOM_M
 
-    def test_python_bitmap_parity(self, spark, ids):
+    def test_python_bitmap_parity(self, spark, ids, ids_with_null):
         # the driver-side bitmap (pure-Python md5 path) must set
-        # exactly the bits the DataFrame paths set — q95 depends on it
-        values = [r.v for r in ids.collect()]
+        # exactly the bits the DataFrame paths set — q95 depends on it.
+        # A NULL member is never a member: every path skips it.
+        values = [r.v for r in ids_with_null.collect()]
+        assert None in values
         py_words = SK.bloom_bitmap_from_values(values)
-        df_words = SK.bloom_bitmap(SK.bloom_bits(ids, "v"))
+        df_words = SK.bloom_bitmap(SK.bloom_bits(ids_with_null, "v"))
         assert py_words == df_words
+        assert py_words == SK.bloom_bitmap(SK.bloom_bits(ids, "v"))
 
-    def test_agg_bitmap_parity(self, spark, ids):
+    def test_agg_bitmap_parity(self, spark, ids, ids_with_null):
         # the Spark-side packed aggregate (r14 q95 handshake: <= m/64
         # long rows collected instead of the member set) must produce
         # the SAME words as the row-collect and pure-Python paths —
-        # including word 1023 / bit 63 (signed-long re-encode edge)
-        agg_words = SK.bloom_bitmap_agg(SK.bloom_bits(ids, "v"))
+        # including word 1023 / bit 63 (signed-long re-encode edge) and
+        # a NULL member, which sets no bit
+        agg_words = SK.bloom_bitmap_agg(SK.bloom_bits(ids_with_null, "v"))
         row_words = SK.bloom_bitmap(SK.bloom_bits(ids, "v"))
         assert agg_words == row_words
         assert len(agg_words) == SK.BLOOM_M // 64
