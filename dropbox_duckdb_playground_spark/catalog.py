@@ -2158,17 +2158,17 @@ def q57_group_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle; at 100 TB use approx_percentile (t-digest sketch,
     mergeable, constant state).
 
-    r11 named decomposition (tools/decompose_q57.py): the row's cost
-    is the HIGH-CARDINALITY price column — percentile(quantity) 0.45s
-    vs percentile(price) 1.22s of the 1.42s total at sf0.1 (the
+    r11 named decomposition (git show eccd0ba:tools/decompose_q57.py): the
+    row's cost is the HIGH-CARDINALITY price column — percentile(quantity)
+    0.45s vs percentile(price) 1.22s of the 1.42s total at sf0.1 (the
     partial state is a per-group value->count map, input-sized on a
-    ~all-distinct column). A count-table + window-cumsum rewrite
-    (every stage codegen'd, spillable state) produced bit-identical
-    values but LOST 1.31s vs 3.03s at sf0.1 and 1.03s vs 2.71s at
-    sf1 — two extra exchanges + sorts cost more than the map merge at
-    any measured cardinality. Committed form kept; the rewrite stays
-    in the tool as the escape hatch for cardinalities where the
-    unspillable ObjectHashAggregate path would OOM."""
+    ~all-distinct column). A count-table + window-cumsum rewrite (every
+    stage codegen'd, spillable state) produced bit-identical values but LOST
+    1.31s vs 3.03s at sf0.1 and 1.03s vs 2.71s at sf1 — two extra exchanges
+    + sorts cost more than the map merge at any measured cardinality.
+    Committed form kept; the rewrite in that probe is the escape hatch for
+    cardinalities where the unspillable ObjectHashAggregate path would
+    OOM."""
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.round(F.expr("percentile(l_quantity, 0.5)"), 4).alias("median_qty"),
@@ -2907,7 +2907,7 @@ def q73_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     int pair is a narrower exchange key (guide: shuffle fewer bytes,
     move per-row work past the aggregation). Identical strings by
     construction (4-digit years, zero-padded months). Measured r13
-    interleaved A/B at sf0.1: tools/decompose_q73.py."""
+    interleaved A/B at sf0.1: git show eccd0ba:tools/decompose_q73.py."""
     p = F.broadcast(
         load(spark, sf_dir, "part").select("p_partkey", "p_type")
     )
@@ -3311,26 +3311,26 @@ def q80_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     reused exchange.
 
     The gram exchange keys on xxhash64(shingle) with the string DROPPED
-    before the shuffle (r9, tools/decompose_q80.py: paired-delta A/B at
-    sf1, digest wins 5/6 pairs, median +0.13s, and sheds ~20 bytes/row
-    of a corpus-shingle-sized exchange). The digest is the COUNT key,
-    so a collision would merge two grams' doc-counts: negligible below
-    ~10^8 distinct grams (P < 1e-9 at 64 bits; this corpus has ~30k);
+    before the shuffle (r9, git show eccd0ba:tools/decompose_q80.py:
+    paired-delta A/B at sf1, digest wins 5/6 pairs, median +0.13s, and sheds
+    ~20 bytes/row of a corpus-shingle-sized exchange). The digest is the
+    COUNT key, so a collision would merge two grams' doc-counts: negligible
+    below ~10^8 distinct grams (P < 1e-9 at 64 bits; this corpus has ~30k);
     a corpus with truly huge gram cardinality would widen the key to
     unhex(md5(...)) — same plan, 16-byte key.
 
-    Measured dead-end (r10, tools/decompose_q80b.py, fingerprints
-    equal, interleaved 3-rep medians at sf1): replacing the window
-    with a map-side-combined gram aggregate + BROADCAST join — which
-    removes the corpus-shingle-sized gram exchange AND WindowExec's
-    sort — is a dead heat (window 1.917s, join-with-2x-tokenize
-    1.915s, join-over-checkpoint 1.909s): the shingle map that the
-    join forms pay twice (or checkpoint) costs exactly what the
-    exchange+sort they save does, at this corpus's ~180 grams/doc.
-    The window form stays (one tokenize, no broadcast-size
-    assumption); on a network-bound cluster where shuffle bytes
-    dominate CPU, the checkpoint+broadcast form is the documented
-    escape hatch if gram cardinality fits the broadcast threshold."""
+    Measured dead-end (r10, git show eccd0ba:tools/decompose_q80b.py,
+    fingerprints equal, interleaved 3-rep medians at sf1): replacing the
+    window with a map-side-combined gram aggregate + BROADCAST join — which
+    removes the corpus-shingle-sized gram exchange AND WindowExec's sort —
+    is a dead heat (window 1.917s, join-with-2x-tokenize 1.915s,
+    join-over-checkpoint 1.909s): the shingle map that the join forms pay
+    twice (or checkpoint) costs exactly what the exchange+sort they save
+    does, at this corpus's ~180 grams/doc. The window form stays (one
+    tokenize, no broadcast-size assumption); on a network-bound cluster
+    where shuffle bytes dominate CPU, the checkpoint+broadcast form is the
+    documented escape hatch if gram cardinality fits the broadcast
+    threshold."""
     d = load(spark, sf_dir, "documents")
     sh = D.shingles(d, n=3)  # distinct (doc_id, shingle)
     sh = sh.select("doc_id", F.xxhash64("shingle").alias("shingle"))
@@ -4121,21 +4121,21 @@ def q93_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     because every degree of freedom (portable md5 hash, integer-shift
     register sums, one final double division) is pinned (sketches.py).
 
-    ADJUDICATED STOP (r7, tools/decompose_q93.py at sf0.1, this plan
-    1.45s on the measuring host): the r6 "md5 parity tax" hypothesis
-    is REFUTED as the dominant term — xxhash64 registers save only
-    0.12s of 1.64s (7%), and a hash-FREE variant still ran 1.41s, so
-    ~95% of the gap vs the 0.10s oracle is local-mode stage floor
-    (AQE runs each of the ~14 stages as its own job), not portable
-    hashing. Four restructures were then measured and all LOST:
-    single 3x-exploded scan with struct tags 4.8s; posexplode + long
-    tags 4.8s; + fan_out 2.2s; exact-counts-from-bucket-counts (drop
-    pin, sum cnt off the register table) 2.1-2.5s — the bucket table's
-    two consumers (broadcast + aggregate) do not share an exchange, so
-    that "saving" recomputes or re-syncs the whole distinct subtree.
-    The r6 shape below (3 concurrent single-column distinct branches,
-    pinned union, registers + exact counts as its two consumers) is
-    the measured optimum; at real SF the floor amortizes away."""
+    ADJUDICATED STOP (r7, git show eccd0ba:tools/decompose_q93.py at sf0.1,
+    this plan 1.45s on the measuring host): the r6 "md5 parity tax"
+    hypothesis is REFUTED as the dominant term — xxhash64 registers save
+    only 0.12s of 1.64s (7%), and a hash-FREE variant still ran 1.41s, so
+    ~95% of the gap vs the 0.10s oracle is local-mode stage floor (AQE runs
+    each of the ~14 stages as its own job), not portable hashing. Four
+    restructures were then measured and all LOST: single 3x-exploded scan
+    with struct tags 4.8s; posexplode + long tags 4.8s; + fan_out 2.2s;
+    exact-counts-from-bucket-counts (drop pin, sum cnt off the register
+    table) 2.1-2.5s — the bucket table's two consumers (broadcast +
+    aggregate) do not share an exchange, so that "saving" recomputes or
+    re-syncs the whole distinct subtree. The r6 shape below (3 concurrent
+    single-column distinct branches, pinned union, registers + exact counts
+    as its two consumers) is the measured optimum; at real SF the floor
+    amortizes away."""
     from dropbox_duckdb_playground_spark.operators import sketches as SK
 
     li = load(spark, sf_dir, "lineitem")
@@ -4325,11 +4325,11 @@ def q95_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     Because the driver payload is bounded by construction, the old
     dual regime (capped literal path / join-form fallback) collapses
     to this single scale-safe form. Interleaved A/B
-    (tools/decompose_q95.py): sf0.1 wash (1.924 vs 2.03 median-of-5),
-    sf1 new form wins EVERY pair (2.062 -> 1.969 median-of-3),
+    (git show eccd0ba:tools/decompose_q95.py): sf0.1 wash (1.924 vs 2.03
+    median-of-5), sf1 new form wins EVERY pair (2.062 -> 1.969 median-of-3),
     identical output digests at sf0.001/0.1/1 every run. Caching the
-    exploded TRAIN shingle table was measured SLOWER than recomputing
-    the narrow pipeline (same result as q120's digest-reuse note: a
+    exploded TRAIN shingle table was measured SLOWER than recomputing the
+    narrow pipeline (same result as q120's digest-reuse note: a
     2M-string-row cache re-scan loses to compute)."""
     from dropbox_duckdb_playground_spark.materialize import materialize
     from dropbox_duckdb_playground_spark.operators import sketches as SK
@@ -4633,15 +4633,14 @@ def q100_curation_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUNDED features, so the policy bit can't flip on float noise
     between engines.
 
-    r11 (tools/decompose_q100.py): quality features, the per-doc
-    distinct-3-gram count, and lang now come from ONE tokenize pass
-    (the shared text.quality_feature_exprs / QUALITY_BLEND_NUM helpers
-    that quality_score itself builds from — no inline copy to diverge,
-    r11 ADVICE), and the verdict assembles with a single LEFT JOIN
-    against the corpus-unique-owner counts — the committed form
-    tokenized documents three times and joined three frames on
-    doc_id. Interleaved median-of-3: 1.19s vs 1.76s at sf0.1, 2.35s
-    vs 2.73s at sf1, fingerprints equal."""
+    r11 (git show eccd0ba:tools/decompose_q100.py): quality features, the
+    per-doc distinct-3-gram count, and lang now come from ONE tokenize pass
+    (the shared text.quality_feature_exprs / QUALITY_BLEND_NUM helpers that
+    quality_score itself builds from — no inline copy to diverge, r11
+    ADVICE), and the verdict assembles with a single LEFT JOIN against the
+    corpus-unique-owner counts — the committed form tokenized documents
+    three times and joined three frames on doc_id. Interleaved median-of-3:
+    1.19s vs 1.76s at sf0.1, 2.35s vs 2.73s at sf1, fingerprints equal."""
     from pyspark.ml.feature import NGram
 
     d = load(spark, sf_dir, "documents")
@@ -4811,16 +4810,15 @@ def q101_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed by the identical expression in both engines, so the
     equality join on the min is bit-exact.
 
-    r11 decomposition (tools/decompose_tpch.py): the selective part
-    filter (mid-size LARGE, ~5% of parts) is pushed BELOW the ps
-    distinct via ``part_filter`` — the distinct exchange and the md5
-    key derivations run on the surviving pairs only. Interleaved
-    median-of-3 at sf0.1: 0.705s vs 1.067s unpruned; statistical tie
-    at sf1 (1.66s vs 1.60s, wide reps) — kept for the sf0.1 win plus
-    strictly smaller exchange. A groupBy-min + broadcast-join
-    replacement for the window was also probed and LOST at both SFs
-    (1.149s sf0.1 / 1.913s sf1 — regional computes twice); window
-    kept."""
+    r11 decomposition (git show eccd0ba:tools/decompose_tpch.py): the
+    selective part filter (mid-size LARGE, ~5% of parts) is pushed BELOW the
+    ps distinct via ``part_filter`` — the distinct exchange and the md5 key
+    derivations run on the surviving pairs only. Interleaved median-of-3 at
+    sf0.1: 0.705s vs 1.067s unpruned; statistical tie at sf1 (1.66s vs
+    1.60s, wide reps) — kept for the sf0.1 win plus strictly smaller
+    exchange. A groupBy-min + broadcast-join replacement for the window was
+    also probed and LOST at both SFs (1.149s sf0.1 / 1.913s sf1 — regional
+    computes twice); window kept."""
     p = F.broadcast(
         load(spark, sf_dir, "part")
         .filter(F.col("p_size").between(10, 20) & (F.col("p_type") == "LARGE"))
@@ -4899,16 +4897,15 @@ def q102_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     double comparison is computed from those identical decimals in the
     same expression order in both engines.
 
-    r11 measured dead end (tools/decompose_tpch.py): pushing the
-    region-2 supplier filter BELOW the ps distinct (broadcast-join the
-    pair projection before the exchange) tied at sf0.1 (1.414s vs
-    1.401s) and LOST at sf1 (2.456s vs 2.108s, interleaved median-of-
-    3): the distinct's map-side partial aggregate already collapses
-    the exchange to ~unique-pairs-per-partition, so the per-row
-    broadcast probe over all of lineitem costs more than the 5x
-    smaller shuffle saves. Unpruned form kept; the pushed variant
-    stays in the decompose tool if a network-bound cluster ever flips
-    the tradeoff."""
+    r11 measured dead end (git show eccd0ba:tools/decompose_tpch.py):
+    pushing the region-2 supplier filter BELOW the ps distinct
+    (broadcast-join the pair projection before the exchange) tied at sf0.1
+    (1.414s vs 1.401s) and LOST at sf1 (2.456s vs 2.108s, interleaved
+    median-of-3): the distinct's map-side partial aggregate already
+    collapses the exchange to ~unique-pairs-per-partition, so the per-row
+    broadcast probe over all of lineitem costs more than the 5x smaller
+    shuffle saves. Unpruned form kept; the pushed variant is in that probe
+    if a network-bound cluster ever flips the tradeoff."""
     ps = _ps_spark(spark, sf_dir)
     p = F.broadcast(load(spark, sf_dir, "part").select("p_partkey", "p_retailprice"))
     n = load(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 2)
@@ -4979,17 +4976,17 @@ def q103_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-unit money pattern), so the threshold bit is exact in both
     engines with whole-stage-codegen integer sums.
 
-    r11 decomposition (tools/decompose_tpch.py): the ps DISTINCT and
-    the 1997 shipped aggregate are FUSED — one widget-filtered
+    r11 decomposition (git show eccd0ba:tools/decompose_tpch.py): the ps
+    DISTINCT and the 1997 shipped aggregate are FUSED — one widget-filtered
     lineitem scan, one (partkey, suppkey) exchange producing both the
-    distinct pair (the groupBy keys) and a CONDITIONAL 1997 quantity
-    sum, with `qty_c IS NOT NULL` standing in for the inner join
-    against `shipped`. Replaces two full lineitem scans + a merge join
-    of two aggregates (the r8 form, itself a measured 5.4s -> 2.0s fix
-    over AQE's broadcast choice). Interleaved median-of-3 at sf0.1:
-    0.755s fused vs 1.838s two-scan. Restricting the aggregate to
-    widget pairs first is sound: per-(partkey,suppkey) group sums are
-    unchanged by dropping other keys' rows."""
+    distinct pair (the groupBy keys) and a CONDITIONAL 1997 quantity sum,
+    with `qty_c IS NOT NULL` standing in for the inner join against
+    `shipped`. Replaces two full lineitem scans + a merge join of two
+    aggregates (the r8 form, itself a measured 5.4s -> 2.0s fix over AQE's
+    broadcast choice). Interleaved median-of-3 at sf0.1: 0.755s fused vs
+    1.838s two-scan. Restricting the aggregate to widget pairs first is
+    sound: per-(partkey,suppkey) group sums are unchanged by dropping other
+    keys' rows."""
     p = F.broadcast(
         load(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%widget%"))
@@ -5131,17 +5128,17 @@ def q105_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped form (groupBy l_orderkey + sort_array(collect_set) +
     posexplode x slice — one narrow exchange, no join) was adopted
     briefly in r13 after winning every interleaved pair at sf0.1
-    (3.746s -> 3.330s median-of-5, tools/decompose_q105b.py) and then
-    REVERTED on the sf1 evidence: at 1000x the grouped form lost every
-    interleaved pair by ~50% (selfjoin 21.2/21.9/24.5s vs grouped
-    48.2/33.5/30.6s, identical n_triangles=18,844,880 every rep,
-    tools/decompose_q105_sf1edge.py, recorded in OPTIMIZATION_r13.md)
-    — the
-    ObjectHashAggregate + double-Generate chain scales worse than the
-    join, whose build side stops fitting a broadcast exactly when the
-    data grows, i.e. the join form self-tunes with scale and the
-    grouped form does not.  Scale wins per the round brief; the sf0.1
-    delta (~0.4s) was floor-level."""
+    (3.746s -> 3.330s median-of-5,
+    git show eccd0ba:tools/decompose_q105b.py) and then REVERTED on the sf1
+    evidence: at 1000x the grouped form lost every interleaved pair by ~50%
+    (selfjoin 21.2/21.9/24.5s vs grouped 48.2/33.5/30.6s, identical
+    n_triangles=18,844,880 every rep,
+    git show eccd0ba:tools/decompose_q105_sf1edge.py, recorded in
+    OPTIMIZATION_r13.md) — the ObjectHashAggregate + double-Generate chain
+    scales worse than the join, whose build side stops fitting a broadcast
+    exactly when the data grows, i.e. the join form self-tunes with scale
+    and the grouped form does not.  Scale wins per the round brief; the
+    sf0.1 delta (~0.4s) was floor-level."""
     from dropbox_duckdb_playground_spark.operators.components import triangle_count
 
     l1 = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")

@@ -322,14 +322,15 @@ def pagerank(
       for eager per-round materialize/persist variants — job-launch
       overhead, not recomputation, was the cost.
 
-    Prelude job count adjudicated (r12, tools/decompose_q92.py): the
-    three serial driver actions (edge materialize, node materialize,
-    count) resist the q62/q107 concurrent-staging trick — overlapping
-    an independent nodes-distinct count under the edge materialize
-    measured SLOWER (2.49s vs 2.27s committed at sf0.1; lazy-persist
-    of the node table slower still at 2.80s) because the count job is
-    real executor work contending for the same cores, unlike the
-    driver-literal centroid writes that made q62/q107's overlap free.
+    Prelude job count adjudicated (r12,
+    git show eccd0ba:tools/decompose_q92.py): the three serial driver
+    actions (edge materialize, node materialize, count) resist the q62/q107
+    concurrent-staging trick — overlapping an independent nodes-distinct
+    count under the edge materialize measured SLOWER (2.49s vs 2.27s
+    committed at sf0.1; lazy-persist of the node table slower still at
+    2.80s) because the count job is real executor work contending for the
+    same cores, unlike the driver-literal centroid writes that made
+    q62/q107's overlap free.
 
     ``checkpoint_every`` (default None) exists for LARGE iteration
     counts, where an unrolled plan's analysis/planning time grows with
@@ -480,9 +481,9 @@ def triangle_count(
       longer needs a materialize barrier in this regime because its
       ONLY consumer is the adjacency aggregate (the regime gate counts
       the checkpointed `und` instead — same number, orientation is
-      1:1). Measured r13 (tools/decompose_q105.py, interleaved): one
-      fewer checkpoint job, one fewer broadcast; plan diff in
-      plans/r13/q105_triangle_count_{before,after}.txt.
+      1:1). Measured r13 (git show eccd0ba:tools/decompose_q105.py,
+      interleaved): one fewer checkpoint job, one fewer broadcast; plan diff
+      in plans/r13/q105_triangle_count_{before,after}.txt.
     - m > limit: enumerate the wedge stream and probe it against the
       oriented edge set (shuffle_hash). At sf1 (12M edges on the
       saturated co-purchase graph) the intersect form measured 83s vs

@@ -24,9 +24,9 @@ def _concurrent_writes(*thunks) -> None:
     """Submit independent staging writes from threads so Spark's
     scheduler runs them as parallel jobs — the codebook/centroid side
     is driver-literal data, so it never contends with the corpus scan.
-    Measured r11 (tools/decompose_q62q107.py, interleaved median-of-3):
-    q62 2.19s -> 2.09s at sf0.1, 2.52s -> 2.13s at sf1, with the
-    explicit-schema read-back below.
+    Measured r11 (git show eccd0ba:tools/decompose_q62q107.py, interleaved
+    median-of-3): q62 2.19s -> 2.09s at sf0.1, 2.52s -> 2.13s at sf1, with
+    the explicit-schema read-back below.
 
     Threads are ``pyspark.InheritableThread`` so the parent's Spark
     local properties (job group/tags, scheduler pool) propagate to the
@@ -373,7 +373,7 @@ def ivf_assign(
         # writes are independent jobs — submit them concurrently, and
         # read back with the known schema (skips the footer-inference
         # job): measured 2.52s -> 2.13s on q62 at sf1 (r11,
-        # tools/decompose_q62q107.py).
+        # git show eccd0ba:tools/decompose_q62q107.py).
         a_path = os.path.join(stage_dir, "assigned")
         _concurrent_writes(
             lambda: vecs.mapInPandas(assign_lists, schema=out_schema)

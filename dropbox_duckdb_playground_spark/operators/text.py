@@ -183,20 +183,19 @@ def winnow_fingerprints(
     one partition-by-doc shuffle; at 100 TB docs are the natural partition
     unit so the shuffle is one pass and windows never cross executors.
 
-    r13 measured dead end (tools/decompose_q42.py): an array-HOF form
-    (transform/slice/array_min computing hs + window-mins in-row, no
-    posexplode, no Window — plan shape 1 Exchange vs this form's 2) was
-    built, oracle-verified at sf0.001-0.1, and measured SLOWER in every
-    interleaved pair: medians 1.332s (this form) vs 1.624s at sf0.1
+    r13 measured dead end (git show eccd0ba:tools/decompose_q42.py): an
+    array-HOF form (transform/slice/array_min computing hs + window-mins
+    in-row, no posexplode, no Window — plan shape 1 Exchange vs this form's
+    2) was built, oracle-verified at sf0.001-0.1, and measured SLOWER in
+    every interleaved pair: medians 1.332s (this form) vs 1.624s at sf0.1
     (-22%); still -29% after ruling out scan-split starvation with
-    openCostInBytes=65536 (10 splits). The md5 work is identical
-    in both; the difference is HOF lambda evaluation (interpreted,
-    per-element boxing + per-gram slice allocations) vs this form's
-    codegen'd gram/hash projection streaming over one sorted exchange
-    whose shuffle files sit in page cache. The HOF shape only pays off
-    when the token exchange crosses a real network AND the scan itself
-    carries the parallelism — revisit on a cluster profile, keep the
-    window form here."""
+    openCostInBytes=65536 (10 splits). The md5 work is identical in both;
+    the difference is HOF lambda evaluation (interpreted, per-element boxing
+    + per-gram slice allocations) vs this form's codegen'd gram/hash
+    projection streaming over one sorted exchange whose shuffle files sit in
+    page cache. The HOF shape only pays off when the token exchange crosses
+    a real network AND the scan itself carries the parallelism — revisit on
+    a cluster profile, keep the window form here."""
     from pyspark.sql import Window
 
     from dropbox_duckdb_playground_spark.operators.dedup import _hex60
@@ -522,17 +521,17 @@ def bm25_topk(
     (broadcast-join prune BEFORE the window), and the final top-k
     window shuffles just those rows, pre-trimmed by WindowGroupLimit.
 
-    Barrier choice re-adjudicated r9 (tools/decompose_q106.py,
-    interleaved at sf1): eager checkpoint 2.18s, lazy pin/persist
-    1.77s, no barrier 1.84s. pin ~= none is the tell — the lazy cache
-    races its concurrent consumer stages (each computes uncached
-    partitions), so it buys NO single-execution guarantee; the
-    checkpoint's ~0.4s wall premium is the price of tokenizing the
-    corpus exactly once, kept for cluster CPU honesty. Stage account
-    at sf1: tf build 0.83s lazy (+0.16s checkpoint tax), downstream
-    consumers 1.19s — a multi-stage launch floor (vocab agg, qterms
-    sort-limit, n_docs count, broadcast scoring, top-k window) of the
-    q93 class, flat in data size.
+    Barrier choice re-adjudicated r9
+    (git show eccd0ba:tools/decompose_q106.py, interleaved at sf1): eager
+    checkpoint 2.18s, lazy pin/persist 1.77s, no barrier 1.84s. pin ~= none
+    is the tell — the lazy cache races its concurrent consumer stages (each
+    computes uncached partitions), so it buys NO single-execution guarantee;
+    the checkpoint's ~0.4s wall premium is the price of tokenizing the
+    corpus exactly once, kept for cluster CPU honesty. Stage account at sf1:
+    tf build 0.83s lazy (+0.16s checkpoint tax), downstream consumers 1.19s
+    — a multi-stage launch floor (vocab agg, qterms sort-limit, n_docs
+    count, broadcast scoring, top-k window) of the q93 class, flat in data
+    size.
 
     The materialize barrier is load-bearing: tf feeds its consumers
     (the vocab aggregate and scoring; tot_dl rode tf directly until
@@ -572,12 +571,12 @@ def bm25_topk(
     # ONE vocabulary pass over tf serves BOTH tot_dl and the query
     # terms: sum(cnt) over the vocab aggregate == sum(tf) == total
     # token mass, so the former full-tf tot_dl pass is gone (r9,
-    # tools/decompose_q106.py: wall wash at sf1 — median delta +0.03s,
-    # rows identical — but one fewer corpus-sized pass over the pinned
-    # tf table; at 100 TB that pass is a full re-read of the
+    # git show eccd0ba:tools/decompose_q106.py: wall wash at sf1 — median
+    # delta +0.03s, rows identical — but one fewer corpus-sized pass over
+    # the pinned tf table; at 100 TB that pass is a full re-read of the
     # checkpoint, while the vocab table it replaces it with is
-    # vocabulary-sized). The vocab materialize is a tiny barrier (one
-    # row per distinct term) pinning its two consumers.
+    # vocabulary-sized). The vocab materialize is a tiny barrier (one row
+    # per distinct term) pinning its two consumers.
     vocab = materialize(
         tf.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cnt"))
     )

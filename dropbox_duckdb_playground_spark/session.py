@@ -161,9 +161,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so tests and bench share one code path; on a real cluster pass
-    ``master=None`` with ``spark.master`` preset in spark-submit.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS,4]`` (env, default 32
+    cores) so tests and bench share one code path; ``$SPARK_MASTER``
+    overrides it. The 4 is the task attempt limit: plain ``local[N]``
+    gives each task one attempt, so one transient task failure fails
+    the query, while a cluster retries it (``spark.task.maxFailures``
+    defaults to 4 there). On a real cluster pass ``master=None`` with
+    ``spark.master`` preset in spark-submit.
 
     ``storage_conf`` is an object-store profile from :func:`s3a_conf` /
     :func:`gcs_conf` (or any ``spark.hadoop.*`` dict); pass it at build
@@ -171,7 +175,7 @@ def get_spark(
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
-        master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+        master = os.environ.get("SPARK_MASTER", f"local[{cpus},4]")
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 

@@ -97,7 +97,8 @@ def test_blocking_pairs_plan_reads_checkpoint_not_parquet(spark, tmp_path):
 def test_q89_window_exchange_keys_on_digest(spark):
     """r9: the chunk-dedup first-occurrence window must shuffle the
     16-byte md5 digest, never the raw 20-token chunk string (the 100 TB
-    exchange shape; tools/decompose_q89.py for the measurements)."""
+    exchange shape; git show eccd0ba:tools/decompose_q89.py for the
+    measurements)."""
     import re
 
     import __spark_entry__ as entrymod
@@ -118,7 +119,7 @@ def test_q80_window_exchange_keys_on_long_digest(spark):
     """r9: the boilerplate gram window must shuffle the xxhash64 long
     (#...L in the partitioning expr), not the gram string — the digest
     won 5/6 paired sf1 runs and sheds ~20B/row of a corpus-sized
-    exchange (tools/decompose_q80.py)."""
+    exchange (git show eccd0ba:tools/decompose_q80.py)."""
     import re
 
     import __spark_entry__ as entrymod

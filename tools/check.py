@@ -21,6 +21,7 @@ ANSI divide-by-zero), so this mirror now reproduces both:
    query must be green under BOTH; this mirror checks the strict one.
 
 Usage: python tools/check.py [sf_dir] [query ...]
+(an unknown query name exits 2 before any query runs)
 """
 
 from __future__ import annotations
@@ -69,14 +70,24 @@ def frame_digest(pdf) -> tuple[int, list[str], str]:
     return len(pdf), cols, h
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
+def unknown_names(names, qs) -> list[str]:
+    """The names not in the catalog ``qs``, in the order given."""
+    return [n for n in names if n not in qs]
+
+
+def main(argv: list[str] | None = None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
+    sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
+    only = set(argv[1:])
 
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    unknown = unknown_names(argv[1:], qs)
+    if unknown:
+        print(f"unknown query names: {' '.join(unknown)}", file=sys.stderr)
+        return 2
 
     from dropbox_duckdb_playground_spark.session import get_spark
 

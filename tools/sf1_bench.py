@@ -6,7 +6,7 @@ SAME code+data read 83.3s / 107.0s / 148.2s total while the oracle
 column moved 463 -> 538 -> 448s, and per-query ratios (q106 9.67x vs
 SCALING's same-night slope-1.14 reading) became committed noise. The
 fix is the protocol every decision-grade comparison in this repo
-already uses (tools/decompose_*.py): INTERLEAVE the engines per query
+already uses (tools/ab.py): INTERLEAVE the engines per query
 — spark rep, oracle rep, spark rep, oracle rep, all within a ~minute
 window — so host drift hits both columns of a row equally, and commit
 the MEDIAN of reps plus the spread and a loadavg stamp so a reader can
