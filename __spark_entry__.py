@@ -1,12 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Catalog adapter: ``entry``, ``queries`` and ``oracle_sql``.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
-
-All query definitions live in ``dropbox_duckdb_playground_spark.catalog``;
-this module is the thin adapter the driver imports.
+``entry(spark)`` is the flagship query, a smoke check. ``queries()`` maps
+each catalog name to its builder, ``oracle_sql()`` to the matching DuckDB
+SQL. The tests, ``bench.py`` and ``tools/`` import this module; all query
+definitions live in ``dropbox_duckdb_playground_spark.catalog``.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS,4] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ..., "oracle_total_warm": ...,
+"queries": {name: sec}, "reps": {name: n}, "sf": ..., "oracle_total_warm": ...,
 "oracle_queries": {...}}.
 
 Each query is executed to a noop-datasource write: unlike count(), which
@@ -100,16 +100,6 @@ def main() -> None:
     # already a second (warm) run — best-of-2 measures the same
     # steady-state throughput on both sides.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    # Volatile rows get extra reps, same best-of aggregator (r13 VERDICT
-    # #3: q105's single best-of-2 cell swung 3.3-6.9s across same-code
-    # runs — 31% of the r13 round-over-round delta — while its
-    # interleaved median held steady; the sf1 tools already run it at
-    # median-of-5 per the VOLATILE_REPS doctrine in tools/scaling.py).
-    # Methodology note: this changes ONE row's rep count (2 -> 5), not
-    # what is timed or how; disclosed in OPTIMIZATION_r14.md. Like the
-    # warm passes it is off under SPARK_GRAFT_NO_WARM=1, so that mode
-    # times every row alike; each row's rep count is in the output.
-    volatile_reps = {} if no_warm else {"q105_triangle_count": 5}
     # Fresh session every N queries: a single long-lived local JVM
     # degrades through hundreds of executions (GC/broadcast/shuffle
     # tracker state that quiesce() cannot fully release) — measured up
@@ -129,20 +119,9 @@ def main() -> None:
                 except Exception:
                     pass
                 quiesce(spark)
-        if name in volatile_reps:
-            # untimed TARGET-scale warm rep, the other half of the
-            # VOLATILE_REPS doctrine (tools/scaling.py): the first
-            # execution of this row's shapes in a restarted JVM pays a
-            # one-time codegen/heap cost the sf0.001 warm pass does not
-            # compile away, and the bench restarts every 40 queries.
-            try:
-                run_full(fn(spark, sf_dir))
-            except Exception:
-                pass
-            quiesce(spark)
         best = -1.0
         rep_counts[name] = 0
-        for _ in range(max(reps, volatile_reps.get(name, 0))):
+        for _ in range(reps):
             rep_counts[name] += 1
             t0 = time.time()
             try:
@@ -175,39 +154,7 @@ def main() -> None:
         out["oracle_total_cold"] = cold
         out["oracle_total_warm"] = warm
         out["oracle_queries"] = per_q
-    line = json.dumps(out)
-    # Durable copy first: the stdout line rides on megabytes of Spark
-    # progress noise and has been truncated in captured tails before.
-    out_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT", os.path.join(REPO, "bench_out.json")
-    )
-    try:
-        with open(out_path, "w") as fh:
-            fh.write(line + "\n")
-    except OSError as exc:
-        sys.stderr.write(f"bench: could not write {out_path}: {exc}\n")
-    sys.stderr.flush()
-    sys.stdout.flush()
-    print(line, flush=True)
-    # The driver records only the LAST 2000 bytes of stdout; the full
-    # line above is ~7KB, so it can never survive that window whole.
-    # Emit a second, compact line (<2KB: short query keys, 2dp) as the
-    # FINAL stdout line so the captured tail always ends with one
-    # complete, parseable JSON document. Full payload: bench_out.json.
-    compact = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": out["unit"],
-        "sf": out["sf"],
-        "queries": {
-            name.split("_", 1)[0]: round(t, 2) for name, t in timings.items()
-        },
-        "full": os.path.basename(out_path),
-    }
-    for k in ("oracle_total_cold", "oracle_total_warm"):
-        if k in out:
-            compact[k] = out[k]
-    print(json.dumps(compact, separators=(",", ":")), flush=True)
+    print(json.dumps(out), flush=True)
 
 
 if __name__ == "__main__":

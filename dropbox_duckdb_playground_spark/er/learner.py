@@ -59,16 +59,6 @@ class MatchModel:
         return MatchModel(d["fields"], d["weights"], d["bias"])
 
 
-def pair_features(pairs: DataFrame, fields: list[str]) -> DataFrame:
-    """Per-field similarity features for a_/b_-prefixed pair columns —
-    computed by the executors, identical to inference-time features."""
-    cols = [
-        norm_levenshtein_sim(F.col(f"a_{f}"), F.col(f"b_{f}")).alias(f"sim_{f}")
-        for f in fields
-    ]
-    return pairs.select(*cols)
-
-
 def train_matcher(
     labeled_pairs: DataFrame,
     fields: list[str],

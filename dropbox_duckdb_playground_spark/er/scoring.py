@@ -33,15 +33,6 @@ def norm_levenshtein_sim(a: Column, b: Column) -> Column:
     return F.when(a.isNull() | b.isNull(), 0.0).otherwise(sim)
 
 
-def token_jaccard_sim(a: Column, b: Column) -> Column:
-    ta, tb = F.split(a, r"\s+"), F.split(b, r"\s+")
-    inter = F.size(F.array_intersect(ta, tb))
-    union = F.size(F.array_union(ta, tb))
-    return F.when(a.isNull() | b.isNull() | (union == 0), 0.0).otherwise(
-        inter / union
-    )
-
-
 def expression_scorer(
     fields: Sequence[str],
     weights: Sequence[float] | None = None,

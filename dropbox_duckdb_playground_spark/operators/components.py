@@ -483,7 +483,7 @@ def triangle_count(
       the checkpointed `und` instead — same number, orientation is
       1:1). Measured r13 (git show eccd0ba:tools/decompose_q105.py,
       interleaved): one fewer checkpoint job, one fewer broadcast; plan diff
-      in plans/r13/q105_triangle_count_{before,after}.txt.
+      in git show cfe44d3:plans/r13/q105_triangle_count_{before,after}.txt.
     - m > limit: enumerate the wedge stream and probe it against the
       oriented edge set (shuffle_hash). At sf1 (12M edges on the
       saturated co-purchase graph) the intersect form measured 83s vs

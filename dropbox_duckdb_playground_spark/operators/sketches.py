@@ -266,7 +266,13 @@ def bloom_bitmap_agg(bits: DataFrame) -> list[int]:
     )
     words = [0] * (BLOOM_M // 64)
     for r in rows:
-        words[r["w"]] = r["word"] & ((1 << 64) - 1)
+        w = r["w"]
+        # a negative index would silently alias the top words
+        if not 0 <= w < len(words):
+            raise ValueError(
+                f"bloom bit out of range: word index {w} not in [0, {len(words)})"
+            )
+        words[w] = r["word"] & ((1 << 64) - 1)
     return words
 
 

@@ -152,6 +152,23 @@ def apply_storage_conf(spark: SparkSession, conf: dict[str, str]) -> None:
             spark.conf.set(k, v)
 
 
+def spark_cpus() -> int:
+    """Core count for the default local master and shuffle partitions:
+    ``$SPARK_GRAFT_CPUS`` when set, else ``os.cpu_count()``. A value
+    that is not an integer >= 1 raises ``ValueError`` naming the
+    variable."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return os.cpu_count() or 1
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be an integer >= 1, got {raw!r}")
+    return cpus
+
+
 def get_spark(
     app_name: str = "dropbox_duckdb_playground_spark",
     master: str | None = None,
@@ -161,19 +178,19 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS,4]`` (env, default 32
-    cores) so tests and bench share one code path; ``$SPARK_MASTER``
-    overrides it. The 4 is the task attempt limit: plain ``local[N]``
-    gives each task one attempt, so one transient task failure fails
-    the query, while a cluster retries it (``spark.task.maxFailures``
-    defaults to 4 there). On a real cluster pass ``master=None`` with
+    ``master`` defaults to ``local[N,4]`` with N from :func:`spark_cpus`
+    (``$SPARK_GRAFT_CPUS``, else the host's core count) so tests and
+    bench share one code path; ``$SPARK_MASTER`` overrides it. The 4 is
+    the task attempt limit: plain ``local[N]`` gives each task one
+    attempt, so one transient task failure fails the query, while a
+    cluster retries it (``spark.task.maxFailures`` defaults to 4 there). On a real cluster pass ``master=None`` with
     ``spark.master`` preset in spark-submit.
 
     ``storage_conf`` is an object-store profile from :func:`s3a_conf` /
     :func:`gcs_conf` (or any ``spark.hadoop.*`` dict); pass it at build
     time so commit-protocol classes are in force for every write.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = spark_cpus()
     if master is None:
         master = os.environ.get("SPARK_MASTER", f"local[{cpus},4]")
     if shuffle_partitions is None:

@@ -1,4 +1,5 @@
-"""README's "Environment knobs" table must match the code (no Spark).
+"""README's "Environment knobs" table must match the code, and knob
+values are validated (no Spark).
 
 Every ``SPARK_*`` environment variable the package reads has a row, and
 every variable a row names is read somewhere in the package,
@@ -8,8 +9,11 @@ and a new one cannot ship undocumented."""
 from __future__ import annotations
 
 import fnmatch
+import os
 import re
 from pathlib import Path
+
+import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "dropbox_duckdb_playground_spark"
@@ -56,3 +60,21 @@ def test_documented_knobs_are_read():
     read = _reads(files)
     stale = [t for t in _table_names() if not fnmatch.filter(read, t)]
     assert not stale, f"README knob rows nothing reads: {stale}"
+
+
+def test_spark_cpus_defaults_to_host_and_rejects_bad_values(monkeypatch):
+    """Checked before any session starts, so a bad value fails fast with
+    the variable's name instead of int()'s bare message."""
+    from dropbox_duckdb_playground_spark.session import get_spark, spark_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert spark_cpus() == os.cpu_count()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert spark_cpus() == 3
+    for bad in ("four", "0", "-2", "", "2.5"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            spark_cpus()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "four")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        get_spark("bad-knob")

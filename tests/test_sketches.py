@@ -117,6 +117,12 @@ class TestBloom:
         )
         w = SK.bloom_bitmap_agg(edge)
         assert w[0] == 1 << 63 and w[-1] == 1 << 63
+        # out-of-range bits: -1 would alias word 1023 / bit 63, BLOOM_M
+        # would index past the end; both name the offending word index
+        for bad, word in ((-1, -1), (SK.BLOOM_M, SK.BLOOM_M // 64)):
+            edge = spark.createDataFrame([(bad,)], "bit int")
+            with pytest.raises(ValueError, match=f"word index {word} "):
+                SK.bloom_bitmap_agg(edge)
 
     def test_python_bitmap_contains(self, spark, ids):
         values = [r.v for r in ids.collect()]

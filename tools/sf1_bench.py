@@ -18,11 +18,9 @@ Per query:
      DuckDB subprocess run on the same sf1 parquet (page cache shared)
   3. record per-engine rep lists, medians, relative spread, loadavg
 
-Excluded rows mirror tools/sf1_mirror.EXCLUDED (output-size-infeasible
-uncapped baselines), recorded in the artifact with their reasons.
+Prints ONE JSON line on stdout; per-row progress goes to stderr.
 
-Usage: python tools/sf1_bench.py [out_json] [query ...]
-       (default SF1_BENCH.json, all SF1_QUERIES)
+Usage: python tools/sf1_bench.py [query ...]   (default: all SF1_QUERIES)
 """
 
 from __future__ import annotations
@@ -39,7 +37,6 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from scaling import SF1_QUERIES, VOLATILE_REPS  # noqa: E402
-from sf1_mirror import EXCLUDED  # noqa: E402
 
 SF1 = os.path.join(REPO, "testdata_sf1")
 SF_WARM = "/root/testdata/sf0.01"
@@ -124,15 +121,12 @@ def oracle_row_fields(
 
 def main() -> int:
     args = sys.argv[1:]
-    out_json = os.path.join(REPO, "SF1_BENCH.json")
-    if args and args[0].endswith(".json"):
-        out_json = args.pop(0)
     import __spark_entry__ as entrymod
     from dropbox_duckdb_playground_spark.session import get_spark, quiesce
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    names = [q for q in SF1_QUERIES if q in qs and q not in EXCLUDED]
+    names = [q for q in SF1_QUERIES if q in qs]
     if args:
         names = [q for q in names if q in args]
 
@@ -206,6 +200,7 @@ def main() -> int:
         print(
             f"SF1BENCH {name}: spark={row.get('spark')} "
             f"oracle={row.get('oracle')} load={row['loadavg']}",
+            file=sys.stderr,
             flush=True,
         )
 
@@ -233,15 +228,8 @@ def main() -> int:
         ),
         "n_compared": len(both),
         "queries": results,
-        "excluded": EXCLUDED,
     }
-    with open(out_json, "w") as fh:
-        json.dump(artifact, fh, indent=1)
-    print(
-        f"\nSF1_BENCH: spark {artifact['spark_total']}s vs oracle "
-        f"{artifact['oracle_total']}s -> {artifact['ratio']}x "
-        f"({len(both)} rows) -> {out_json}"
-    )
+    print(json.dumps(artifact), flush=True)
     return 0
 
 

@@ -4,16 +4,14 @@ wall-clock budget per query so one infeasible oracle cannot sink the
 batch.
 
 The candidate set is tools/scaling.SF1_QUERIES (every row that gets an
-sf1 timing in SCALING.md). Queries whose sf1 RESULT SET is itself
-quadratic in the corpus (the uncapped pair miners on the saturated
-shingle space — the same data-inherent explosion SCALING.md documents)
-are excluded up front with the reason printed into the transcript: the
-mirror's collect-and-hash protocol cannot hold 10^8 pair rows on the
-driver, and the value being verified (pair semantics) is already
-hash-checked at three smaller scale factors.
+sf1 timing in SCALING.md), the uncapped pair miners included: on the
+gen_sf1 corpus their full result sets are small enough to collect and
+hash (at most ~35k rows). If a corpus regeneration re-saturates the
+shingle space, re-probe the oracle COUNTs before running them here.
 
-Usage: python tools/sf1_mirror.py [out_txt] [query ...]
-       (default: all SF1_QUERIES minus the documented exclusions)
+The transcript goes to stdout only; redirect it to keep it.
+
+Usage: python tools/sf1_mirror.py [query ...]   (default: all SF1_QUERIES)
 """
 
 from __future__ import annotations
@@ -32,43 +30,15 @@ from scaling import SF1_QUERIES  # noqa: E402  (tools/ on path)
 SF1 = os.path.join(REPO, "testdata_sf1")
 PER_QUERY_TIMEOUT = 1200  # seconds, both engines + hash compare
 
-# EXCLUDED is empty since r13. History: through r12 the five uncapped
-# pair miners (q25/q26/q35/q67/q38) were excluded as
-# output-size-infeasible (~10^8 pair rows on the pre-r12 SATURATED
-# 31-token shingle space). The r12 gen_sf1 Heaps-law hapax tail
-# de-saturated that space, and an r13 probe of the oracles on the
-# regenerated corpus measured the actual full-sf1 result sets at
-# q25: 35,114 rows/2.5s, q26: 1/13.2s, q35: 12,397/2.1s,
-# q67: 35,114/2.1s, q38: 11,373/22.1s — all trivially
-# collect-and-hashable, so the miners now run in the mirror like
-# every other row (first full-sf1 hash greens recorded in
-# CORRECTNESS_LOCAL_r13_sf1_miners.txt). If a future corpus regen
-# re-saturates the shingle space, re-probe the oracle COUNTs before
-# re-adding exclusions here.
-EXCLUDED: dict[str, str] = {}
-
 
 def main() -> int:
-    args = [a for a in sys.argv[1:]]
-    out_txt = args[0] if args and args[0].endswith(".txt") else os.path.join(
-        REPO, "CORRECTNESS_LOCAL_r5_sf1.txt"
-    )
-    names = args[1:] if args and args[0].endswith(".txt") else args
-    if not names:
-        names = [q for q in SF1_QUERIES]
-    lines = [
-        "sf1 (1000x, testdata_sf1) correctness mirror — tools/sf1_mirror.py",
-        f"per-query timeout {PER_QUERY_TIMEOUT}s; protocol = tools/check.py",
-        "(row count + column names + order-insensitive value hash vs DuckDB)",
-        "",
-    ]
-    n_pass = n_fail = n_skip = 0
+    names = sys.argv[1:] or list(SF1_QUERIES)
+    print("sf1 (1000x, testdata_sf1) correctness mirror — tools/sf1_mirror.py")
+    print(f"per-query timeout {PER_QUERY_TIMEOUT}s; protocol = tools/check.py")
+    print("(row count + column names + order-insensitive value hash vs DuckDB)")
+    print()
+    n_pass = n_fail = 0
     for q in names:
-        if q in EXCLUDED:
-            lines.append(f"SKIP {q}: {EXCLUDED[q]}")
-            n_skip += 1
-            print(lines[-1], flush=True)
-            continue
         t0 = time.time()
         try:
             r = subprocess.run(
@@ -85,20 +55,17 @@ def main() -> int:
             ]
             dt = time.time() - t0
             if tail:
-                lines.append(f"{tail[-1]}  [{dt:.0f}s total both engines]")
+                line = f"{tail[-1]}  [{dt:.0f}s total both engines]"
                 n_pass += tail[-1].startswith("PASS")
                 n_fail += tail[-1].startswith("FAIL")
             else:
-                lines.append(f"FAIL {q}: no verdict line (rc={r.returncode}) [{dt:.0f}s]")
+                line = f"FAIL {q}: no verdict line (rc={r.returncode}) [{dt:.0f}s]"
                 n_fail += 1
         except subprocess.TimeoutExpired:
-            lines.append(f"TIMEOUT {q}: exceeded {PER_QUERY_TIMEOUT}s")
+            line = f"TIMEOUT {q}: exceeded {PER_QUERY_TIMEOUT}s"
             n_fail += 1
-        print(lines[-1], flush=True)
-    lines += ["", f"{n_pass} pass, {n_fail} fail, {n_skip} excluded (documented above)"]
-    with open(out_txt, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    print(f"wrote {out_txt}")
+        print(line, flush=True)
+    print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 
 
