@@ -25,6 +25,14 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+# Fresh session every N queries: a single long-lived local JVM degrades
+# through hundreds of executions (GC/broadcast/shuffle tracker state that
+# quiesce() cannot fully release) — measured up to ~1.8x inflation on
+# heavy queries late in the run, the same effect tools/scaling.py
+# corrects in its sf1 batch. Restarting keeps every query's measurement
+# a fresh-session steady state.
+_RESTART_EVERY = 40
+
 ORACLE_TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -100,17 +108,10 @@ def main() -> None:
     # already a second (warm) run — best-of-2 measures the same
     # steady-state throughput on both sides.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    # Fresh session every N queries: a single long-lived local JVM
-    # degrades through hundreds of executions (GC/broadcast/shuffle
-    # tracker state that quiesce() cannot fully release) — measured up
-    # to ~1.8x inflation on heavy queries late in the run, the same
-    # effect tools/scaling.py corrects in its sf1 batch. Restarting
-    # keeps every query's measurement a fresh-session steady state.
-    restart_every = int(os.environ.get("SPARK_GRAFT_BENCH_RESTART", "40"))
     timings: dict[str, float] = {}
     rep_counts: dict[str, int] = {}
     for qi, (name, fn) in enumerate(qs.items()):
-        if qi and restart_every and qi % restart_every == 0:
+        if qi and qi % _RESTART_EVERY == 0:
             spark.stop()
             spark = get_spark("bench")
             if os.path.isdir(warm_dir) and not no_warm:

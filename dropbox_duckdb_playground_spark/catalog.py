@@ -29,7 +29,12 @@ from dropbox_duckdb_playground_spark.operators.relational import (
     fan_out,
     multi_left_join,
 )
-from dropbox_duckdb_playground_spark.operators.similarity import cosine_topk
+from dropbox_duckdb_playground_spark.operators.similarity import (
+    _FIXED_POINT,
+    _ITERS,
+    cosine_topk,
+    train_cap,
+)
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -2348,13 +2353,6 @@ def q61_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_STAGE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "spark-warehouse",
-    "ivf_stage",
-)
-
-
 def _cos_sql(a: str, b: str, dim: int = 64) -> str:
     """DuckDB cosine between two list columns, float64 element math —
     the exact formula the q28 oracle already proved Spark-parity for."""
@@ -2373,13 +2371,112 @@ def _cos_sql(a: str, b: str, dim: int = 64) -> str:
     return f"{dot} / ({na} * {nb})"
 
 
+def _kmeans_oracle(k: int, m: int, dsub: int, spherical: bool, seed: int = 42) -> str:
+    """DuckDB CTE chain that redoes ``similarity.kmeans_train`` over
+    ``embeddings`` step for step, then assigns the corpus. It defines
+    ``cent(sub, list_id, centroid)``, the trained centroids of each of
+    the ``m`` subspaces of ``dsub`` dims (IVF: m=1, spherical), and
+    ``assign(cand_id, c_vec, sub, list_id)``, each vector's nearest
+    centroid per subspace. The caller appends its own CTEs after a
+    comma, then its SELECT.
+
+    The sample is the first ``train_cap(k)`` rows in
+    ``md5('<seed>:' || id)``, id order (``similarity.hash_sample``).
+    Distances are ``list_aggregate`` folds in index order, centroid
+    sums are exact BIGINT sums of ``floor(x * 2^30)``, and the
+    ``_ITERS`` iterations unroll as CTEs the way ``_pagerank_oracle`` unrolls
+    PageRank. The sample and each centroid table are MATERIALIZED:
+    inlined, DuckDB re-expands the whole chain at every reference."""
+    assert m == 1 or not spherical, "spherical training is whole-vector"
+    fix = repr(_FIXED_POINT)
+    if spherical:
+        samp = """
+    s1 AS (SELECT id, rn, v, sqrt(list_aggregate(
+             list_transform(v, e -> e * e), 'sum')) AS nrm FROM s0),
+    samp AS MATERIALIZED (
+      SELECT id, row_number() OVER (ORDER BY rn) AS rn, 0 AS sub,
+             list_transform(v, e -> e / nrm) AS x
+      FROM s1 WHERE nrm > 0),"""
+        score = "x[i] * c.centroid[i]"
+        order = "DESC"
+    else:
+        samp = f"""
+    samp AS MATERIALIZED (
+      SELECT id, rn, t.sub, v[t.sub * {dsub} + 1 : (t.sub + 1) * {dsub}] AS x
+      FROM s0, (SELECT CAST(range AS INTEGER) AS sub FROM range({m})) t),"""
+        score = "(x[i] - c.centroid[i]) * (x[i] - c.centroid[i])"
+        order = "ASC"
+
+    def nearest(key: str, x: str) -> str:
+        fold = score.replace("x[i]", x)
+        return (
+            f"row_number() OVER (PARTITION BY {key} ORDER BY list_aggregate("
+            f"list_transform(range(1, {dsub + 1}), i -> {fold}), 'sum') {order},"
+            f" c.list_id) = 1"
+        )
+
+    parts = [
+        f"""
+    WITH s0 AS (
+      SELECT vec_id AS id,
+             list_transform(embedding, e -> CAST(e AS DOUBLE)) AS v,
+             row_number() OVER (
+               ORDER BY md5('{seed}:' || CAST(vec_id AS VARCHAR)), vec_id) AS rn
+      FROM embeddings QUALIFY rn <= {train_cap(k)}),{samp}
+    fx AS MATERIALIZED (
+      SELECT id, sub, generate_subscripts(x, 1) AS i,
+             CAST(floor(unnest(x) * {fix}) AS BIGINT) AS f FROM samp),
+    c0 AS MATERIALIZED (
+      SELECT sub, CAST(rn - 1 AS INTEGER) AS list_id, x AS centroid
+      FROM samp WHERE rn <= {k})"""
+    ]
+    for t in range(1, _ITERS + 1):
+        p = t - 1
+        # per-component exact sum -> float64 mean (Euclidean) or sum
+        # (spherical, scaled to unit norm below; a zero sum keeps c{p})
+        mean = f"CAST(CAST(sum(f.f) AS BIGINT) AS DOUBLE) / {fix}"
+        if not spherical:
+            mean += " / count(*)"
+        upd = f"""
+        SELECT sub, list_id, list(mean ORDER BY i) AS centroid FROM (
+          SELECT a.sub, a.list_id, f.i, {mean} AS mean
+          FROM a{t} a JOIN fx f ON a.id = f.id AND a.sub = f.sub
+          GROUP BY a.sub, a.list_id, f.i)
+        GROUP BY sub, list_id"""
+        if spherical:
+            upd = f"""
+        SELECT sub, list_id,
+               CASE WHEN nrm > 0 THEN list_transform(centroid, e -> e / nrm)
+               END AS centroid
+        FROM (SELECT sub, list_id, centroid, sqrt(list_aggregate(
+                list_transform(centroid, e -> e * e), 'sum')) AS nrm
+              FROM ({upd}))"""
+        parts.append(
+            f""",
+    a{t} AS (
+      SELECT s.id, s.sub, c.list_id FROM samp s JOIN c{p} c ON s.sub = c.sub
+      QUALIFY {nearest("s.id, s.sub", "s.x[i]")}),
+    c{t} AS MATERIALIZED (
+      SELECT p.sub, p.list_id, coalesce(n.centroid, p.centroid) AS centroid
+      FROM c{p} p LEFT JOIN ({upd}) n
+        ON p.sub = n.sub AND p.list_id = n.list_id)"""
+        )
+    parts.append(
+        f""",
+    cent AS (SELECT sub, list_id, centroid FROM c{_ITERS}),
+    assign AS (
+      SELECT vec_id AS cand_id, embedding AS c_vec, c.sub, c.list_id
+      FROM embeddings CROSS JOIN cent c
+      QUALIFY {nearest(
+          "vec_id, embedding, c.sub",
+          f"CAST(embedding[c.sub * {dsub} + i] AS DOUBLE)")})"""
+    )
+    return "".join(parts)
+
+
 @register(
     "q62_ivf_ann",
-    oracle=f"""
-    WITH cent AS (
-      SELECT list_id, centroid FROM '{_IVF_STAGE}/centroids/*.parquet'),
-    assign AS (
-      SELECT cand_id, c_vec, list_id FROM '{_IVF_STAGE}/assigned/*.parquet'),
+    oracle=_kmeans_oracle(8, m=1, dsub=64, spherical=True) + f""",
     q AS (SELECT vec_id AS query_id, embedding AS q_vec
           FROM embeddings WHERE vec_id < 10),
     probed AS (
@@ -2407,12 +2504,11 @@ def q62_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate nearest neighbors over the embeddings table —
     the 100 TB similarity-search path (k-means coarse quantizer +
     probed posting lists, operators/similarity.ivf_ann_topk). The
-    k-means itself is not SQL-expressible, but the query STAGES its
-    deterministic quantizer output (centroids + posting-list
-    assignment) as parquet, and the oracle replays the probe + exact
-    re-rank over those files in DuckDB — so everything relational
-    downstream of the trained model IS hash-checked. Recall vs brute
-    force is additionally asserted in tests/test_similarity.py."""
+    k-means trains on the driver with arithmetic DuckDB repeats bit for
+    bit, and the assignment is a broadcast join in the plan, so the
+    oracle retrains, reassigns, probes and re-ranks in SQL
+    (``_kmeans_oracle``) and the whole query is hash-checked. Recall vs
+    brute force is additionally asserted in tests/test_similarity.py."""
     from dropbox_duckdb_playground_spark.operators.similarity import ivf_ann_topk
 
     e = load(spark, sf_dir, "embeddings")
@@ -2422,7 +2518,6 @@ def q62_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
         nlist=8,
         nprobe=2,
-        stage_dir=_IVF_STAGE,
     )
 
 
@@ -3226,12 +3321,6 @@ def q78_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q79-q81 — LLM-corpus curation: semantic dedup, boilerplate removal,
 # deterministic stratified sampling.
 
-_SEM_STAGE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "spark-warehouse",
-    "semdedup_stage",
-)
-
 # The decision cut is computed ONCE in Python IEEE-double arithmetic and
 # its exact value is injected into the oracle SQL: a literal
 # `0.3 - 0.00005` would be evaluated by DuckDB in exact DECIMAL
@@ -3244,9 +3333,7 @@ _SEM_CUT = repr(0.3 - 0.00005)
 
 @register(
     "q79_semantic_dedup",
-    oracle=f"""
-    WITH assign AS (
-      SELECT cand_id, c_vec, list_id FROM '{_SEM_STAGE}/assigned/*.parquet'),
+    oracle=_kmeans_oracle(8, m=1, dsub=64, spherical=True) + f""",
     dead AS (
       SELECT DISTINCT b.cand_id
       FROM assign a JOIN assign b
@@ -3261,14 +3348,14 @@ _SEM_CUT = repr(0.3 - 0.00005)
 def q79_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means-cluster the embedding
     corpus, then inside each cluster keep only the min-id representative
-    of every cosine>=0.3 duplicate ball. Like q62, the non-SQL k-means
-    stages its deterministic output as parquet and DuckDB replays the
-    (fully relational) intra-cluster dedup decision over those files —
-    hash-checked end to end."""
+    of every cosine>=0.3 duplicate ball. Like q62, the oracle retrains
+    the k-means and reassigns the corpus in SQL (``_kmeans_oracle``),
+    then replays the intra-cluster dedup decision — hash-checked end to
+    end."""
     from dropbox_duckdb_playground_spark.operators.similarity import semantic_dedup
 
     e = load(spark, sf_dir, "embeddings")
-    return semantic_dedup(e, threshold=0.3, nlist=8, stage_dir=_SEM_STAGE)
+    return semantic_dedup(e, threshold=0.3, nlist=8)
 
 
 @register(
@@ -5212,27 +5299,19 @@ def q106_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TX.bm25_topk(d, n_query_terms=8, k=10)
 
 
-_PQ_STAGE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "spark-warehouse",
-    "pq_stage",
-)
-
-
 @register(
     "q107_pq_ann",
-    oracle=f"""
-    WITH book AS (
-      SELECT sub, code, centroid FROM '{_PQ_STAGE}/book/*.parquet'),
-    codes AS (
-      SELECT cand_id, sub, code FROM '{_PQ_STAGE}/codes/*.parquet'),
+    oracle=_kmeans_oracle(16, m=8, dsub=8, spherical=False) + """,
+    book AS (SELECT sub, list_id AS code, centroid FROM cent),
+    codes AS (SELECT cand_id, sub, list_id AS code FROM assign),
     q AS (SELECT vec_id AS query_id, embedding AS q_vec
           FROM embeddings WHERE vec_id < 10),
     lut AS (
       SELECT q.query_id, b.sub, b.code,
              CAST(round(list_aggregate(list_transform(range(1, 9),
-                    i -> CAST(q.q_vec[b.sub * 8 + i] AS DOUBLE)
-                         * b.centroid[i]), 'sum') * 1000000.0) AS BIGINT)
+                    i -> (CAST(q.q_vec[b.sub * 8 + i] AS DOUBLE) - b.centroid[i])
+                         * (CAST(q.q_vec[b.sub * 8 + i] AS DOUBLE) - b.centroid[i])),
+                    'sum') * 1000000.0) AS BIGINT)
                  AS micro
       FROM q CROSS JOIN book b),
     scored AS (
@@ -5243,7 +5322,7 @@ _PQ_STAGE = os.path.join(
     SELECT query_id, cand_id, score FROM (
       SELECT query_id, cand_id, score,
              row_number() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, cand_id ASC) AS rn
+                                ORDER BY score ASC, cand_id ASC) AS rn
       FROM scored WHERE query_id <> cand_id) WHERE rn <= 5
     """,
     tags="similarity pq ann adc quantization",
@@ -5251,11 +5330,13 @@ _PQ_STAGE = os.path.join(
 def q107_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (operators/similarity.pq_ann_topk) —
     completes the similarity family (brute q28 / LSH q36 / IVF q62 /
-    PQ). Codebooks train driver-side on a bounded sample and are staged
-    with the per-vector codes as parquet, so DuckDB replays the entire
-    asymmetric-distance scoring: per-query LUT of subvector dots,
+    PQ). Codebooks train driver-side on a bounded sample with arithmetic
+    DuckDB repeats bit for bit, and encoding is a broadcast join in the
+    plan, so the oracle retrains and re-encodes in SQL
+    (``_kmeans_oracle``) and replays the entire asymmetric-distance
+    scoring: per-query LUT of subvector squared distances,
     integer-microunit summation over the m code lookups (exact — no
-    float-sum order dependence), top-5 by (score, cand_id). At 100 TB
+    float-sum order dependence), nearest 5 by (score, cand_id). At 100 TB
     only the m-byte code words stay hot; the float vectors are read
     once at encode time."""
     from dropbox_duckdb_playground_spark.operators.similarity import pq_ann_topk
@@ -5268,7 +5349,6 @@ def q107_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         m=8,
         ksub=16,
         dim=64,
-        stage_dir=_PQ_STAGE,
     )
 
 

@@ -4,66 +4,24 @@ Brute-force cosine top-k is the correctness baseline; the LSH
 (random-hyperplane) bucketed variant is the scale path: at 100 TB the
 cross join is infeasible, but hyperplane-bucketed candidates cut the
 candidate space by ~2^planes while the final exact re-rank keeps
-precision. All arithmetic stays in Column expressions (codegen) —
-no Python UDF.
+precision. All per-vector arithmetic stays in Column expressions
+(codegen) — no Python UDF.
+
+The quantizers (IVF, SemDeDup's clustering, PQ) train k-means on the
+driver over a bounded md5-ordered sample, with arithmetic that a SQL
+engine repeats bit for bit: dot products and squared distances are
+left folds over dimensions in index order, centroid sums are exact
+fixed-point integer sums. Assigning the corpus to the trained
+centroids is a broadcast join plus ``max_by``/``min_by`` inside the
+plan, so an oracle can retrain and reassign in SQL and check the whole
+query.
 """
 
 from __future__ import annotations
 
-import os
-
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from dropbox_duckdb_playground_spark.materialize import materialize
-
-from dropbox_duckdb_playground_spark.operators.dedup import _hex60
-
-
-def _concurrent_writes(*thunks) -> None:
-    """Submit independent staging writes from threads so Spark's
-    scheduler runs them as parallel jobs — the codebook/centroid side
-    is driver-literal data, so it never contends with the corpus scan.
-    Measured r11 (git show eccd0ba:tools/decompose_q62q107.py, interleaved
-    median-of-3): q62 2.19s -> 2.09s at sf0.1, 2.52s -> 2.13s at sf1, with
-    the explicit-schema read-back below.
-
-    Threads are ``pyspark.InheritableThread`` so the parent's Spark
-    local properties (job group/tags, scheduler pool) propagate to the
-    jobs these threads submit — plain ``threading.Thread`` would detach
-    the staging writes from any future cancellation or pool scoping
-    (r11 ADVICE). All failures propagate after join: the first error is
-    raised with the rest attached as ``__notes__``-style context."""
-    from pyspark import InheritableThread
-
-    errs: list[BaseException] = []
-
-    def run(t):
-        try:
-            t()
-        except BaseException as e:
-            errs.append(e)
-
-    threads = [InheritableThread(target=run, args=(t,)) for t in thunks]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errs:
-        first = errs[0]
-        for extra in errs[1:]:
-            # surface every failure, not just the first (r11 ADVICE):
-            # PEP-678 notes render in the traceback on 3.11+; on older
-            # interpreters append to args so the extra failures still
-            # land in the rendered message instead of being dropped
-            # (r12 ADVICE — the 'all failures propagate' contract must
-            # hold on every supported interpreter, not just 3.11+).
-            note = f"additional concurrent-write failure: {extra!r}"
-            if hasattr(first, "add_note"):
-                first.add_note(note)
-            else:  # pragma: no cover — Python < 3.11 only
-                first.args = first.args + (note,)
-        raise first
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -91,6 +49,20 @@ def _norm(a: Column) -> Column:
         F.aggregate(
             a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
         )
+    )
+
+
+def _sqdist(a: Column, b: Column) -> Column:
+    """Float64 squared Euclidean distance, folded in index order like
+    ``_dot``."""
+    return F.aggregate(
+        F.zip_with(
+            a, b,
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
     )
 
 
@@ -289,103 +261,149 @@ def cosine_neardup_pairs(
     )
 
 
+# Centroid sums are taken in fixed point: each member component becomes
+# floor(x * 2^30) as an int64, so the per-cluster sum is exact in any
+# order and any engine; dividing by 2^30 returns to float64.
+_FIXED_POINT = float(2**30)
+# k-means iterations; the catalog's SQL oracle unrolls the same count.
+_ITERS = 10
+
+
+def train_cap(k: int) -> int:
+    """Training-sample size for a k-centroid quantizer: a few hundred
+    points per centroid (the FAISS practice), never the corpus."""
+    return max(k * 256, 2048)
+
+
+def hash_sample(
+    df: DataFrame, id_col: str, vec_col: str, seed: int, cap: int
+) -> np.ndarray:
+    """The first ``cap`` vectors in ``md5('<seed>:' || id)`` order, ties
+    by id, as a float64 (rows, dim) array in that order. The order is a
+    function of the ids alone, so the sample does not depend on scan
+    order or partitioning, and a SQL oracle selects the same rows."""
+    key = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
+    pdf = df.orderBy(key, id_col).limit(cap).select(vec_col).toPandas()
+    return np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+
+
+def _fold(X: np.ndarray, C: np.ndarray, squared: bool) -> np.ndarray:
+    """(rows, k) dot products (or squared distances) of X's rows with C's
+    rows, accumulated as ``acc = acc + a[i]*b[i]`` over dimensions in
+    index order — the order of ``_dot`` and of DuckDB's
+    ``list_aggregate(..., 'sum')``, so all three agree bit for bit."""
+    acc = np.zeros((X.shape[0], C.shape[0]))
+    for i in range(X.shape[1]):
+        if squared:
+            d = X[:, i, None] - C[None, :, i]
+            acc = acc + d * d
+        else:
+            acc = acc + X[:, i, None] * C[None, :, i]
+    return acc
+
+
+def _row_norms(X: np.ndarray) -> np.ndarray:
+    acc = np.zeros(X.shape[0])
+    for i in range(X.shape[1]):
+        acc = acc + X[:, i] * X[:, i]
+    return np.sqrt(acc)
+
+
+def nearest_centroid(X: np.ndarray, C: np.ndarray, spherical: bool) -> np.ndarray:
+    """Index of each row's nearest centroid: the largest dot product
+    (spherical) or the smallest squared distance; a tie goes to the
+    lowest index."""
+    if spherical:
+        return _fold(X, C, squared=False).argmax(axis=1)
+    return _fold(X, C, squared=True).argmin(axis=1)
+
+
+def kmeans_train(X: np.ndarray, k: int, spherical: bool) -> np.ndarray:
+    """``_ITERS``-iteration k-means over the sample rows ``X`` (in sample
+    order); returns the (min(k, rows), dim) float64 centroids.
+
+    Spherical (IVF) training drops zero-norm rows, scales the rest to
+    unit norm and keeps every centroid at unit norm; Euclidean (PQ)
+    training takes member means. The first k rows seed the centroids,
+    and an empty cluster keeps its centroid. Every step is repeatable
+    in SQL bit for bit (catalog ``_kmeans_oracle``): the folds of
+    ``_fold``, and centroid sums in fixed point (``_FIXED_POINT``)."""
+    X = np.asarray(X, dtype=np.float64)
+    if spherical:
+        nrm = _row_norms(X)
+        X = X[nrm > 0] / nrm[nrm > 0, None]
+    if len(X) and not np.abs(X).max() * _FIXED_POINT * len(X) < 2.0**63:
+        raise ValueError(
+            "kmeans_train: components too large (or NaN) for exact int64 "
+            "fixed-point centroid sums"
+        )
+    C = X[:k].copy()
+    fixed = np.floor(X * _FIXED_POINT).astype(np.int64)
+    for _ in range(_ITERS):
+        assign = nearest_centroid(X, C, spherical)
+        sums = np.zeros(C.shape, dtype=np.int64)
+        np.add.at(sums, assign, fixed)
+        sums = sums.astype(np.float64) / _FIXED_POINT
+        count = np.bincount(assign, minlength=len(C))
+        if spherical:
+            scale = _row_norms(sums)
+            live = (count > 0) & (scale > 0)
+        else:
+            scale, live = count, count > 0
+        C[live] = sums[live] / scale[live, None]
+    return C
+
+
 def ivf_assign(
     embeddings: DataFrame,
     nlist: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    n_vecs: int | None = None,
-    stage_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Train a spherical k-means coarse quantizer and assign every vector
     to its nearest centroid. Returns ``(assigned, centroids)`` where
     ``assigned`` is (cand_id, c_vec, list_id) and ``centroids`` is
     (list_id, centroid).
 
-    The quantizer is trained DRIVER-SIDE on a bounded seeded sample
-    (max(nlist*256, 2048) rows — the FAISS practice: a coarse quantizer
-    needs a few hundred points per centroid, never the corpus), so
-    training costs milliseconds and is independent of corpus size; the
-    corpus is only touched by ONE Arrow-vectorized assignment pass
-    (numpy matmul per batch).
-
-    The k-means itself is not SQL-expressible, but everything downstream
-    IS: pass ``stage_dir`` to stage the assignment and centroid table as
-    parquet so an external oracle (DuckDB) can replay it. Training reads
-    ``limit(train_cap)`` — an early-stopping scan, NOT a full-corpus
-    count; pass ``n_vecs`` (corpus size hint) to switch to an unbiased
-    seeded fraction sample when the input's physical order is correlated
-    with cluster structure."""
-    import numpy as np
-
-    # natural scan partitioning for the assignment pass: at fact scale
-    # the parquet scan splits on row groups into plenty of tasks, and on
-    # a small corpus a forced 32-way fan-out only multiplies Python
-    # worker startup + output files (measured ~2s of pure overhead on a
-    # 2k-row staging write)
-    vecs = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("c_vec")
-    )
-
-    # -- train: bounded sample -> driver numpy spherical k-means --------
-    raw = embeddings.select(F.col(vec_col).alias("c_vec"))
-    train_cap = max(nlist * 256, 2048)
-    if n_vecs is not None and n_vecs > train_cap:
-        sample = raw.sample(fraction=min(1.0, train_cap / n_vecs), seed=seed)
-    else:
-        sample = raw.limit(train_cap)
-    X = np.asarray(sample.toPandas()["c_vec"].tolist(), dtype=np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    rng = np.random.RandomState(seed)
-    C = X[rng.choice(len(X), size=min(nlist, len(X)), replace=False)]
-    for _ in range(10):
-        assign = (X @ C.T).argmax(axis=1)
-        for j in range(len(C)):
-            members = X[assign == j]
-            if len(members):
-                m = members.sum(axis=0)
-                C[j] = m / max(np.linalg.norm(m), 1e-12)
-
-    # -- assign: one Arrow-vectorized pass over the corpus --------------
-    spark = embeddings.sparkSession
-    # fresh StructType — StructType.add would MUTATE vecs' cached schema
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    out_schema = StructType(
-        list(vecs.schema.fields) + [StructField("list_id", IntegerType())]
-    )
-    Ct = C.T.copy()
-
-    def assign_lists(batches):
-        for pdf in batches:
-            M = np.asarray(pdf["c_vec"].tolist(), dtype=np.float64)
-            M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            yield pdf.assign(list_id=(M @ Ct).argmax(axis=1).astype("int32"))
-
-    cent_df = spark.createDataFrame(
+    The quantizer trains on the driver (``kmeans_train``) over a
+    ``train_cap(nlist)``-row ``hash_sample``: the k-means iterations are
+    bounded by that cap, but drawing the sample costs one full scan
+    (an md5 per row and an ordered take). Assignment is in the plan:
+    the corpus crosses the broadcast nlist-row centroid table and
+    keeps, per input row, the list with the largest
+    ``_dot(vector, centroid)`` (lowest list_id on a tie). The centroids
+    have unit norm, so that is the cosine argmax without normalizing
+    the corpus. Rows are told apart by (id, vector): two rows with the
+    same id and different vectors are assigned separately, and rows
+    that repeat both collapse into one."""
+    X = hash_sample(embeddings, id_col, vec_col, seed, train_cap(nlist))
+    C = kmeans_train(X, nlist, spherical=True)
+    cent_df = embeddings.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(C)],
         "list_id int, centroid array<double>",
     )
-    if stage_dir is not None:
-        # Parquet staging doubles as the oracle handshake: DuckDB can
-        # replay probe + re-rank over exactly these files. The two
-        # writes are independent jobs — submit them concurrently, and
-        # read back with the known schema (skips the footer-inference
-        # job): measured 2.52s -> 2.13s on q62 at sf1 (r11,
-        # git show eccd0ba:tools/decompose_q62q107.py).
-        a_path = os.path.join(stage_dir, "assigned")
-        _concurrent_writes(
-            lambda: vecs.mapInPandas(assign_lists, schema=out_schema)
-            .write.mode("overwrite")
-            .parquet(a_path),
-            lambda: cent_df.write.mode("overwrite").parquet(
-                os.path.join(stage_dir, "centroids")
-            ),
+    # Rows that share an id are told apart by a hash of their vector,
+    # taken once per row: grouping on the array itself hashes it for
+    # every (row, centroid) pair (assignment at sf0.1: 1.42 s vs 1.19 s).
+    # The hash is only a grouping key, never an output value.
+    assigned = (
+        embeddings.select(
+            F.col(id_col).alias("cand_id"),
+            F.col(vec_col).alias("c_vec"),
+            F.xxhash64(vec_col).alias("__vh"),
         )
-        assigned = spark.read.schema(out_schema).parquet(a_path)
-    else:
-        assigned = materialize(vecs.mapInPandas(assign_lists, schema=out_schema))
+        .crossJoin(F.broadcast(cent_df))
+        .groupBy("cand_id", "__vh")
+        .agg(
+            F.first("c_vec").alias("c_vec"),
+            F.max_by(
+                "list_id",
+                F.struct(_dot(F.col("c_vec"), F.col("centroid")), -F.col("list_id")),
+            ).alias("list_id"),
+        )
+        .drop("__vh")
+    )
     return assigned, cent_df
 
 
@@ -398,8 +416,6 @@ def ivf_ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    n_vecs: int | None = None,
-    stage_dir: str | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: spherical k-means coarse quantizer
     (``ivf_assign``) -> per-centroid posting lists -> probe the
@@ -412,8 +428,6 @@ def ivf_ann_topk(
         id_col=id_col,
         vec_col=vec_col,
         seed=seed,
-        n_vecs=n_vecs,
-        stage_dir=stage_dir,
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
@@ -452,8 +466,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    n_vecs: int | None = None,
-    stage_dir: str | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus with a coarse k-means
@@ -484,15 +496,13 @@ def semantic_dedup(
     fold), a ~1-ULP (<1e-14) drift on 64-term sums; a pair flips only
     if its true cosine lies within that distance of the threshold.
     Thresholds are chosen at coarse values (0.3) where the corpus has
-    no cosine within 1e-6 of the cut, and the staged-parquet handshake
-    pins the vectors, so the bit is stable in practice; if you run this
-    against adversarial near-threshold data, widen the margin or accept
-    count-level (not hash-level) comparison.
+    no cosine within 1e-6 of the cut, and both engines read the same
+    float32 vectors and assign the same clusters (``ivf_assign`` is
+    repeatable in SQL bit for bit), so the bit is stable in practice;
+    if you run this against adversarial near-threshold data, widen the
+    margin or accept count-level (not hash-level) comparison.
 
-    Output: (vec_id, list_id, survived) with survived in {0,1}. Pass
-    ``stage_dir`` to stage the quantizer output so an external oracle
-    can replay the (SQL-expressible) dedup decision."""
-    import numpy as np
+    Output: (vec_id, list_id, survived) with survived in {0,1}."""
     import pandas as pd
 
     assigned, _ = ivf_assign(
@@ -501,8 +511,6 @@ def semantic_dedup(
         id_col=id_col,
         vec_col=vec_col,
         seed=seed,
-        n_vecs=n_vecs,
-        stage_dir=stage_dir,
     )
     # round(cos, 4) >= t  <=>  cos >= t - 5e-5 under HALF_UP rounding
     cut = threshold - 0.00005
@@ -534,6 +542,24 @@ def semantic_dedup(
     ).select(F.col("vec_id").alias(id_col), "list_id", "survived")
 
 
+def _subvectors(
+    df: DataFrame, id_col: str, vec_col: str, id_alias: str, m: int, dsub: int
+) -> DataFrame:
+    """(id_alias, sub, xs): each vector's ``m`` slices of ``dsub`` dims."""
+    return df.select(
+        F.col(id_col).alias(id_alias),
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(s).alias("sub"),
+                    F.slice(vec_col, s * dsub + 1, dsub).alias("xs"),
+                )
+                for s in range(m)
+            ])
+        ).alias("e"),
+    ).select(id_alias, "e.sub", "e.xs")
+
+
 def pq_assign(
     embeddings: DataFrame,
     m: int = 8,
@@ -542,7 +568,6 @@ def pq_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    stage_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Product-quantization encoder (Jégou et al. TPAMI 2011): split each
     vector into ``m`` subspaces of dim/m dims, k-means each subspace to
@@ -550,87 +575,28 @@ def pq_assign(
     ``(codes, codebook)`` with codes = (cand_id, sub, code) long-form and
     codebook = (sub, code, centroid array<double>).
 
-    Like ``ivf_assign``: codebooks train DRIVER-SIDE on a bounded
-    sample, the corpus pays exactly ONE Arrow-vectorized encoding pass,
-    and ``stage_dir`` stages both tables as parquet so a SQL oracle can
-    replay everything downstream of the trained model. The training
-    sample is FULLY deterministic: rows are taken in id-hash order
-    (``TakeOrderedAndProject`` — per-partition top-k then driver merge,
-    no shuffle, bounded memory), so the same corpus yields the same
-    codebook under ANY partitioning/file order, matching the seeded
-    centroid init. This costs one ranked scan instead of ``limit``'s
-    early-stop prefix read; PQ already pays a full encoding scan, so
-    training adds at most a comparable scan, and at 100 TB you'd train
-    once and reuse the staged codebook anyway. At 100 TB the codes
-    table is m bytes-ish per vector (vs 4*dim for floats) — the point
-    of PQ is that THIS is what you keep hot for ANN scoring."""
-    import numpy as np
+    Like ``ivf_assign``: each subspace's codebook trains on the driver
+    (Euclidean ``kmeans_train``) over one ``train_cap(ksub)``-row
+    ``hash_sample``, and encoding is in the plan: every (vector,
+    subspace) slice joins the broadcast codebook on ``sub`` and keeps
+    the code with the smallest squared distance (lowest code on a tie).
+    ``codes`` is keyed by ``id_col`` alone, so the ids must be unique.
+    At 100 TB the codes table is m bytes-ish per vector (vs 4*dim for
+    floats) — the point of PQ is that THIS is what you keep hot for ANN
+    scoring."""
+    from dropbox_duckdb_playground_spark.operators.relational import fan_out
 
     assert dim % m == 0
     dsub = dim // m
-
-    # natural scan partitioning — same reasoning as ivf_assign: row-group
-    # splits parallelize the big case, a forced fan-out only taxes the
-    # small one with Python-worker startup and tiny staged files
-    vecs = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("c_vec")
-    )
-    raw = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("c_vec")
-    )
-    train_cap = max(ksub * 256, 2048)
-    samp = raw.orderBy(
-        F.xxhash64(F.col("cand_id").cast("string")), "cand_id"
-    ).limit(train_cap)
-    # driver-side re-sort by id: the hash order selects WHICH rows, the
-    # id order fixes HOW the rng-seeded init sees them — both
-    # partition-independent, so the codebook is a pure function of
-    # (corpus, seed)
-    spdf = samp.toPandas().sort_values("cand_id", kind="mergesort")
-    X = np.asarray(spdf["c_vec"].tolist(), dtype=np.float64)
-    rng = np.random.RandomState(seed)
-    books = []
-    for s in range(m):
-        Xs = X[:, s * dsub : (s + 1) * dsub]
-        C = Xs[rng.choice(len(Xs), size=min(ksub, len(Xs)), replace=False)].copy()
-        for _ in range(10):
-            d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for j in range(len(C)):
-                members = Xs[assign == j]
-                if len(members):
-                    C[j] = members.mean(axis=0)
-        books.append(C)
-    B = np.stack(books)  # (m, ksub, dsub)
-
-    spark = embeddings.sparkSession
-    id_type = vecs.schema["cand_id"].dataType.simpleString()
-
-    def encode(batches):
-        for pdf in batches:
-            Mx = np.asarray(pdf["c_vec"].tolist(), dtype=np.float64)
-            out = {"cand_id": pdf["cand_id"]}
-            for s in range(m):
-                Xs = Mx[:, s * dsub : (s + 1) * dsub]
-                d2 = ((Xs[:, None, :] - B[s][None, :, :]) ** 2).sum(axis=2)
-                out[f"c{s}"] = d2.argmin(axis=1).astype("int32")
-            yield type(pdf)(out)
-
-    wide_schema = f"cand_id {id_type}, " + ", ".join(f"c{s} int" for s in range(m))
-    wide = vecs.mapInPandas(encode, schema=wide_schema)
-    codes = wide.select(
-        "cand_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(s).alias("sub"), F.col(f"c{s}").alias("code"))
-                for s in range(m)
-            ])
-        ).alias("e"),
-    ).select("cand_id", "e.sub", "e.code")
+    X = hash_sample(embeddings, id_col, vec_col, seed, train_cap(ksub))
     # B.shape[1] = actual trained centroid count, which is < ksub when
     # the training sample had fewer rows than ksub — iterate the real
     # shape so a tiny corpus degrades gracefully instead of IndexError
-    codebook = spark.createDataFrame(
+    B = np.stack([
+        kmeans_train(X[:, s * dsub : (s + 1) * dsub], ksub, spherical=False)
+        for s in range(m)
+    ])
+    codebook = embeddings.sparkSession.createDataFrame(
         [
             (s, c, [float(x) for x in B[s, c]])
             for s in range(m)
@@ -638,20 +604,18 @@ def pq_assign(
         ],
         "sub int, code int, centroid array<double>",
     )
-    if stage_dir is not None:
-        # same staging shape as ivf_assign: concurrent independent
-        # writes + explicit-schema read-back (r11 probe)
-        c_path = os.path.join(stage_dir, "codes")
-        codes_schema = codes.schema
-        _concurrent_writes(
-            lambda: codes.write.mode("overwrite").parquet(c_path),
-            lambda: codebook.write.mode("overwrite").parquet(
-                os.path.join(stage_dir, "book")
-            ),
+    # fan_out: the m x ksub distance folds per vector are the heavy
+    # step, and a small corpus scan arrives in fewer tasks than cores
+    codes = (
+        _subvectors(fan_out(embeddings), id_col, vec_col, "cand_id", m, dsub)
+        .join(F.broadcast(codebook), "sub")
+        .groupBy("cand_id", "sub")
+        .agg(
+            F.min_by(
+                "code", F.struct(_sqdist(F.col("xs"), F.col("centroid")), F.col("code"))
+            ).alias("code")
         )
-        codes = spark.read.schema(codes_schema).parquet(c_path)
-    else:
-        codes = materialize(codes)
+    )
     return codes, codebook
 
 
@@ -665,18 +629,19 @@ def pq_ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    stage_dir: str | None = None,
 ) -> DataFrame:
-    """Asymmetric-distance PQ ANN: per query, precompute the (m x ksub)
-    lookup table of subvector dot products against the codebook, then
-    score every candidate by summing its m LUT entries — the candidate
-    side never touches a float vector, only its codes.
+    """Asymmetric-distance PQ ANN (ADC, Jégou et al.): per query,
+    precompute the (m x ksub) lookup table of squared distances from each
+    query subvector to the codebook, then score every candidate by
+    summing its m LUT entries — the candidate side never touches a float
+    vector, only its codes. A candidate that shares the query's codes
+    scores the minimum, so exact duplicates rank first.
 
-    Engine-stable scoring: each LUT dot is rounded to integer
-    MICRO-units (round(dot*1e6)) before the per-candidate sum, so the
+    Engine-stable scoring: each LUT distance is rounded to integer
+    MICRO-units (round(d2*1e6)) before the per-candidate sum, so the
     m-way addition is exact integer math — no float-sum order
     dependence between engines. Output (query_id, cand_id, score) with
-    score = micro-sum/1e6, top-k per query by (score DESC, cand_id ASC).
+    score = micro-sum/1e6, top-k per query by (score ASC, cand_id ASC).
 
     Scale: LUT is |queries| x m x ksub rows (tiny, broadcast); the
     codes table joins it on (sub, code) — corpus-sized but narrow — and
@@ -690,32 +655,19 @@ def pq_ann_topk(
         id_col=id_col,
         vec_col=vec_col,
         seed=seed,
-        stage_dir=stage_dir,
     )
-    dsub = dim // m
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    # LUT: (query_id, sub, code, micro) — micro = round(1e6 * dot(q_sub, centroid))
-    qsub = q.select(
-        "query_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(s).alias("sub"),
-                    F.slice("q_vec", s * dsub + 1, dsub).alias("qs"),
-                )
-                for s in range(m)
-            ])
-        ).alias("e"),
-    ).select("query_id", "e.sub", "e.qs")
-    lut = qsub.join(F.broadcast(codebook), "sub").select(
-        "query_id",
-        "sub",
-        "code",
-        F.round(_dot(F.col("qs"), F.col("centroid")) * 1e6)
-        .cast("long")
-        .alias("micro"),
+    # LUT: (query_id, sub, code, micro) — micro = round(1e6 * d2(q_sub, centroid))
+    lut = (
+        _subvectors(queries, id_col, vec_col, "query_id", m, dim // m)
+        .join(F.broadcast(codebook), "sub")
+        .select(
+            "query_id",
+            "sub",
+            "code",
+            F.round(_sqdist(F.col("xs"), F.col("centroid")) * 1e6)
+            .cast("long")
+            .alias("micro"),
+        )
     )
     scored = (
         codes.join(F.broadcast(lut), ["sub", "code"])
@@ -723,7 +675,7 @@ def pq_ann_topk(
         .agg((F.sum("micro") / F.lit(1e6)).alias("score"))
         .filter(F.col("query_id") != F.col("cand_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("cand_id"))
+    w = Window.partitionBy("query_id").orderBy(F.asc("score"), F.asc("cand_id"))
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)

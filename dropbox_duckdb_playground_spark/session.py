@@ -17,6 +17,7 @@ reference.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -169,6 +170,25 @@ def spark_cpus() -> int:
     return cpus
 
 
+_MEM = re.compile(r"\d+[kmgt]?b?", re.IGNORECASE)
+
+
+def driver_mem() -> str:
+    """Driver heap for local masters: ``$SPARK_DRIVER_MEM`` when set,
+    else ``min(48g, half of physical RAM)``. A value that is not
+    ``<digits>[k|m|g|t][b]`` (any case) raises ``ValueError`` naming
+    the variable, before the JVM sees it."""
+    raw = os.environ.get("SPARK_DRIVER_MEM")
+    if raw is None:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+        return f"{min(48 * 1024, half_mb)}m"
+    if not _MEM.fullmatch(raw):
+        raise ValueError(
+            f"SPARK_DRIVER_MEM must look like 512m, 4g or 4gb, got {raw!r}"
+        )
+    return raw
+
+
 def get_spark(
     app_name: str = "dropbox_duckdb_playground_spark",
     master: str | None = None,
@@ -201,7 +221,7 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     # local mode: driver is the only JVM — give it the memory.
     if master.startswith("local"):
-        conf.setdefault("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        conf.setdefault("spark.driver.memory", driver_mem())
     if storage_conf:
         conf.update(storage_conf)
     if extra_conf:

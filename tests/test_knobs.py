@@ -78,3 +78,20 @@ def test_spark_cpus_defaults_to_host_and_rejects_bad_values(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "four")
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
         get_spark("bad-knob")
+
+
+def test_driver_mem_defaults_to_half_the_host_and_rejects_bad_values(monkeypatch):
+    """The default fits the host instead of a fixed 48g, and a malformed
+    value fails with the variable's name before the JVM sees it."""
+    from dropbox_duckdb_playground_spark.session import driver_mem
+
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    assert driver_mem() == f"{min(48 * 1024, half_mb)}m"
+    for good in ("2048m", "4g", "4G", "4gb", "1Tb", "512", "900k"):
+        monkeypatch.setenv("SPARK_DRIVER_MEM", good)
+        assert driver_mem() == good
+    for bad in ("lots", "", "2.5g", "-1g", "4 g", "4gib", "g", "4x"):
+        monkeypatch.setenv("SPARK_DRIVER_MEM", bad)
+        with pytest.raises(ValueError, match="SPARK_DRIVER_MEM"):
+            driver_mem()

@@ -1,7 +1,15 @@
-"""Similarity search: brute-force correctness + LSH plumbing."""
+"""Similarity search: brute-force correctness, LSH plumbing, and the
+quantizers' cross-engine parity."""
 
 from __future__ import annotations
 
+import hashlib
+import os
+import sys
+
+import duckdb
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from dropbox_duckdb_playground_spark.operators.similarity import (
@@ -150,7 +158,7 @@ def test_pq_ann_recall_vs_brute_force(spark):
     approx = pq_ann_topk(df, q, k=3, m=4, ksub=8, dim=8, id_col="vec_id", seed=7)
     e = {(r["query_id"], r["cand_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["cand_id"]) for r in approx.collect()}
-    assert len(a & e) / len(e) >= 0.6  # ADC ranks by dot, exact by cosine
+    assert len(a & e) / len(e) >= 0.6  # ADC ranks by squared distance, exact by cosine
 
 
 def test_pq_assign_codes_cover_all_subspaces(spark):
@@ -164,74 +172,129 @@ def test_pq_assign_codes_cover_all_subspaces(spark):
     assert book.count() == 16
 
 
-def test_concurrent_writes_runs_all_and_propagates_errors(tmp_path):
-    """r11: _concurrent_writes must execute every thunk (both staging
-    files exist afterward) and re-raise a thunk's exception after all
-    threads join — a failed staging write must not pass silently."""
-    import pytest
-
+def test_ivf_assign_schema_and_counts(spark):
+    """One assigned row per input row, in the (cand_id, c_vec, list_id)
+    schema the IVF probe and SemDeDup read, and one row per centroid.
+    Two rows with one id and different vectors are both assigned, each
+    to its own nearest centroid."""
     from dropbox_duckdb_playground_spark.operators.similarity import (
-        _concurrent_writes,
+        ivf_assign,
+        nearest_centroid,
     )
-
-    a, b = tmp_path / "a.txt", tmp_path / "b.txt"
-    _concurrent_writes(
-        lambda: a.write_text("x"), lambda: b.write_text("y")
-    )
-    assert a.read_text() == "x" and b.read_text() == "y"
-
-    done = []
-    with pytest.raises(RuntimeError, match="boom"):
-        _concurrent_writes(
-            lambda: (_ for _ in ()).throw(RuntimeError("boom")),
-            lambda: done.append(1),
-        )
-    assert done == [1]  # the healthy thunk still completed
-
-
-def test_ivf_stage_dir_roundtrip(spark, tmp_path):
-    """r11: after the concurrent-staging change, stage_dir mode must
-    still write both parquet tables AND return frames that read them
-    back with the exact pre-write schema (the oracle contract)."""
-    from dropbox_duckdb_playground_spark.operators.similarity import ivf_assign
 
     rows = [(i, [float((i * 3 + d) % 7) for d in range(8)]) for i in range(30)]
+    rows.append((5, [float(d % 2) for d in range(8)]))
     df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    assigned, cent = ivf_assign(df, nlist=4, stage_dir=str(tmp_path / "ivf"))
-    assert (tmp_path / "ivf" / "assigned").exists()
-    assert (tmp_path / "ivf" / "centroids").exists()
-    assert assigned.count() == 30
+    assigned, cent = ivf_assign(df, nlist=4)
+    assert assigned.count() == 31
     assert [f.name for f in assigned.schema.fields] == [
         "cand_id", "c_vec", "list_id",
     ]
     assert cent.count() == 4
+    C = np.array([r["centroid"] for r in cent.orderBy("list_id").collect()])
+    dup = [v for i, v in rows if i == 5]
+    want = sorted(zip(map(tuple, dup), nearest_centroid(np.array(dup), C, True).tolist()))
+    got = sorted(
+        (tuple(r["c_vec"]), r["list_id"])
+        for r in assigned.filter(F.col("cand_id") == 5).collect()
+    )
+    assert got == want
 
 
-def test_concurrent_writes_notes_survive_without_add_note():
-    """r12 ADVICE: on interpreters without PEP-678 add_note the extra
-    concurrent failures must still be attached (appended to args), not
-    silently dropped — the 'all failures propagate' contract holds on
-    every interpreter."""
-    import pytest
+def _sample_order(ids, seed):
+    """``hash_sample``'s row order: md5('<seed>:' || id), then id."""
+    return sorted(ids, key=lambda i: (hashlib.md5(f"{seed}:{i}".encode()).hexdigest(), i))
 
+
+@pytest.mark.parametrize("spherical", [True, False], ids=["ivf", "pq"])
+def test_kmeans_trainer_matches_sql_generator_bit_for_bit(spherical):
+    """The driver trainer and the catalog's SQL generator give the same
+    centroid bits and the same assignments on an input that holds a
+    zero-norm vector and a distance tie against the initial centroids
+    (the first two rows in sample order). No Spark session."""
+    from dropbox_duckdb_playground_spark.catalog import _kmeans_oracle
     from dropbox_duckdb_playground_spark.operators.similarity import (
-        _concurrent_writes,
+        kmeans_train,
+        nearest_centroid,
     )
 
-    class NoNotesError(Exception):
-        # accessing add_note raises AttributeError -> hasattr is False,
-        # simulating a pre-3.11 interpreter on the first error object
-        add_note = property()
+    seed, k = 42, 2
+    if spherical:
+        m, dsub, zero = 1, 3, 0
+        # the zero row is sampled first and left out, so the init is
+        # [1,0,0] and [0,1,0] after scaling; [1,1,0] scores 1/sqrt(2)
+        # against both
+        vecs = [
+            [0.0, 0.0, 0.0], [2.0, 0.0, 0.0], [0.0, 1.0, 0.0],
+            [1.0, 1.0, 0.0], [3.0, 0.5, 0.25], [0.25, 2.0, 0.5],
+            [0.5, 0.1, 1.0], [0.3, 0.75, 1.5],
+        ]
+    else:
+        m, dsub, zero = 2, 2, 3
+        # subspace 0 starts at [0,0] and [2,0]; [1,0] is 1 from both
+        vecs = [
+            [0.0, 0.0, 1.0, 1.0], [2.0, 0.0, -1.0, 0.5], [1.0, 0.0, 0.0, 0.0],
+            [0.0, 0.0, 0.0, 0.0], [2.5, 0.3, 3.0, -2.0], [-0.5, 0.5, 0.1, 0.7],
+            [1.7, -0.25, -1.5, 1.0], [0.1, 0.125, 2.0, 2.0],
+        ]
+    ids = _sample_order(range(len(vecs)), seed)  # ids[r] samples r-th
+    # the table stores FLOAT[]: train on the float32 values it holds
+    X = np.asarray(vecs, dtype=np.float32).astype(np.float64)
+    C = [kmeans_train(X[:, s * dsub:(s + 1) * dsub], k, spherical) for s in range(m)]
+    corpus = np.empty_like(X)
+    corpus[ids] = X  # corpus row = vec_id
+    want_assign = {
+        (i, s): int(a)
+        for s in range(m)
+        for i, a in enumerate(
+            nearest_centroid(corpus[:, s * dsub:(s + 1) * dsub], C[s], spherical)
+        )
+    }
 
-    def fail_first():
-        raise NoNotesError("first failure")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+    con.executemany(
+        "INSERT INTO embeddings VALUES (?, ?)",
+        [(i, v) for i, v in zip(ids, vecs)],
+    )
+    sql = _kmeans_oracle(k, m=m, dsub=dsub, spherical=spherical, seed=seed)
+    cent = con.execute(sql + " SELECT sub, list_id, centroid FROM cent").fetchall()
+    got_c = [np.zeros_like(c) for c in C]
+    for sub, list_id, centroid in cent:
+        got_c[sub][list_id] = centroid
+    assert len(cent) == m * k
+    for s in range(m):
+        assert got_c[s].tobytes() == C[s].tobytes()
+    got_assign = dict(
+        ((i, s), a)
+        for i, s, a in con.execute(sql + " SELECT cand_id, sub, list_id FROM assign").fetchall()
+    )
+    assert got_assign == want_assign
+    if spherical:
+        # the zero vector scores 0 against every list: the tie goes to 0
+        assert got_assign[(ids[zero], 0)] == 0
 
-    def fail_second():
-        raise RuntimeError("second failure")
 
-    with pytest.raises(NoNotesError) as exc_info:
-        _concurrent_writes(fail_first, fail_second)
-    joined = " ".join(str(a) for a in exc_info.value.args)
-    assert "first failure" in joined
-    assert "additional concurrent-write failure" in joined
-    assert "second failure" in joined
+@pytest.mark.parametrize("name", ["q62_ivf_ann", "q79_semantic_dedup", "q107_pq_ann"])
+def test_quantizer_oracle_survives_a_build_at_another_scale(spark, sf_dir, name):
+    """Building a quantizer query at a second scale factor must not
+    change what the first scale factor's oracle computes: nothing the
+    oracle reads is shared between runs."""
+    other = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not (os.path.isdir(sf_dir) and os.path.isdir(other)):
+        pytest.skip("testdata absent")
+    tools = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    if tools not in sys.path:
+        sys.path.insert(0, tools)
+    import __spark_entry__ as entrymod
+    from check import frame_digest
+
+    fn = entrymod.queries()[name]
+    first = frame_digest(fn(spark, sf_dir).toPandas())
+    fn(spark, other).toPandas()
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
+    )
+    assert frame_digest(con.execute(entrymod.oracle_sql()[name]).df()) == first

@@ -46,11 +46,15 @@ ALLOWED = {
     # docstring): broadcast queries x corpus is a cross product by
     # definition. The scale paths are q36 (LSH) and the IVF operator.
     "q28_cosine_knn": "cartesian",
-    # IVF probe step scores every query against the centroid table by
-    # contract; the broadcast side is bounded at nlist rows (a constant
-    # ~2^4-2^16 regardless of corpus size), so the product cannot grow
-    # with data. The corpus-sized join below it is a hash equi-join.
+    # IVF assignment scores every vector, and the probe every query,
+    # against the centroid table by contract; the broadcast side is
+    # bounded at nlist rows (a constant ~2^4-2^16 regardless of corpus
+    # size), so the product grows only linearly with data. The
+    # posting-list join below them is a hash equi-join.
     "q62_ivf_ann": "cartesian",
+    # SemDeDup's cluster assignment is the same bounded join as q62's:
+    # the corpus crosses the broadcast nlist-row centroid table.
+    "q79_semantic_dedup": "cartesian",
     # scalar-subquery idiom: crossJoin(broadcast(<1-row aggregate>)) to
     # attach the 1-row countDistinct(doc_id) corpus size to the per-term
     # document frequencies (r13 fix replacing the eager .first() scalar
