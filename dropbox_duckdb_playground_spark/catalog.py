@@ -56,7 +56,7 @@ MINHASH_MINS = ", ".join(
 # which the bench registers ONCE outside the timer. DataFrames are
 # immutable lazy plans, so sharing the object across queries is safe;
 # data is still read fresh at every action. Keyed by applicationId so
-# session restarts (tools/scaling.py) never reuse a dead plan.
+# session restarts (bench.py) never reuse a dead plan.
 # Value is (parquet mtime_ns, plan): a same-path rewrite REPLACES the
 # entry on next load instead of accumulating stale-mtime siblings.
 _LOAD_CACHE: dict[tuple[str, str], tuple[int, DataFrame]] = {}
@@ -138,14 +138,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 @dataclass
 class QueryDef:
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # ANSI/DuckDB SQL; None => rows-only check
+    oracle: str  # ANSI/DuckDB SQL
     tags: str  # SURVEY §2 operator ids covered
 
 
 REGISTRY: dict[str, QueryDef] = {}
 
 
-def register(name: str, oracle: str | None, tags: str):
+def register(name: str, oracle: str, tags: str):
     def deco(fn):
         REGISTRY[name] = QueryDef(fn=fn, oracle=oracle, tags=tags)
         return fn
@@ -6504,8 +6504,8 @@ def q124_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # public API used by __spark_entry__.py
 
 
-# Frozen: perfbench's 8-query slice and bench.py's restart cadence depend
-# on this order, registration order rotated by 4 (q05 ... q124, q01 ... q04).
+# Frozen: perfbench's 8-query slice and bench.py's run order depend on
+# this order, registration order rotated by 4 (q05 ... q124, q01 ... q04).
 QUERY_ORDER_OFFSET = 4
 
 
@@ -6520,4 +6520,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: qd.oracle for name, qd in REGISTRY.items() if qd.oracle is not None}
+    return {name: qd.oracle for name, qd in REGISTRY.items()}

@@ -284,6 +284,8 @@ def hash_sample(
     order or partitioning, and a SQL oracle selects the same rows."""
     key = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
     pdf = df.orderBy(key, id_col).limit(cap).select(vec_col).toPandas()
+    if pdf.empty:
+        return np.empty((0, 0))
     return np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
 
 
@@ -338,6 +340,8 @@ def kmeans_train(X: np.ndarray, k: int, spherical: bool) -> np.ndarray:
             "fixed-point centroid sums"
         )
     C = X[:k].copy()
+    if not len(C):
+        return C  # no rows, no centroids: assigning against them yields no rows
     fixed = np.floor(X * _FIXED_POINT).astype(np.int64)
     for _ in range(_ITERS):
         assign = nearest_centroid(X, C, spherical)

@@ -98,9 +98,8 @@ def test_no_oracle_emits_list_or_map():
 
 
 def test_query_order_is_frozen():
-    """perfbench times every 16th query from the 2nd and bench.py
-    restarts its session every 40 rows, so the catalog order is part of
-    the benchmark: pin it (no Spark session needed)."""
+    """perfbench times every 16th query from the 2nd, so the catalog
+    order is part of the benchmark: pin it (no Spark session needed)."""
     from dropbox_duckdb_playground_spark import catalog
 
     names = list(catalog.queries())

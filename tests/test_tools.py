@@ -1,21 +1,25 @@
-"""Unit tests for ``tools/`` — the oracle gate, the A/B harness and the
-sf1 bench — pure-python, no Spark session, except the ``ab.py`` smoke
-test, which uses the shared ``spark`` fixture."""
+"""Unit tests for ``bench.py`` and ``tools/`` — the timing loop, the
+scaling table, the oracle gate and the A/B harness — pure-python, no
+Spark session, except the ``ab.py`` smoke test and the empty-embeddings
+gate, which use the shared ``spark`` fixture."""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 
-def test_sf1_oracle_row_fields_partial_vs_full():
+def test_oracle_row_fields_partial_vs_full():
     """r10 ADVICE medium: a row whose oracle reps partially failed must
     report oracle=None + oracle_err (with the succeeded count), never a
     silent partial median; a full row carries median + spread and no
     error."""
-    from sf1_bench import oracle_row_fields
+    from bench import oracle_row_fields
 
     full = oracle_row_fields([1.0, 2.0, 3.0], [], reps=3)
     assert full["oracle"] == 2.0
@@ -33,18 +37,136 @@ def test_sf1_oracle_row_fields_partial_vs_full():
     assert empty["oracle"] is None and "[0/3" in empty["oracle_err"]
 
 
+def test_restart_budget_rule():
+    """One session restarts before the next query once the Spark seconds
+    timed since it started pass the budget; an sf0.1-like pass of 124
+    rows at 3 reps restarts about 3 times, and a heavy row at once."""
+    from bench import RESTART_BUDGET_S, restart_due
+
+    assert not restart_due([])
+    assert not restart_due([0.5, 0.5], budget=1.0)  # at the budget, not past it
+    assert restart_due([0.5, 0.5, 0.01], budget=1.0)
+    assert restart_due([RESTART_BUDGET_S + 1])
+
+    def restarts(reps_per_query):
+        n, since = 0, []
+        for reps in reps_per_query:
+            if restart_due(since):
+                n, since = n + 1, []
+            since += reps
+        return n
+
+    # sf0.1 on local[4,4]: 372 reps, 290 s
+    assert restarts([[0.78] * 3] * 124) == 3
+    assert restarts([[0.78] * 3] * 20) == 0
+    assert restarts([[30.0] * 3, [1.0] * 3]) == 1  # a heavy sf1 row
+
+
+def test_sf_label_takes_the_trailing_sf_number():
+    """The label used to be basename().replace("sf", ""), which crashed
+    float() on "testdata_sf1" after the whole run had been timed."""
+    from bench import sf_label
+
+    assert sf_label("/root/testdata/sf0.1") == 0.1
+    assert sf_label("/root/testdata/sf0.001/") == 0.001
+    assert sf_label("/some/checkout/testdata_sf1") == 1.0
+    assert sf_label("/tmp/tables") is None
+    assert sf_label("/data/sf1_copy") is None
+
+
+def test_bench_rejects_unknown_query_names(monkeypatch, capsys):
+    import bench
+
+    import dropbox_duckdb_playground_spark.session as session
+
+    def no_spark(*a, **k):
+        raise AssertionError("a session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    assert bench.main(["q01_pricing_summary", "q01_pricing_summry"]) == 2
+    assert "q01_pricing_summry" in capsys.readouterr().err
+
+
+def _bench_line(sf: float, spark: dict) -> dict:
+    """A bench.py JSON line (Spark only) with the given per-query medians."""
+    queries = {n: {"spark": t, "spark_reps": [t] * 3} for n, t in spark.items()}
+    line = json.dumps(
+        {"metric": "catalog_total_wall", "sf": sf, "master": "local[4,4]",
+         "reps": 3, "restarts": 0, "queries": queries}
+    )
+    return json.loads(line)
+
+
+def test_scaling_renders_bench_json():
+    """Classification thresholds on slope10 = t(sf0.1) / t(sf0.01), the
+    sf1 column grading on its own decade, and a failed cell as an error
+    row that counts toward the headline."""
+    from scaling import render
+
+    sf0001 = {"flat": 1.0, "sub": 1.0, "lin": 1.0, "edge": 1.0, "super": 1.0,
+              "big": 1.0, "q26_jaccard_pairs": 1.0, "broken": 1.0}
+    sf001 = dict(sf0001)
+    sf01 = {"flat": 1.99, "sub": 7.9, "lin": 8.0, "edge": 15.0, "super": 15.1,
+            "big": 1.0, "q26_jaccard_pairs": 20.0, "broken": None}
+    runs = [_bench_line(0.001, sf0001), _bench_line(0.01, sf001), _bench_line(0.1, sf01)]
+    lines, n_super = render(runs, _bench_line(1.0, {"big": 16.0, "lin": 10.0}))
+    rows = {ln.split(" | ")[0][2:]: ln.split(" | ") for ln in lines if ln.startswith("| ")}
+    cls = {n: r[-1].rstrip(" |") for n, r in rows.items() if n != "query"}
+    assert cls["flat"] == "overhead-bound"
+    assert cls["sub"] == "sublinear"
+    assert cls["lin"] == "linear"
+    assert cls["edge"] == "linear"
+    assert cls["super"] == "SUPERLINEAR"
+    assert cls["big"] == "SUPERLINEAR"  # 1.0 -> 1.0 -> 16.0 at sf1
+    assert rows["big"][5:7] == ["16.00", "16.00"]
+    assert rows["lin"][5:7] == ["10.00", "1.25"]
+    assert rows["flat"][5:7] == ["", ""]
+    assert cls["q26_jaccard_pairs"].startswith("SUPERLINEAR (data-inherent")
+    assert rows["broken"][1:4] == ["1.00", "1.00", "error"]
+    assert cls["broken"] == "error"
+    assert n_super == 4  # super, big, q26, broken
+    assert "**Superlinear/error count: 4, of which 1 annotated" in "\n".join(lines)
+    assert "median of 3 reps" in "\n".join(lines)
+
+
+def test_empty_embeddings_give_empty_quantizer_rows(spark, tmp_path):
+    """q62 (IVF), q79 (SemDeDup) and q107 (PQ) on a zero-row embeddings
+    table return no rows, as their DuckDB oracles do, instead of the
+    trainer raising on an empty sample."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    import check
+
+    src = "/root/testdata/sf0.001"
+    for f in os.listdir(src):
+        shutil.copy(os.path.join(src, f), tmp_path / f)
+    table = pq.read_table(os.path.join(src, "embeddings.parquet"))
+    pq.write_table(table.slice(0, 0), tmp_path / "embeddings.parquet")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        names = ["q62_ivf_ann", "q79_semantic_dedup", "q107_pq_ann"]
+        assert check.main([str(tmp_path), *names]) == 0
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+
+
 def test_every_tool_and_its_imports_resolve():
-    """Every tools/*.py imports, and every import statement inside it,
-    including the ones deferred into functions, names a module and symbol
-    that exist: a dangling cross-tool import or a renamed package symbol
-    fails here instead of at the next run of the tool."""
+    """bench.py and every tools/*.py import, and every import statement
+    inside them, including the ones deferred into functions, names a
+    module and symbol that exist: a dangling cross-tool import or a
+    renamed package symbol fails here instead of at the next run of the
+    tool."""
     import ast
     import importlib
     from pathlib import Path
 
-    tools = Path(__file__).resolve().parent.parent / "tools"
-    paths = sorted(tools.glob("*.py"))
-    assert paths
+    repo = Path(__file__).resolve().parent.parent
+    paths = sorted((repo / "tools").glob("*.py")) + [repo / "bench.py"]
+    assert len(paths) > 1
     for path in paths:
         importlib.import_module(path.stem)
         for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):

@@ -1,7 +1,9 @@
-"""Scaling-curve measurement: every catalog query at sf0.001 / 0.01 /
-0.1, best-of-2 steady-state, with a growth classification — plus an
-sf1 column (1000x of data) for the heavy similarity / dedup / graph
-families, using the synthesized tables from tools/gen_sf1.py.
+"""Scaling-curve table: every catalog query at sf0.001 / 0.01 / 0.1,
+with a growth classification — plus an sf1 column (1000x of data) from
+the synthesized tables of tools/gen_sf1.py when testdata_sf1/ exists.
+Each scale factor is one Spark-only ``bench.py`` run in a subprocess
+(a fresh JVM; bench.py warms, reps and restarts sessions); this tool
+parses the JSON lines and renders the table.
 
 The question the curve answers is the 100 TB one: as data grows 10x,
 does the query's wall time stay flat (fixed scheduling/sync overhead
@@ -34,169 +36,15 @@ Usage: python tools/scaling.py [out_md] [--no-sf1]   (writes SCALING.md)
 
 from __future__ import annotations
 
+import json
 import os
-import statistics
+import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 SF1 = os.path.join(REPO, "testdata_sf1")
-
-# Heavy families graded for the 1000x claim: pair-generation (dedup),
-# ANN, connected components, the flagship graph pipeline.
-SF1_QUERIES = [
-    "q25_minhash_pairs",
-    "q26_jaccard_pairs",
-    "q27_simhash",
-    "q28_cosine_knn",
-    "q29_components",
-    "q34_er_doc_clusters",
-    "q35_hamming_pairs",
-    "q36_lsh_ann",
-    "q37_mapreduce_quality",
-    "q38_cosine_neardup",
-    # r11 second extension: every remaining catalog row >= ~1s at sf0.1
-    # now carries an sf1 cell — text/winnow/contamination/pmi shapes and
-    # the two heaviest uncovered relational rows
-    "q42_winnow_fp",
-    "q43_flagship_graph",
-    "q47_neardup_survivors",
-    "q48_contamination",
-    "q50_repetition",
-    "q57_group_median",
-    "q62_ivf_ann",
-    "q64_jaccard_capped",
-    "q65_lsh_capped",
-    "q67_minhash_estimate",
-    "q73_promo_share",
-    "q79_semantic_dedup",
-    "q80_boilerplate",
-    "q88_tpch_q21",
-    "q89_chunk_dedup",
-    "q91_knn_classify",
-    "q92_pagerank",
-    "q93_hll_distinct",
-    "q95_bloom_contamination",
-    "q100_curation_policy",
-    # r11: the tpch-relational family's three worst rows by data time —
-    # the 2.5x family ratio was argued from slope10 only until now
-    "q101_tpch_q2",
-    "q102_tpch_q11",
-    "q103_tpch_q20",
-    "q105_triangle_count",
-    "q106_bm25_topk",
-    "q107_pq_ann",
-    "q108_histogram_quantiles",
-    "q109_khop_reach",
-    "q116_bigram_pmi",
-    "q120_train_manifest",
-    "q121_fuzzy_match",
-    # r12: close the slope blind spot — the six steepest slope10 rows
-    # that had no sf1 cell (q121 taught that hidden superlinears live
-    # exactly here)
-    "q115_positional_index",
-    "q06_two_key_left",
-    "q112_grouping_sets",
-    "q114_sliding_window",
-    "q117_array_suite",
-    "q122_gapfill_locf",
-    # r12 second sweep: every remaining no-cell row with slope10 >= 2.5
-    # in the r11 SCALING table (q15's 8.34 was steeper than any of the
-    # verdict's named six)
-    "q15_event_kv",
-    "q32_struct_flatten",
-    "q82_tpch_q4",
-    "q20_token_stats",
-    "q58_scd2_history",
-    "q14_event_json_agg",
-    "q97_unpivot_measures",
-    "q60_vocabulary",
-    "q21_quality_score",
-    "q18_sessions",
-    # r12 third sweep: the ENTIRE remaining catalog — every row now
-    # carries an sf1 cell, closing the r11 verdict's missing-#2 (the
-    # slope blind spot) completely. These are the <1s, slope10<2.5
-    # rows; expected flat-to-sublinear, verified rather than assumed.
-    "q30_rollup",
-    "q31_star_exclude",
-    "q33_canon_match",
-    "q39_bpe_tokens",
-    "q40_scrub_pii",
-    "q41_stratified_sample",
-    "q44_asof_join",
-    "q45_range_join",
-    "q46_time_rollup",
-    "q49_skew_join",
-    "q51_tpch_q3",
-    "q52_tpch_q5",
-    "q53_tpch_q10",
-    "q54_table_stats",
-    "q55_event_cube",
-    "q56_above_cust_avg",
-    "q59_snapshot_cdc",
-    "q61_idf",
-    "q63_media_features",
-    "q66_doc_chunks",
-    "q68_unigram_logprob",
-    "q69_frame_plan",
-    "q70_media_resize",
-    "q71_tpch_q18",
-    "q72_tpch_q7",
-    "q74_supplier_cnt",
-    "q75_market_share",
-    "q76_dormant_customers",
-    "q77_event_funnel",
-    "q78_sessionization",
-    "q81_stratified_sample",
-    "q83_tpch_q12",
-    "q84_tpch_q13",
-    "q85_tpch_q15",
-    "q86_tpch_q17",
-    "q87_tpch_q19",
-    "q90_sequence_packing",
-    "q94_countmin_freq",
-    "q96_window_suite",
-    "q98_tpch_q6",
-    "q99_tpch_q9",
-    "q104_source_mixture",
-    "q110_tokenizer_fertility",
-    "q111_zorder_layout",
-    "q113_bag_setops",
-    "q118_percentile_cont",
-    "q119_fk_integrity",
-    "q123_retention_cohorts",
-    "q124_ab_test",
-    "q01_pricing_summary",
-    "q02_brand_nodes",
-    "q03_latest_order",
-    "q04_best_order",
-    "q05_cust_order_stats",
-    "q07_exists_orders",
-    "q08_cust_no_orders",
-    "q09_same_nation_pairs",
-    "q10_id_remap",
-    "q11_union_nations",
-    "q12_union_all_tagged",
-    "q13_cust_rank",
-    "q16_doc_tokens",
-    "q17_event_hourly",
-    "q19_event_pivot",
-    "q22_lang_id",
-    "q23_fingerprint",
-    "q24_exact_dedup",
-]
-
-# Rows whose sf1 reading is VOLATILE (in-artifact rep spread repeatedly
-# >~2x: q105 swung 20-106s across r11/r12 single cells while its
-# interleaved median held ~32s) get MEDIAN-OF-5 instead of 3, in BOTH
-# this tool and tools/sf1_bench.py, so SCALING cells and SF1_BENCH
-# medians stop disagreeing and needing manual arbitration every round
-# (r12 VERDICT #5). q29/q43 were checked while in here: SF1_BENCH r12
-# spark spreads 0.43/0.14 — fine at 3 reps.
-VOLATILE_REPS = {"q105_triangle_count": 5}
 
 
 def classify(slope: float) -> str:
@@ -214,11 +62,7 @@ def classify(slope: float) -> str:
 # The headline count stays INCLUSIVE of these (a new superlinear row can
 # never silently vanish from the metric by being added here); the
 # allowlist below pins exactly which rows may carry a baseline note.
-ANNOTATED_BASELINE_ALLOWLIST = {
-    "q26_jaccard_pairs",
-    "q105_triangle_count",
-    "q121_fuzzy_match",
-}
+ANNOTATED_BASELINE_ALLOWLIST = {"q26_jaccard_pairs", "q121_fuzzy_match"}
 ROW_NOTES = {
     "q121_fuzzy_match": (
         " (data-inherent quadratic, measured r11: the synthetic part"
@@ -237,142 +81,33 @@ ROW_NOTES = {
         " DEFAULT max_shingle_freq cap and is measured separately:"
         " q34/q43/q47/q64/q65/q120)"
     ),
-    "q105_triangle_count": (
-        " (O(m^1.5)-by-design row whose WORK grows superlinearly in"
-        " the DATA: on the saturated co-purchase graph 10x rows ->"
-        " 10x edges (1.2M->12M) but ~30x wedges, the same"
-        " data-inherent densification as q26, and the oracle's own"
-        " sf1 slope is ~18x; additionally the r9 size-gated hybrid"
-        " roughly HALVED t(sf0.1) (broadcast-regime intersect form,"
-        " 5.9->3.4s), which mechanically doubles this ratio without"
-        " any sf1 change; single-rep sf1 readings swing 20-106s"
-        " across one night (r8: four cross-checks 20.4-65.4s; r9:"
-        " 26.6/31.6/41.8/62.2s) — since r10 the sf1 cell is the"
-        " median of in-session reps rather than one such coin-flip,"
-        " and since r13 a VOLATILE_REPS row gets median-of-5 plus one"
-        " UNTIMED target-scale warm rep: an 8-rep probe showed the"
-        " FIRST sf1 execution in a JVM pays a ~100-130s one-time cost"
-        " before settling into a 20-50s band (the 74.89s r12 cell was"
-        " that first-touch outlier); under the settled protocol the"
-        " SCALING cell and the interleaved SF1_BENCH median agree"
-        " within ~4% (26.88s vs 25.79s, r13)"
-    ),
 }
 
 
-def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    out_md = args[0] if args else os.path.join(REPO, "SCALING.md")
-    do_sf1 = "--no-sf1" not in sys.argv and os.path.isdir(SF1)
+def bench(sf_dir: str) -> dict:
+    """The JSON line of one Spark-only ``bench.py`` run at ``sf_dir``."""
+    env = {**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir, "SPARK_GRAFT_NO_ORACLE": "1"}
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "bench.py")],
+        env=env,
+        stdout=subprocess.PIPE,
+        text=True,
+        check=True,
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
 
-    import __spark_entry__ as entrymod
-    from dropbox_duckdb_playground_spark.session import get_spark, quiesce
 
-    spark = get_spark("scaling")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
-
-    # JIT/codegen warmup on the smallest sf
-    for fn in qs.values():
-        try:
-            fn(spark, SFS[0]).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
-        quiesce(spark)
-
-    def run(fn, sf, name, reps=2, agg="best"):
-        times: list[float] = []
-        for _ in range(reps):
-            t0 = time.time()
-            try:
-                fn(spark, sf).write.format("noop").mode("overwrite").save()
-                times.append(time.time() - t0)
-            except Exception as exc:
-                sys.stderr.write(f"scaling: {name}@{sf}: {exc}\n")
-                break
-            quiesce(spark)
-        if not times:
-            return -1.0
-        val = statistics.median(times) if agg == "median" else min(times)
-        return round(val, 3)
-
-    def fresh_session():
-        # Restart the JVM-side session between scale-factor sweeps: after
-        # a few hundred query executions the accumulated GC/broadcast/
-        # shuffle-tracker state inflates later measurements (measured
-        # ~2x on the sf1 heavy rows when they ran last in one session).
-        nonlocal spark
-        spark.stop()
-        spark = get_spark("scaling")
-        spark.sparkContext.setLogLevel("ERROR")
-        for warm_fn in list(qs.values())[:3]:
-            try:
-                warm_fn(spark, SFS[0]).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:
-                pass
-
-    results: dict[str, list[float]] = {}
-    for sf in SFS:
-        for name, fn in qs.items():
-            results.setdefault(name, []).append(run(fn, sf, name))
-        if sf != SFS[-1] or do_sf1:
-            fresh_session()
-    sf1_times: dict[str, float] = {}
-    if do_sf1:
-        # The sf1 batch is 30 HEAVY queries back-to-back; round-4 showed
-        # the single session degrading through the batch (late rows
-        # measured up to 8x their fresh-session time — q95 35.7s in-batch
-        # vs 4.4s fresh). Restart every few rows and warm each query's
-        # own shape at sf0.01 so the sf1 rep measures the plan, not JIT.
-        for i, name in enumerate(n for n in SF1_QUERIES if n in qs):
-            if i % 6 == 0:
-                fresh_session()
-            try:
-                qs[name](spark, SFS[1]).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:
-                pass
-            quiesce(spark)
-            # median of 3 in-session reps (r9 VERDICT item 5): a single
-            # sf1 rep proved to be a coin-flip on the volatile rows —
-            # q105 swung 26.6-77.5s in one night and the committed cell
-            # was the worst reading. The median absorbs one bad rep and
-            # the rep count is stated in the artifact header. Rows in
-            # VOLATILE_REPS (q105) get median-of-5 AND one UNTIMED
-            # warm rep at the TARGET scale first: an r13 8-rep probe
-            # showed the FIRST sf1 execution in a JVM pays a ~100-130s
-            # one-time cost (the sf1 shuffle regime runs codegen paths
-            # the sf0.01 warm never compiles, plus first-touch heap
-            # growth) before settling into a 20-50s band — the
-            # committed 74.89s r12 cell was that first-touch outlier,
-            # not the plan.
-            if name in VOLATILE_REPS:
-                run(qs[name], SF1, name, reps=1)
-            sf1_times[name] = run(
-                qs[name], SF1, name,
-                reps=VOLATILE_REPS.get(name, 3), agg="median",
-            )
-            if sf1_times[name] > 15:
-                # a heavy row (the uncapped q26 baseline runs ~50s at
-                # sf1) leaves GC/shuffle-tracker state that inflates
-                # the NEXT rows in the same JVM (round-5 measured q29
-                # at 7.4s in-batch vs 1.0-1.7s fresh) — isolate its
-                # aftermath immediately instead of waiting for the
-                # every-6-rows cadence.
-                fresh_session()
-
+def render(runs: list[dict], sf1: dict | None = None) -> tuple[list[str], int]:
+    """SCALING.md's lines and its superlinear/error count, from bench.py's
+    JSON at sf0.001, sf0.01 and sf0.1 (``runs``) and optionally at sf1."""
+    sf1_times = {n: r["spark"] for n, r in sf1["queries"].items()} if sf1 else {}
     lines = [
         "# SCALING — measured growth of every query across 100x of data",
         "(+ an sf1 column: 1000x, synthesized via tools/gen_sf1.py)",
         "",
-        "Best-of-2 steady-state seconds per scale factor (sf1 column:",
-        "MEDIAN of 3 in-session reps; VOLATILE_REPS rows get median-of-5",
-        "plus one untimed target-scale warm rep — single-rep sf1 cells",
-        "proved to be coin-flips on the volatile rows)"
-        " (`tools/scaling.py`, local[32]). `slope10` = t(sf0.1)/t(sf0.01):",
+        f"Steady-state Spark seconds per scale factor, each the median of"
+        f" {runs[0]['reps']} reps; one `bench.py` run per column"
+        f" (`tools/scaling.py`, {runs[0]['master']}). `slope10` = t(sf0.1)/t(sf0.01):",
         "the wall-cost multiplier for the last 10x of data; `slope1000` =",
         "t(sf1)/t(sf0.1) where measured. A query whose",
         "slope is far below 10 is still overhead-dominated at this scale —",
@@ -386,8 +121,9 @@ def main() -> int:
     ]
     n_super = 0
     n_annotated = 0
-    for name, ts in results.items():
-        if len(ts) == 3 and ts[1] > 0 and ts[2] > 0:
+    for name in runs[0]["queries"]:
+        ts = [run["queries"][name]["spark"] for run in runs]
+        if None not in ts and min(ts[1:]) > 0:
             slope = ts[2] / ts[1]
             cls = classify(slope)
             t1 = sf1_times.get(name)
@@ -410,19 +146,14 @@ def main() -> int:
                 n_super += 1
                 if name in ROW_NOTES:
                     n_annotated += 1
-            # q105's note adjudicates a load-spike OUTLIER: it rides the
-            # row only while the superlinear reading actually reproduces
-            # (a clean re-sweep must not keep a stale outlier note);
-            # q26's note explains a data-inherent baseline and always
-            # applies.
-            if name != "q105_triangle_count" or cls == "SUPERLINEAR":
-                cls += ROW_NOTES.get(name, "")
+            cls += ROW_NOTES.get(name, "")
             lines.append(
                 f"| {name} | {ts[0]:.2f} | {ts[1]:.2f} | {ts[2]:.2f} |"
                 f" {slope:.2f} | {sf1_cell} | {s1000_cell} | {cls} |"
             )
         else:
-            lines.append(f"| {name} | {ts} | | | | | | error |")
+            cells = " | ".join("error" if t is None else f"{t:.2f}" for t in ts)
+            lines.append(f"| {name} | {cells} | | | | | error |")
             n_super += 1
     lines += [
         "",
@@ -461,9 +192,18 @@ def main() -> int:
         "is what motivated the cap-by-default switch — only q26 keeps",
         "exact=True, as the annotated measurement baseline.",
     ]
+    return lines, n_super
+
+
+def main() -> int:
+    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    out_md = args[0] if args else os.path.join(REPO, "SCALING.md")
+    do_sf1 = "--no-sf1" not in sys.argv and os.path.isdir(SF1)
+    runs = [bench(sf) for sf in SFS]
+    lines, n_super = render(runs, bench(SF1) if do_sf1 else None)
     with open(out_md, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"wrote {out_md}: {len(results)} queries, {n_super} superlinear")
+    print(f"wrote {out_md}: {len(runs[0]['queries'])} queries, {n_super} superlinear")
     return 1 if n_super else 0
 
 

@@ -3,15 +3,14 @@ the synthesized 1000x scale (testdata_sf1), one query per line, with a
 wall-clock budget per query so one infeasible oracle cannot sink the
 batch.
 
-The candidate set is tools/scaling.SF1_QUERIES (every row that gets an
-sf1 timing in SCALING.md), the uncapped pair miners included: on the
-gen_sf1 corpus their full result sets are small enough to collect and
-hash (at most ~35k rows). If a corpus regeneration re-saturates the
+The candidate set is the whole catalog in ``catalog.queries()`` order,
+the uncapped pair miners included: on the gen_sf1 corpus their full
+result sets are small enough to collect and hash (at most ~35k rows). If a corpus regeneration re-saturates the
 shingle space, re-probe the oracle COUNTs before running them here.
 
 The transcript goes to stdout only; redirect it to keep it.
 
-Usage: python tools/sf1_mirror.py [query ...]   (default: all SF1_QUERIES)
+Usage: python tools/sf1_mirror.py [query ...]   (default: the whole catalog)
 """
 
 from __future__ import annotations
@@ -23,16 +22,15 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tools"))
 
-from scaling import SF1_QUERIES  # noqa: E402  (tools/ on path)
+from dropbox_duckdb_playground_spark import catalog  # noqa: E402
 
 SF1 = os.path.join(REPO, "testdata_sf1")
 PER_QUERY_TIMEOUT = 1200  # seconds, both engines + hash compare
 
 
 def main() -> int:
-    names = sys.argv[1:] or list(SF1_QUERIES)
+    names = sys.argv[1:] or list(catalog.queries())
     print("sf1 (1000x, testdata_sf1) correctness mirror — tools/sf1_mirror.py")
     print(f"per-query timeout {PER_QUERY_TIMEOUT}s; protocol = tools/check.py")
     print("(row count + column names + order-insensitive value hash vs DuckDB)")
