@@ -1206,26 +1206,39 @@ def q35_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle so both engines compute identical buckets.
 
 
-def _lsh_oracle() -> str:
+def _hyperplane_sig_sql() -> tuple[str, str]:
+    """(``wt`` CTE, bucket expression) for the 8-plane hyperplane
+    signature of ``embedding``, as ``hyperplane_signature`` computes it.
+
+    ``wt`` is one row holding each plane's 64 weights as ``w0 .. w7``, so
+    DuckDB builds each literal array once; written inside the
+    ``list_transform`` lambda, the array was rebuilt for every element
+    (q38's oracle took 24 s at sf0.1). A query using the bucket
+    expression must have ``wt`` in its FROM clause."""
     from dropbox_duckdb_playground_spark.operators.similarity import (
         hyperplane_weights,
     )
 
     planes = hyperplane_weights(64, 8)
-    proj = lambda side, w: (  # noqa: E731
-        "list_aggregate(list_transform(range(1, 65), i -> "
-        f"CAST({side}[i] AS DOUBLE) * ({w})[i]), 'sum')"
+    arrays = ", ".join(
+        "[" + ", ".join(str(x) for x in w) + f"]::DOUBLE[] AS w{p}"
+        for p, w in enumerate(planes)
     )
-    sig_terms = []
-    for p, w in enumerate(planes):
-        warr = "[" + ", ".join(str(x) for x in w) + "]"
-        sig_terms.append(
-            f"(CASE WHEN {proj('embedding', warr)} > 0 THEN {2**p} ELSE 0 END)"
-        )
-    sig = " + ".join(sig_terms)
+    sig = " + ".join(
+        "(CASE WHEN list_aggregate(list_transform(range(1, 65), i -> "
+        f"CAST(embedding[i] AS DOUBLE) * wt.w{p}[i]), 'sum') > 0 "
+        f"THEN {2**p} ELSE 0 END)"
+        for p in range(len(planes))
+    )
+    return f"wt AS (SELECT {arrays})", f"CAST({sig} AS BIGINT)"
+
+
+def _lsh_oracle() -> str:
+    wt, bucket = _hyperplane_sig_sql()
     return f"""
-    WITH sigged AS (
-      SELECT vec_id, embedding, CAST({sig} AS BIGINT) AS bucket FROM embeddings),
+    WITH {wt},
+    sigged AS (
+      SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings, wt),
     q AS (SELECT vec_id AS query_id, embedding AS qv, bucket
           FROM sigged WHERE vec_id < 10),
     scored AS (
@@ -1261,45 +1274,25 @@ def q36_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cosine_neardup_oracle() -> str:
-    from dropbox_duckdb_playground_spark.operators.similarity import (
-        hyperplane_weights,
-    )
-
-    planes = hyperplane_weights(64, 8)
-    proj = lambda side, w: (  # noqa: E731
-        "list_aggregate(list_transform(range(1, 65), i -> "
-        f"CAST({side}[i] AS DOUBLE) * ({w})[i]), 'sum')"
-    )
-    sig_terms = []
-    for p, w in enumerate(planes):
-        warr = "[" + ", ".join(str(x) for x in w) + "]"
-        sig_terms.append(
-            f"(CASE WHEN {proj('embedding', warr)} > 0 THEN {2**p} ELSE 0 END)"
-        )
-    sig = " + ".join(sig_terms)
+    wt, bucket = _hyperplane_sig_sql()
     return f"""
-    WITH sigged AS (
-      SELECT vec_id, embedding, CAST({sig} AS BIGINT) AS bucket FROM embeddings)
-    SELECT l.vec_id AS a_id, r.vec_id AS b_id,
-           round(
-             list_aggregate(list_transform(range(1, 65),
-                 i -> CAST(l.embedding[i] AS DOUBLE) * CAST(r.embedding[i] AS DOUBLE)),
-               'sum')
-             / (sqrt(list_aggregate(list_transform(range(1, 65),
-                   i -> CAST(l.embedding[i] AS DOUBLE) * CAST(l.embedding[i] AS DOUBLE)), 'sum'))
-                * sqrt(list_aggregate(list_transform(range(1, 65),
-                   i -> CAST(r.embedding[i] AS DOUBLE) * CAST(r.embedding[i] AS DOUBLE)), 'sum'))),
-             4) AS cosine
-    FROM sigged l JOIN sigged r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
-    WHERE round(
-             list_aggregate(list_transform(range(1, 65),
-                 i -> CAST(l.embedding[i] AS DOUBLE) * CAST(r.embedding[i] AS DOUBLE)),
-               'sum')
-             / (sqrt(list_aggregate(list_transform(range(1, 65),
-                   i -> CAST(l.embedding[i] AS DOUBLE) * CAST(l.embedding[i] AS DOUBLE)), 'sum'))
-                * sqrt(list_aggregate(list_transform(range(1, 65),
-                   i -> CAST(r.embedding[i] AS DOUBLE) * CAST(r.embedding[i] AS DOUBLE)), 'sum'))),
-             4) >= 0.25
+    WITH {wt},
+    sigged AS (
+      SELECT vec_id, embedding, {bucket} AS bucket,
+             sqrt(list_aggregate(list_transform(range(1, 65),
+                 i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
+               'sum')) AS norm
+      FROM embeddings, wt)
+    SELECT a_id, b_id, cosine FROM (
+      SELECT l.vec_id AS a_id, r.vec_id AS b_id,
+             round(
+               list_aggregate(list_transform(range(1, 65),
+                   i -> CAST(l.embedding[i] AS DOUBLE) * CAST(r.embedding[i] AS DOUBLE)),
+                 'sum')
+               / (l.norm * r.norm),
+               4) AS cosine
+      FROM sigged l JOIN sigged r ON l.bucket = r.bucket AND l.vec_id < r.vec_id)
+    WHERE cosine >= 0.25
     """
 
 
@@ -4251,24 +4244,7 @@ def q93_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same pinned table below — the fused
     # registers+bucket-counts-in-one-aggregate variant was measured
     # and rejected (see the adjudicated-stop note in the docstring)
-    h = SK._phash(F.col("v").cast("string"), "hll:")
-    w = F.shiftright(h, 6)  # h div 64, h is a nonneg 60-bit value
-    exploded = vals.select(
-        "col_name",
-        (h % SK.HLL_BUCKETS).alias("bucket"),
-        F.when(w == 0, F.lit(SK.HLL_WBITS + 1))
-        .otherwise(F.lit(SK.HLL_WBITS + 1) - F.length(F.bin(w)))
-        .alias("rho"),
-    )
-    regs0 = exploded.groupBy("col_name", "bucket").agg(F.max("rho").alias("reg"))
-    spine = (
-        spark.range(SK.HLL_BUCKETS)
-        .select(F.col("id").cast("bigint").alias("bucket"))
-        .crossJoin(spark.createDataFrame([(c,) for c in cols], "col_name string"))
-    )
-    regs = spine.join(F.broadcast(regs0), ["col_name", "bucket"], "left").select(
-        "col_name", "bucket", F.coalesce(F.col("reg"), F.lit(0)).cast("int").alias("reg")
-    )
+    regs = SK.hll_registers(vals, cols)
     est = SK.hll_estimate(regs)
     exact = vals.groupBy("col_name").agg(
         F.count("*").cast("long").alias("exact_distinct")
@@ -5571,15 +5547,13 @@ def q111_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic Z-order layout report over orders: each row's
     (custkey, order-day) pair is equal-width bucketized to 8-bit ranks,
     Morton-interleaved, and grouped by the 8-bit z-prefix — one group
-    per would-be output file of ``layout.zorder_write``. The per-group
+    per would-be output file of a z-ordered write. The per-group
     min/max of BOTH dimensions is the point: z-ordering keeps every
     file's footer statistics narrow on every clustering column, which
     is what turns point/range predicates into file skips at 100 TB.
-    The write path itself (repartitionByRange + sortWithinPartitions)
-    is exercised in tests/test_layout.py; this query puts the key
-    derivation — bucketize, interleave, prefix-group — under the
-    cross-engine hash check (equal-width ranks rather than
-    approxQuantile, whose sketch is engine-private)."""
+    This query puts the key derivation — bucketize, interleave,
+    prefix-group — under the cross-engine hash check (equal-width
+    ranks rather than approxQuantile, whose sketch is engine-private)."""
     o = load(spark, sf_dir, "orders")
     day = F.datediff(F.col("o_orderdate"), F.lit("1990-01-01")).cast("bigint")
     mm = o.agg(

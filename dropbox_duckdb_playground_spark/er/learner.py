@@ -265,15 +265,3 @@ def console_label(
         return session.model()
     except RuntimeError:
         return None
-
-
-def save_model(model: MatchModel, path: str) -> None:
-    """Persist the weights artifact (reference keeps a training JSON +
-    binary model per matcher, learner.py:49-66 — ours is one JSON)."""
-    with open(path, "w") as fh:
-        fh.write(model.dumps())
-
-
-def load_model(path: str) -> MatchModel:
-    with open(path) as fh:
-        return MatchModel.loads(fh.read())

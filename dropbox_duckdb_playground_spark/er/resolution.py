@@ -4,7 +4,7 @@ Mirrors the reference pipeline `CanonMatcher → MessyMatcher →
 MappingCombiner → IDConvertor` (examples/graph/resolution/main.py:17-91)
 with the self-contained expression scorer by default:
 
-1. canon matching (E2/E3): messy records vs a canonical table — block
+1. canon matching (E2): messy records vs a canonical table — block
    join for candidates, score, threshold (0.25), argmax per messy_id →
    mapper (messy_id → canon_id).
 2. messy dedup (E4-E7): unmatched messy records blocked against each
@@ -23,11 +23,7 @@ from dropbox_duckdb_playground_spark.er.blocking import block_table, candidate_p
 from dropbox_duckdb_playground_spark.er.clustering import cluster_pairs
 from dropbox_duckdb_playground_spark.er.features import engineer_features
 from dropbox_duckdb_playground_spark.er.scoring import expression_scorer, select_matches
-from dropbox_duckdb_playground_spark.operators.relational import (
-    anti_diff,
-    argmax_per_group,
-    union_all,
-)
+from dropbox_duckdb_playground_spark.operators.relational import argmax_per_group
 
 
 def match_to_canon(
@@ -68,49 +64,6 @@ def match_to_canon(
     )
     return best.select(
         F.col("a_id").alias("messy_id"), F.col("b_id").alias("canon_id"), "score"
-    )
-
-
-def incremental_match_to_canon(
-    messy_features: DataFrame,
-    canon_features: DataFrame,
-    feedback: DataFrame,
-    prev_messy_ids: DataFrame,
-    prev_canon_ids: DataFrame,
-    fields: Sequence[str],
-    scorer: Callable[[DataFrame], DataFrame] | None = None,
-    threshold: float = 0.25,
-) -> DataFrame:
-    """E3 incremental canon pairing (reference `CanonMatcher.Pairer`
-    cache branch, examples/graph/resolution/mapper/canon.py:115-166).
-
-    Instead of re-pairing the full messy×canon space each crawl, split
-    both sides into old (seen last run — ``prev_*_ids``, one ``node_id``
-    column each) and new, pair only the three combinations that can
-    produce unseen matches — old×new, new×old, new×new — union with the
-    cached ``feedback`` match table (which already holds the old×old
-    argmax), and take the global per-messy argmax. With deterministic
-    scoring and tiebreaks this equals a full recompute whenever ids are
-    only ADDED; if a canon id was removed, its stale feedback matches
-    survive (same as the reference) — drop them from ``feedback``
-    upstream and re-pair those messy ids if removal must be handled.
-
-    Scale: the pairing cost per crawl is proportional to the *delta*
-    blocks, not the corpus; ``prev_*_ids`` are key-only tables (broadcast
-    when small) and every sub-pairing reuses the blocked-join path of
-    :func:`match_to_canon`.
-    """
-    scorer = scorer or expression_scorer(fields)
-    old_messy = messy_features.join(F.broadcast(prev_messy_ids), "node_id", "semi")
-    new_messy = anti_diff(messy_features, prev_messy_ids, ["node_id"])
-    old_canon = canon_features.join(F.broadcast(prev_canon_ids), "node_id", "semi")
-    new_canon = anti_diff(canon_features, prev_canon_ids, ["node_id"])
-
-    parts = [feedback.select("messy_id", "canon_id", "score")]
-    for m, c in ((old_messy, new_canon), (new_messy, old_canon), (new_messy, new_canon)):
-        parts.append(match_to_canon(m, c, fields, scorer=scorer, threshold=threshold))
-    return argmax_per_group(
-        union_all(parts), keys=["messy_id"], score="score", tiebreak=["canon_id"]
     )
 
 
@@ -159,32 +112,3 @@ def resolve_entities(
     from dropbox_duckdb_playground_spark.er.clustering import combine_mappings
 
     return combine_mappings(mappers)
-
-
-def validate_entity_map(
-    features: DataFrame,
-    entity_map: DataFrame,
-    pairs: DataFrame | None = None,
-    id_col: str = "node_id",
-) -> dict[str, int]:
-    """V4: id-consistency diagnostics across the feature / entity-map /
-    candidate-pair tables (reference `MessyEntityMapValidate`,
-    examples/graph/resolution/mapper/messy.py:253-282). Join-based count
-    checks — each is one left_anti aggregate, nothing collected:
-
-    - ``unmapped``: feature ids with no entity-map row,
-    - ``orphan_mapped``: entity-map ids absent from the features,
-    - ``orphan_paired``: pair endpoints absent from the features.
-    """
-    feat_ids = features.select(F.col(id_col).alias("messy_id"))
-    mapped = entity_map.select("messy_id")
-    out = {
-        "unmapped": feat_ids.join(mapped, "messy_id", "left_anti").count(),
-        "orphan_mapped": mapped.join(feat_ids, "messy_id", "left_anti").count(),
-    }
-    if pairs is not None:
-        ends = pairs.select(F.col("a_id").alias("messy_id")).union(
-            pairs.select(F.col("b_id").alias("messy_id"))
-        )
-        out["orphan_paired"] = ends.join(feat_ids, "messy_id", "left_anti").count()
-    return out

@@ -1,16 +1,10 @@
 """ER pairwise scoring (E6): pluggable scorers over candidate pairs.
 
 The reference scores 100-row batches with a pickled dedupe model on 8
-processes (mapper/messy.py:285-413). Two Spark paths:
-
-1. `expression_scorer` (default): string-similarity features + fixed
-   logistic weights, entirely in Column expressions — JVM-side, codegen,
-   no Python. This is the self-contained scorer SURVEY §8.5(b) calls for.
-2. `pandas_batch_scorer`: an `mapInPandas` wrapper that broadcasts an
-   arbitrary pickled model and scores Arrow batches — the fidelity path
-   for dedupe-model artifacts (§8.5(a)). Model is deserialized once per
-   executor (lazy global), batches sized by
-   `spark.sql.execution.arrow.maxRecordsPerBatch`.
+processes (mapper/messy.py:285-413). Here `expression_scorer` computes
+string-similarity features + logistic weights entirely in Column
+expressions — JVM-side, codegen, no Python. This is the self-contained
+scorer SURVEY §8.5(b) calls for; the learner (E10) supplies its weights.
 
 After scoring: threshold filter + per-left-id argmax (A4) mirror
 mapper/messy.py:338-345 / mapper/canon.py:194-201.
@@ -18,8 +12,7 @@ mapper/messy.py:338-345 / mapper/canon.py:194-201.
 
 from __future__ import annotations
 
-import math
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -50,46 +43,6 @@ def expression_scorer(
                 F.col(f"a_{field}"), F.col(f"b_{field}")
             )
         return pairs.withColumn("score", F.round(1.0 / (1.0 + F.exp(-z)), 6))
-
-    return score
-
-
-def pandas_batch_scorer(
-    model_bytes: bytes,
-    score_fn: Callable[[object, "pandas.DataFrame"], "pandas.Series"],
-    out_type: str = "double",
-) -> Callable[[DataFrame], DataFrame]:
-    """Arbitrary-model batch scorer. ``score_fn(model, pdf) -> Series``
-    runs per Arrow batch with the broadcast-deserialized model — the
-    Spark equivalent of the reference's multiprocess `do_pairing`
-    (mapper/messy.py:347-374)."""
-
-    def score(pairs: DataFrame) -> DataFrame:
-        import pandas as pd  # noqa: F401
-
-        from pyspark.sql.types import StructField, StructType, _parse_datatype_string
-
-        sc = pairs.sparkSession.sparkContext
-        b_model = sc.broadcast(model_bytes)
-        # build the output schema structurally — string surgery on
-        # simpleString() breaks as soon as a column is itself a struct
-        out_schema = StructType(
-            list(pairs.schema.fields)
-            + [StructField("score", _parse_datatype_string(out_type))]
-        )
-        _cache: dict[str, object] = {}
-
-        def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-            import pickle
-
-            if "m" not in _cache:
-                _cache["m"] = pickle.loads(b_model.value)
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["score"] = score_fn(_cache["m"], pdf)
-                yield pdf
-
-        return pairs.mapInPandas(run, schema=out_schema)
 
     return score
 

@@ -31,6 +31,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from dropbox_duckdb_playground_spark.session import scratch_root
+
 
 def _resolve(df: DataFrame) -> str:
     """The strategy for ``df``'s session: ``local`` on a local master,
@@ -41,14 +43,12 @@ def _resolve(df: DataFrame) -> str:
 
 def _checkpoint_dir(df: DataFrame) -> str:
     """The context's checkpoint dir; if the deploy set none, a local
-    fallback under ``SPARK_LOCAL_DIRS`` (or ``/tmp``)."""
+    fallback under ``session.scratch_root()``."""
     sc = df.sparkSession.sparkContext
     current = sc._jsc.sc().getCheckpointDir()
     if current.isDefined():
         return current.get()
-    base = os.path.join(
-        os.environ.get("SPARK_LOCAL_DIRS", "/tmp"), "spark_graft_ckpt"
-    )
+    base = os.path.join(scratch_root(), "spark_graft_ckpt")
     sc.setCheckpointDir(base)
     return base
 

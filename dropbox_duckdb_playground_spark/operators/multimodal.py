@@ -28,25 +28,6 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_META = T.StructType(
-    [
-        T.StructField("modality", T.StringType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("meta", MEDIA_META),
-    ]
-)
 
 
 def attach_media_meta(

@@ -16,11 +16,10 @@ against the reference's model port directly, while the execution is a
 single distributed stage:
 
 - M1 ``MapReduce``        → :func:`map_partitioned`
-- M2 ``AddPartitionKey``  → :func:`add_partition_key` (pmod(xxhash64),
-  not a global row_number — SURVEY §8.3: a partition-free window forces
-  every row through ONE task, which is exactly what kills scale)
-- M3 ``EfficientDivide``  → the repartition inside :func:`map_partitioned`,
-  or :func:`write_partitioned` when a physical split is really wanted
+- M2 ``AddPartitionKey``  → no key column: ``repartition(N)`` assigns
+  rows itself (a global row_number — SURVEY §8.3: a partition-free window
+  forces every row through ONE task, which is exactly what kills scale)
+- M3 ``EfficientDivide``  → the repartition inside :func:`map_partitioned`
 - M4/M5 merge operators   → implicit (one DataFrame out); explicit
   multi-frame merge is ``relational.union_all``
 - M6 thread-pool cap      → Spark's scheduler (not reimplemented)
@@ -35,31 +34,11 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas
-
-
-def add_partition_key(
-    df: DataFrame,
-    n: int,
-    keys: list[str] | None = None,
-    out_col: str = "partition",
-) -> DataFrame:
-    """Attach a 0..n-1 partition id column (M2).
-
-    With ``keys``, rows sharing a key land in the same partition
-    (hash-based, co-location preserved for a later grouped map). Without
-    keys, a uniform spread via a per-row hash of all columns. Both are
-    narrow/deterministic — replacing the reference's global
-    ``row_number() OVER ()`` + ``% N`` (W1/F5/F6, parallize.py:131-139),
-    whose partition-free window would force every row through ONE task
-    (SURVEY §8.3)."""
-    cols: list[Column] = [F.col(c) for c in (keys or df.columns)]
-    return df.withColumn(out_col, F.pmod(F.xxhash64(*cols), F.lit(n)))
 
 
 def map_partitioned(
@@ -85,30 +64,3 @@ def map_partitioned(
                 yield fn(pdf)
 
     return df.repartition(n).mapInPandas(run, schema)
-
-
-def map_grouped(
-    df: DataFrame,
-    keys: list[str],
-    fn: Callable[["pandas.DataFrame"], "pandas.DataFrame"],
-    schema: StructType | str,
-) -> DataFrame:
-    """Grouped variant: ``fn`` sees ALL rows of one key group at once
-    (what the reference's per-partition processors actually relied on
-    when the partition key was semantic, e.g. parallize.py:169-179
-    group-iterate A7). One hash shuffle on ``keys``."""
-
-    # No type hints: applyInPandas warns on unresolvable string annotations.
-    def run(pdf):
-        return fn(pdf)
-
-    return df.groupBy(*keys).applyInPandas(run, schema)
-
-
-def write_partitioned(df: DataFrame, path: str, n: int, keys: list[str] | None = None) -> None:
-    """Physical N-way split as a partitioned parquet dir (M3 when a
-    materialized split is genuinely wanted, e.g. handing chunks to an
-    external tool). Layout: ``path/partition=<i>/``."""
-    add_partition_key(df, n, keys).write.mode("overwrite").partitionBy(
-        "partition"
-    ).parquet(path)

@@ -188,14 +188,6 @@ def union_distinct(dfs: list[DataFrame]) -> DataFrame:
     return union_all(dfs).distinct()
 
 
-def rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """P7 rename-only projection (reference: resolution/main.py:199-207
-    ``cluster_id AS new_id``); P2 star projection is the empty mapping.
-    Pure metadata — no expression evaluation, plans identically to
-    ``SELECT * `` with aliases."""
-    return df.withColumnsRenamed(mapping)
-
-
 def profile_columns(
     df: DataFrame, cols: list[str], exact_ndv: bool = True
 ) -> DataFrame:

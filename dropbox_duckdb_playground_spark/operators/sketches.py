@@ -20,12 +20,15 @@ Scale notes (100 TB):
 - Count-Min: the shuffle carries (depth x width) partial counts, again
   map-side combined; estimates join the (small, distinct-key-sized)
   query set against the d*w-cell table.
-- Bloom: the bit table is <= m rows regardless of corpus size and
-  broadcast to the probe side; the probe is one equi-join on bit
-  position, never a per-row UDF loop.
+- Bloom: the bit table is <= m rows regardless of corpus size and is
+  packed into m/64 words in Spark; the words ship to the probe side as
+  a plan literal, so the probe is one narrow map, never a per-row UDF
+  loop.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -48,36 +51,34 @@ HLL_WBITS = 54  # 60-bit hash - 6 bucket bits
 HLL_ALPHA = 0.709  # alpha_64, fixed literal on both engines
 
 
-def hll_registers(df: DataFrame, col: str, label: str | None = None) -> DataFrame:
-    """(col_name, bucket, reg) — all 64 registers, empty buckets reg=0.
+def hll_registers(vals: DataFrame, names: Sequence[str]) -> DataFrame:
+    """(col_name, bucket, reg) — all 64 registers per audited column,
+    empty buckets reg=0, from a (col_name, v) table; ``names`` are its
+    col_name values, one 64-row register block each.
 
     bucket = h % 64; w = h div 64 (54 bits); rho = 55 - bitlen(w) for
     w>0 else 55 (leading-zero count + 1). Register = max(rho) per
-    bucket. Pure integer/string ops — no float in the data path."""
-    name = label or col
-    hashed = df.select(_phash(F.col(col), "hll:").alias("h")).select(
-        (F.col("h") % HLL_BUCKETS).alias("bucket"),
-        F.expr(f"h div {HLL_BUCKETS}").alias("w"),
+    (col_name, bucket). Pure integer/string ops — no float in the data
+    path. The spine is constant (64 x len(names) rows), so the left
+    join from it is a broadcast of the register aggregate."""
+    spark = vals.sparkSession
+    h = _phash(F.col("v").cast("string"), "hll:")
+    w = F.shiftright(h, 6)  # h div 64, h is a nonneg 60-bit value
+    exploded = vals.select(
+        "col_name",
+        (h % HLL_BUCKETS).alias("bucket"),
+        F.when(w == 0, F.lit(HLL_WBITS + 1))
+        .otherwise(F.lit(HLL_WBITS + 1) - F.length(F.bin(w)))
+        .alias("rho"),
     )
-    rho = F.when(F.col("w") == 0, F.lit(HLL_WBITS + 1)).otherwise(
-        F.lit(HLL_WBITS + 1) - F.length(F.bin(F.col("w")))
-    )
-    regs = (
-        hashed.select("bucket", rho.alias("rho"))
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("reg"))
-    )
+    regs = exploded.groupBy("col_name", "bucket").agg(F.max("rho").alias("reg"))
     spine = (
-        df.sparkSession.range(HLL_BUCKETS)
+        spark.range(HLL_BUCKETS)
         .select(F.col("id").cast("bigint").alias("bucket"))
+        .crossJoin(spark.createDataFrame([(c,) for c in names], "col_name string"))
     )
-    return (
-        spine.join(F.broadcast(regs), "bucket", "left")
-        .select(
-            F.lit(name).alias("col_name"),
-            "bucket",
-            F.coalesce(F.col("reg"), F.lit(0)).cast("int").alias("reg"),
-        )
+    return spine.join(F.broadcast(regs), ["col_name", "bucket"], "left").select(
+        "col_name", "bucket", F.coalesce(F.col("reg"), F.lit(0)).cast("int").alias("reg")
     )
 
 
@@ -211,40 +212,6 @@ def bloom_bits(items: DataFrame, col: str) -> DataFrame:
     )
 
 
-def bloom_contains(probe: DataFrame, bits: DataFrame, col: str) -> DataFrame:
-    """probe + boolean ``in_bloom``: true iff all k bit positions are
-    set. One explode to k rows, one broadcast equi-join on bit, one
-    groupBy back to probe grain counting matches == k. Prefer
-    :func:`bloom_contains_bits` when the filter can be collected —
-    this join form exists for filters too large to ship as a literal
-    (m >> 2^16) and for incremental/streaming builds."""
-    hashes = F.array(*_bloom_positions(_phash(F.col(col), "bf:")))
-    keys = [c for c in probe.columns]
-    ph = probe.select(*keys, F.explode(hashes).alias("bit"))
-    marked = ph.join(
-        F.broadcast(bits.select(F.col("bit"), F.lit(1).alias("__set__"))),
-        "bit",
-        "left",
-    )
-    return (
-        marked.groupBy(*keys)
-        .agg((F.sum(F.coalesce(F.col("__set__"), F.lit(0))) == BLOOM_K).alias("in_bloom"))
-    )
-
-
-def bloom_bitmap(bits: DataFrame) -> list[int]:
-    """Collect a ``bloom_bits`` table into a packed little-endian word
-    list (m/64 longs). BOUNDED driver-side by construction: the bit
-    table is <= m rows no matter how large the member set is — this is
-    the filter-build handshake every distributed Bloom join does (e.g.
-    Spark's own runtime bloom-filter pushdown builds the filter on the
-    driver before broadcasting it into the probe-side scan)."""
-    words = [0] * (BLOOM_M // 64)
-    for (b,) in bits.select("bit").collect():
-        words[b // 64] |= 1 << (b % 64)
-    return words
-
-
 def bloom_bitmap_agg(bits: DataFrame) -> list[int]:
     """Packed bitmap (m/64 little-endian words) from a ``bloom_bits``
     table, PACKED IN SPARK: one bit_or aggregate groups the bit
@@ -252,7 +219,7 @@ def bloom_bitmap_agg(bits: DataFrame) -> list[int]:
     long rows (8 KiB at m=65536) instead of the member set — the
     fixed-size proxy handshake (guide §8) that keeps the driver
     payload bounded BY CONSTRUCTION at any scale factor. Words are
-    bit-identical to :func:`bloom_bitmap` / `bloom_bitmap_from_values`
+    bit-identical to :func:`bloom_bitmap_from_values`
     (same md5 positions; the shiftleft of bit 63 lands negative in the
     JVM long and is re-read unsigned here), pinned by a parity test."""
     rows = (
@@ -279,7 +246,7 @@ def bloom_bitmap_agg(bits: DataFrame) -> list[int]:
 def bloom_bitmap_from_values(values, salt: str = "bf:") -> list[int]:
     """Packed bitmap (m/64 little-endian longs) from an in-memory
     member list — the pure-Python twin of ``bloom_bits`` +
-    ``bloom_bitmap`` for callers that already hold the member set on
+    ``bloom_bitmap_agg`` for callers that already hold the member set on
     the driver (e.g. a collected benchmark suite). Bit positions are
     bit-identical to the Spark path: the same md5-derived 60-bit hash
     (``_phash``: conv(substring(md5(salt||v),1,15),16,10)) and the
@@ -307,12 +274,11 @@ def bloom_bitmap_from_values(values, salt: str = "bf:") -> list[int]:
 def bloom_contains_bits(
     probe: DataFrame, words: list[int], col: str
 ) -> DataFrame:
-    """``probe`` + boolean ``in_bloom`` via an in-plan literal bitmap —
-    the shuffle-free form of :func:`bloom_contains`. The k bit tests
-    run per row inside whole-stage codegen against an 8 KiB literal
-    long array: no explode (k x row inflation), no join, no
-    group-back-to-grain aggregate. Same bit semantics as the join form
-    (md5 positions mod m), so results are engine-checkable unchanged.
+    """``probe`` + boolean ``in_bloom`` via an in-plan literal bitmap,
+    true iff all k bit positions are set. The k bit tests run per row
+    inside whole-stage codegen against an 8 KiB literal long array: no
+    explode (k x row inflation), no join, no group-back-to-grain
+    aggregate. The md5 positions mod m are engine-checkable.
     Scale: the bitmap is a plan literal shipped with the task binary —
     the probe side is ONE narrow map over the corpus."""
     # bit 63 set -> the unsigned word exceeds the signed-long literal

@@ -24,7 +24,7 @@ intermediate to Parquet (SURVEY §8.7 anti-pattern).
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -146,22 +146,6 @@ class ValidateLinkIds(Node):
                     f"link table {self.link_id!r}.{fk} has ids missing from "
                     f"{self.node_id!r}.{self.pk}"
                 )
-
-
-@dataclass
-class AssertNonEmpty(Node):
-    """Reference's in-flight non-empty asserts (parallize.py:175-177,
-    mapper/messy.py:185-191)."""
-
-    obj_id: str
-
-    def __post_init__(self):
-        self.input_ids = [self.obj_id]
-        self.output_ids = []
-
-    def run(self, engine: Engine) -> None:
-        if engine.table(self.obj_id).limit(1).count() == 0:
-            raise ValidationError(f"object {self.obj_id!r} is empty")
 
 
 def assert_frames_equal(a: DataFrame, b: DataFrame) -> None:

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import re
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -189,6 +190,13 @@ def driver_mem() -> str:
     return raw
 
 
+def scratch_root() -> str:
+    """The first ``$SPARK_LOCAL_DIRS`` entry, else the system temp dir:
+    where local runs put files that must not land in the working
+    directory."""
+    return os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0] or tempfile.gettempdir()
+
+
 def get_spark(
     app_name: str = "dropbox_duckdb_playground_spark",
     master: str | None = None,
@@ -222,6 +230,11 @@ def get_spark(
     # local mode: driver is the only JVM — give it the memory.
     if master.startswith("local"):
         conf.setdefault("spark.driver.memory", driver_mem())
+        # the catalog's database dir, which Spark otherwise creates as
+        # ./spark-warehouse on first catalog use
+        conf.setdefault(
+            "spark.sql.warehouse.dir", os.path.join(scratch_root(), "spark-warehouse")
+        )
     if storage_conf:
         conf.update(storage_conf)
     if extra_conf:

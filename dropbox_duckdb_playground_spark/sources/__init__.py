@@ -1,12 +1,9 @@
-from dropbox_duckdb_playground_spark.sources.jsonio import read_json_obj, write_json_obj
 from dropbox_duckdb_playground_spark.sources.redisgraph import (
     write_redisgraph_links_csv,
     write_redisgraph_nodes_csv,
 )
 
 __all__ = [
-    "read_json_obj",
-    "write_json_obj",
     "write_redisgraph_links_csv",
     "write_redisgraph_nodes_csv",
 ]

@@ -9,14 +9,14 @@ part is the crawl itself (sources.http.fetch_json_table).
 
 S11: the reference shells out to ``redisgraph-bulk-insert`` with one
 ``-n/-r`` flag per exported CSV (reference: examples/run_ingest.py:4-16).
-We build the identical command from the typed-CSV export layout and
-only execute when asked — the external tool is workload territory.
+We build the identical command from the typed-CSV export layout; the
+flagship example prints it, and running the external tool is workload
+territory.
 """
 
 from __future__ import annotations
 
 import re
-import subprocess
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,18 +68,3 @@ def bulk_insert_command(
         cmd += ["-r", path]
         _ = rel
     return cmd
-
-
-def run_bulk_insert(
-    graph_name: str,
-    node_csvs: dict[str, str],
-    link_csvs: dict[str, str],
-    redis_url: str | None = None,
-    runner: Callable[[list[str]], int] | None = None,
-) -> int:
-    """Execute the bulk load (S11). ``runner`` injectable for tests;
-    default shells out and returns the exit code."""
-    cmd = bulk_insert_command(graph_name, node_csvs, link_csvs, redis_url)
-    if runner is None:
-        runner = lambda argv: subprocess.run(argv, check=False).returncode  # noqa: E731
-    return runner(cmd)

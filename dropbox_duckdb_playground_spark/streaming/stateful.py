@@ -1,11 +1,10 @@
-"""Custom stateful streaming operators (applyInPandasWithState).
+"""Custom stateful streaming operator (applyInPandasWithState).
 
 The reference is batch-only; its incrementality is snapshot+diff
-(SURVEY §2.12). These are the stateful-stream versions of the two
-recurring shapes in its workload — keep-first dedup (crawl.py's
-keep-first merge C3) and running per-key tallies — expressed as
-arbitrary-state operators so the pattern generalizes to any
-training-data-pipeline stream (e.g. first-seen URL dedup at ingest).
+(SURVEY §2.12). This is the stateful-stream version of the recurring
+keep-first dedup in its workload (crawl.py's keep-first merge C3),
+expressed as an arbitrary-state operator so the pattern generalizes to
+any training-data-pipeline stream (e.g. first-seen URL dedup at ingest).
 
 Scale: state lives in the executor state store partitioned by key
 (RocksDB-backed on a real cluster); each micro-batch touches only the
@@ -15,13 +14,8 @@ keys present in that batch. Watermark-driven state TTL is exposed via
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas
 
 
 def first_seen_dedup(
@@ -67,32 +61,4 @@ def first_seen_dedup(
     )
     return events.groupBy(key).applyInPandasWithState(
         run, out_schema, "seen boolean", "append", timeout
-    )
-
-
-def running_totals(
-    events: DataFrame,
-    key: str,
-    value_col: str = "value",
-) -> DataFrame:
-    """Cumulative (count, sum) per key across the whole stream — the
-    stateful version of a groupBy that a snapshot+diff batch pipeline
-    rebuilds from scratch each run."""
-
-    def run(key_tuple, pdfs, state: GroupState):
-        import pandas as pd
-
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf[value_col].sum())
-        state.update((n, s))
-        yield pd.DataFrame({key: [key_tuple[0]], "n": [n], "total": [s]})
-
-    return events.groupBy(key).applyInPandasWithState(
-        run,
-        f"{key} long, n long, total double",
-        "n long, total double",
-        "update",
-        GroupStateTimeout.NoTimeout,
     )

@@ -33,67 +33,3 @@ def windowed_counts(
     return events.groupBy(win.alias("win"), *keys).agg(
         F.count("*").alias("n"), F.sum("value").alias("sum_value")
     )
-
-
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    ts_col: str = "ts",
-    lower: str = "0 seconds",
-    upper: str = "1 hour",
-    watermark: str = "2 hours",
-    suffix: str = "_r",
-) -> DataFrame:
-    """Stream-stream (or batch) inner join on a key within an event-time
-    interval: ``left.ts - lower <= right.ts <= left.ts + upper``.
-
-    On streams both sides carry watermarks and the time-range predicate
-    bounds join state (Spark evicts rows older than watermark+range) —
-    without the range condition a stream-stream join would buffer
-    forever. On static frames the same plan is a regular join, so the
-    batch catalog query (q45's banded range join) acts as the oracle
-    for the streaming path.
-    """
-    lts, rts = f"__l_{ts_col}", f"__r_{ts_col}"
-    l = left.withColumnRenamed(ts_col, lts)
-    r = right.select(
-        F.col(key),
-        F.col(ts_col).alias(rts),
-        *[
-            F.col(c).alias(f"{c}{suffix}")
-            for c in right.columns
-            if c not in (key, ts_col)
-        ],
-    )
-    if l.isStreaming:
-        l = l.withWatermark(lts, watermark)
-    if r.isStreaming:
-        r = r.withWatermark(rts, watermark)
-    cond = (
-        (l[key] == r[key])
-        & (F.col(rts) >= F.col(lts) - F.expr(f"INTERVAL {lower}"))
-        & (F.col(rts) <= F.col(lts) + F.expr(f"INTERVAL {upper}"))
-    )
-    return (
-        l.join(r, cond)
-        .drop(r[key])
-        .withColumnRenamed(lts, ts_col)
-        .withColumnRenamed(rts, f"{ts_col}{suffix}")
-    )
-
-
-def sessionized(
-    events: DataFrame,
-    gap: str = "1 hour",
-    ts_col: str = "ts",
-    key: str = "user_id",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Session windows (gap-based) per key — the streaming twin of the
-    catalog's lag-based batch sessionization (q18)."""
-    if events.isStreaming:
-        events = events.withWatermark(ts_col, watermark)
-    return events.groupBy(
-        F.session_window(ts_col, gap).alias("session"), F.col(key)
-    ).agg(F.count("*").alias("n_events"))

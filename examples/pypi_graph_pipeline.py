@@ -8,15 +8,19 @@ Run it directly:
 
     python examples/pypi_graph_pipeline.py [output_dir]
 
-It is self-contained: the HTTP "crawl" uses an injected fetcher over a
-small built-in payload set (the same seam the tests use), so no network
-access happens — swap ``fake_pypi_fetcher`` for ``None`` in
-``fetch_json_table`` to crawl the real https://pypi.org/pypi/<pkg>/json
-endpoints.  Every stage prints its row counts so you can follow the
-dataflow; the result is a directory of RedisGraph bulk-insert CSVs plus
-the Parquet stage tables the Engine materialized.
+It is self-contained: the package listing and the HTTP "crawl" use an
+injected fetcher over a small built-in simple-index page and payload set
+(the same seam the tests use), so no network access happens — swap
+``fake_pypi_fetcher`` for ``None`` in ``name_listing_table`` and
+``fetch_json_table`` to list https://pypi.org/simple/ and crawl the real
+https://pypi.org/pypi/<pkg>/json endpoints.  Every stage prints its row
+counts so you can follow the dataflow; the result is a directory of
+RedisGraph bulk-insert CSVs plus the Parquet stage tables the Engine
+materialized, and the last line is the ``redisgraph-bulk-insert``
+command that loads the CSVs.
 
 Reference analogs, stage by stage (paths in the reference repo):
+  listing        examples/canon/trigger.py   -> sources/listing.name_listing_table
   crawl          examples/canon/crawler.py   -> sources/http.fetch_json_table
   tabularize     examples/canon/tabularize.py-> parse_json_body + explodes
   node/link SQL  examples/graph/subgraph/*   -> DataFrame extraction + stable_id
@@ -25,12 +29,15 @@ Reference analogs, stage by stage (paths in the reference repo):
   id conversion  examples/graph/resolution/convertor.py -> er.clustering.convert_ids
   grouping       examples/graph/group/*      -> MetaGraph.group_nodes / group_links
   export         examples/graph/export.py    -> sources/redisgraph.write_*_csv
+  bulk load      examples/run_ingest.py      -> sources/listing.bulk_insert_command
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shlex
 import sys
 import tempfile
 
@@ -47,6 +54,10 @@ from dropbox_duckdb_playground_spark.session import get_spark
 from dropbox_duckdb_playground_spark.sources.http import (
     fetch_json_table,
     parse_json_body,
+)
+from dropbox_duckdb_playground_spark.sources.listing import (
+    bulk_insert_command,
+    name_listing_table,
 )
 from dropbox_duckdb_playground_spark.sources.redisgraph import (
     write_redisgraph_links_csv,
@@ -71,10 +82,18 @@ INFO_SCHEMA = (
 )
 
 
+INDEX_URL = "https://pypi.org/simple/"
+
+
 def fake_pypi_fetcher(url: str, etag: str | None):
     """(status, body, etag) like sources/http.default_fetcher — but
-    served from PACKAGES instead of the network."""
-    pkg = url.rstrip("/json").rsplit("/", 1)[-1]
+    served from PACKAGES instead of the network: INDEX_URL is a
+    simple-index page with one anchor per package, every other url a
+    package's JSON payload."""
+    if url == INDEX_URL:
+        links = "".join(f'<a href="/simple/{p}/">{p}</a>\n' for p in PACKAGES)
+        return 200, f"<html><body>\n{links}</body></html>", None
+    pkg = url.removesuffix("/json").rsplit("/", 1)[-1]
     if pkg not in PACKAGES:
         return 404, None, None
     return 200, json.dumps({"info": PACKAGES[pkg]}), f'W/"{pkg}-v1"'
@@ -84,11 +103,14 @@ def main(out_root: str) -> None:
     spark = get_spark("pypi-graph-example")
     eng = Engine(spark=spark, root=out_root)
 
-    # 1. crawl (S7): url table -> (url, status, body, etag); the fetcher
-    #    runs Arrow-batched on executors, so a real crawl parallelizes by
+    # 1. list + crawl (S8/S7): the simple index names every package;
+    #    its url table -> (url, status, body, etag). The fetcher runs
+    #    Arrow-batched on executors, so a real crawl parallelizes by
     #    repartitioning the url list.
-    urls = spark.createDataFrame(
-        [(f"https://pypi.org/pypi/{p}/json",) for p in PACKAGES], ["url"]
+    names = name_listing_table(spark, INDEX_URL, fetcher=fake_pypi_fetcher)
+    print(f"listed: {names.count()} packages")
+    urls = names.select(
+        F.concat(F.lit("https://pypi.org/pypi/"), "name", F.lit("/json")).alias("url")
     )
     fetched = fetch_json_table(urls, fetcher=fake_pypi_fetcher)
     eng.register("raw_latest", fetched.filter(F.col("status") == 200))
@@ -152,6 +174,15 @@ def main(out_root: str) -> None:
     for obj_id in ("package", "author", "has_author", "requires"):
         eng.save(obj_id)
     print(f"exported: RedisGraph CSVs + Parquet stages under {out_root}")
+
+    # 7. bulk-load trigger (S11): one -n/-r flag per exported CSV
+    def part(name: str) -> str:
+        return glob.glob(f"{out_root}/csv/{name}/part-*.csv")[0]
+
+    cmd = bulk_insert_command(
+        "pypi", {n: part(n) for n in mg.nodes}, {ln: part(ln) for ln in mg.links}
+    )
+    print(f"bulk load: {shlex.join(cmd)}")
 
 
 if __name__ == "__main__":

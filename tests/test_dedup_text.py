@@ -414,34 +414,6 @@ def test_jaccard_doc_freq_col_shortcut_matches_internal_window(spark):
     assert internal == shortcut and internal
 
 
-def test_bloom_join_form_equals_literal_form(spark):
-    """bloom_contains (broadcast bit join, for filters too large to
-    ship as a literal) and bloom_contains_bits (in-plan literal bitmap)
-    must agree on every probe — members AND non-members."""
-    from pyspark.sql import functions as F
-
-    from dropbox_duckdb_playground_spark.operators import sketches as SK
-
-    members = spark.createDataFrame(
-        [(f"m{i}",) for i in range(50)], ["v"]
-    )
-    probes = spark.createDataFrame(
-        [(f"m{i}",) for i in range(50)] + [(f"x{i}",) for i in range(200)],
-        ["v"],
-    )
-    bits = SK.bloom_bits(members, "v")
-    join_form = {
-        r.v: r.in_bloom for r in SK.bloom_contains(probes, bits, "v").collect()
-    }
-    words = SK.bloom_bitmap(bits)
-    literal_form = {
-        r.v: r.in_bloom
-        for r in SK.bloom_contains_bits(probes, words, "v").collect()
-    }
-    assert join_form == literal_form
-    assert all(join_form[f"m{i}"] for i in range(50))
-
-
 def test_quality_score_empty_stopwords_counts_zero(spark):
     """stopwords=() must short-circuit to 0, not build an empty
     alternation '(?:)' that matches empty strings at every \\s-bounded

@@ -19,7 +19,6 @@ from dropbox_duckdb_playground_spark.er.resolution import (
 )
 from dropbox_duckdb_playground_spark.er.scoring import (
     expression_scorer,
-    pandas_batch_scorer,
     select_matches,
 )
 
@@ -114,94 +113,6 @@ def test_combine_mappings_first_wins(spark):
     assert got == {1: 100, 2: 300}
 
 
-def test_pandas_batch_scorer_roundtrip(spark):
-    """The fidelity path: a pickled 'model' scored via mapInPandas."""
-    import pickle
-
-    pairs = spark.createDataFrame(
-        [(1, 2, "x", "x"), (3, 4, "x", "y")],
-        ["a_id", "b_id", "a_full_name", "b_full_name"],
-    )
-    model = {"w": 1.0}
-
-    def score_fn(m, pdf):
-        return (pdf["a_full_name"] == pdf["b_full_name"]).astype(float) * m["w"]
-
-    scorer = pandas_batch_scorer(pickle.dumps(model), score_fn)
-    got = {(r.a_id, r.b_id): r.score for r in scorer(pairs).collect()}
-    assert got == {(1, 2): 1.0, (3, 4): 0.0}
-
-
-def test_validate_entity_map(spark):
-    from dropbox_duckdb_playground_spark.er.resolution import validate_entity_map
-
-    feats = spark.createDataFrame([("a",), ("b",), ("c",)], ["node_id"])
-    emap = spark.createDataFrame([("a", "x"), ("b", "x"), ("z", "y")],
-                                 ["messy_id", "new_id"])
-    pairs = spark.createDataFrame([("a", "b"), ("a", "q")], ["a_id", "b_id"])
-    got = validate_entity_map(feats, emap, pairs)
-    assert got == {"unmapped": 1, "orphan_mapped": 1, "orphan_paired": 1}
-
-
-def test_incremental_match_to_canon_equals_full_recompute(spark):
-    """E3 differential test: the incremental pairing (feedback + three
-    delta pairings + global argmax) must equal match_to_canon on the full
-    current tables when ids are only added between runs."""
-    from dropbox_duckdb_playground_spark.er.resolution import (
-        incremental_match_to_canon,
-    )
-    from dropbox_duckdb_playground_spark.plans.pipeline import assert_frames_equal
-
-    old_messy = _nodes(
-        spark, [(100, "Numpy"), (101, "pandas (>=1.0)"), (102, "nomatchxyz")]
-    )
-    old_canon = _nodes(spark, [(1, "numpy"), (2, "pandas")])
-    # run 2 adds two messy records and one canon that old messy 101
-    # should re-match to (scores higher than its old 'pandas' match)
-    add_messy = [(103, "scipy"), (104, "pandas (>=1.0)")]
-    add_canon = [(3, "pandas (>=1.0)")]
-    full_messy = _nodes(spark, old_messy.collect() + add_messy)
-    full_canon = _nodes(spark, old_canon.collect() + add_canon)
-
-    fields = ["full_name", "before_whitespace"]
-    mf_old = engineer_features(old_messy)
-    cf_old = engineer_features(old_canon)
-    mf = engineer_features(full_messy)
-    cf = engineer_features(full_canon)
-
-    feedback = match_to_canon(mf_old, cf_old, fields)
-    incremental = incremental_match_to_canon(
-        mf,
-        cf,
-        feedback,
-        prev_messy_ids=old_messy.select("node_id"),
-        prev_canon_ids=old_canon.select("node_id"),
-        fields=fields,
-    )
-    full = match_to_canon(mf, cf, fields)
-    assert_frames_equal(incremental, full)
-    # the new canon really does win over the feedback match for 101
-    got = {r.messy_id: r.canon_id for r in incremental.collect()}
-    assert got[101] == 3 and got[104] == 3
-
-
-def test_incremental_match_empty_deltas_is_feedback(spark):
-    """No new ids -> output is exactly the feedback table."""
-    from dropbox_duckdb_playground_spark.er.resolution import (
-        incremental_match_to_canon,
-    )
-
-    messy = _nodes(spark, [(100, "numpy")])
-    canon = _nodes(spark, [(1, "numpy")])
-    mf, cf = engineer_features(messy), engineer_features(canon)
-    fields = ["full_name"]
-    feedback = match_to_canon(mf, cf, fields)
-    out = incremental_match_to_canon(
-        mf, cf, feedback, messy.select("node_id"), canon.select("node_id"), fields
-    )
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, feedback.collect()))
-
-
 def test_combine_mappings_priority_deterministic_on_overlap(spark):
     """Direct callers with overlapping mappers: earlier mapper must win
     regardless of union physical order (ADVICE r1)."""
@@ -210,22 +121,3 @@ def test_combine_mappings_priority_deterministic_on_overlap(spark):
     for mappers, want1 in [([a, b], 111), ([b, a], 999)]:
         got = {r.messy_id: r.new_id for r in combine_mappings(mappers).collect()}
         assert got[1] == want1 and got[2] == 222 and got[5] == 555
-
-
-def test_pandas_batch_scorer_struct_column(spark):
-    """Output schema must be built structurally — a struct-typed column
-    broke the old simpleString() surgery (ADVICE r1)."""
-    import pickle
-
-    from pyspark.sql import functions as F
-
-    pairs = spark.createDataFrame(
-        [(1, 2, "x", "x")], ["a_id", "b_id", "a_full_name", "b_full_name"]
-    ).withColumn("meta", F.struct(F.lit(1).alias("u"), F.lit("z").alias("w")))
-
-    def score_fn(m, pdf):
-        return (pdf["a_full_name"] == pdf["b_full_name"]).astype(float)
-
-    scorer = pandas_batch_scorer(pickle.dumps({}), score_fn)
-    row = scorer(pairs).collect()[0]
-    assert row.score == 1.0 and row.meta.u == 1 and row.meta.w == "z"

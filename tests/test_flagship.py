@@ -163,11 +163,12 @@ def test_flagship_pipeline(spark, engine, tmp_path):
     assert ":START_ID" in lback.columns and ":END_ID" in lback.columns
 
 
-def test_example_script_end_to_end(spark, tmp_path):
+def test_example_script_end_to_end(spark, tmp_path, capsys):
     """examples/pypi_graph_pipeline.py runs the whole reference journey
-    (crawl -> tabularize -> validate -> ER -> group -> export) and its
-    outputs are well-formed: author near-duplicates merged, RedisGraph
-    CSVs typed, Parquet stages written."""
+    (list -> crawl -> tabularize -> validate -> ER -> group -> export ->
+    bulk-load command) and its outputs are well-formed: every listed
+    package crawled, author near-duplicates merged, RedisGraph CSVs
+    typed, Parquet stages written, every CSV in the printed argv."""
     import importlib.util
     import os
 
@@ -180,8 +181,21 @@ def test_example_script_end_to_end(spark, tmp_path):
     spec.loader.exec_module(mod)
     out = str(tmp_path / "graph_out")
     mod.main(out)
+    printed = capsys.readouterr().out.splitlines()
 
     import glob
+    import shlex
+
+    assert "listed: 4 packages" in printed
+    assert "crawled: 4 package payloads" in printed
+    argv = shlex.split(printed[-1].removeprefix("bulk load: "))
+    assert argv[:2] == ["redisgraph-bulk-insert", "pypi"]
+    flagged = {(argv[i], argv[i + 1]) for i in range(2, len(argv) - 1)}
+    for flag, names in (("-n", ("package", "author")),
+                        ("-r", ("has_author", "requires"))):
+        for name in names:
+            (csv,) = glob.glob(f"{out}/csv/{name}/part*.csv")
+            assert (flag, csv) in flagged, (flag, csv, argv)
 
     author_csv = glob.glob(f"{out}/csv/author/part*.csv")[0]
     lines = open(author_csv).read().strip().splitlines()

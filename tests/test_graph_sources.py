@@ -12,7 +12,6 @@ from dropbox_duckdb_playground_spark.engine import Engine
 from dropbox_duckdb_playground_spark.graph.metagraph import MetaGraph
 from dropbox_duckdb_playground_spark.plans.pipeline import ValidationError
 from dropbox_duckdb_playground_spark.sources.http import fetch_json_table, parse_json_body
-from dropbox_duckdb_playground_spark.sources.jsonio import read_json_obj, write_json_obj
 from dropbox_duckdb_playground_spark.sources.redisgraph import (
     redisgraph_link_header,
     redisgraph_node_header,
@@ -81,12 +80,6 @@ def test_redisgraph_csv_roundtrip(spark, tmp_path):
     text = open(files[0]).read()
     assert '":ID(pkg)","name:STRING"' in text.replace("\r", "")
     assert '"a,b"' in text  # quoting preserves embedded comma
-
-
-def test_jsonio_roundtrip(tmp_path):
-    p = str(tmp_path / "training.json")
-    write_json_obj({"a": [1, 2, 3]}, p)
-    assert read_json_obj(p) == {"a": [1, 2, 3]}
 
 
 def test_http_fetch_with_fake_and_etag(spark):

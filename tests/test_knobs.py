@@ -1,13 +1,16 @@
-"""README's "Environment knobs" table must match the code, and knob
-values are validated (no Spark).
+"""README's "Environment knobs" table must match the code, knob values
+are validated, and every package definition has a caller (no Spark).
 
 Every ``SPARK_*`` environment variable the package reads has a row, and
 every variable a row names is read somewhere in the package,
 ``bench.py`` or ``tools/`` — so a retired knob cannot linger in the docs
-and a new one cannot ship undocumented."""
+and a new one cannot ship undocumented. Likewise every top-level
+definition in the package is reached from a checked path or has a row
+in README's "Kept without a pipeline caller" table."""
 
 from __future__ import annotations
 
+import ast
 import fnmatch
 import os
 import re
@@ -32,17 +35,21 @@ def _reads(files) -> set[str]:
     return names
 
 
-def _table_names() -> list[str]:
-    text = (REPO / "README.md").read_text(encoding="utf-8")
-    section = text.split("Environment knobs", 1)[1]
+def _readme_table(marker: str, pattern: str) -> list[str]:
+    """Backticked names matching ``pattern`` in the first column of the
+    first README table after ``marker``."""
+    section = (REPO / "README.md").read_text(encoding="utf-8").split(marker, 1)[1]
     names: list[str] = []
     for line in section.splitlines()[1:]:
         if names and not line.startswith("|"):
             break
         if line.startswith("|"):
-            first_cell = line.split("|")[1]
-            names += re.findall(r"`(SPARK_[A-Z0-9_]+\*?)`", first_cell)
+            names += re.findall(rf"`({pattern})`", line.split("|")[1])
     return names
+
+
+def _table_names() -> list[str]:
+    return _readme_table("Environment knobs", r"SPARK_[A-Z0-9_]+\*?")
 
 
 def test_package_env_reads_are_documented():
@@ -95,3 +102,128 @@ def test_driver_mem_defaults_to_half_the_host_and_rejects_bad_values(monkeypatch
         monkeypatch.setenv("SPARK_DRIVER_MEM", bad)
         with pytest.raises(ValueError, match="SPARK_DRIVER_MEM"):
             driver_mem()
+
+
+def _modname(path: Path) -> str:
+    parts = path.relative_to(REPO).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+class _Module:
+    """A file's top-level definitions (functions, classes, assigned
+    names) and what each imported name refers to: ``(module, None)`` for
+    a module, ``(module, name)`` for a name in one."""
+
+    def __init__(self, path: Path):
+        self.name = _modname(path)
+        self.tree = ast.parse(path.read_text(encoding="utf-8"))
+        self.defs: dict[str, ast.AST] = {}
+        self.loose: list[ast.AST] = []
+        for node in self.tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                self.defs[node.name] = node
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for n in (n for t in targets for n in ast.walk(t)):
+                    if isinstance(n, ast.Name) and not n.id.startswith("__"):
+                        self.defs[n.id] = node
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                self.loose.append(node)
+        self.aliases: dict[str, tuple[str, str | None]] = {}
+        package = self.name.split(".")[: -1 if path.name != "__init__.py" else None]
+        for node in ast.walk(self.tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    self.aliases[bound] = (a.name if a.asname else bound, None)
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    up = package[: len(package) - node.level + 1]
+                    base = ".".join(up + ([base] if base else []))
+                for a in node.names:
+                    self.aliases[a.asname or a.name] = (base, a.name)
+
+
+def _reach() -> tuple[set[str], set[str]]:
+    """(every package definition, the ones a checked path reaches), as
+    ``module.name`` relative to the package. Roots: the registered
+    catalog queries, ``bench.py``, ``__spark_entry__.py``, ``tools/``,
+    ``examples/`` and ``perfbench/`` outside its tests. A reached
+    definition reaches every package definition its code names, through
+    imports and re-exports, to a fixed point."""
+    mods = {m.name: m for m in map(_Module, sorted(PACKAGE.rglob("*.py")))}
+
+    def lookup(mod: str, name: str, hops: int = 0):
+        if f"{mod}.{name}" in mods:
+            return (f"{mod}.{name}", None)
+        if mod not in mods or hops > 10:
+            return None
+        m = mods[mod]
+        if name in m.defs:
+            return (mod, name)
+        target = m.aliases.get(name)
+        if target and target[1] is not None:
+            return lookup(*target, hops + 1)
+        return target
+
+    def refs(ctx: _Module, node):
+        for n in ast.walk(node):
+            attrs = []
+            while isinstance(n, ast.Attribute):
+                attrs.append(n.attr)
+                n = n.value
+            if not isinstance(n, ast.Name):
+                continue
+            if n.id in ctx.defs:
+                hit = (ctx.name, n.id)
+            else:
+                hit = ctx.aliases.get(n.id)
+                if hit and hit[1] is not None:
+                    hit = lookup(*hit)
+            for attr in reversed(attrs):
+                if hit is None or hit[1] is not None:
+                    break
+                hit = lookup(hit[0], attr)
+            if hit and hit[1] is not None:
+                yield hit
+
+    roots = [
+        REPO / "bench.py",
+        REPO / "__spark_entry__.py",
+        *(REPO / "tools").glob("*.py"),
+        *(REPO / "examples").glob("*.py"),
+        *(p for p in (REPO / "perfbench").rglob("*.py") if "tests" not in p.parts),
+    ]
+    todo = [hit for m in map(_Module, roots) for hit in refs(m, m.tree)]
+    todo += [hit for m in mods.values() for node in m.loose for hit in refs(m, node)]
+    catalog = mods[f"{PACKAGE.name}.catalog"]
+    todo += [
+        (catalog.name, name)
+        for name, node in catalog.defs.items()
+        for d in getattr(node, "decorator_list", [])
+        if isinstance(d, ast.Call) and getattr(d.func, "id", "") == "register"
+    ]
+    reached = set()
+    while todo:
+        key = todo.pop()
+        if key in reached or key[1] not in getattr(mods.get(key[0]), "defs", {}):
+            continue
+        reached.add(key)
+        todo += refs(mods[key[0]], mods[key[0]].defs[key[1]])
+    prefix = len(PACKAGE.name) + 1
+    every = {(m.name, d) for m in mods.values() for d in m.defs}
+    return (
+        {f"{mod[prefix:]}.{d}" for mod, d in every},
+        {f"{mod[prefix:]}.{d}" for mod, d in reached},
+    )
+
+
+def test_every_package_definition_has_a_checked_caller():
+    kept = _readme_table("Kept without a pipeline caller", r"[\w.]+")
+    assert kept, "README has no 'Kept without a pipeline caller' rows"
+    every, reached = _reach()
+    missing = sorted(every - reached - set(kept))
+    assert not missing, f"no caller on a checked path and no README reason: {missing}"
+    undefined = [n for n in kept if n not in every]
+    assert not undefined, f"README keeps names the package does not define: {undefined}"

@@ -14,10 +14,7 @@ from dropbox_duckdb_playground_spark.operators.multimodal import (
 from dropbox_duckdb_playground_spark.streaming.incremental import (
     incremental_file_stream,
 )
-from dropbox_duckdb_playground_spark.streaming.windows import (
-    sessionized,
-    windowed_counts,
-)
+from dropbox_duckdb_playground_spark.streaming.windows import windowed_counts
 
 
 def _media(spark):
@@ -62,14 +59,6 @@ def test_windowed_counts_batch(spark, sf_dir):
     out = windowed_counts(e, window="1 hour")
     row = out.orderBy("win", "event_type").first()
     assert row.n >= 1 and row.win.start is not None
-
-
-def test_sessionized_batch(spark, sf_dir):
-    from dropbox_duckdb_playground_spark.catalog import load
-
-    e = load(spark, sf_dir, "events")
-    out = sessionized(e, gap="1 hour")
-    assert out.count() > 0
 
 
 def test_incremental_file_stream_available_now(spark, tmp_path):
@@ -134,30 +123,6 @@ def test_first_seen_dedup_stateful(spark, tmp_path):
     q.awaitTermination(120)
     keys = sorted(r["k"] for r in got)
     assert keys == [1, 2, 3]  # the duplicate k=1 emitted only once
-
-
-def test_running_totals_stateful(spark, tmp_path):
-    from dropbox_duckdb_playground_spark.streaming.stateful import running_totals
-
-    src = tmp_path / "in2"
-    src.mkdir()
-    spark.createDataFrame(
-        [(1, 10.0), (1, 5.0), (2, 1.0)], "k long, value double"
-    ).coalesce(1).write.parquet(str(src / "f1"))
-
-    stream = spark.readStream.schema("k long, value double").parquet(str(src / "*"))
-    out = running_totals(stream, "k")
-    got: list = []
-    q = (
-        out.writeStream.outputMode("update")
-        .foreachBatch(lambda df, _e: got.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    by = {r["k"]: (r["n"], r["total"]) for r in got}
-    assert by[1] == (2, 15.0) and by[2] == (1, 1.0)
 
 
 def test_resize_images_plumbing(spark):
@@ -299,62 +264,6 @@ def test_streaming_incremental_crawl_e2e(spark, tmp_path):
     }
     # snapshot matches the merged state for the next diff
     assert cache.load("pkgs").count() == 3
-
-
-def test_interval_join_stream_stream(spark, tmp_path):
-    """Stream-stream event-time interval join with watermarks on both
-    sides: signups joined to errors of the same user within +30 min.
-    The static-frame run of the same builder is the oracle."""
-    import datetime as dt
-
-    from dropbox_duckdb_playground_spark.streaming.windows import interval_join
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def ts(m):
-        return t0 + dt.timedelta(minutes=m)
-
-    signups = [(1, 7, ts(0)), (2, 7, ts(100)), (3, 8, ts(0))]
-    errors = [(10, 7, ts(10)), (11, 7, ts(95)), (12, 8, ts(20)), (13, 9, ts(5))]
-    s_schema = "sid long, user_id long, ts timestamp"
-    e_schema = "eid long, user_id long, ts timestamp"
-
-    sdir, edir = str(tmp_path / "s"), str(tmp_path / "e")
-    spark.createDataFrame(signups, s_schema).write.parquet(sdir)
-    spark.createDataFrame(errors, e_schema).write.parquet(edir)
-
-    s_stream = spark.readStream.schema(s_schema).parquet(sdir)
-    e_stream = spark.readStream.schema(e_schema).parquet(edir)
-    joined = interval_join(
-        s_stream, e_stream, key="user_id", lower="0 seconds", upper="30 minutes"
-    )
-    out = str(tmp_path / "out")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = sorted(
-        (r.sid, r.eid_r) for r in spark.read.parquet(out).collect()
-    )
-    assert got == [(1, 10), (3, 12)]  # within +30min, same user only
-
-    # batch oracle: the same builder on the static frames
-    want = sorted(
-        (r.sid, r.eid_r)
-        for r in interval_join(
-            spark.createDataFrame(signups, s_schema),
-            spark.createDataFrame(errors, e_schema),
-            key="user_id",
-            lower="0 seconds",
-            upper="30 minutes",
-        ).collect()
-    )
-    assert got == want
 
 
 def test_stream_static_contamination(spark, tmp_path):

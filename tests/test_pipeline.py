@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from dropbox_duckdb_playground_spark.engine import Engine
 from dropbox_duckdb_playground_spark.plans.pipeline import (
-    AssertNonEmpty,
     Pipeline,
     PipelineWiringError,
     PyNode,
@@ -89,12 +88,6 @@ def test_validate_link_ids(spark, engine):
     ValidateLinkIds(link_id="links_ok", node_id="nodes").run(engine)
     with pytest.raises(ValidationError, match="missing"):
         ValidateLinkIds(link_id="links_bad", node_id="nodes").run(engine)
-
-
-def test_assert_non_empty(spark, engine):
-    engine.register("empty", spark.createDataFrame([], "x int"))
-    with pytest.raises(ValidationError, match="empty"):
-        AssertNonEmpty(obj_id="empty").run(engine)
 
 
 def test_assert_frames_equal(spark):

@@ -21,3 +21,15 @@ def test_transient_task_failure_is_retried(spark):
     df = spark.range(0, 1000, numPartitions=4).mapInPandas(flaky, "id long")
     got = df.agg(F.count("*").alias("n"), F.sum("id").alias("s")).first()
     assert (got["n"], got["s"]) == (1000, sum(range(1000)))
+
+
+def test_catalog_warehouse_stays_out_of_the_working_directory(spark):
+    """Spark creates its warehouse dir on first catalog use, by default
+    as ./spark-warehouse; on a local master it sits under
+    ``scratch_root()`` (the first SPARK_LOCAL_DIRS entry) instead."""
+    import os
+
+    from dropbox_duckdb_playground_spark.session import scratch_root
+
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    assert warehouse == os.path.join(scratch_root(), "spark-warehouse")

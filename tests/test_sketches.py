@@ -27,23 +27,27 @@ def ids_with_null(spark, ids):
     return ids.unionByName(spark.createDataFrame([(None,)], "v string"))
 
 
+def _hll_vals(df):
+    return df.select(F.lit("v").alias("col_name"), "v")
+
+
 class TestHLL:
     def test_registers_shape_and_determinism(self, spark, ids):
-        r1 = SK.hll_registers(ids, "v", label="a").collect()
-        r2 = SK.hll_registers(ids, "v", label="a").collect()
+        r1 = SK.hll_registers(_hll_vals(ids), ["v"]).collect()
+        r2 = SK.hll_registers(_hll_vals(ids), ["v"]).collect()
         assert len(r1) == SK.HLL_BUCKETS
         assert sorted(map(tuple, r1)) == sorted(map(tuple, r2))
         assert all(0 <= row.reg <= SK.HLL_WBITS + 1 for row in r1)
 
     def test_estimate_error_bound(self, spark, ids):
         # standard error for m=64 is ~1.04/8 = 13%; allow 3 sigma
-        est = SK.hll_estimate(SK.hll_registers(ids, "v")).collect()[0]
+        est = SK.hll_estimate(SK.hll_registers(_hll_vals(ids), ["v"])).collect()[0]
         assert abs(est.hll_estimate - 5000) / 5000 < 0.4
 
     def test_duplicates_dont_move_estimate(self, spark, ids):
         dup = ids.unionAll(ids).unionAll(ids)
-        e1 = SK.hll_estimate(SK.hll_registers(ids, "v")).collect()[0]
-        e3 = SK.hll_estimate(SK.hll_registers(dup, "v")).collect()[0]
+        e1 = SK.hll_estimate(SK.hll_registers(_hll_vals(ids), ["v"])).collect()[0]
+        e3 = SK.hll_estimate(SK.hll_registers(_hll_vals(dup), ["v"])).collect()[0]
         assert e1.hll_estimate == e3.hll_estimate
 
 
@@ -79,8 +83,8 @@ class TestCountMin:
 class TestBloom:
     def test_no_false_negatives(self, spark, ids):
         members = ids.filter(F.col("v").rlike("k[0-4]$"))  # k0..k4
-        bits = SK.bloom_bits(members, "v")
-        probed = SK.bloom_contains(ids, bits, "v").collect()
+        words = SK.bloom_bitmap_agg(SK.bloom_bits(members, "v"))
+        probed = SK.bloom_contains_bits(ids, words, "v").collect()
         member_set = {r.v for r in members.collect()}
         for r in probed:
             if r.v in member_set:
@@ -92,24 +96,24 @@ class TestBloom:
 
     def test_python_bitmap_parity(self, spark, ids, ids_with_null):
         # the driver-side bitmap (pure-Python md5 path) must set
-        # exactly the bits the DataFrame paths set — q95 depends on it.
-        # A NULL member is never a member: every path skips it.
+        # exactly the bits the DataFrame path sets — q95 depends on it.
+        # A NULL member is never a member: both paths skip it.
         values = [r.v for r in ids_with_null.collect()]
         assert None in values
         py_words = SK.bloom_bitmap_from_values(values)
-        df_words = SK.bloom_bitmap(SK.bloom_bits(ids_with_null, "v"))
+        df_words = SK.bloom_bitmap_agg(SK.bloom_bits(ids_with_null, "v"))
         assert py_words == df_words
-        assert py_words == SK.bloom_bitmap(SK.bloom_bits(ids, "v"))
+        assert py_words == SK.bloom_bitmap_agg(SK.bloom_bits(ids, "v"))
 
     def test_agg_bitmap_parity(self, spark, ids, ids_with_null):
         # the Spark-side packed aggregate (r14 q95 handshake: <= m/64
         # long rows collected instead of the member set) must produce
-        # the SAME words as the row-collect and pure-Python paths —
-        # including word 1023 / bit 63 (signed-long re-encode edge) and
-        # a NULL member, which sets no bit
+        # the SAME words as the pure-Python path over the members
+        # without the NULL — including word 1023 / bit 63 (signed-long
+        # re-encode edge) and a NULL member, which sets no bit
         agg_words = SK.bloom_bitmap_agg(SK.bloom_bits(ids_with_null, "v"))
-        row_words = SK.bloom_bitmap(SK.bloom_bits(ids, "v"))
-        assert agg_words == row_words
+        py_words = SK.bloom_bitmap_from_values([r.v for r in ids.collect()])
+        assert agg_words == py_words
         assert len(agg_words) == SK.BLOOM_M // 64
         # high-bit edge: force bits 63 and BLOOM_M-1 via a literal table
         edge = spark.createDataFrame(

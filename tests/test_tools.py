@@ -198,6 +198,30 @@ def test_check_rejects_unknown_query_names(monkeypatch, capsys):
     assert "q01_pricing_summry" in capsys.readouterr().err
 
 
+def test_oracle_spill_dir_is_outside_the_checkout(monkeypatch, tmp_path):
+    """DuckDB spills to ``.tmp`` in the working directory by default (a
+    q105 oracle rep left 8.5 GB in the repo root). Each oracle
+    connection gets its own spill dir under the first SPARK_LOCAL_DIRS
+    entry, removed with the connection."""
+    import gc
+
+    from check import oracle_connection
+
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", f"{tmp_path},/elsewhere")
+    cons = [oracle_connection(str(tmp_path)) for _ in range(2)]
+    dirs = [
+        c.execute("SELECT current_setting('temp_directory')").fetchone()[0]
+        for c in cons
+    ]
+    for d in dirs:
+        assert os.path.isabs(d) and not d.startswith(REPO + os.sep)
+        assert os.path.dirname(d) == str(tmp_path) and os.path.isdir(d)
+    assert dirs[0] != dirs[1]
+    del cons
+    gc.collect()
+    assert not any(os.path.exists(d) for d in dirs)
+
+
 def test_ab_verdict_rule():
     """A form wins only with >= 9/10 round wins AND a median gap beyond
     the first form's q3 - q1; ties count for neither side."""

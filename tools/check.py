@@ -28,9 +28,12 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import sys
+import tempfile
 import time
 import traceback
+import weakref
 
 import duckdb
 
@@ -71,8 +74,19 @@ def frame_digest(pdf) -> tuple[int, list[str], str]:
 
 
 def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """One DuckDB connection with a view per catalog table in ``sf_dir``."""
+    """One DuckDB connection with a view per catalog table in ``sf_dir``.
+
+    DuckDB spills to ``temp_directory``, which defaults to ``.tmp`` in
+    the working directory; each connection gets its own directory under
+    ``session.scratch_root()`` instead, removed with the connection."""
+    from dropbox_duckdb_playground_spark.session import scratch_root
+
     con = duckdb.connect()
+    root = scratch_root()
+    os.makedirs(root, exist_ok=True)
+    spill = tempfile.mkdtemp(prefix="duckdb_spill_", dir=root)
+    weakref.finalize(con, shutil.rmtree, spill, True)
+    con.execute(f"SET temp_directory = '{spill}'")
     con.execute("SET enable_progress_bar = false")
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
