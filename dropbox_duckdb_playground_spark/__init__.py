@@ -8,7 +8,7 @@ Subpackages
 - ``engine``     : the named-table registry (object-id -> DataFrame/view)
 - ``sql``        : DuckDB-dialect shim (DISTINCT ON / * EXCLUDE / HASH)
 - ``operators``  : relational builders + scale ops (dedup, similarity, text)
-- ``sources``    : parquet/json/csv sources & sinks (RedisGraph typed CSV)
+- ``sources``    : HTTP JSON crawl, HTML listing, RedisGraph typed-CSV sink
 - ``plans``      : Pipeline / SQLNode / PyNode composition + validators
 - ``streaming``  : incremental (availableNow) + windowed-agg wrappers
 - ``er``         : entity-resolution dataflow (block→pair→score→cluster)

@@ -2346,19 +2346,20 @@ def q61_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cos_sql(a: str, b: str, dim: int = 64) -> str:
-    """DuckDB cosine between two list columns, float64 element math —
-    the exact formula the q28 oracle already proved Spark-parity for."""
+def _cos_sql(a: str, b: str) -> str:
+    """DuckDB cosine between two 64-element list columns, float64 element
+    math — the exact formula the q28 oracle already proved Spark-parity
+    for."""
     dot = (
-        f"list_aggregate(list_transform(range(1, {dim + 1}),"
+        "list_aggregate(list_transform(range(1, 65),"
         f" i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), 'sum')"
     )
     na = (
-        f"sqrt(list_aggregate(list_transform(range(1, {dim + 1}),"
+        "sqrt(list_aggregate(list_transform(range(1, 65),"
         f" i -> CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE)), 'sum'))"
     )
     nb = (
-        f"sqrt(list_aggregate(list_transform(range(1, {dim + 1}),"
+        "sqrt(list_aggregate(list_transform(range(1, 65),"
         f" i -> CAST({b}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), 'sum'))"
     )
     return f"{dot} / ({na} * {nb})"
@@ -4736,7 +4737,7 @@ def q100_curation_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = fan_out(d.select("doc_id", "lang", "text")).select(
         "doc_id",
         "lang",
-        *TX.quality_feature_exprs("text"),
+        *TX.quality_feature_exprs(),
         F.split(trimmed, r"\s+").alias("__toks__"),
     )
     src = NGram(n=3, inputCol="__toks__", outputCol="__ng__").transform(src)
@@ -5563,15 +5564,16 @@ def q111_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(day.cast("double")).alias("d_mx"),
     )
 
-    def rank(v, mn, mx, bins=256):
+    def rank(v, mn, mx):
+        # 256 equal-width bins
         return (
             F.when(F.col(mx) == F.col(mn), F.lit(0))
             .otherwise(
                 F.least(
-                    F.lit(bins - 1),
+                    F.lit(255),
                     F.floor(
                         (v.cast("double") - F.col(mn))
-                        / ((F.col(mx) - F.col(mn)) / F.lit(float(bins)))
+                        / ((F.col(mx) - F.col(mn)) / F.lit(256.0))
                     ),
                 )
             )
@@ -6217,7 +6219,7 @@ def q121_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     pays it: DuckDB 174.1s vs Spark 62.2s at sf1 — Spark runs the
     explosion 2.8x faster), annotated in SCALING.md like q26. A corpus
     whose blocks actually explode should use the capped pairing
-    (er/blocking.max_block_size, exercised by q34) — the cap changes
+    (er/blocking.MAX_BLOCK_SIZE, exercised by q34) — the cap changes
     the report's semantics, so this exact form stays uncapped."""
     p = load(spark, sf_dir, "part").select(
         "p_partkey",

@@ -9,43 +9,26 @@ replaces `DataFrameStorage` (pandas/pyarrow/vaex) + `DuckDBBackend.register`
 
 SURVEY §2.1 coverage: S1 parquet scan (`register(id, path)`), S2 parquet
 sink (`save`), S4 view registration (`register` + temp view), S5 CTAS
-(`engine.sql(...)` then `save` — or `saveAsTable` on a metastore deploy),
-S12 copy/drop/exists (`copy`/`drop`/`__contains__`). S6 (shipping the
-.duckdb DB file to remote storage) is obsolete by design: persistence IS
-the Parquet/metastore write, there is no engine-state file to ship.
+(`engine.sql(...)` then `save`), S12 copy/exists (`copy`/`__contains__`).
+S6 (shipping the .duckdb DB file to remote storage) is obsolete by
+design: persistence IS the Parquet write, there is no engine-state file
+to ship. Paths may carry a scheme (``s3a://``, ``gs://``, ``file://``):
+reads and writes go through the session's Hadoop filesystem.
 
-Scale notes: `save()` writes Parquet with optional `partition_by` /
-`bucket_by` so that downstream joins on the bucketed key avoid a shuffle.
 Reads stay lazy — nothing is collected to the driver.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def _is_uri(path: str) -> bool:
-    return "://" in path
 
 
 def _join(base: str, name: str) -> str:
     """Path join that preserves URI schemes (os.path.join is correct for
     both on POSIX, but be explicit about the contract)."""
     return base.rstrip("/") + "/" + name
-
-
-def _hadoop_ls(spark: SparkSession, uri: str) -> list[str]:
-    """List child names of a directory URI via the session's Hadoop
-    filesystem — works for any scheme the deploy has a connector for
-    (s3a, gs, hdfs, file). Nothing is read; one LIST round trip."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(uri)
-    fs = p.getFileSystem(hconf)
-    return [st.getPath().getName() for st in fs.listStatus(p)]
 
 
 @dataclass
@@ -55,7 +38,7 @@ class Engine:
     - ``register(id, df_or_path)``: bind an object id to a DataFrame or a
       Parquet path (lazy scan). Also exposed as a temp view for SQL.
     - ``table(id)``: fetch the DataFrame for an id.
-    - ``save(id, path)``: materialize as Parquet (the reference's
+    - ``save(id)``: materialize as ``<root>/<id>.parquet`` (the reference's
       storage.upload, batch_framework/storage.py:151-164).
     - ``copy(id, id_cache)``: snapshot for incremental reuse (reference:
       batch_framework/storage.py:56-74, run-level cache C1).
@@ -63,49 +46,14 @@ class Engine:
 
     spark: SparkSession
     root: str | None = None
-    _tables: dict[str, DataFrame] = field(default_factory=dict)
+    _tables: dict[str, DataFrame] = field(default_factory=dict, init=False)
 
     # -- registry ----------------------------------------------------------
     def register(self, obj_id: str, source: DataFrame | str) -> DataFrame:
-        if isinstance(source, str):
-            # format by extension: .csv / .json interchange inputs,
-            # parquet otherwise (schema inference on text formats is a
-            # one-time sample scan at registration, not per query)
-            stripped = source.rstrip("/")
-            if stripped.endswith(".csv"):
-                df = self.spark.read.option("header", "true").option(
-                    "inferSchema", "true"
-                ).csv(source)
-            elif stripped.endswith(".json"):
-                df = self.spark.read.json(source)
-            else:
-                df = self.spark.read.parquet(source)
-        else:
-            df = source
+        df = self.spark.read.parquet(source) if isinstance(source, str) else source
         self._tables[obj_id] = df
         df.createOrReplaceTempView(obj_id)
         return df
-
-    def register_dir(self, sf_dir: str, names: list[str] | None = None) -> None:
-        """Register every ``<name>.parquet`` under a directory (the driver's
-        testdata layout, TESTDATA.md). Scheme'd URIs (``s3a://``, ``gs://``,
-        ``hdfs://``, ``file://``) are listed through the Hadoop filesystem
-        of the session, local paths through the OS."""
-        if names is None:
-            if _is_uri(sf_dir):
-                names = sorted(
-                    f[: -len(".parquet")]
-                    for f in _hadoop_ls(self.spark, sf_dir)
-                    if f.endswith(".parquet")
-                )
-            else:
-                names = sorted(
-                    f[: -len(".parquet")]
-                    for f in os.listdir(sf_dir)
-                    if f.endswith(".parquet")
-                )
-        for name in names:
-            self.register(name, _join(sf_dir, name + ".parquet"))
 
     def table(self, obj_id: str) -> DataFrame:
         if obj_id in self._tables:
@@ -127,80 +75,23 @@ class Engine:
         return self.spark.sql(translate(query))
 
     # -- persistence -------------------------------------------------------
-    def _path(self, obj_id: str, path: str | None, fmt: str = "parquet") -> str:
-        if path is not None:
-            return path
+    def _path(self, obj_id: str) -> str:
         if self.root is None:
-            raise ValueError("Engine.root not set and no explicit path given")
-        return _join(self.root, f"{obj_id}.{fmt}")
+            raise ValueError("Engine.root not set")
+        return _join(self.root, f"{obj_id}.parquet")
 
-    def save(
-        self,
-        obj_id: str,
-        path: str | None = None,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-        bucket_by: list[str] | None = None,
-        n_buckets: int = 8,
-        fmt: str = "parquet",
-    ) -> str:
-        """Materialize an object id — Parquet by default, or ``fmt`` in
-        {"parquet", "csv", "json"} for interchange sinks (csv writes a
-        header; json writes JSON-lines). Only Parquet round-trips the
-        full type system, so non-parquet saves are export-only: the
-        registered object keeps its original (typed) plan.
-
-        ``bucket_by`` writes a bucketed (and in-bucket sorted) table via
-        the session catalog: two tables bucketed on their join key with
-        the same bucket count join with NO shuffle on either side — the
-        co-located-join layout for repeatedly-joined 100 TB facts."""
-        if fmt not in ("parquet", "csv", "json"):
-            raise ValueError(f"unsupported save format: {fmt!r}")
-        out = self._path(obj_id, path, fmt)
-        writer = self.table(obj_id).write.mode(mode)
-        if fmt != "parquet":
-            if bucket_by:
-                raise ValueError("bucket_by requires parquet")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            if fmt == "csv":
-                writer.option("header", "true").csv(out)
-            else:
-                writer.json(out)
-            return out
-        if bucket_by:
-            writer = (
-                writer.bucketBy(n_buckets, *bucket_by)
-                .sortBy(*bucket_by)
-                .option("path", out)
-            )
-            # an earlier register() leaves a same-named temp view that
-            # would shadow the catalog table (and whether DROP TABLE
-            # removes temp views is version-dependent) — drop it
-            # explicitly, and quote the identifier
-            self.spark.catalog.dropTempView(obj_id)
-            self.spark.sql(f"DROP TABLE IF EXISTS `{obj_id}`")
-            writer.format("parquet").saveAsTable(f"`{obj_id}`")
-            # the catalog table carries the bucketing metadata — register
-            # it (a raw path scan would lose bucket info)
-            self._tables[obj_id] = self.spark.table(f"`{obj_id}`")
-            return out
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(out)
-        # re-register as the materialized scan so downstream reads prune
+    def save(self, obj_id: str) -> str:
+        """Materialize an object id as Parquet, overwriting, and re-register
+        it as the materialized scan so downstream reads prune."""
+        out = self._path(obj_id)
+        self.table(obj_id).write.mode("overwrite").parquet(out)
         self.register(obj_id, out)
         return out
 
-    def copy(self, obj_id: str, cache_id: str, path: str | None = None) -> str:
+    def copy(self, obj_id: str, cache_id: str) -> str:
         """Snapshot ``obj_id`` under ``cache_id`` (run-level cache; reference
         batch_framework/etl.py:86-127)."""
-        out = self._path(cache_id, path)
+        out = self._path(cache_id)
         self.table(obj_id).write.mode("overwrite").parquet(out)
         self.register(cache_id, out)
         return out
-
-    def drop(self, obj_id: str) -> None:
-        """Forget an id (temp-object GC; reference batch_framework/etl.py:288-314)."""
-        self._tables.pop(obj_id, None)
-        self.spark.catalog.dropTempView(obj_id)

@@ -5,7 +5,8 @@ The reference uses the dedupe library's fingerprinter
 outputs become block keys. Here predicates are Column expressions; the
 block table is their exploded union. Key space design is the scale lever:
 a predicate that maps many records to one key creates a quadratic bucket
-(SURVEY E4); cap bucket sizes before pairing.
+(SURVEY E4); blocks over ``MAX_BLOCK_SIZE`` records are dropped before
+pairing.
 """
 
 from __future__ import annotations
@@ -35,22 +36,19 @@ DEFAULT_PREDICATES: Sequence[Callable[[Column], Column]] = (
     prefix4,
 )
 
+#: largest block kept for pairing
+MAX_BLOCK_SIZE = 1000
 
-def block_table(
-    features: DataFrame,
-    fields: Sequence[str],
-    predicates: Sequence[Callable[[Column], Column]] = DEFAULT_PREDICATES,
-    id_col: str = "node_id",
-    max_block_size: int | None = 1000,
-) -> DataFrame:
+
+def block_table(features: DataFrame, fields: Sequence[str]) -> DataFrame:
     """Build the (block_key, node_id) table.
 
     block_key is namespaced ``"{field}:{pred_idx}:{value}"`` so different
-    predicates never collide. ``max_block_size`` drops degenerate blocks
-    (hot keys) — the skew guard for web-scale runs."""
+    predicates never collide. Blocks over ``MAX_BLOCK_SIZE`` records
+    (hot keys) are dropped — the skew guard for web-scale runs."""
     keys = []
     for field in fields:
-        for pi, pred in enumerate(predicates):
+        for pi, pred in enumerate(DEFAULT_PREDICATES):
             keys.append(
                 F.when(
                     F.col(field).isNotNull() & (F.col(field) != ""),
@@ -58,23 +56,15 @@ def block_table(
                 )
             )
     out = (
-        features.select(
-            F.col(id_col), F.explode(F.array(*keys)).alias("block_key")
-        )
+        features.select("node_id", F.explode(F.array(*keys)).alias("block_key"))
         .filter(F.col("block_key").isNotNull())
         .distinct()
     )
-    if max_block_size is not None:
-        sizes = out.groupBy("block_key").count().filter(
-            F.col("count") <= max_block_size
-        )
-        out = out.join(sizes.select("block_key"), "block_key", "left_semi")
-    return out
+    sizes = out.groupBy("block_key").count().filter(F.col("count") <= MAX_BLOCK_SIZE)
+    return out.join(sizes.select("block_key"), "block_key", "left_semi")
 
 
-def candidate_pairs(
-    blocks: DataFrame, features: DataFrame, id_col: str = "node_id"
-) -> DataFrame:
+def candidate_pairs(blocks: DataFrame, features: DataFrame) -> DataFrame:
     """E5/J6/J7: distinct candidate pairs from the block self-join, with
     both sides' features attached as ``a_*`` / ``b_*`` columns
     (reference: mapper/messy.py:226-250). The (record-count-sized)
@@ -93,19 +83,17 @@ def candidate_pairs(
         l.join(
             r,
             (F.col("l.block_key") == F.col("r.block_key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            & (F.col("l.node_id") < F.col("r.node_id")),
         )
-        .select(
-            F.col(f"l.{id_col}").alias("a_id"), F.col(f"r.{id_col}").alias("b_id")
-        )
+        .select(F.col("l.node_id").alias("a_id"), F.col("r.node_id").alias("b_id"))
         .distinct()
     )
     fa = features.select(
-        F.col(id_col).alias("a_id"),
-        *[F.col(c).alias(f"a_{c}") for c in features.columns if c != id_col],
+        F.col("node_id").alias("a_id"),
+        *[F.col(c).alias(f"a_{c}") for c in features.columns if c != "node_id"],
     )
     fb = features.select(
-        F.col(id_col).alias("b_id"),
-        *[F.col(c).alias(f"b_{c}") for c in features.columns if c != id_col],
+        F.col("node_id").alias("b_id"),
+        *[F.col(c).alias(f"b_{c}") for c in features.columns if c != "node_id"],
     )
     return pairs.join(fa, "a_id").join(fb, "b_id")

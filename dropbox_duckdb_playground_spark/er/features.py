@@ -28,10 +28,10 @@ def before_upper_bracket(c: Column) -> Column:
     return F.substring_index(c, "[", 1)
 
 
-def before_marks(c: Column, marks: str = r"[\[\(<;=!>~ ]") -> Column:
+def before_marks(c: Column) -> Column:
     """Prefix before the first requirement-spec mark (extras/version/env
     markers in PyPI requirement strings)."""
-    return F.element_at(F.split(c, marks), 1)
+    return F.element_at(F.split(c, r"[\[\(<;=!>~ ]"), 1)
 
 
 DEFAULT_FEATURES: Mapping[str, Callable[[Column], Column]] = {
@@ -42,15 +42,9 @@ DEFAULT_FEATURES: Mapping[str, Callable[[Column], Column]] = {
 }
 
 
-def engineer_features(
-    df: DataFrame,
-    id_col: str = "node_id",
-    name_col: str = "name",
-    features: Mapping[str, Callable[[Column], Column]] = DEFAULT_FEATURES,
-) -> DataFrame:
-    """(id, name) -> (node_id, <feature cols>) — one narrow projection."""
-    src = F.lower(F.col(name_col))
+def engineer_features(df: DataFrame) -> DataFrame:
+    """(node_id, name) -> (node_id, <feature cols>) — one narrow projection."""
+    src = F.lower(F.col("name"))
     return df.select(
-        F.col(id_col).alias("node_id"),
-        *[fn(src).alias(fname) for fname, fn in features.items()],
+        "node_id", *[fn(src).alias(fname) for fname, fn in DEFAULT_FEATURES.items()]
     )

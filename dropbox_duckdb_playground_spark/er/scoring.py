@@ -1,4 +1,4 @@
-"""ER pairwise scoring (E6): pluggable scorers over candidate pairs.
+"""ER pairwise scoring (E6): a Column-expression scorer over candidate pairs.
 
 The reference scores 100-row batches with a pickled dedupe model on 8
 processes (mapper/messy.py:285-413). Here `expression_scorer` computes
@@ -47,12 +47,7 @@ def expression_scorer(
     return score
 
 
-def select_matches(
-    scored: DataFrame,
-    threshold: float = 0.5,
-    left: str = "a_id",
-    right: str = "b_id",
-) -> DataFrame:
+def select_matches(scored: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Threshold + keep pairs (E6 tail: mapper/messy.py:338-345):
     (from, to, score) above threshold, deduped by argmax per pair."""
     from dropbox_duckdb_playground_spark.operators.relational import (
@@ -60,6 +55,6 @@ def select_matches(
     )
 
     pairs = scored.select(
-        F.col(left).alias("from_id"), F.col(right).alias("to_id"), "score"
+        F.col("a_id").alias("from_id"), F.col("b_id").alias("to_id"), "score"
     ).filter(F.col("score") > threshold)
     return argmax_per_group(pairs, ["from_id", "to_id"], "score")

@@ -14,8 +14,8 @@ MapReduce"; Kiveris et al. SoCC'14):
    mapping; conflict rows (a node seen in two batches) become edges
    between the two roots, so cross-batch connectivity is preserved.
 3. **Residual solve** — once the contracted edge set fits one task
-   (`residual_threshold`), a single `applyInPandas` union-find finishes
-   it exactly; otherwise contraction repeats, and past `max_levels` the
+   (`RESIDUAL_THRESHOLD`), a single `applyInPandas` union-find finishes
+   it exactly; otherwise contraction repeats, and past `MAX_LEVELS` the
    alternating large-star/small-star rounds (bounded memory per task,
    O(log n) rounds) take over.
 
@@ -40,6 +40,17 @@ from dropbox_duckdb_playground_spark.materialize import materialize
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas
+
+#: connected_components: largest edge set solved in one task, contraction
+#: levels before star rounds, star rounds before giving up
+RESIDUAL_THRESHOLD = 2_000_000
+MAX_LEVELS = 3
+MAX_ITER = 30
+#: pagerank broadcasts rank slices up to this many nodes
+BROADCAST_NODE_LIMIT = 8_000_000
+#: triangle_count broadcasts the adjacency up to this many edges
+#: (~16 bytes/adjacency entry -> 64MB)
+BROADCAST_EDGE_LIMIT = 4_000_000
 
 
 def _union_find(us, vs) -> dict:
@@ -86,7 +97,7 @@ def _contract_batches(e: DataFrame, schema: str) -> DataFrame:
 
 def _solve_single_task(e: DataFrame, schema: str) -> DataFrame:
     """Exact union-find over the whole residual in ONE executor task
-    (guarded by residual_threshold; this is the standard tail of the
+    (guarded by RESIDUAL_THRESHOLD; this is the standard tail of the
     filtering algorithm, NOT a driver-side collect)."""
 
     # No type hints: Spark's applyInPandas tries to resolve them for
@@ -123,11 +134,11 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def _star_rounds(e: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
+def _star_rounds(e: DataFrame, n_edges: int) -> DataFrame:
     """Alternating large-star/small-star to fixpoint (Kiveris et al.).
     Bounded memory per task at any scale; O(log n) rounds."""
     converged = n_edges == 0
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         if converged:
             break
         new_e = materialize(_small_star(_large_star(e)))
@@ -138,18 +149,13 @@ def _star_rounds(e: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
         e, n_edges = new_e, new_count
     if not converged:
         raise RuntimeError(
-            f"connected_components star rounds did not converge in {max_iter}"
+            f"connected_components star rounds did not converge in {MAX_ITER}"
         )
     return e
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
-    residual_threshold: int = 2_000_000,
-    max_levels: int = 3,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Weak connected components. Returns (node_id, cluster_id) where
     cluster_id = min node id reachable in the undirected graph.
@@ -185,7 +191,7 @@ def connected_components(
     # count >= distinct count, so the one-task guard stays conservative.
     mappings: list[DataFrame] = []
     n_raw = raw.count()
-    if n_raw <= residual_threshold:
+    if n_raw <= RESIDUAL_THRESHOLD:
         # a small edge set inherits the checkpoint's full partition
         # count (32+ near-empty partitions), so every downstream stage
         # pays a task per partition for rows that fit one task anyway —
@@ -221,10 +227,10 @@ def connected_components(
 
     # mappings[i]: (node, root) star edges; roots of level i are the only
     # nodes of level i+1. Compose at the end.
-    for _ in range(max_levels):
+    for _ in range(MAX_LEVELS):
         if n_edges == 0:
             break
-        if n_edges <= residual_threshold:
+        if n_edges <= RESIDUAL_THRESHOLD:
             m = materialize(_solve_single_task(e, star_schema))
             mappings.append(m)
             n_edges = 0
@@ -256,7 +262,7 @@ def connected_components(
         e = e_next
         n_edges = e.count()
     if n_edges > 0:
-        mappings.append(_star_rounds(e, n_edges, max_iter))
+        mappings.append(_star_rounds(e, n_edges))
     return _compose_labels(nodes, mappings)
 
 
@@ -282,8 +288,6 @@ def pagerank(
     iterations: int = 3,
     scale: int = 1_000_000_000_000,
     damping_pct: int = 85,
-    checkpoint_every: int | None = None,
-    broadcast_node_limit: int = 8_000_000,
 ) -> DataFrame:
     """PageRank over a directed edge list, all-integer arithmetic.
 
@@ -307,7 +311,7 @@ def pagerank(
     the same size-based adaptivity Spark's own broadcast threshold
     applies:
 
-    - ``n_nodes <= broadcast_node_limit`` (node-sized tables fit an
+    - ``n_nodes <= BROADCAST_NODE_LIMIT`` (node-sized tables fit an
       executor): the rank slice joins the edge table as a BROADCAST
       build side, so the contribution pass streams the dst-partitioned
       edges and its ``groupBy(dst)`` reuses that partitioning — a
@@ -332,15 +336,13 @@ def pagerank(
     same cores, unlike the driver-literal centroid writes that made
     q62/q107's overlap free.
 
-    ``checkpoint_every`` (default None) exists for LARGE iteration
-    counts, where an unrolled plan's analysis/planning time grows with
-    depth: set a cadence (e.g. 10) and the rank vector is materialized
-    every k rounds, bounding plan depth at k rounds. NOTE: a caller
-    that fires multiple actions on the lazy result re-executes the
-    unrolled plan per action — ``materialize`` the returned frame
-    yourself in that case. Reference analog: the graph-resolution
-    iteration loop (examples/graph/resolution/mapper/messy.py) run
-    driver-side; here every step stays distributed.
+    The plan unrolls every round, so its analysis/planning time grows
+    with ``iterations``. NOTE: a caller that fires multiple actions on
+    the lazy result re-executes the unrolled plan per action —
+    ``materialize`` the returned frame yourself in that case. Reference
+    analog: the graph-resolution iteration loop
+    (examples/graph/resolution/mapper/messy.py) run driver-side; here
+    every step stays distributed.
     """
     from dropbox_duckdb_playground_spark.materialize import materialize
 
@@ -370,11 +372,10 @@ def pagerank(
         nodes.select("node").distinct().join(deg, "node", "left")
     )  # (node, outdeg|null)
     n_nodes = n.count()
-    small = n_nodes <= broadcast_node_limit
+    small = n_nodes <= BROADCAST_NODE_LIMIT
     init = scale // n_nodes
     base = (100 - damping_pct) * init // 100
     r = n.select("node", "outdeg", F.lit(init).cast("long").alias("r"))
-    live_caches: list[DataFrame] = []
     for it in range(iterations):
         rsrc = r.filter(F.col("outdeg").isNotNull()).select(
             F.col("node").alias("src"),
@@ -405,25 +406,7 @@ def pagerank(
                 .alias("r"),
             )
         )
-        if (
-            checkpoint_every is not None
-            and (it + 1) % checkpoint_every == 0
-            and (it + 1) < iterations
-        ):
-            r = materialize(r)
-            # The checkpoint FORCED computation, so every per-round
-            # cache filled and is now dead (future rounds depend only
-            # on the materialized r). Release them here — otherwise a
-            # long run accumulates iterations-many node-sized tables in
-            # storage memory and leans on LRU eviction. The lazy
-            # persists between checkpoints CANNOT be dropped earlier:
-            # their cache fills only at action time, and unpersisting
-            # pre-action would re-expand the shared rank subtree
-            # (3 consumers/round) into exponential recompute.
-            for cached in live_caches:
-                cached.unpersist(blocking=False)
-            live_caches.clear()
-        elif it + 1 < iterations:
+        if it + 1 < iterations:
             # LAZY per-round persist (no forcing action): the rank
             # vector has three consumers next round (contribution
             # slice, dangling aggregate, final join). Exchange reuse
@@ -435,16 +418,10 @@ def pagerank(
             # does exactly this with its rank RDD). First touch fills
             # the cache inside the SAME action; no per-round job.
             r = r.persist()
-            live_caches.append(r)
     return r.select("node", F.col("r").alias("rank"))
 
 
-def triangle_count(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast_edge_limit: int = 4_000_000,
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Exact triangle count via degree-ordered orientation + the
     edge-iterator ("forward") formulation (Suri & Vassilvitskii WWW'11
     for the orientation; Chiba & Nishizeki '85 / Schank & Wagner '05
@@ -458,8 +435,8 @@ def triangle_count(
     n_triangles = sum over oriented edges (x,y) of |N+(x) & N+(y)| —
     each triangle counted exactly once, at its lowest edge.
 
-    Physical strategy is SIZE-GATED on ``broadcast_edge_limit``
-    (~16 bytes/adjacency entry -> 64MB at the 4M default), because the
+    Physical strategy is SIZE-GATED on ``BROADCAST_EDGE_LIMIT``
+    (~16 bytes/adjacency entry -> 64MB at 4M edges), because the
     two formulations win in DIFFERENT regimes (both measured r9, counts
     verified identical to the oracle):
 
@@ -508,7 +485,7 @@ def triangle_count(
     deterministic in any engine."""
     # canonicalize: undirected, dedup, drop self-loops
     und = (
-        edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+        edges.select(F.col("src").alias("x"), F.col("dst").alias("y"))
         .filter(F.col("x") != F.col("y"))
         .select(
             F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
@@ -543,7 +520,7 @@ def triangle_count(
         )
         .select("e.u", "e.v")
     )
-    if m <= broadcast_edge_limit:
+    if m <= BROADCAST_EDGE_LIMIT:
         # Broadcast regime: out-adjacency arrays (bounded O(sqrt(m))
         # entries by the orientation). `oriented` stays LAZY here — its
         # only consumer is the adjacency aggregate, whose checkpoint

@@ -50,27 +50,23 @@ def minhash_perm_constants(num_perm: int) -> list[tuple[int, int, int]]:
     return consts
 
 
-def exact_dedup_groups(
-    df: DataFrame, text: str = "text", key: str = "doc_id"
-) -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact-duplicate groups by content digest: (fp, keeper, n_dups).
-    The keeper is min(key) — the canonical survivor."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text))), r"\s+", " ")
+    The keeper is min(doc_id) — the canonical survivor."""
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     return (
-        df.select(F.md5(norm).alias("fp"), F.col(key))
+        df.select(F.md5(norm).alias("fp"), F.col("doc_id"))
         .groupBy("fp")
-        .agg(F.min(key).alias("keeper"), F.count("*").alias("n_dups"))
+        .agg(F.min("doc_id").alias("keeper"), F.count("*").alias("n_dups"))
     )
 
 
 def shingles(
     df: DataFrame,
-    text: str = "text",
-    key: str = "doc_id",
     n: int = 3,
     with_size: bool = False,
 ) -> DataFrame:
-    """Distinct word n-gram shingles per document: (key, shingle).
+    """Distinct word n-gram shingles per document: (doc_id, shingle).
 
     Tokens via one codegen'd ``\\s+`` split, n-gram windows via the
     Spark ML ``NGram`` transformer — a JVM-side array op that walks the
@@ -91,30 +87,28 @@ def shingles(
     from pyspark.ml.feature import NGram
 
     src = fan_out(df).select(
-        F.col(key), F.split(F.trim(F.col(text)), r"\s+").alias("__toks__")
+        F.col("doc_id"), F.split(F.trim(F.col("text")), r"\s+").alias("__toks__")
     )
     src = NGram(n=n, inputCol="__toks__", outputCol="__ngrams__").transform(src)
     ngrams = F.array_distinct(F.col("__ngrams__"))
     if with_size:
-        return src.select(F.col(key), ngrams.alias("__arr__")).select(
-            F.col(key),
+        return src.select(F.col("doc_id"), ngrams.alias("__arr__")).select(
+            F.col("doc_id"),
             F.explode("__arr__").alias("shingle"),
             F.size("__arr__").cast("long").alias("sz"),
         )
-    return src.select(F.col(key), F.explode(ngrams).alias("shingle"))
+    return src.select(F.col("doc_id"), F.explode(ngrams).alias("shingle"))
 
 
-def minhash_signatures(
-    shingle_df: DataFrame, key: str = "doc_id", num_perm: int = 8
-) -> DataFrame:
-    """MinHash signature per document: (key, mh0..mh{p-1}) bigints.
+def minhash_signatures(shingle_df: DataFrame, num_perm: int = 8) -> DataFrame:
+    """MinHash signature per document: (doc_id, mh0..mh{p-1}) bigints.
 
     One 60-bit md5 digest per shingle, then ``num_perm`` integer
     universal-hash permutations of it (see ``minhash_perm_constants``);
     min per doc approximates the Jaccard-preserving permutation minimum.
     Map-side partial min keeps the shuffle at num_perm longs per doc."""
     hashed = shingle_df.select(
-        F.col(key),
+        F.col("doc_id"),
         F.shiftright(_hex60(F.col("shingle")), 30).alias("h_hi"),
         _hex60(F.col("shingle")).bitwiseAND(F.lit(_MASK30)).alias("h_lo"),
     )
@@ -125,12 +119,11 @@ def minhash_signatures(
         ).alias(f"mh{i}")
         for i, (a, b, c) in enumerate(minhash_perm_constants(num_perm))
     ]
-    return hashed.groupBy(key).agg(*aggs)
+    return hashed.groupBy("doc_id").agg(*aggs)
 
 
 def lsh_candidate_pairs(
     sig: DataFrame,
-    key: str = "doc_id",
     num_perm: int = 8,
     bands: int = 4,
     max_bucket_size: int | None = None,
@@ -168,8 +161,8 @@ def lsh_candidate_pairs(
             F.struct(F.lit(b).alias("band_id"), F.md5(F.concat_ws("|", *parts)).alias("band_key"))
         )
     buckets = sig.select(
-        F.col(key), F.explode(F.array(*band_cols)).alias("b")
-    ).select(key, "b.band_id", "b.band_key")
+        F.col("doc_id"), F.explode(F.array(*band_cols)).alias("b")
+    ).select("doc_id", "b.band_id", "b.band_key")
     if max_bucket_size is not None:
         bw = Window.partitionBy("band_id", "band_key")
         buckets = (
@@ -191,19 +184,15 @@ def lsh_candidate_pairs(
             right,
             (F.col(f"l.band_id") == F.col(f"r.band_id"))
             & (F.col(f"l.band_key") == F.col(f"r.band_key"))
-            & (F.col(f"l.{key}") < F.col(f"r.{key}")),
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
-        .select(F.col(f"l.{key}").alias("a_id"), F.col(f"r.{key}").alias("b_id"))
+        .select(F.col("l.doc_id").alias("a_id"), F.col("r.doc_id").alias("b_id"))
         .distinct()
     )
 
 
 def minhash_estimate_pairs(
-    sig: DataFrame,
-    key: str = "doc_id",
-    num_perm: int = 8,
-    bands: int = 4,
-    max_bucket_size: int | None = None,
+    sig: DataFrame, num_perm: int = 8, bands: int = 4
 ) -> DataFrame:
     """LSH candidates with their MinHash-estimated Jaccard: the
     signature-only sketch answer (est = matching permutations /
@@ -229,22 +218,8 @@ def minhash_estimate_pairs(
         )
     mh = [f"mh{i}" for i in range(num_perm)]
     buckets = sig.select(
-        F.col(key), *mh, F.explode(F.array(*band_cols)).alias("b")
-    ).select(key, *mh, "b.band_id", "b.band_key")
-    if max_bucket_size is not None:
-        bw = Window.partitionBy("band_id", "band_key")
-        buckets = (
-            buckets.withColumn("__bsz__", F.count("*").over(bw))
-            .filter(F.col("__bsz__") <= max_bucket_size)
-            .drop("__bsz__")
-        )
-        # No SECOND barrier on the window output (r7, measured: a
-        # buckets-level materialize was a wash, sf1 1.73s -> 1.82s):
-        # with sig pinned above, the window's per-side re-execution is
-        # only a sort of the SMALL bucket-key table (docs x bands rows
-        # read back from the checkpoint). ngram_jaccard_pairs cuts at
-        # the window instead because its window re-sorts the full
-        # SHINGLE table per consumer.
+        F.col("doc_id"), *mh, F.explode(F.array(*band_cols)).alias("b")
+    ).select("doc_id", *mh, "b.band_id", "b.band_key")
     l, r = buckets.alias("l"), buckets.hint("merge").alias("r")
     matches = sum(
         F.when(F.col(f"l.mh{i}") == F.col(f"r.mh{i}"), 1).otherwise(0)
@@ -255,11 +230,11 @@ def minhash_estimate_pairs(
             r,
             (F.col("l.band_id") == F.col("r.band_id"))
             & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col(f"l.{key}") < F.col(f"r.{key}")),
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
         .select(
-            F.col(f"l.{key}").alias("a_id"),
-            F.col(f"r.{key}").alias("b_id"),
+            F.col("l.doc_id").alias("a_id"),
+            F.col("r.doc_id").alias("b_id"),
             F.round(matches / F.lit(num_perm), 4).alias("est_jaccard"),
         )
         .distinct()
@@ -274,7 +249,6 @@ DEFAULT_MAX_SHINGLE_FREQ = 8
 
 def ngram_jaccard_pairs(
     shingle_df: DataFrame,
-    key: str = "doc_id",
     threshold: float = 0.2,
     max_shingle_freq: int | None = DEFAULT_MAX_SHINGLE_FREQ,
     pre_hashed: bool = False,
@@ -316,7 +290,7 @@ def ngram_jaccard_pairs(
     are oracle-checked (capped: q34/q43/q47/q64/q120; exact: q26).
 
     ``pre_hashed=True`` accepts a caller-built digest table (columns
-    ``key, sh[, sz]``) instead of raw shingles — for composed pipelines
+    ``doc_id, sh[, sz]``) instead of raw shingles — for composed pipelines
     (q120) where sibling branches consume the SAME digest projection and
     Spark's ReusedExchange then runs the shingle+digest pass once for
     all of them. ``doc_freq_col`` names a caller-computed per-shingle
@@ -339,10 +313,10 @@ def ngram_jaccard_pairs(
     has_size = "sz" in shingle_df.columns and max_shingle_freq is None
     if pre_hashed:
         hashed = shingle_df.select(
-            *([F.col(key), F.col("sh")] + ([F.col("sz")] if has_size else []))
+            *([F.col("doc_id"), F.col("sh")] + ([F.col("sz")] if has_size else []))
         )
     else:
-        cols = [F.col(key), _hex60(F.col("shingle")).alias("sh")]
+        cols = [F.col("doc_id"), _hex60(F.col("shingle")).alias("sh")]
         if has_size:
             cols.append(F.col("sz"))
         hashed = shingle_df.select(*cols)
@@ -355,12 +329,12 @@ def ngram_jaccard_pairs(
             # reuse and re-pay the window (measured +0.4s on q120).
             hashed = (
                 shingle_df.filter(F.col(doc_freq_col) <= max_shingle_freq)
-                .select(F.col(key), F.col("sh"))
+                .select(F.col("doc_id"), F.col("sh"))
             )
         else:
             fw = Window.partitionBy("sh")
             hashed = (
-                hashed.select(F.col(key), F.col("sh"))
+                hashed.select(F.col("doc_id"), F.col("sh"))
                 .withColumn("__df__", F.count("*").over(fw))
                 .filter(F.col("__df__") <= max_shingle_freq)
                 .drop("__df__")
@@ -380,15 +354,15 @@ def ngram_jaccard_pairs(
             # table twice more.
             hashed = materialize(hashed)
         # Capped sizes via a post-aggregation join, NOT a second
-        # window over ``key`` (which would re-shuffle the whole
+        # window over ``doc_id`` (which would re-shuffle the whole
         # table); the sizes table is doc-count-sized and joins onto
         # the (a_id, b_id) pair aggregate, which under the cap is far
         # smaller than the shingle table.
-        sizes = hashed.groupBy(key).agg(F.count("*").alias("sz"))
+        sizes = hashed.groupBy("doc_id").agg(F.count("*").alias("sz"))
         has_size = False
     elif not has_size:
         hashed = materialize(hashed)
-        sizes = hashed.groupBy(key).agg(F.count("*").alias("sz"))
+        sizes = hashed.groupBy("doc_id").agg(F.count("*").alias("sz"))
     # Force a shuffle join: the two sides are the same subplan, so their
     # sh-exchanges canonicalize equal and the shingle+digest pass runs
     # ONCE (ReusedExchange). Left to AQE, a broadcast join looks cheaper
@@ -409,23 +383,23 @@ def ngram_jaccard_pairs(
     join_exec = "shuffle_hash" if max_shingle_freq is not None else "merge"
     l, r = hashed.alias("l"), hashed.hint(join_exec).alias("r")
     joined = l.join(
-        r, (F.col("l.sh") == F.col("r.sh")) & (F.col(f"l.{key}") < F.col(f"r.{key}"))
+        r, (F.col("l.sh") == F.col("r.sh")) & (F.col("l.doc_id") < F.col("r.doc_id"))
     )
     if has_size:
         common = joined.groupBy(
-            F.col(f"l.{key}").alias("a_id"),
-            F.col(f"r.{key}").alias("b_id"),
+            F.col("l.doc_id").alias("a_id"),
+            F.col("r.doc_id").alias("b_id"),
             F.col("l.sz").alias("sz_a"),
             F.col("r.sz").alias("sz_b"),
         ).agg(F.count("*").alias("common"))
     else:
         common = (
             joined.groupBy(
-                F.col(f"l.{key}").alias("a_id"), F.col(f"r.{key}").alias("b_id")
+                F.col("l.doc_id").alias("a_id"), F.col("r.doc_id").alias("b_id")
             )
             .agg(F.count("*").alias("common"))
-            .join(sizes.select(F.col(key).alias("a_id"), F.col("sz").alias("sz_a")), "a_id")
-            .join(sizes.select(F.col(key).alias("b_id"), F.col("sz").alias("sz_b")), "b_id")
+            .join(sizes.select(F.col("doc_id").alias("a_id"), F.col("sz").alias("sz_a")), "a_id")
+            .join(sizes.select(F.col("doc_id").alias("b_id"), F.col("sz").alias("sz_b")), "b_id")
         )
     # exact integer 4dp rounding (see text.ratio4_expr): |A∩B| and the
     # union size are integers, and double-rounding the ratio can flip
@@ -440,20 +414,24 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash(df: DataFrame, text: str = "text", key: str = "doc_id", bits: int = 60) -> DataFrame:
-    """SimHash signature (60-bit, md5-derived) per document: (key, simhash).
+#: SimHash signature width: the 60-bit md5 digest prefix (``_hex60``)
+SIMHASH_BITS = 60
+
+
+def simhash(df: DataFrame) -> DataFrame:
+    """SimHash signature (60-bit, md5-derived) per document: (doc_id, simhash).
 
     Each token contributes ±1 to each bit position of its 60-bit digest;
     the signature sets bit b iff the sum at b is positive. Implemented as
-    explode → ``bits`` conditional sums grouped by doc: every expression
+    explode → 60 conditional sums grouped by doc: every expression
     stays inside whole-stage codegen (array higher-order functions are
     CodegenFallback — interpreted per row — so the explode formulation is
     several times faster), and map-side partial aggregation collapses the
-    exploded rows back to ``bits`` longs per doc before the shuffle."""
+    exploded rows back to 60 longs per doc before the shuffle."""
     hashed = (
         fan_out(df)
-        .select(F.col(key), F.explode(tokens_col(text)).alias("t"))
-        .select(F.col(key), _hex60(F.col("t")).alias("h"))
+        .select(F.col("doc_id"), F.explode(tokens_col("text")).alias("t"))
+        .select(F.col("doc_id"), _hex60(F.col("t")).alias("h"))
     )
     # expressions are built as SQL strings (one F.expr py4j call each, and
     # ONE for the 60-term signature) — building them Column-op by
@@ -461,18 +439,18 @@ def simhash(df: DataFrame, text: str = "text", key: str = "doc_id", bits: int = 
     # driver-side latency per query construction, measured at local[32]
     bit_sums = [
         F.expr(f"sum(CASE WHEN ((h >> {b}) & 1) = 1 THEN 1 ELSE -1 END)").alias(f"s{b}")
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     ]
-    with_sums = hashed.groupBy(key).agg(*bit_sums)
+    with_sums = hashed.groupBy("doc_id").agg(*bit_sums)
     sig = " + ".join(
         f"(CASE WHEN s{b} > 0 THEN CAST({2 ** b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     )
-    return with_sums.select(F.col(key), F.expr(sig).alias("simhash"))
+    return with_sums.select(F.col("doc_id"), F.expr(sig).alias("simhash"))
 
 
 def hamming_neardup_pairs(
-    sig: DataFrame, key: str = "doc_id", max_hamming: int = 3, bits: int = 60, blocks: int = 4
+    sig: DataFrame, max_hamming: int = 3, bits: int = 60, blocks: int = 4
 ) -> DataFrame:
     """SimHash near-dup pairs within a Hamming radius, via the standard
     block-permutation trick: split the signature into ``blocks`` chunks;
@@ -499,19 +477,19 @@ def hamming_neardup_pairs(
         for i in range(blocks)
     ]
     keyed = sig.select(
-        F.col(key), F.col("simhash"), F.explode(F.array(*chunk_cols)).alias("c")
-    ).select(key, "simhash", "c.blk", "c.ck")
+        F.col("doc_id"), F.col("simhash"), F.explode(F.array(*chunk_cols)).alias("c")
+    ).select("doc_id", "simhash", "c.blk", "c.ck")
     l, r = keyed.alias("l"), keyed.hint("merge").alias("r")
     return (
         l.join(
             r,
             (F.col("l.blk") == F.col("r.blk"))
             & (F.col("l.ck") == F.col("r.ck"))
-            & (F.col(f"l.{key}") < F.col(f"r.{key}")),
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
         .select(
-            F.col(f"l.{key}").alias("a_id"),
-            F.col(f"r.{key}").alias("b_id"),
+            F.col("l.doc_id").alias("a_id"),
+            F.col("r.doc_id").alias("b_id"),
             F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))).alias("hamming"),
         )
         .distinct()
@@ -519,16 +497,14 @@ def hamming_neardup_pairs(
     )
 
 
-def neardup_survivors(
-    docs: DataFrame, pairs: DataFrame, key: str = "doc_id"
-) -> DataFrame:
+def neardup_survivors(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Corpus after near-duplicate removal — the "remove" half of a
     fuzzy-dedup pass (reference keeps only pair mining + clustering;
     training pipelines need the surviving document set).
 
     ``pairs`` is any (a_id, b_id) near-dup edge set (LSH, Jaccard,
     Hamming). Edges go through connected components so transitive
-    duplicates collapse into one cluster; the survivor is min(key) per
+    duplicates collapse into one cluster; the survivor is min(doc_id) per
     cluster and ``n_absorbed`` counts the documents it replaced.
     Untouched documents pass through as their own singleton cluster.
 
@@ -543,27 +519,25 @@ def neardup_survivors(
     labels = connected_components(
         pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     )
-    labeled = docs.select(key).join(
-        labels, docs[key] == labels["node_id"], "left"
+    labeled = docs.select("doc_id").join(
+        labels, docs["doc_id"] == labels["node_id"], "left"
     ).select(
-        F.col(key), F.coalesce("cluster_id", F.col(key)).alias("cluster_id")
+        F.col("doc_id"), F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id")
     )
     return labeled.groupBy("cluster_id").agg(
-        F.min(key).alias(key), (F.count("*") - F.lit(1)).alias("n_absorbed")
+        F.min("doc_id").alias("doc_id"), (F.count("*") - F.lit(1)).alias("n_absorbed")
     )
 
 
 def contamination_check(
-    train_shingles: DataFrame,
-    bench_shingles: DataFrame,
-    key: str = "doc_id",
+    train_shingles: DataFrame, bench_shingles: DataFrame
 ) -> DataFrame:
     """Benchmark-contamination scan: for every training document, the
     fraction of its distinct n-gram shingles that also occur anywhere in
     a benchmark/eval set (the standard n-gram-overlap decontamination
     check run before LLM training).
 
-    Inputs are two ``shingles()`` outputs. Output: (key, n_shingles,
+    Inputs are two ``shingles()`` outputs. Output: (doc_id, n_shingles,
     n_contaminated, contamination) with the ratio rounded to 4 places.
 
     Scale: the benchmark side collapses to DISTINCT shingles and is
@@ -576,12 +550,12 @@ def contamination_check(
     bench = broadcast(bench_shingles.select("shingle").distinct())
     per_doc = train_shingles.join(
         bench.withColumn("__hit", F.lit(1)), on="shingle", how="left"
-    ).groupBy(key).agg(
+    ).groupBy("doc_id").agg(
         F.count("*").alias("n_shingles"),
         F.count("__hit").alias("n_contaminated"),
     )
     return per_doc.select(
-        F.col(key),
+        F.col("doc_id"),
         "n_shingles",
         "n_contaminated",
         ratio4_expr("n_contaminated", "n_shingles").alias("contamination"),

@@ -30,12 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def attach_media_meta(
-    df: DataFrame,
-    modality: str,
-    mime: str,
-    content_col: str = "content",
-) -> DataFrame:
+def attach_media_meta(df: DataFrame, modality: str, mime: str) -> DataFrame:
     """Wrap raw bytes with the typed metadata struct (dims unknown until
     decode)."""
     return df.withColumn(
@@ -200,8 +195,6 @@ def default_image_decode(content: bytes) -> dict:
 def decode_features(
     media: DataFrame,
     decode_fn: Callable[[bytes], dict] = default_image_decode,
-    id_col: str = "media_id",
-    content_col: str = "content",
 ) -> DataFrame:
     """Arrow-batched decode + feature extraction:
     (media_id, width, height, features array<double>).
@@ -216,7 +209,7 @@ def decode_features(
         for pdf in batches:
             rows = {"media_id": [], "width": [], "height": [], "features": []}
             # column-wise zip, not iterrows (which builds a Series per row)
-            for mid, content in zip(pdf[id_col].values, pdf[content_col].values):
+            for mid, content in zip(pdf["media_id"].values, pdf["content"].values):
                 d = decode_fn(content)
                 rows["media_id"].append(mid)
                 rows["width"].append(d["width"])
@@ -224,7 +217,7 @@ def decode_features(
                 rows["features"].append(d["features"])
             yield pd.DataFrame(rows)
 
-    return media.select(id_col, content_col).mapInPandas(
+    return media.select("media_id", "content").mapInPandas(
         run,
         schema="media_id bigint, width int, height int, features array<double>",
     )
@@ -313,8 +306,6 @@ def resize_images(
     width: int,
     height: int,
     resize_fn: Callable[[bytes, int, int], dict] = default_image_resize,
-    id_col: str = "media_id",
-    content_col: str = "content",
 ) -> DataFrame:
     """Arrow-batched resize stage: (media_id, content binary, width, height).
 
@@ -328,7 +319,7 @@ def resize_images(
 
         for pdf in batches:
             rows = {"media_id": [], "content": [], "width": [], "height": []}
-            for mid, content in zip(pdf[id_col].values, pdf[content_col].values):
+            for mid, content in zip(pdf["media_id"].values, pdf["content"].values):
                 d = resize_fn(content, width, height)
                 rows["media_id"].append(mid)
                 rows["content"].append(d["content"])
@@ -336,22 +327,18 @@ def resize_images(
                 rows["height"].append(d["height"])
             yield pd.DataFrame(rows)
 
-    return media.select(id_col, content_col).mapInPandas(
+    return media.select("media_id", "content").mapInPandas(
         run, schema="media_id bigint, content binary, width int, height int"
     )
 
 
-def frame_sample_plan(
-    media: DataFrame,
-    every_ms: int = 1000,
-    id_col: str = "media_id",
-) -> DataFrame:
+def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling *plan*: one row per (media_id, frame_ts_ms)
     given per-item duration metadata — the explode that fans a video into
     decode tasks. The actual frame extraction is the pluggable decode
     stage; this produces the distributed work list."""
     return media.select(
-        F.col(id_col),
+        F.col("media_id"),
         F.explode(
             F.sequence(
                 F.lit(0),

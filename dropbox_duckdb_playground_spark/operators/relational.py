@@ -13,14 +13,15 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Spread a narrow input across the cluster before a compute-heavy
     stage (explode, per-row hashing, array aggregation).
 
     Needed when the upstream scan cannot split — e.g. a single parquet
     row group (exactly the shape of small dimension exports): every
     downstream stage would otherwise run on ONE task no matter how many
-    executors exist. The round-robin shuffle is priced at the input size
+    executors exist. The round-robin shuffle to the default parallelism
+    is priced at the input size
     (tiny by definition here); at 100 TB fact scale scans split on row
     groups and this becomes a no-op decision for the caller.
 
@@ -31,8 +32,7 @@ def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     twice. For shuffle outputs a fan-out is pointless anyway (the
     exchange already distributed the data); ``materialize`` first if
     you genuinely need to re-spread a computed intermediate."""
-    if partitions is None:
-        partitions = df.sparkSession.sparkContext.defaultParallelism
+    partitions = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= partitions:
         return df
     return df.repartition(partitions)
@@ -106,19 +106,16 @@ def anti_diff(new: DataFrame, cached: DataFrame, keys: list[str]) -> DataFrame:
     return new.join(cached_keys, on=keys, how="left_anti")
 
 
-def keep_first_merge(
-    batches: list[DataFrame],
-    keys: list[str],
-    order_by: list[Column | str] | None = None,
-) -> DataFrame:
+def keep_first_merge(batches: list[DataFrame], keys: list[str]) -> DataFrame:
     """Union batches then keep the first row per key, earlier batches
     winning — the reference's updated ∪ new ∪ cached etag merge with
-    keep='first' (examples/canon/crawl.py:137-153)."""
+    keep='first' (examples/canon/crawl.py:137-153). Ties inside one
+    batch go to the smallest non-key columns, as in ``distinct_on``, so
+    the survivor does not depend on row order (a retried task may
+    deliver a batch's rows in another order)."""
     tagged = [b.withColumn("__batch__", F.lit(i)) for i, b in enumerate(batches)]
     merged = reduce(DataFrame.unionByName, tagged)
-    order = [F.col("__batch__")] + [
-        F.col(c) if isinstance(c, str) else c for c in (order_by or [])
-    ]
+    order = ["__batch__", *(c for c in batches[0].columns if c not in keys)]
     w = Window.partitionBy(*keys).orderBy(*order)
     return (
         merged.withColumn("__rn__", F.row_number().over(w))
@@ -128,36 +125,29 @@ def keep_first_merge(
 
 
 def multi_left_join(
-    base: DataFrame,
-    others: list[DataFrame],
-    on: list[str],
-    broadcast_others: bool = False,
+    base: DataFrame, others: list[DataFrame], on: list[str]
 ) -> DataFrame:
     """Chained multi-way LEFT equi-join over shared key(s) — the grouping
     SQL shape (examples/graph/group/meta.py:9-24 one key, 40-55 two keys).
 
-    Scale: with ``broadcast_others`` the whole chain is map-side (no
-    shuffle); otherwise all joins share one hash-partitioning on ``on``,
-    which Catalyst reuses across the chain (single shuffle of each input,
-    no re-shuffle between joins)."""
+    Scale: all joins share one hash-partitioning on ``on``, which
+    Catalyst reuses across the chain (single shuffle of each input, no
+    re-shuffle between joins); small sides broadcast under AQE."""
     out = base
     for other in others:
-        right = F.broadcast(other) if broadcast_others else other
-        out = out.join(right, on=on, how="left")
+        out = out.join(other, on=on, how="left")
     return out
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    how: str = "inner",
-    salt: int = 16,
-) -> DataFrame:
-    """Equi-join with explicit key salting for heavy skew on ``left``.
+#: sub-keys per join key in ``salted_join``
+SALT = 16
 
-    The hot key's rows are spread over ``salt`` sub-keys (deterministic:
-    hash of the full left row), and ``right`` is replicated ``salt``×
+
+def salted_join(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
+    """Inner equi-join with explicit key salting for heavy skew on ``left``.
+
+    The hot key's rows are spread over ``SALT`` sub-keys (deterministic:
+    hash of the full left row), and ``right`` is replicated ``SALT``×
     so every sub-key still finds its match — trading a bounded blow-up
     of the small side for even task sizes on the big side.
 
@@ -167,12 +157,12 @@ def salted_join(
     split still exceeds a task."""
     lk = left.withColumn(
         "__salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt)),
+        F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(SALT)),
     )
     rk = right.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(SALT - 1)))
     ).withColumn("__salt", F.col("__salt").cast("bigint"))
-    return lk.join(rk, on=[*on, "__salt"], how=how).drop("__salt")
+    return lk.join(rk, on=[*on, "__salt"]).drop("__salt")
 
 
 def union_all(dfs: list[DataFrame]) -> DataFrame:

@@ -78,8 +78,6 @@ def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector (brute force).
 
@@ -96,12 +94,12 @@ def cosine_topk(
     from dropbox_duckdb_playground_spark.operators.relational import fan_out
 
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("__qn__"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"),
+        _norm(F.col("embedding")).alias("__qn__"),
     )
     c = fan_out(embeddings).select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("c_vec"),
-        _norm(F.col(vec_col)).alias("__cn__"),
+        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_vec"),
+        _norm(F.col("embedding")).alias("__cn__"),
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("cand_id"))
@@ -163,8 +161,6 @@ def lsh_ann_topk(
     dim: int,
     k: int = 5,
     planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's hyperplane bucket;
     exact cosine re-rank within the bucket. ~2^planes candidate reduction.
@@ -172,15 +168,15 @@ def lsh_ann_topk(
     Output schema matches `cosine_topk` (query_id, cand_id, cosine)."""
     from dropbox_duckdb_playground_spark.operators.relational import fan_out
 
-    sig = hyperplane_signature(F.col(vec_col), dim, planes)
+    sig = hyperplane_signature(F.col("embedding"), dim, planes)
     embeddings = fan_out(embeddings)
     c = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("c_vec"), sig.alias("bucket"),
-        _norm(F.col(vec_col)).alias("__cn__"),
+        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_vec"), sig.alias("bucket"),
+        _norm(F.col("embedding")).alias("__cn__"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"), sig.alias("bucket"),
-        _norm(F.col(vec_col)).alias("__qn__"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"), sig.alias("bucket"),
+        _norm(F.col("embedding")).alias("__qn__"),
     )
     scored = (
         c.join(F.broadcast(q), "bucket")
@@ -209,8 +205,6 @@ def lsh_ann_topk(
 def cosine_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     planes: int = 8,
 ) -> DataFrame:
@@ -226,7 +220,7 @@ def cosine_neardup_pairs(
     external oracle can replicate the exact candidate set."""
     from dropbox_duckdb_playground_spark.operators.relational import fan_out
 
-    sig = hyperplane_signature(F.col(vec_col), dim, planes)
+    sig = hyperplane_signature(F.col("embedding"), dim, planes)
     # The signature+norm table is MATERIALIZED before the self-join:
     # the former "identical sides share one exchange (ReusedExchange)"
     # rationale is false at runtime (r8: final adaptive plans showed 0
@@ -238,8 +232,8 @@ def cosine_neardup_pairs(
 
     c = materialize(
         fan_out(embeddings).select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
-            sig.alias("bucket"), _norm(F.col(vec_col)).alias("nrm"),
+            F.col("vec_id").alias("id"), F.col("embedding").alias("vec"),
+            sig.alias("bucket"), _norm(F.col("embedding")).alias("nrm"),
         )
     )
     l, r = c.alias("l"), c.hint("merge").alias("r")
@@ -275,18 +269,17 @@ def train_cap(k: int) -> int:
     return max(k * 256, 2048)
 
 
-def hash_sample(
-    df: DataFrame, id_col: str, vec_col: str, seed: int, cap: int
-) -> np.ndarray:
-    """The first ``cap`` vectors in ``md5('<seed>:' || id)`` order, ties
-    by id, as a float64 (rows, dim) array in that order. The order is a
-    function of the ids alone, so the sample does not depend on scan
-    order or partitioning, and a SQL oracle selects the same rows."""
-    key = F.md5(F.concat(F.lit(f"{seed}:"), F.col(id_col).cast("string")))
-    pdf = df.orderBy(key, id_col).limit(cap).select(vec_col).toPandas()
+def hash_sample(df: DataFrame, seed: int, cap: int) -> np.ndarray:
+    """The first ``cap`` embeddings in ``md5('<seed>:' || vec_id)`` order,
+    ties by vec_id, as a float64 (rows, dim) array in that order. The
+    order is a function of the ids alone, so the sample does not depend
+    on scan order or partitioning, and a SQL oracle selects the same
+    rows."""
+    key = F.md5(F.concat(F.lit(f"{seed}:"), F.col("vec_id").cast("string")))
+    pdf = df.orderBy(key, "vec_id").limit(cap).select("embedding").toPandas()
     if pdf.empty:
         return np.empty((0, 0))
-    return np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+    return np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
 
 
 def _fold(X: np.ndarray, C: np.ndarray, squared: bool) -> np.ndarray:
@@ -361,8 +354,6 @@ def kmeans_train(X: np.ndarray, k: int, spherical: bool) -> np.ndarray:
 def ivf_assign(
     embeddings: DataFrame,
     nlist: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
 ) -> tuple[DataFrame, DataFrame]:
     """Train a spherical k-means coarse quantizer and assign every vector
@@ -381,7 +372,7 @@ def ivf_assign(
     the corpus. Rows are told apart by (id, vector): two rows with the
     same id and different vectors are assigned separately, and rows
     that repeat both collapse into one."""
-    X = hash_sample(embeddings, id_col, vec_col, seed, train_cap(nlist))
+    X = hash_sample(embeddings, seed, train_cap(nlist))
     C = kmeans_train(X, nlist, spherical=True)
     cent_df = embeddings.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(C)],
@@ -393,9 +384,9 @@ def ivf_assign(
     # The hash is only a grouping key, never an output value.
     assigned = (
         embeddings.select(
-            F.col(id_col).alias("cand_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.xxhash64(vec_col).alias("__vh"),
+            F.col("vec_id").alias("cand_id"),
+            F.col("embedding").alias("c_vec"),
+            F.xxhash64("embedding").alias("__vh"),
         )
         .crossJoin(F.broadcast(cent_df))
         .groupBy("cand_id", "__vh")
@@ -417,8 +408,6 @@ def ivf_ann_topk(
     k: int = 5,
     nlist: int = 16,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: spherical k-means coarse quantizer
@@ -426,15 +415,9 @@ def ivf_ann_topk(
     ``nprobe`` nearest lists per query -> exact cosine re-rank inside
     the probed lists. The scale path when LSH recall is insufficient.
     Output schema matches `cosine_topk` (query_id, cand_id, cosine)."""
-    assigned, cent_df = ivf_assign(
-        embeddings,
-        nlist=nlist,
-        id_col=id_col,
-        vec_col=vec_col,
-        seed=seed,
-    )
+    assigned, cent_df = ivf_assign(embeddings, nlist=nlist, seed=seed)
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     # nearest nprobe centroids per query (centroid table is tiny: nlist rows)
     probed = (
@@ -467,8 +450,6 @@ def semantic_dedup(
     embeddings: DataFrame,
     threshold: float = 0.3,
     nlist: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -509,13 +490,7 @@ def semantic_dedup(
     Output: (vec_id, list_id, survived) with survived in {0,1}."""
     import pandas as pd
 
-    assigned, _ = ivf_assign(
-        embeddings,
-        nlist=nlist,
-        id_col=id_col,
-        vec_col=vec_col,
-        seed=seed,
-    )
+    assigned, _ = ivf_assign(embeddings, nlist=nlist, seed=seed)
     # round(cos, 4) >= t  <=>  cos >= t - 5e-5 under HALF_UP rounding
     cut = threshold - 0.00005
 
@@ -543,20 +518,18 @@ def semantic_dedup(
 
     return assigned.groupBy("list_id").applyInPandas(
         dedupe_cluster, schema=f"vec_id {assigned.schema['cand_id'].dataType.simpleString()}, list_id int, survived int"
-    ).select(F.col("vec_id").alias(id_col), "list_id", "survived")
+    )
 
 
-def _subvectors(
-    df: DataFrame, id_col: str, vec_col: str, id_alias: str, m: int, dsub: int
-) -> DataFrame:
-    """(id_alias, sub, xs): each vector's ``m`` slices of ``dsub`` dims."""
+def _subvectors(df: DataFrame, id_alias: str, m: int, dsub: int) -> DataFrame:
+    """(id_alias, sub, xs): each embedding's ``m`` slices of ``dsub`` dims."""
     return df.select(
-        F.col(id_col).alias(id_alias),
+        F.col("vec_id").alias(id_alias),
         F.explode(
             F.array(*[
                 F.struct(
                     F.lit(s).alias("sub"),
-                    F.slice(vec_col, s * dsub + 1, dsub).alias("xs"),
+                    F.slice("embedding", s * dsub + 1, dsub).alias("xs"),
                 )
                 for s in range(m)
             ])
@@ -569,8 +542,6 @@ def pq_assign(
     m: int = 8,
     ksub: int = 16,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
 ) -> tuple[DataFrame, DataFrame]:
     """Product-quantization encoder (Jégou et al. TPAMI 2011): split each
@@ -584,7 +555,7 @@ def pq_assign(
     ``hash_sample``, and encoding is in the plan: every (vector,
     subspace) slice joins the broadcast codebook on ``sub`` and keeps
     the code with the smallest squared distance (lowest code on a tie).
-    ``codes`` is keyed by ``id_col`` alone, so the ids must be unique.
+    ``codes`` is keyed by ``vec_id`` alone, so the ids must be unique.
     At 100 TB the codes table is m bytes-ish per vector (vs 4*dim for
     floats) — the point of PQ is that THIS is what you keep hot for ANN
     scoring."""
@@ -592,7 +563,7 @@ def pq_assign(
 
     assert dim % m == 0
     dsub = dim // m
-    X = hash_sample(embeddings, id_col, vec_col, seed, train_cap(ksub))
+    X = hash_sample(embeddings, seed, train_cap(ksub))
     # B.shape[1] = actual trained centroid count, which is < ksub when
     # the training sample had fewer rows than ksub — iterate the real
     # shape so a tiny corpus degrades gracefully instead of IndexError
@@ -611,7 +582,7 @@ def pq_assign(
     # fan_out: the m x ksub distance folds per vector are the heavy
     # step, and a small corpus scan arrives in fewer tasks than cores
     codes = (
-        _subvectors(fan_out(embeddings), id_col, vec_col, "cand_id", m, dsub)
+        _subvectors(fan_out(embeddings), "cand_id", m, dsub)
         .join(F.broadcast(codebook), "sub")
         .groupBy("cand_id", "sub")
         .agg(
@@ -630,8 +601,6 @@ def pq_ann_topk(
     m: int = 8,
     ksub: int = 16,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
     """Asymmetric-distance PQ ANN (ADC, Jégou et al.): per query,
@@ -651,18 +620,10 @@ def pq_ann_topk(
     codes table joins it on (sub, code) — corpus-sized but narrow — and
     the per-candidate sum is a map-side-combinable groupBy on
     (query_id, cand_id). One corpus pass, one shuffle."""
-    codes, codebook = pq_assign(
-        embeddings,
-        m=m,
-        ksub=ksub,
-        dim=dim,
-        id_col=id_col,
-        vec_col=vec_col,
-        seed=seed,
-    )
+    codes, codebook = pq_assign(embeddings, m=m, ksub=ksub, dim=dim, seed=seed)
     # LUT: (query_id, sub, code, micro) — micro = round(1e6 * d2(q_sub, centroid))
     lut = (
-        _subvectors(queries, id_col, vec_col, "query_id", m, dim // m)
+        _subvectors(queries, "query_id", m, dim // m)
         .join(F.broadcast(codebook), "sub")
         .select(
             "query_id",

@@ -34,13 +34,13 @@ def token_count(text: str | Column = "text") -> Column:
     return F.size(tokens_col(text))
 
 
-def token_stats(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Per-document token statistics: n_chars, n_tokens, n_distinct_tokens,
     avg_token_len. One narrow pass + one small agg per doc."""
-    toks = tokens_col(text)
+    toks = tokens_col("text")
     return df.select(
-        F.col(key),
-        F.length(text).cast("long").alias("n_chars"),
+        F.col("doc_id"),
+        F.length("text").cast("long").alias("n_chars"),
         F.size(toks).cast("long").alias("n_tokens"),
         F.size(F.array_distinct(toks)).cast("long").alias("n_distinct_tokens"),
         F.round(
@@ -64,28 +64,18 @@ def ratio4_expr(p: str, q: str) -> Column:
     )
 
 
-def stopword_pattern(stopwords: tuple[str, ...] = DEFAULT_STOPWORDS) -> str | None:
-    """JVM regex matching one whole stopword token: a token is a maximal
-    non-\\s run, so a stopword token is exactly a \\Q-quoted alternative
-    bounded by ^/\\s lookarounds. Returns ``None`` for an empty tuple —
-    an empty alternation ``(?:)`` matches the EMPTY string at every
-    \\s-bounded position (counts 1 on empty text, double on ``"a  b"``),
-    so callers must short-circuit to a literal 0 instead. Shared by
-    :func:`quality_score` and catalog q100 (r11 ADVICE: the q100 inline
-    copy could silently diverge)."""
-    if not stopwords:
-        return None
-    return (
-        "(?<=^|\\s)(?:"
-        + "|".join("\\Q" + s + "\\E" for s in stopwords)
-        + ")(?=\\s|$)"
-    )
+#: JVM regex matching one whole stopword token: a token is a maximal
+#: non-\s run, so a stopword token is exactly a \Q-quoted alternative
+#: bounded by ^/\s lookarounds. Shared by :func:`quality_score` and
+#: catalog q100 through :func:`quality_feature_exprs`.
+STOPWORD_PATTERN = (
+    "(?<=^|\\s)(?:"
+    + "|".join("\\Q" + s + "\\E" for s in DEFAULT_STOPWORDS)
+    + ")(?=\\s|$)"
+)
 
 
-def quality_feature_exprs(
-    text: str = "text",
-    stopwords: tuple[str, ...] = DEFAULT_STOPWORDS,
-) -> list[Column]:
+def quality_feature_exprs() -> list[Column]:
     """The five integer count columns the quality blend is built from
     (``__ntr__`` raw token count, ``__nt__`` max(count,1) denominator,
     ``__stop__`` stopword tokens, ``__dist__`` distinct tokens,
@@ -94,16 +84,12 @@ def quality_feature_exprs(
     element, not codegen'd). Values are identical to the lambda forms
     (verified row-wise on 50k sf1 docs); measured 1.02s -> 0.79s for the
     feature pass. Shared by :func:`quality_score` and catalog q100."""
-    trimmed = F.trim(F.col(text))
-    toks = tokens_col(text)
-    pat = stopword_pattern(stopwords)
-    stop_count = (
-        F.regexp_count(trimmed, F.lit(pat)) if pat is not None else F.lit(0)
-    )
+    trimmed = F.trim(F.col("text"))
+    toks = tokens_col("text")
     return [
         F.size(toks).cast("long").alias("__ntr__"),
         F.greatest(F.size(toks), F.lit(1)).cast("long").alias("__nt__"),
-        stop_count.cast("long").alias("__stop__"),
+        F.regexp_count(trimmed, F.lit(STOPWORD_PATTERN)).cast("long").alias("__stop__"),
         F.size(F.array_distinct(toks)).cast("long").alias("__dist__"),
         F.length(F.regexp_replace(trimmed, r"\s+", ""))
         .cast("long")
@@ -126,12 +112,7 @@ QUALITY_BLEND_NUM = (
 )
 
 
-def quality_score(
-    df: DataFrame,
-    text: str = "text",
-    key: str = "doc_id",
-    stopwords: tuple[str, ...] = DEFAULT_STOPWORDS,
-) -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic document-quality features + combined score.
 
     Features follow the public Gopher/C4-style rules: length, mean word
@@ -148,9 +129,9 @@ def quality_score(
     flips the rounded digit — observed at sf1 on the quality blend), the
     same class of bug the money columns fixed with micro-units; the
     integer form is bit-identical on any engine."""
-    base = df.select(F.col(key), *quality_feature_exprs(text, stopwords))
+    base = df.select(F.col("doc_id"), *quality_feature_exprs())
     return base.select(
-        F.col(key),
+        F.col("doc_id"),
         F.col("__ntr__").alias("n_tokens"),
         ratio4_expr("__stop__", "__nt__").alias("stopword_ratio"),
         ratio4_expr("__dist__", "__nt__").alias("distinct_ratio"),
@@ -159,27 +140,21 @@ def quality_score(
     )
 
 
-def fingerprint(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Stable content fingerprint: md5 of whitespace-normalized lowercase
     text. md5 (not xxhash64) so the fingerprint is portable across engines
     and storage systems."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text))), r"\s+", " ")
-    return df.select(F.col(key), F.md5(norm).alias("fp"))
+    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
+    return df.select(F.col("doc_id"), F.md5(norm).alias("fp"))
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    text: str = "text",
-    key: str = "doc_id",
-    n: int = 3,
-    w: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, n: int = 3, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., MOSS): hash every
     token ``n``-gram with a rolling window of ``lead``s, then keep the min
     hash of each window of ``w`` consecutive grams; the distinct mins are
     the fingerprint set — robust to local edits, position-independent.
 
-    Returns distinct (key, fp bigint). Everything is JVM window execs over
+    Returns distinct (doc_id, fp bigint). Everything is JVM window execs over
     one partition-by-doc shuffle; at 100 TB docs are the natural partition
     unit so the shuffle is one pass and windows never cross executors.
 
@@ -201,24 +176,24 @@ def winnow_fingerprints(
     from dropbox_duckdb_playground_spark.operators.dedup import _hex60
 
     toks = df.select(
-        F.col(key), F.posexplode(tokens_col(text)).alias("pos", "tok")
+        F.col("doc_id"), F.posexplode(tokens_col("text")).alias("pos", "tok")
     )
-    ww = Window.partitionBy(key).orderBy("pos")
+    ww = Window.partitionBy("doc_id").orderBy("pos")
     gram = F.concat_ws(
         " ", *([F.col("tok")] + [F.lead("tok", i).over(ww) for i in range(1, n)])
     )
     complete = F.lead("tok", n - 1).over(ww).isNotNull()
     hashed = toks.select(
-        F.col(key), F.col("pos"), F.when(complete, _hex60(gram)).alias("h")
+        F.col("doc_id"), F.col("pos"), F.when(complete, _hex60(gram)).alias("h")
     ).filter(F.col("h").isNotNull())
-    wmin = Window.partitionBy(key).orderBy("pos").rowsBetween(0, w - 1)
-    full = F.lead("h", w - 1).over(Window.partitionBy(key).orderBy("pos"))
+    wmin = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
+    full = F.lead("h", w - 1).over(Window.partitionBy("doc_id").orderBy("pos"))
     return (
         hashed.select(
-            F.col(key), F.min("h").over(wmin).alias("fp"), full.alias("_full")
+            F.col("doc_id"), F.min("h").over(wmin).alias("fp"), full.alias("_full")
         )
         .filter(F.col("_full").isNotNull())
-        .select(key, "fp")
+        .select("doc_id", "fp")
         .distinct()
     )
 
@@ -240,18 +215,16 @@ def bpe_token_count(text: str | Column = "text") -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_ISH_PATTERN), 0)).cast("long")
 
 
-def scrub_text(
-    df: DataFrame, text: str = "text", key: str = "doc_id"
-) -> DataFrame:
+def scrub_text(df: DataFrame) -> DataFrame:
     """PII/URL scrub for training corpora: emails → <EMAIL>, URLs → <URL>.
     Narrow per-row regexp_replace chain — embarrassingly parallel, and the
     patterns are RE2-compatible so the scrub is reproducible in any engine."""
     clean = F.regexp_replace(
-        F.regexp_replace(F.col(text), EMAIL_PATTERN, "<EMAIL>"),
+        F.regexp_replace(F.col("text"), EMAIL_PATTERN, "<EMAIL>"),
         URL_PATTERN,
         "<URL>",
     )
-    return df.select(F.col(key), clean.alias("clean_text"))
+    return df.select(F.col("doc_id"), clean.alias("clean_text"))
 
 
 def stratified_sample(
@@ -273,16 +246,14 @@ def stratified_sample(
     return df.filter(bucket < pct)
 
 
-def lang_id_predict(
-    docs: DataFrame,
-    text: str = "text",
-    key: str = "doc_id",
-    label: str = "lang",
-    profile_size: int = 20,
-) -> DataFrame:
+#: tokens per language profile in ``lang_id_predict``
+LANG_PROFILE_SIZE = 20
+
+
+def lang_id_predict(docs: DataFrame) -> DataFrame:
     """Token-profile language ID (n-gram-frequency heuristic).
 
-    Builds per-language profiles (top-``profile_size`` tokens by frequency
+    Builds per-language profiles (top-``LANG_PROFILE_SIZE`` tokens by frequency
     from the labeled corpus), then classifies each document by the highest
     profile-overlap count. Deterministic tie-breaks: token then language
     code ascending.
@@ -292,11 +263,11 @@ def lang_id_predict(
     - profile branch: explode → groupBy(label, token) — ONE map-side
       combined shuffle whose bytes are bounded by distinct tokens per
       language, then a top-N window over that tiny table. The result
-      (n_langs × profile_size rows) rides into the scoring join as a
+      (n_langs × LANG_PROFILE_SIZE rows) rides into the scoring join as a
       BROADCAST, so no driver collect and the operator stays lazy.
-    - scoring branch: explode → broadcast-join profile → groupBy(key,
+    - scoring branch: explode → broadcast-join profile → groupBy(doc_id,
       cand_lang) count (partial agg caps rows at n_docs × n_langs) →
-      per-key argmax as groupBy(key).min(struct(-overlap, lang)) —
+      per-doc argmax as groupBy(doc_id).min(struct(-overlap, lang)) —
       a hash aggregate, NOT a window: no sort, no extra exchange for
       a window frame, and ties break exactly like (overlap DESC,
       lang ASC).
@@ -305,21 +276,21 @@ def lang_id_predict(
       a round-robin pre-shuffle would just move the whole text payload
       once more for nothing (measured +0.4s at sf0.1 for zero gain).
     """
-    toks = docs.select(F.col(label), F.explode(tokens_col(text)).alias("token"))
-    freq = toks.groupBy(label, "token").agg(F.count("*").alias("cnt"))
-    w = Window.partitionBy(label).orderBy(F.desc("cnt"), F.asc("token"))
+    toks = docs.select(F.col("lang"), F.explode(tokens_col("text")).alias("token"))
+    freq = toks.groupBy("lang", "token").agg(F.count("*").alias("cnt"))
+    w = Window.partitionBy("lang").orderBy(F.desc("cnt"), F.asc("token"))
     profile = (
         freq.withColumn("__rn__", F.row_number().over(w))
-        .filter(F.col("__rn__") <= profile_size)
-        .select(F.col(label).alias("cand_lang"), "token")
+        .filter(F.col("__rn__") <= LANG_PROFILE_SIZE)
+        .select(F.col("lang").alias("cand_lang"), "token")
     )
     scores = (
-        docs.select(F.col(key), F.explode(tokens_col(text)).alias("token"))
+        docs.select(F.col("doc_id"), F.explode(tokens_col("text")).alias("token"))
         .join(F.broadcast(profile), "token")
-        .groupBy(key, "cand_lang")
+        .groupBy("doc_id", "cand_lang")
         .agg(F.count("*").alias("overlap"))
     )
-    best = scores.groupBy(key).agg(
+    best = scores.groupBy("doc_id").agg(
         F.min(
             F.struct(
                 (-F.col("overlap")).alias("__neg__"),
@@ -329,21 +300,17 @@ def lang_id_predict(
         ).alias("__best__")
     )
     return best.select(
-        key,
+        "doc_id",
         F.col("__best__.cand_lang").alias("pred_lang"),
         F.col("__best__.overlap").alias("overlap"),
     )
 
 
 def chunk_documents(
-    df: DataFrame,
-    text: str = "text",
-    key: str = "doc_id",
-    chunk_tokens: int = 50,
-    overlap: int = 10,
+    df: DataFrame, chunk_tokens: int = 50, overlap: int = 10
 ) -> DataFrame:
     """Split documents into fixed-token training windows with overlap —
-    the standard LLM context-window prep step. Output: (key, chunk_id,
+    the standard LLM context-window prep step. Output: (doc_id, chunk_id,
     n_tokens, chunk_text), chunk_id 0-based; the final chunk may be
     short; zero-token docs produce no chunks.
 
@@ -359,15 +326,15 @@ def chunk_documents(
         F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(stride)
     )
     out = (
-        df.select(F.col(key), tokens_col(text).alias("__toks__"))
+        df.select(F.col("doc_id"), tokens_col("text").alias("__toks__"))
         .filter(n > 0)
         .select(
-            F.col(key),
+            F.col("doc_id"),
             F.col("__toks__"),
             F.posexplode(starts).alias("chunk_id", "start"),
         )
         .select(
-            F.col(key),
+            F.col("doc_id"),
             F.col("chunk_id").cast("long").alias("chunk_id"),
             F.slice(F.col("__toks__"), F.col("start") + 1, chunk_tokens).alias(
                 "__chunk__"
@@ -375,24 +342,20 @@ def chunk_documents(
         )
     )
     return out.select(
-        key,
+        "doc_id",
         "chunk_id",
         F.size("__chunk__").cast("long").alias("n_tokens"),
         F.concat_ws(" ", "__chunk__").alias("chunk_text"),
     )
 
 
-def unigram_logprob(
-    docs: DataFrame,
-    text: str = "text",
-    key: str = "doc_id",
-) -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """Unigram-LM surprisal score per document: avg -log2 p(token) under
     the corpus's own unigram distribution — the cheap end of the
     perplexity-filtering family used to drop gibberish/boilerplate from
     LLM training corpora (thresholding is caller policy).
 
-    Output: (key, n_tokens, avg_neg_log2p) rounded to 4 places.
+    Output: (doc_id, n_tokens, avg_neg_log2p) rounded to 4 places.
 
     Scale: token frequencies via ONE map-side-combined shuffle (bytes
     bounded by vocab); the corpus total rides a broadcast scalar join;
@@ -400,7 +363,7 @@ def unigram_logprob(
     collapses straight to the per-doc average (partial agg). The freq
     join is a plain shuffle join, so an arbitrarily large vocabulary
     never needs to fit anywhere whole."""
-    toks = docs.select(F.col(key), F.explode(tokens_col(text)).alias("token"))
+    toks = docs.select(F.col("doc_id"), F.explode(tokens_col("text")).alias("token"))
     freq = toks.groupBy("token").agg(F.count("*").alias("cnt"))
     total = freq.agg(F.sum("cnt").alias("__total__"))
     p = freq.crossJoin(F.broadcast(total)).select(
@@ -408,7 +371,7 @@ def unigram_logprob(
     )
     return (
         toks.join(p, "token")
-        .groupBy(key)
+        .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
             F.round(F.avg(-F.log2("p")), 4).alias("avg_neg_log2p"),
@@ -416,9 +379,7 @@ def unigram_logprob(
     )
 
 
-def repetition_stats(
-    df: DataFrame, text: str = "text", key: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document:
 
     - ``top_unigram_frac`` — fraction of token positions held by the
@@ -434,15 +395,15 @@ def repetition_stats(
     ties cannot make the output nondeterministic.
 
     Scale: two explode→partial-agg pipelines whose shuffles carry
-    (key, gram, count) — map-side combine collapses repeats, so bytes
+    (doc_id, gram, count) — map-side combine collapses repeats, so bytes
     shuffled are bounded by distinct grams per doc, not corpus size.
     """
-    norm = F.regexp_replace(F.trim(F.col(text)), r"\s+", " ")
+    norm = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
     uni = (
-        df.select(F.col(key), F.explode(F.split(norm, " ")).alias("g"))
-        .groupBy(key, "g")
+        df.select(F.col("doc_id"), F.explode(F.split(norm, " ")).alias("g"))
+        .groupBy("doc_id", "g")
         .agg(F.count("*").alias("c"))
-        .groupBy(key)
+        .groupBy("doc_id")
         .agg(
             F.sum("c").alias("n_tokens"),
             F.max("c").alias("top_uni"),
@@ -451,22 +412,22 @@ def repetition_stats(
     bigram_pat = r"(?<![^ ])(?=(\S+ \S+))"
     bi = (
         df.select(
-            F.col(key),
+            F.col("doc_id"),
             F.explode(
                 F.regexp_extract_all(norm, F.lit(bigram_pat), 1)
             ).alias("g"),
         )
-        .groupBy(key, "g")
+        .groupBy("doc_id", "g")
         .agg(F.count("*").alias("c"))
-        .groupBy(key)
+        .groupBy("doc_id")
         .agg(
             F.sum("c").alias("n_bigrams"),
             F.max("c").alias("top_bi"),
             F.sum(F.when(F.col("c") > 1, F.col("c"))).alias("dup_bi"),
         )
     )
-    return uni.join(bi, on=key, how="left").select(
-        F.col(key),
+    return uni.join(bi, on="doc_id", how="left").select(
+        F.col("doc_id"),
         F.col("n_tokens").cast("long").alias("n_tokens"),
         F.round(F.col("top_uni") / F.col("n_tokens"), 4).alias(
             "top_unigram_frac"
@@ -480,16 +441,12 @@ def repetition_stats(
     )
 
 
-def bm25_topk(
-    docs: DataFrame,
-    n_query_terms: int = 8,
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    key: str = "doc_id",
-    text: str = "text",
-    stopwords: tuple[str, ...] = DEFAULT_STOPWORDS,
-) -> DataFrame:
+#: Okapi BM25 term-saturation and length-normalization constants
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
+def bm25_topk(docs: DataFrame, n_query_terms: int = 8, k: int = 10) -> DataFrame:
     """BM25 retrieval: top-``k`` documents for each of the corpus's
     ``n_query_terms`` most frequent non-stopword terms (Robertson &
     Zaragoza 2009, the Okapi formula with the standard +1 idf floor).
@@ -500,9 +457,9 @@ def bm25_topk(
     implementations only below the 4-decimal rounding.
 
     Scale: the corpus is tokenized EXACTLY ONCE, and the token-level
-    rows are NEVER shuffled. ``repartition(key)`` before the explode
+    rows are NEVER shuffled. ``repartition(doc_id)`` before the explode
     hash-partitions the documents, which satisfies the clustering
-    requirement of ``groupBy(key, dl, term)`` (a hash partitioning on a
+    requirement of ``groupBy(doc_id, dl, term)`` (a hash partitioning on a
     subset of the grouping keys), so the tf aggregate runs exchange-free
     on whole-document partitions — the one corpus-sized shuffle moves
     raw document text, the same bytes the alternative token-partial
@@ -543,7 +500,7 @@ def bm25_topk(
     against the branch-per-consumer plan (0.89s vs 2.6s in a quiet
     host window; 2.2s vs 2.55s under load), and the partial variants
     lose outright (fan_out-only 4.3s, materialize-only 3.4s, two-pass
-    re-tokenize 2.9s) because only the repartition(key)+materialize
+    re-tokenize 2.9s) because only the repartition(doc_id)+materialize
     pair removes BOTH the re-execution and the token-level exchange.
     Also measured and rejected: checkpointing only the vocabulary
     aggregate and re-tokenizing a query-term-pruned second pass
@@ -555,17 +512,17 @@ def bm25_topk(
     # sf1. defaultParallelism = cluster cores, the compute-bound choice.
     n_part = docs.sparkSession.sparkContext.defaultParallelism
     toks = (
-        docs.select(F.col(key), F.col(text))
-        .repartition(n_part, F.col(key))
-        .select(F.col(key), tokens_col(text).alias("__toks"))
+        docs.select(F.col("doc_id"), F.col("text"))
+        .repartition(n_part, F.col("doc_id"))
+        .select(F.col("doc_id"), tokens_col("text").alias("__toks"))
         .select(
-            F.col(key),
+            F.col("doc_id"),
             F.size("__toks").cast("long").alias("dl"),
             F.explode("__toks").alias("term"),
         )
     )
     tf = materialize(
-        toks.groupBy(key, "dl", "term").agg(F.count("*").alias("tf"))
+        toks.groupBy("doc_id", "dl", "term").agg(F.count("*").alias("tf"))
     )
     n_docs = docs.agg(F.count("*").alias("n_docs"))
     # ONE vocabulary pass over tf serves BOTH tot_dl and the query
@@ -582,7 +539,7 @@ def bm25_topk(
     )
     tot_dl = vocab.agg(F.sum("cnt").alias("tot_dl"))
     n_and_avg = n_docs.crossJoin(tot_dl)
-    stop_arr = F.array(*[F.lit(s) for s in stopwords])
+    stop_arr = F.array(*[F.lit(s) for s in DEFAULT_STOPWORDS])
     qterms = (
         vocab.filter(~F.array_contains(stop_arr, F.col("term")))
         .orderBy(F.desc("cnt"), F.asc("term"))
@@ -598,15 +555,15 @@ def bm25_topk(
         (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
     bm25 = idf * (
-        F.col("tf") * (k1 + 1)
-        / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / avgdl))
+        F.col("tf") * (BM25_K1 + 1)
+        / (F.col("tf") + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / avgdl))
     )
     w = Window.partitionBy("term").orderBy(
-        F.desc(F.round(bm25, 4)), F.asc(key)
+        F.desc(F.round(bm25, 4)), F.asc("doc_id")
     )
     return (
         scored.withColumn("bm25", F.round(bm25, 4))
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
-        .select("term", key, "tf", "bm25")
+        .select("term", "doc_id", "tf", "bm25")
     )

@@ -33,29 +33,20 @@ def asof_join(
     ts: str,
     payload: list[str],
     tiebreak: str | None = None,
-    tolerance: str | None = None,
-    suffix: str = "_asof",
-    direction: str = "backward",
 ) -> DataFrame:
-    """For each left row, attach ``payload`` columns of the nearest
-    right row with the same ``by`` keys: the latest with
-    ``right.ts <= left.ts`` (``direction='backward'``, the default ASOF
-    semantics) or the earliest with ``right.ts >= left.ts``
-    (``direction='forward'``).
+    """For each left row, attach ``payload`` columns of the latest right
+    row with the same ``by`` keys and ``right.ts <= left.ts`` (backward
+    ASOF semantics).
 
     Union-tag formulation: right rows sort before left rows at equal
     ``ts`` (inclusive match, like DuckDB/kdb ASOF semantics); among
     right ties on ``ts``, the greatest ``tiebreak`` wins
-    (deterministic). ``tolerance`` (an INTERVAL literal, e.g.
-    ``'1 hour'``) nulls out matches farther than ``tolerance`` from
-    ``left.ts``.
+    (deterministic).
 
-    Output: all left columns + ``<ts><suffix>`` (matched right ts) +
-    ``<payload><suffix>`` columns. One shuffle on ``by``; scales like a
+    Output: all left columns + ``<ts>_asof`` (matched right ts) +
+    ``<payload>_asof`` columns. One shuffle on ``by``; scales like a
     groupBy on the same key, with AQE handling key skew.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction}")
     lcols = left.columns
     tag = F.lit(1)
     l_tagged = left.select(
@@ -73,44 +64,20 @@ def asof_join(
         (F.col(tiebreak) if tiebreak else F.lit(0)).alias("__tb"),
     )
     u = l_tagged.unionByName(r_tagged)
-    # forward as-of is backward as-of on reversed time: iterate ts
-    # descending so the running last() sees the earliest following row;
-    # right rows still sort before left at equal ts (inclusive match)
-    ts_order = F.col(ts).asc() if direction == "backward" else F.col(ts).desc()
     w = (
         Window.partitionBy(*by)
-        .orderBy(ts_order, F.col("__tag").asc(), F.col("__tb").asc())
+        .orderBy(F.col(ts).asc(), F.col("__tag").asc(), F.col("__tb").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    matched = u.select(
+    return u.select(
         *lcols,
         "__tag",
-        F.last("__rts", ignorenulls=True).over(w).alias(f"{ts}{suffix}"),
+        F.last("__rts", ignorenulls=True).over(w).alias(f"{ts}_asof"),
         *[
-            F.last(f"__p_{c}", ignorenulls=True).over(w).alias(f"{c}{suffix}")
+            F.last(f"__p_{c}", ignorenulls=True).over(w).alias(f"{c}_asof")
             for c in payload
         ],
-    ).filter(F.col("__tag") == 1)
-    out_cols = [f"{ts}{suffix}"] + [f"{c}{suffix}" for c in payload]
-    if tolerance is not None:
-        if direction == "backward":
-            keep: Column = F.col(f"{ts}{suffix}") >= F.col(ts) - F.expr(
-                f"INTERVAL {tolerance}"
-            )
-        else:
-            keep = F.col(f"{ts}{suffix}") <= F.col(ts) + F.expr(
-                f"INTERVAL {tolerance}"
-            )
-        matched = matched.select(
-            *lcols,
-            *[
-                F.when(keep, F.col(c)).otherwise(F.lit(None)).alias(c)
-                for c in out_cols
-            ],
-        )
-    else:
-        matched = matched.select(*lcols, *out_cols)
-    return matched
+    ).filter(F.col("__tag") == 1).drop("__tag")
 
 
 def range_join(

@@ -116,8 +116,8 @@ class PyNode(Node):
 @dataclass
 class ValidateLinkIds(Node):
     """Referential-integrity validator (V1, also the A6 subset check):
-    every ``fk`` value in the link table exists as ``pk`` in the node
-    table (reference `LinkIDValidator`, examples/graph/validate.py:8-43).
+    every ``fk`` value in the link table exists as ``node_id`` in the
+    node table (reference `LinkIDValidator`, examples/graph/validate.py:8-43).
     Eager (runs a count) by design — validation is load-bearing (SURVEY
     §8.8). Scale: left_anti join with limit(1) — stops at the first
     dangling id, no full materialization."""
@@ -125,7 +125,6 @@ class ValidateLinkIds(Node):
     link_id: str
     node_id: str
     fks: Sequence[str] = ("from_id", "to_id")
-    pk: str = "node_id"
 
     def __post_init__(self):
         self.input_ids = [self.link_id, self.node_id]
@@ -133,18 +132,18 @@ class ValidateLinkIds(Node):
 
     def run(self, engine: Engine) -> None:
         links = engine.table(self.link_id)
-        nodes = engine.table(self.node_id).select(self.pk)
+        nodes = engine.table(self.node_id).select("node_id")
         for fk in self.fks:
             dangling = (
-                links.select(F.col(fk).alias(self.pk))
-                .join(nodes, self.pk, "left_anti")
+                links.select(F.col(fk).alias("node_id"))
+                .join(nodes, "node_id", "left_anti")
                 .limit(1)
                 .count()
             )
             if dangling:
                 raise ValidationError(
                     f"link table {self.link_id!r}.{fk} has ids missing from "
-                    f"{self.node_id!r}.{self.pk}"
+                    f"{self.node_id!r}.node_id"
                 )
 
 

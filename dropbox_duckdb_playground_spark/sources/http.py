@@ -2,8 +2,8 @@
 (examples/canon/crawl.py:57-91, trigger.py:28-52) as a Spark source stage.
 
 Design: the *url list* is a DataFrame; fetching runs in
-``mapInPandas`` so a 1000-executor cluster crawls in parallel with
-per-partition rate limiting — the Spark replacement for the reference's
+``mapInPandas`` so a 1000-executor cluster crawls in parallel — the
+Spark replacement for the reference's
 ThreadPool(16) (crawl.py:130-133). Etag-conditional refresh (S9) sends
 ``If-None-Match`` and flags 304s so the caller keeps the cached row
 (keep-first merge, operators.relational.keep_first_merge).
@@ -25,7 +25,12 @@ FetchFn = Callable[[str, str | None], tuple[int, str | None, str | None]]
 """(url, etag) -> (status_code, body_json, new_etag)"""
 
 
-def default_fetcher(timeout: float = 10.0, retries: int = 3) -> FetchFn:
+#: per-request timeout and attempts of ``default_fetcher``
+FETCH_TIMEOUT_S = 10.0
+FETCH_RETRIES = 3
+
+
+def default_fetcher() -> FetchFn:
     """urllib-based fetcher with the reference's retry×3 + 404-skip
     semantics (crawl.py:57-91)."""
     import urllib.error
@@ -33,12 +38,12 @@ def default_fetcher(timeout: float = 10.0, retries: int = 3) -> FetchFn:
 
     def fetch(url: str, etag: str | None) -> tuple[int, str | None, str | None]:
         last_err: Exception | None = None
-        for _ in range(retries):
+        for _ in range(FETCH_RETRIES):
             try:
                 req = urllib.request.Request(url)
                 if etag:
                     req.add_header("If-None-Match", etag)
-                with urllib.request.urlopen(req, timeout=timeout) as resp:
+                with urllib.request.urlopen(req, timeout=FETCH_TIMEOUT_S) as resp:
                     return resp.status, resp.read().decode(), resp.headers.get("ETag")
             except urllib.error.HTTPError as e:
                 if e.code in (304, 404):
@@ -47,17 +52,13 @@ def default_fetcher(timeout: float = 10.0, retries: int = 3) -> FetchFn:
             except Exception as e:  # transient network error — retry
                 last_err = e
             time.sleep(0.5)
-        raise RuntimeError(f"fetch failed after {retries} tries: {url}") from last_err
+        raise RuntimeError(f"fetch failed after {FETCH_RETRIES} tries: {url}") from last_err
 
     return fetch
 
 
 def fetch_json_table(
-    urls: DataFrame,
-    fetcher: FetchFn | None = None,
-    url_col: str = "url",
-    etag_col: str | None = None,
-    rate_limit_per_sec: float | None = None,
+    urls: DataFrame, fetcher: FetchFn | None = None, etag_col: str | None = None
 ) -> DataFrame:
     """urls(url[, etag]) -> (url, status, body, etag).
 
@@ -65,7 +66,7 @@ def fetch_json_table(
     `keep_first_merge`. Partition count controls crawl parallelism:
     ``urls.repartition(n)`` first."""
     fetcher = fetcher or default_fetcher()
-    cols = [url_col] + ([etag_col] if etag_col else [])
+    cols = ["url"] + ([etag_col] if etag_col else [])
     slim = urls.select(*cols)
 
     def run(batches: Iterator["pandas.DataFrame"]) -> Iterator["pandas.DataFrame"]:
@@ -74,9 +75,7 @@ def fetch_json_table(
         for pdf in batches:
             out = {"url": [], "status": [], "body": [], "etag": []}
             etags = pdf[etag_col].values if etag_col else [None] * len(pdf)
-            for url, etag in zip(pdf[url_col].values, etags):
-                if rate_limit_per_sec:
-                    time.sleep(1.0 / rate_limit_per_sec)
+            for url, etag in zip(pdf["url"].values, etags):
                 status, body, new_etag = fetcher(url, etag)
                 out["url"].append(url)
                 out["status"].append(status)
@@ -89,13 +88,11 @@ def fetch_json_table(
     )
 
 
-def parse_json_body(
-    fetched: DataFrame, schema: str, body_col: str = "body"
-) -> DataFrame:
+def parse_json_body(fetched: DataFrame, schema: str) -> DataFrame:
     """Typed parse of fetched bodies (N1 analog): from_json with a
     declared schema — never infer on crawl output."""
     from pyspark.sql import functions as F
 
-    return fetched.filter(F.col(body_col).isNotNull()).withColumn(
-        "parsed", F.from_json(body_col, schema)
+    return fetched.filter(F.col("body").isNotNull()).withColumn(
+        "parsed", F.from_json("body", schema)
     )

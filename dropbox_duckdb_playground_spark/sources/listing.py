@@ -33,7 +33,6 @@ def name_listing_table(
     spark: SparkSession,
     url: str,
     fetcher: Callable[[str, str | None], tuple[int, str | None, str | None]] | None = None,
-    name_col: str = "name",
 ) -> DataFrame:
     """Fetch + parse a name-listing page into a 1-column DataFrame —
     the trigger table for the distributed crawl. ``fetcher`` is
@@ -47,7 +46,7 @@ def name_listing_table(
     if status != 200 or body is None:
         raise RuntimeError(f"name listing fetch failed: {url} -> {status}")
     names = parse_name_listing(body)
-    return spark.createDataFrame([(n,) for n in names], schema=f"{name_col} string")
+    return spark.createDataFrame([(n,) for n in names], schema="name string")
 
 
 def bulk_insert_command(

@@ -8,9 +8,9 @@ Header convention (RedisGraph bulk-insert format):
 - property columns  -> ``{name}:{TYPE}`` with TYPE from the Spark dtype
   (the reference derives it from pandas dtypes, redisgraph.py:11-14)
 
-Scale: ``coalesce(1)`` only when a single file is demanded by the bulk
-loader; otherwise keep one CSV part per partition and feed the loader a
-directory.
+Scale: the bulk loader takes one file per label, so each export is
+``coalesce(1)``-ed to one CSV part; the exported tables are grouped
+entities and links, not raw facts.
 """
 
 from __future__ import annotations
@@ -35,48 +35,38 @@ def _type_tag(spark_dtype: str) -> str:
     return _SPARK_TO_REDIS.get(spark_dtype, "STRING")
 
 
-def redisgraph_node_header(df: DataFrame, label: str, id_col: str = "node_id") -> DataFrame:
+def redisgraph_node_header(df: DataFrame, label: str) -> DataFrame:
     renames = {}
     for name, dtype in df.dtypes:
-        if name == id_col:
+        if name == "node_id":
             renames[name] = f":ID({label})"
         else:
             renames[name] = f"{name}:{_type_tag(dtype)}"
     return df.withColumnsRenamed(renames)
 
 
-def redisgraph_link_header(
-    df: DataFrame, from_col: str = "from_id", to_col: str = "to_id"
-) -> DataFrame:
+def redisgraph_link_header(df: DataFrame) -> DataFrame:
     renames = {}
     for name, dtype in df.dtypes:
-        if name == from_col:
+        if name == "from_id":
             renames[name] = ":START_ID"
-        elif name == to_col:
+        elif name == "to_id":
             renames[name] = ":END_ID"
         else:
             renames[name] = f"{name}:{_type_tag(dtype)}"
     return df.withColumnsRenamed(renames)
 
 
-def write_redisgraph_nodes_csv(
-    df: DataFrame, path: str, label: str, id_col: str = "node_id", single_file: bool = True
-) -> None:
-    out = redisgraph_node_header(df, label, id_col)
-    if single_file:
-        out = out.coalesce(1)
+def _write_csv(df: DataFrame, path: str) -> None:
     # quoteAll mirrors the reference's QUOTE_NONNUMERIC for string safety
-    out.write.mode("overwrite").option("header", True).option("quoteAll", True).csv(path)
+    df.coalesce(1).write.mode("overwrite").option("header", True).option(
+        "quoteAll", True
+    ).csv(path)
 
 
-def write_redisgraph_links_csv(
-    df: DataFrame,
-    path: str,
-    from_col: str = "from_id",
-    to_col: str = "to_id",
-    single_file: bool = True,
-) -> None:
-    out = redisgraph_link_header(df, from_col, to_col)
-    if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").option("header", True).option("quoteAll", True).csv(path)
+def write_redisgraph_nodes_csv(df: DataFrame, path: str, label: str) -> None:
+    _write_csv(redisgraph_node_header(df, label), path)
+
+
+def write_redisgraph_links_csv(df: DataFrame, path: str) -> None:
+    _write_csv(redisgraph_link_header(df), path)

@@ -48,8 +48,8 @@ def _match_paren(s: str, open_idx: int) -> int:
     raise ValueError(f"unbalanced parentheses in SQL at {open_idx}: {s[open_idx:open_idx+80]!r}")
 
 
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split on top-level separators (not inside parens/strings)."""
+def _split_top_level(s: str) -> list[str]:
+    """Split on top-level commas (not inside parens/strings)."""
     parts, depth, buf, in_str = [], 0, [], None
     for ch in s:
         if in_str:
@@ -66,7 +66,7 @@ def _split_top_level(s: str, sep: str = ",") -> list[str]:
         elif ch == ")":
             depth -= 1
             buf.append(ch)
-        elif ch == sep and depth == 0:
+        elif ch == "," and depth == 0:
             parts.append("".join(buf))
             buf = []
         else:

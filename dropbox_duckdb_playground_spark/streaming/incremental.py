@@ -11,8 +11,7 @@ Reference mechanisms mapped:
   earliest batch (examples/canon/crawl.py:117-153) → `merge_batches()`.
 
 Scale: snapshots are plain Parquet writes; the anti-join broadcasts the
-cached key set when small, and at 100 TB the snapshot should be written
-partitioned by the merge key so the diff join co-locates.
+cached key set when small.
 """
 
 from __future__ import annotations
@@ -33,10 +32,9 @@ class IncrementalCache:
     """Snapshot-based incremental recompute over an Engine."""
 
     engine: Engine
-    suffix: str = "_cache"
 
     def cache_id(self, obj_id: str) -> str:
-        return obj_id + self.suffix
+        return obj_id + "_cache"
 
     def exists(self, obj_id: str) -> bool:
         return self.cache_id(obj_id) in self.engine

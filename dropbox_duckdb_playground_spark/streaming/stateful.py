@@ -8,8 +8,7 @@ any training-data-pipeline stream (e.g. first-seen URL dedup at ingest).
 
 Scale: state lives in the executor state store partitioned by key
 (RocksDB-backed on a real cluster); each micro-batch touches only the
-keys present in that batch. Watermark-driven state TTL is exposed via
-``ttl`` so unbounded key spaces don't accumulate state forever.
+keys present in that batch. State holds one boolean per key ever seen.
 """
 
 from __future__ import annotations
@@ -18,18 +17,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def first_seen_dedup(
-    events: DataFrame,
-    key: str,
-    out_schema: str,
-    ttl_ms: int | None = None,
-) -> DataFrame:
+def first_seen_dedup(events: DataFrame, key: str, out_schema: str) -> DataFrame:
     """Emit only the FIRST row ever seen per key; drop every later
     duplicate. Streaming twin of ``keep_first_merge`` (C3).
 
-    ``out_schema`` must name the columns to keep (key first). With
-    ``ttl_ms`` set, a key's seen-marker expires after that idle time
-    (processing-time timeout) — bounded state for unbounded keys."""
+    ``out_schema`` must name the columns to keep (key first)."""
     from pyspark.sql.types import _parse_datatype_string
 
     # proper schema parse — naive comma-splitting breaks on types that
@@ -37,28 +29,14 @@ def first_seen_dedup(
     cols = _parse_datatype_string(out_schema).fieldNames()
 
     def run(key_tuple, pdfs, state: GroupState):
-        if ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
         first = None
         for pdf in pdfs:
             if first is None and len(pdf):
                 first = pdf.iloc[[0]][cols]
-        if not state.exists:
-            if first is not None:
-                state.update((True,))
-                if ttl_ms is not None:
-                    state.setTimeoutDuration(ttl_ms)
-                yield first
-        elif ttl_ms is not None:
-            # key already seen: refresh the TTL, emit nothing
-            state.setTimeoutDuration(ttl_ms)
+        if not state.exists and first is not None:
+            state.update((True,))
+            yield first
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
     return events.groupBy(key).applyInPandasWithState(
-        run, out_schema, "seen boolean", "append", timeout
+        run, out_schema, "seen boolean", "append", GroupStateTimeout.NoTimeout
     )

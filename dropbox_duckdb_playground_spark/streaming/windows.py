@@ -13,23 +13,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str | None = None,
-    ts_col: str = "ts",
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Tumbling/sliding window counts + value sums per key.
+#: how late an event may arrive on a stream before its window is final
+WATERMARK = "2 hours"
 
-    On a streaming DataFrame the watermark bounds state (late rows beyond
-    it are dropped); on a static frame withWatermark is a no-op, so batch
-    and stream share this exact plan."""
-    keys = keys or ["event_type"]
+
+def windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
+    """Tumbling window counts + value sums per (window of ``ts``,
+    event_type).
+
+    On a streaming DataFrame the ``WATERMARK`` bounds state (late rows
+    beyond it are dropped); on a static frame withWatermark is a no-op,
+    so batch and stream share this exact plan."""
     if events.isStreaming:
-        events = events.withWatermark(ts_col, watermark)
-    win = F.window(ts_col, window, slide) if slide else F.window(ts_col, window)
-    return events.groupBy(win.alias("win"), *keys).agg(
+        events = events.withWatermark("ts", WATERMARK)
+    return events.groupBy(F.window("ts", window).alias("win"), "event_type").agg(
         F.count("*").alias("n"), F.sum("value").alias("sum_value")
     )

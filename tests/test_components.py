@@ -95,3 +95,44 @@ def test_triangle_count_no_triangles(spark):
 
     df = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "src long, dst long")
     assert triangle_count(df).collect()[0]["n_triangles"] == 0
+
+
+def _random_edges(seed: int, n: int, m: int) -> list[tuple[int, int]]:
+    import random
+
+    rng = random.Random(seed)
+    return [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+
+
+def test_components_forced_regimes_match_default(spark, monkeypatch):
+    """The contraction levels and the star rounds only run past
+    RESIDUAL_THRESHOLD (2M raw edges); forced on a small graph spread
+    over several batches, each labels every node as the default
+    single-task solve does."""
+    from dropbox_duckdb_playground_spark.operators import components
+
+    df = spark.createDataFrame(_random_edges(11, 200, 180), ["src", "dst"]).repartition(4)
+
+    def labels():
+        return sorted((r.node_id, r.cluster_id) for r in connected_components(df).collect())
+
+    default = labels()
+    assert len({c for _, c in default}) > 1
+    monkeypatch.setattr(components, "RESIDUAL_THRESHOLD", 10)
+    assert labels() == default  # contraction levels, then single-task solve
+    monkeypatch.setattr(components, "MAX_LEVELS", 0)
+    assert labels() == default  # star rounds only
+
+
+def test_triangle_count_shuffle_regime_matches_broadcast(spark, monkeypatch):
+    """The wedge-join regime only runs past BROADCAST_EDGE_LIMIT (4M
+    edges); forced on a small graph it counts what the broadcast regime
+    counts."""
+    from dropbox_duckdb_playground_spark.operators import components
+    from dropbox_duckdb_playground_spark.operators.components import triangle_count
+
+    df = spark.createDataFrame(_random_edges(5, 40, 200), "src long, dst long")
+    default = triangle_count(df).collect()[0]["n_triangles"]
+    assert default > 0
+    monkeypatch.setattr(components, "BROADCAST_EDGE_LIMIT", 0)
+    assert triangle_count(df).collect()[0]["n_triangles"] == default

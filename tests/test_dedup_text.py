@@ -412,21 +412,3 @@ def test_jaccard_doc_freq_col_shortcut_matches_internal_window(spark):
         ).collect()
     }
     assert internal == shortcut and internal
-
-
-def test_quality_score_empty_stopwords_counts_zero(spark):
-    """stopwords=() must short-circuit to 0, not build an empty
-    alternation '(?:)' that matches empty strings at every \\s-bounded
-    position (ADVICE r8: counted 1 on empty text, double on runs of
-    whitespace)."""
-    df = spark.createDataFrame(
-        [(1, ""), (2, "a  b"), (3, "the cat")],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r["stopword_ratio"]
-        for r in TX.quality_score(df, stopwords=()).collect()
-    }
-    assert out[1] == 0.0
-    assert out[2] == 0.0
-    assert out[3] == 0.0

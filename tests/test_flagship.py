@@ -121,10 +121,7 @@ def test_flagship_pipeline(spark, engine, tmp_path):
     engine.register("requires", requires_links)
 
     # -- E1-E8: resolve near-duplicate author spellings ------------------
-    mapper = resolve_entities(
-        author_nodes, canon=None, id_col="node_id", name_col="name",
-        messy_threshold=0.5,
-    )
+    mapper = resolve_entities(author_nodes, canon=None)
     # John Smith / john smith must map to ONE cluster id
     smiths = author_nodes.filter(F.lower("name").contains("smith")).select(
         "node_id"

@@ -76,7 +76,7 @@ def test_redisgraph_csv_roundtrip(spark, tmp_path):
     out = str(tmp_path / "nodes_csv")
     write_redisgraph_nodes_csv(nodes, out, "pkg")
     files = glob.glob(out + "/part-*.csv")
-    assert len(files) == 1  # single_file=True
+    assert len(files) == 1  # one file per label for the bulk loader
     text = open(files[0]).read()
     assert '":ID(pkg)","name:STRING"' in text.replace("\r", "")
     assert '"a,b"' in text  # quoting preserves embedded comma

@@ -1,12 +1,15 @@
 """README's "Environment knobs" table must match the code, knob values
-are validated, and every package definition has a caller (no Spark).
+are validated, every package definition has a caller and every option a
+setter (no Spark).
 
 Every ``SPARK_*`` environment variable the package reads has a row, and
 every variable a row names is read somewhere in the package,
 ``bench.py`` or ``tools/`` — so a retired knob cannot linger in the docs
 and a new one cannot ship undocumented. Likewise every top-level
-definition in the package is reached from a checked path or has a row
-in README's "Kept without a pipeline caller" table."""
+definition and method in the package is reached from a checked path,
+and every parameter or dataclass field with a default is set by a call
+on one, or has a row in README's "Kept without a pipeline caller"
+table."""
 
 from __future__ import annotations
 
@@ -104,6 +107,13 @@ def test_driver_mem_defaults_to_half_the_host_and_rejects_bad_values(monkeypatch
             driver_mem()
 
 
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
 def _modname(path: Path) -> str:
     parts = path.relative_to(REPO).with_suffix("").parts
     return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
@@ -129,6 +139,11 @@ class _Module:
                         self.defs[n.id] = node
             elif not isinstance(node, (ast.Import, ast.ImportFrom)):
                 self.loose.append(node)
+        self.methods: dict[str, list[ast.AST]] = {
+            name: [s for s in node.body if isinstance(s, _FUNCS)]
+            for name, node in self.defs.items()
+            if isinstance(node, ast.ClassDef)
+        }
         self.aliases: dict[str, tuple[str, str | None]] = {}
         package = self.name.split(".")[: -1 if path.name != "__init__.py" else None]
         for node in ast.walk(self.tree):
@@ -145,13 +160,16 @@ class _Module:
                     self.aliases[a.asname or a.name] = (base, a.name)
 
 
-def _reach() -> tuple[set[str], set[str]]:
-    """(every package definition, the ones a checked path reaches), as
-    ``module.name`` relative to the package. Roots: the registered
+def _reach(kept: list[str]) -> tuple[set[str], set[str], list[ast.Call]]:
+    """(every package definition and method, the ones a checked path
+    reaches, the calls on those paths), names relative to the package
+    (``module.name``, ``module.Class.method``). Roots: the registered
     catalog queries, ``bench.py``, ``__spark_entry__.py``, ``tools/``,
-    ``examples/`` and ``perfbench/`` outside its tests. A reached
-    definition reaches every package definition its code names, through
-    imports and re-exports, to a fixed point."""
+    ``examples/``, ``perfbench/`` outside its tests and the definitions
+    README keeps. A reached definition reaches every package definition
+    its code names, through imports and re-exports; a reached class
+    reaches its dunder methods and every method whose name checked code
+    reads as an attribute; all to a fixed point."""
     mods = {m.name: m for m in map(_Module, sorted(PACKAGE.rglob("*.py")))}
 
     def lookup(mod: str, name: str, hops: int = 0):
@@ -188,6 +206,19 @@ def _reach() -> tuple[set[str], set[str]]:
             if hit and hit[1] is not None:
                 yield hit
 
+    read: set[str] = set()
+    calls: list[ast.Call] = []
+    todo: list[tuple[str, str]] = []
+
+    def visit(ctx: _Module, nodes) -> None:
+        for node in nodes:
+            for n in ast.walk(node):
+                if isinstance(n, ast.Attribute):
+                    read.add(n.attr)
+                elif isinstance(n, ast.Call):
+                    calls.append(n)
+            todo.extend(refs(ctx, node))
+
     roots = [
         REPO / "bench.py",
         REPO / "__spark_entry__.py",
@@ -195,8 +226,10 @@ def _reach() -> tuple[set[str], set[str]]:
         *(REPO / "examples").glob("*.py"),
         *(p for p in (REPO / "perfbench").rglob("*.py") if "tests" not in p.parts),
     ]
-    todo = [hit for m in map(_Module, roots) for hit in refs(m, m.tree)]
-    todo += [hit for m in mods.values() for node in m.loose for hit in refs(m, node)]
+    for m in map(_Module, roots):
+        visit(m, [m.tree])
+    for m in mods.values():
+        visit(m, m.loose)
     catalog = mods[f"{PACKAGE.name}.catalog"]
     todo += [
         (catalog.name, name)
@@ -204,26 +237,149 @@ def _reach() -> tuple[set[str], set[str]]:
         for d in getattr(node, "decorator_list", [])
         if isinstance(d, ast.Call) and getattr(d.func, "id", "") == "register"
     ]
-    reached = set()
-    while todo:
-        key = todo.pop()
-        if key in reached or key[1] not in getattr(mods.get(key[0]), "defs", {}):
-            continue
-        reached.add(key)
-        todo += refs(mods[key[0]], mods[key[0]].defs[key[1]])
+    todo += [
+        (f"{PACKAGE.name}.{k}".rsplit(".", 1)[0], k.rsplit(".", 1)[1]) for k in kept
+    ]
+    reached: set[tuple[str, str]] = set()
+    methods: set[tuple[str, str]] = set()
+    while True:
+        while todo:
+            key = todo.pop()
+            if key in reached or key[1] not in getattr(mods.get(key[0]), "defs", {}):
+                continue
+            reached.add(key)
+            ctx, node = mods[key[0]], mods[key[0]].defs[key[1]]
+            if isinstance(node, ast.ClassDef):
+                body = [s for s in node.body if not isinstance(s, _FUNCS)]
+                visit(ctx, [*node.decorator_list, *node.bases, *body])
+            else:
+                visit(ctx, [node])
+        new = [
+            ((mod, f"{cls}.{fn.name}"), fn)
+            for mod, cls in reached
+            for fn in mods[mod].methods.get(cls, ())
+            if (mod, f"{cls}.{fn.name}") not in methods
+            and (_dunder(fn.name) or fn.name in read)
+        ]
+        if not new:
+            break
+        for key, fn in new:
+            methods.add(key)
+            visit(mods[key[0]], [fn])
     prefix = len(PACKAGE.name) + 1
     every = {(m.name, d) for m in mods.values() for d in m.defs}
+    every |= {
+        (m.name, f"{cls}.{fn.name}")
+        for m in mods.values()
+        for cls, fns in m.methods.items()
+        for fn in fns
+        if not _dunder(fn.name)
+    }
     return (
         {f"{mod[prefix:]}.{d}" for mod, d in every},
-        {f"{mod[prefix:]}.{d}" for mod, d in reached},
+        {f"{mod[prefix:]}.{d}" for mod, d in reached | methods},
+        calls,
     )
 
 
-def test_every_package_definition_has_a_checked_caller():
+def _options():
+    """Every parameter (of a function or method) and dataclass field in
+    the package that has a default: ``(name, callee names, position,
+    keyword)``, where a call by one of the callee names sets it by that
+    keyword or by passing more than ``position`` positional arguments
+    (``None``: keyword only)."""
+
+    def walk(node, qual: str, cls: ast.ClassDef | None = None):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, _FUNCS):
+                q = f"{qual}.{child.name}"
+                bound = cls is not None and not any(
+                    getattr(d, "id", "") == "staticmethod" for d in child.decorator_list
+                )
+                callee = (child.name,)
+                if bound and child.name == "__init__":
+                    callee = (cls.name, "__init__")
+                a = child.args
+                pos = a.posonlyargs + a.args
+                first = len(pos) - len(a.defaults)
+                for i, arg in enumerate(pos[first:], first):
+                    yield f"{q}.{arg.arg}", callee, i - bound, arg.arg
+                for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+                    if default is not None:
+                        yield f"{q}.{arg.arg}", callee, None, arg.arg
+                yield from walk(child, q)
+            elif isinstance(child, ast.ClassDef):
+                q = f"{qual}.{child.name}"
+                if any("dataclass" in ast.unparse(d) for d in child.decorator_list):
+                    fields = [
+                        s for s in child.body
+                        if isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)
+                        and "ClassVar" not in ast.unparse(s.annotation)
+                        and "init=False" not in ast.unparse(s.value or s.annotation)
+                    ]
+                    for i, s in enumerate(fields):
+                        if s.value is not None:
+                            yield f"{q}.{s.target.id}", (child.name,), i, s.target.id
+                yield from walk(child, q, child)
+            else:
+                yield from walk(child, qual, cls)
+
+    prefix = len(PACKAGE.name) + 1
+    for path in sorted(PACKAGE.rglob("*.py")):
+        yield from walk(ast.parse(path.read_text(encoding="utf-8")), _modname(path)[prefix:])
+
+
+def _unset(calls: list[ast.Call], kept: list[str]) -> tuple[int, list[str]]:
+    """(how many options the package has, the ones no checked call sets
+    and README does not keep)."""
+    by_name: dict[str, list[ast.Call]] = {}
+    for c in calls:
+        name = getattr(c.func, "id", None) or getattr(c.func, "attr", None)
+        by_name.setdefault(name, []).append(c)
+
+    def sets(c: ast.Call, position, keyword) -> bool:
+        if any(k.arg in (keyword, None) for k in c.keywords):
+            return True
+        return position is not None and (
+            len(c.args) > position or any(isinstance(a, ast.Starred) for a in c.args)
+        )
+
+    options = list(_options())
+    unset = [
+        name
+        for name, callee, position, keyword in options
+        if not any(sets(c, position, keyword) for n in callee for c in by_name.get(n, ()))
+        and not any(name == k or name.startswith(k + ".") for k in kept)
+    ]
+    return len(options), unset
+
+
+def _kept() -> list[str]:
     kept = _readme_table("Kept without a pipeline caller", r"[\w.]+")
     assert kept, "README has no 'Kept without a pipeline caller' rows"
-    every, reached = _reach()
-    missing = sorted(every - reached - set(kept))
+    return kept
+
+
+def test_every_package_definition_has_a_checked_caller():
+    kept = _kept()
+    every, reached, _ = _reach(kept)
+    missing = sorted(
+        n for n in every - reached if not any(n.startswith(k + ".") for k in kept)
+    )
     assert not missing, f"no caller on a checked path and no README reason: {missing}"
-    undefined = [n for n in kept if n not in every]
+    known = every | {name for name, *_ in _options()}
+    undefined = [n for n in kept if n not in known]
     assert not undefined, f"README keeps names the package does not define: {undefined}"
+
+
+def test_every_package_parameter_has_a_checked_setter():
+    """With one value in use an option is a constant: every parameter or
+    dataclass field with a default is set by some call on a checked path,
+    or README says why it stays."""
+    kept = _kept()
+    total, unset = _unset(_reach(kept)[2], kept)
+    assert total, "scanner found no optional parameters in the package"
+    assert not unset, (
+        f"{len(unset)} of {total} optional parameters have no checked setter "
+        f"and no README reason: {unset}"
+    )

@@ -127,21 +127,3 @@ def test_incremental_cache_cycle(spark, engine):
         keys=["k"],
     )
     assert dict((r.k, r.v) for r in merged.collect()) == {1: "A", 2: "b"}
-
-
-def test_save_and_register_csv_json(spark, engine, tmp_path):
-    engine.register(
-        "fmt_src", spark.createDataFrame([(1, "x"), (2, "y")], ["k", "v"])
-    )
-    csv_path = engine.save("fmt_src", fmt="csv")
-    json_path = engine.save("fmt_src", fmt="json")
-    assert csv_path.endswith(".csv") and json_path.endswith(".json")
-    engine.register("fmt_csv", csv_path)
-    engine.register("fmt_json", json_path)
-    for oid in ("fmt_csv", "fmt_json"):
-        got = sorted((int(r.k), r.v) for r in engine.table(oid).collect())
-        assert got == [(1, "x"), (2, "y")]
-    with pytest.raises(ValueError):
-        engine.save("fmt_src", fmt="csv", bucket_by=["k"])
-    with pytest.raises(ValueError):
-        engine.save("fmt_src", fmt="orc")

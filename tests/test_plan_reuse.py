@@ -74,7 +74,7 @@ def test_cosine_neardup_plan_reads_checkpoint_not_parquet(spark, tmp_path):
     ).write.mode("overwrite").parquet(p)
     e = spark.read.parquet(p)
     plan = _final_plan(
-        cosine_neardup_pairs(e, threshold=0.1, id_col="vec_id", dim=8, planes=4)
+        cosine_neardup_pairs(e, threshold=0.1, dim=8, planes=4)
     )
     assert plan.count("Scan parquet") == 0, plan
 

@@ -107,38 +107,6 @@ def test_catalog_queries_read_pruned(spark, sf_dir, qname):
     assert all("comment" not in ln for ln in reads)
 
 
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    """Two tables bucketed on the join key join WITHOUT an Exchange on
-    either side — the co-located layout Engine.save(bucket_by=) writes."""
-    from dropbox_duckdb_playground_spark.engine import Engine
-
-    eng = Engine(spark=spark, root=str(tmp_path))
-    eng.register(
-        "orders_b",
-        spark.range(0, 1000).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("amount")
-        ),
-    )
-    eng.register(
-        "cust_b",
-        spark.range(0, 100).select(
-            F.col("id").alias("k"), F.concat(F.lit("c"), F.col("id")).alias("name")
-        ),
-    )
-    eng.save("orders_b", bucket_by=["k"], n_buckets=4)
-    eng.save("cust_b", bucket_by=["k"], n_buckets=4)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        q = eng.table("orders_b").join(eng.table("cust_b"), "k")
-        p = plan(q)
-        assert "SortMergeJoin" in p
-        assert "Exchange" not in p  # bucketing replaced both shuffles
-        assert q.count() == 100
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_salted_join_matches_plain_join(spark):
     from dropbox_duckdb_playground_spark.operators.relational import salted_join
 

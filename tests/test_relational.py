@@ -48,11 +48,27 @@ def test_keep_first_merge(spark):
     assert out == {(1, "U"), (2, "N"), (3, "C")}
 
 
-def test_multi_left_join_broadcast(spark):
+def test_keep_first_merge_ties_ignore_row_order(spark):
+    """Inside one batch the survivor is the smallest row, whatever order
+    the batch's rows arrive in."""
+    rows = [(1, "a"), (1, "b"), (2, "x"), (2, "y")]
+    outs = [
+        sorted(
+            (r.k, r.v)
+            for r in keep_first_merge(
+                [spark.createDataFrame(order, ["k", "v"]).coalesce(1)], ["k"]
+            ).collect()
+        )
+        for order in (rows, rows[::-1])
+    ]
+    assert outs[0] == outs[1] == [(1, "a"), (2, "x")]
+
+
+def test_multi_left_join(spark):
     base = spark.createDataFrame([(1,), (2,)], ["id"])
     d1 = spark.createDataFrame([(1, "x")], ["id", "a"])
     d2 = spark.createDataFrame([(2, "y")], ["id", "b"])
-    out = multi_left_join(base, [d1, d2], on=["id"], broadcast_others=True)
+    out = multi_left_join(base, [d1, d2], on=["id"])
     rows = {(r.id, r.a, r.b) for r in out.collect()}
     assert rows == {(1, "x", None), (2, None, "y")}
 

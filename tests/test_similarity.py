@@ -92,8 +92,8 @@ def test_ivf_ann_recall_vs_brute_force(spark):
         rows.append((i, vec))
     df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
     q = df.filter(F.col("vec_id") < 4)
-    exact = cosine_topk(df, q, k=3, id_col="vec_id")
-    approx = ivf_ann_topk(df, q, k=3, nlist=2, nprobe=1, id_col="vec_id", seed=7)
+    exact = cosine_topk(df, q, k=3)
+    approx = ivf_ann_topk(df, q, k=3, nlist=2, nprobe=1, seed=7)
     e = {(r["query_id"], r["cand_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["cand_id"]) for r in approx.collect()}
     # probing the single nearest of 2 clean clusters must recover most
@@ -154,8 +154,8 @@ def test_pq_ann_recall_vs_brute_force(spark):
         rows.append((i, vec))
     df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
     q = df.filter(F.col("vec_id") < 4)
-    exact = cosine_topk(df, q, k=3, id_col="vec_id")
-    approx = pq_ann_topk(df, q, k=3, m=4, ksub=8, dim=8, id_col="vec_id", seed=7)
+    exact = cosine_topk(df, q, k=3)
+    approx = pq_ann_topk(df, q, k=3, m=4, ksub=8, dim=8, seed=7)
     e = {(r["query_id"], r["cand_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["cand_id"]) for r in approx.collect()}
     assert len(a & e) / len(e) >= 0.6  # ADC ranks by squared distance, exact by cosine

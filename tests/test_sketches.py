@@ -161,11 +161,13 @@ class TestPageRank:
         # integer floor-division leaks at most a few units per node/step
         assert abs(total - 1_000_000_000_000) < 1_000_000
 
-    def test_broadcast_and_shuffle_paths_bit_identical(self, spark):
+    def test_broadcast_and_shuffle_paths_bit_identical(self, spark, monkeypatch):
         """The n_nodes gate picks broadcast rounds for small graphs and
         shuffle sort-merge rounds for large ones; both must compute the
         SAME integer ranks — the fallback path never runs at test node
-        counts unless forced, so force it via broadcast_node_limit=0."""
+        counts unless forced, so force it via BROADCAST_NODE_LIMIT = 0."""
+        from dropbox_duckdb_playground_spark.operators import components
+
         import random
 
         rng = random.Random(77)
@@ -182,11 +184,10 @@ class TestPageRank:
             r.node: r.rank
             for r in pagerank(e, n, iterations=3).collect()
         }
+        monkeypatch.setattr(components, "BROADCAST_NODE_LIMIT", 0)
         forced_shuffle = {
             r.node: r.rank
-            for r in pagerank(
-                e, n, iterations=3, broadcast_node_limit=0
-            ).collect()
+            for r in pagerank(e, n, iterations=3).collect()
         }
         assert small == forced_shuffle
 

@@ -2,8 +2,8 @@
 
 The oracle-checked catalog queries (q44-q46) prove parity on the events
 table; these cover the semantic edges directly: inclusive equal-ts
-matching, tie-breaking, tolerance nulling, band-boundary intervals, and
-single-exchange plan shape.
+matching, tie-breaking, band-boundary intervals, and single-exchange
+plan shape.
 """
 
 from __future__ import annotations
@@ -60,18 +60,6 @@ def test_asof_tie_on_ts_takes_greatest_tiebreak(spark):
     )
     out = asof_join(left, right, by=["k"], ts="ts", payload=["p"], tiebreak="rid")
     assert out.head().p_asof == 2.0  # rid=9 wins
-
-
-def test_asof_tolerance_nulls_stale_matches(spark):
-    left, right = _frames(spark)
-    out = asof_join(
-        left, right, by=["k"], ts="ts", payload=["p"], tiebreak="rid",
-        tolerance="1 MINUTE",
-    )
-    got = {r.lid: r.p_asof for r in out.collect()}
-    assert got[1] == 1.0     # 0 min old
-    assert got[2] is None    # 5 min old > 1 min tolerance
-    assert got[3] == 3.0     # 1 min old, boundary kept (>=)
 
 
 def test_asof_plan_is_single_shuffle_no_nested_loop(spark):
@@ -145,30 +133,6 @@ def test_time_rollup_matches_separate_aggs(spark):
     assert hourly == want_h and daily == want_d
 
 
-def test_asof_forward_earliest_following(spark):
-    left, right = _frames(spark)
-    out = asof_join(
-        left, right, by=["k"], ts="ts", payload=["p"], tiebreak="rid",
-        direction="forward",
-    )
-    got = {r.lid: (r.p_asof, r.ts_asof) for r in out.collect()}
-    assert got[1] == (1.0, _ts(10))    # equal ts still matches
-    assert got[2] == (9.0, _ts(31))    # earliest right AFTER lid=2
-    assert got[3] is not None
-    assert got[4] == (None, None)
-
-
-def test_asof_forward_tolerance(spark):
-    left, right = _frames(spark)
-    out = asof_join(
-        left, right, by=["k"], ts="ts", payload=["p"], tiebreak="rid",
-        direction="forward", tolerance="30 SECONDS",
-    )
-    got = {r.lid: r.p_asof for r in out.collect()}
-    assert got[1] == 1.0   # equal ts within any tolerance
-    assert got[2] is None  # next right is 1 min later > 30s
-
-
 def test_scd2_history(spark):
     from pyspark.sql import functions as F
 
@@ -221,7 +185,7 @@ def test_snapshot_diff(spark):
 
 def test_asof_join_random_matches_pandas_merge_asof(spark):
     """Differential on seeded random data: asof_join == pandas
-    merge_asof for backward and forward directions with tolerance."""
+    merge_asof (backward, no tolerance)."""
     import random
 
     import pandas as pd
@@ -246,26 +210,19 @@ def test_asof_join_random_matches_pandas_merge_asof(spark):
     ldf = spark.createDataFrame(lpdf)
     rdf = spark.createDataFrame(rpdf)
 
-    for direction, tol in (("backward", None), ("forward", None),
-                           ("backward", "30 MINUTES")):
-        got = asof_join(
-            ldf, rdf, by=["k"], ts="ts", payload=["val"],
-            tiebreak="rid", direction=direction, tolerance=tol,
-        ).toPandas().set_index("lid").sort_index()
+    got = asof_join(
+        ldf, rdf, by=["k"], ts="ts", payload=["val"], tiebreak="rid"
+    ).toPandas().set_index("lid").sort_index()
 
-        # pandas reference: sort right by (ts, rid) so equal-ts ties
-        # resolve to the greatest rid, like the operator's tiebreak
-        exp = pd.merge_asof(
-            lpdf.sort_values(["ts", "lid"]),
-            rpdf.sort_values(["ts", "rid"]),
-            on="ts", by="k", direction=direction,
-            tolerance=pd.Timedelta("30 minutes") if tol else None,
-            suffixes=("", "_r"),
-        ).set_index("lid").sort_index()
+    # pandas reference: sort right by (ts, rid) so equal-ts ties
+    # resolve to the greatest rid, like the operator's tiebreak
+    exp = pd.merge_asof(
+        lpdf.sort_values(["ts", "lid"]),
+        rpdf.sort_values(["ts", "rid"]),
+        on="ts", by="k", direction="backward", suffixes=("", "_r"),
+    ).set_index("lid").sort_index()
 
-        assert list(got["val_asof"].fillna(-1)) == list(
-            exp["val"].fillna(-1)
-        ), f"direction={direction} tol={tol}"
+    assert list(got["val_asof"].fillna(-1)) == list(exp["val"].fillna(-1))
 
 
 def test_range_join_random_matches_nested_loop(spark):

@@ -222,6 +222,26 @@ def test_oracle_spill_dir_is_outside_the_checkout(monkeypatch, tmp_path):
     assert not any(os.path.exists(d) for d in dirs)
 
 
+def test_oracle_memory_limit_leaves_room_for_the_driver_heap(monkeypatch, tmp_path):
+    """DuckDB defaults to 80% of RAM although the process also holds the
+    Spark driver heap: each oracle connection is capped at half of what
+    SPARK_DRIVER_MEM leaves, and at least 1 GiB."""
+    from check import oracle_connection
+
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", str(tmp_path))
+    for mem, heap in (("2g", 2 * 2**30), ("3072", 3 * 2**30), ("64t", 64 * 2**40)):
+        monkeypatch.setenv("SPARK_DRIVER_MEM", mem)
+        con = oracle_connection(str(tmp_path))
+        value, unit = con.execute(
+            "SELECT value FROM duckdb_settings() WHERE name = 'memory_limit'"
+        ).fetchone()[0].split()
+        got = float(value) * 1024 ** ["KiB", "MiB", "GiB", "TiB"].index(unit) * 1024
+        want = max(2**30, (ram - heap) // 2)
+        # DuckDB prints the limit cut to one decimal of the largest unit
+        assert want - 0.1 * 2**30 <= got <= want, (mem, got, want)
+
+
 def test_ab_verdict_rule():
     """A form wins only with >= 9/10 round wins AND a median gap beyond
     the first form's q3 - q1; ties count for neither side."""

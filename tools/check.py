@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -73,8 +74,26 @@ def frame_digest(pdf) -> tuple[int, list[str], str]:
     return len(pdf), cols, h
 
 
+def oracle_memory_limit() -> int:
+    """Bytes a DuckDB oracle connection may hold: half of the physical
+    RAM that the Spark driver heap (``session.driver_mem()``) leaves, and
+    at least 1 GiB. DuckDB's own default, 80% of RAM, ignores the driver
+    heap in the same process. A heap size without a unit is MiB, as
+    Spark reads ``spark.driver.memory`` (``<n>b`` is bytes)."""
+    from dropbox_duckdb_playground_spark.session import driver_mem
+
+    mem = driver_mem().lower()
+    num, unit = re.fullmatch(r"(\d+)([kmgt]?)b?", mem).groups()
+    if not unit and not mem.endswith("b"):
+        unit = "m"
+    heap = int(num) * 1024 ** "_kmgt".index(unit or "_")
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return max(2**30, (ram - heap) // 2)
+
+
 def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """One DuckDB connection with a view per catalog table in ``sf_dir``.
+    """One DuckDB connection with a view per catalog table in ``sf_dir``,
+    capped at ``oracle_memory_limit()``.
 
     DuckDB spills to ``temp_directory``, which defaults to ``.tmp`` in
     the working directory; each connection gets its own directory under
@@ -82,6 +101,7 @@ def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     from dropbox_duckdb_playground_spark.session import scratch_root
 
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{oracle_memory_limit() // 2**20}MiB'")
     root = scratch_root()
     os.makedirs(root, exist_ok=True)
     spill = tempfile.mkdtemp(prefix="duckdb_spill_", dir=root)

@@ -24,7 +24,7 @@ PAIR count ~100x — a property of the data, not the plan: exact
 all-pairs similarity on a saturated key space is quadratic on any
 engine. Real corpora keep vocab growing with size (posting lists stay
 short); the 100 TB guard for corpora that do saturate is the hot-key
-frequency cap (`max_shingle_freq` / `max_block_size`), measured here
+frequency cap (`max_shingle_freq` / `MAX_BLOCK_SIZE`), measured here
 via the capped variants. Since r12 the synthesized sf1 corpus adds a
 Heaps-law hapax tail (gen_sf1 TAIL_MIX — 45% of docs carry 5-30%
 corpus-unique tokens), which de-saturates the boilerplate gate
@@ -72,7 +72,7 @@ ROW_NOTES = {
         " property of the corpus, not the plan; Spark runs the"
         " explosion 2.8x FASTER than the single-node oracle at sf1"
         " (62.2s vs 174.1s) and the capped production path for"
-        " saturated keys is er/blocking.max_block_size, exercised by"
+        " saturated keys is er/blocking.MAX_BLOCK_SIZE, exercised by"
         " q34)"
     ),
     "q26_jaccard_pairs": (
