@@ -19,11 +19,13 @@ Per query:
 3. Each engine's median and its reps. A median of 2 reps is their mean,
    so one host hiccup would poison it; a median of 3 absorbs one.
 
-A long-lived local JVM degrades through hundreds of executions (GC,
-broadcast and shuffle-tracker state that ``quiesce`` cannot release):
-late heavy rows measured up to ~2x their fresh-session time. So the
-session restarts before the next query once the Spark seconds timed
-since it started pass RESTART_BUDGET_S.
+A long-lived local JVM degrades through hundreds of executions (heap,
+broadcast and shuffle-tracker state that ``quiesce`` cannot release;
+shuffle files do not pile up, as each execution deletes its own): late
+heavy rows measured up to ~2x their fresh-session time, before
+executions deleted their shuffle files. So the session restarts before
+the next query once the Spark seconds timed since it started pass
+RESTART_BUDGET_S.
 
 JSON: {"metric", "value" (sum of Spark medians), "unit", "sf", "master",
 "reps", "restarts", "oracle_total" (sum of oracle medians),

@@ -56,6 +56,11 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.ui.enabled": "false",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
+    # Each SQL execution deletes its own shuffle files when it ends, so
+    # `quiesce` need not force a JVM GC for ContextCleaner to find them.
+    # Running the same DataFrame object a second time then finds its map
+    # output gone and runs the map stage again (correct, slower).
+    "spark.sql.classic.shuffleDependency.fileCleanup.enabled": "true",
 }
 
 
@@ -171,7 +176,7 @@ def spark_cpus() -> int:
     return cpus
 
 
-_MEM = re.compile(r"\d+[kmgt]?b?", re.IGNORECASE)
+_MEM = re.compile(r"(\d+)([kmgt]?)(b?)", re.IGNORECASE)
 
 
 def driver_mem() -> str:
@@ -188,6 +193,15 @@ def driver_mem() -> str:
             f"SPARK_DRIVER_MEM must look like 512m, 4g or 4gb, got {raw!r}"
         )
     return raw
+
+
+def mem_bytes(mem: str) -> int:
+    """Bytes in a memory size that :func:`driver_mem` accepts. A size
+    without a unit is MiB, as Spark reads ``spark.driver.memory``
+    (``<n>b`` is bytes)."""
+    num, unit, b = _MEM.fullmatch(mem).groups()
+    unit = unit.lower() or ("_" if b else "m")
+    return int(num) * 1024 ** "_kmgt".index(unit)
 
 
 def scratch_root() -> str:
@@ -229,7 +243,16 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     # local mode: driver is the only JVM — give it the memory.
     if master.startswith("local"):
-        conf.setdefault("spark.driver.memory", driver_mem())
+        heap = driver_mem()
+        conf.setdefault("spark.driver.memory", heap)
+        # With no full GC between queries G1 grows eden towards 60% of
+        # the heap, and the process's resident memory with it. Spark puts
+        # defaultJavaOptions before extraJavaOptions, so a deploy's own
+        # options still win.
+        conf.setdefault(
+            "spark.driver.defaultJavaOptions",
+            f"-XX:MaxNewSize={mem_bytes(heap) // 8 // 2**20}m",
+        )
         # the catalog's database dir, which Spark otherwise creates as
         # ./spark-warehouse on first catalog use
         conf.setdefault(
@@ -260,31 +283,45 @@ def clear_persisted(spark: SparkSession) -> int:
     batch runners) calls this between independent queries. Returns the
     number of RDDs released."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    if jmap.isEmpty():
+        return 0
     rdds = list(jmap.values())
     for jrdd in rdds:
         jrdd.unpersist(False)
     return len(rdds)
 
 
+# whether quiesce has frozen the heap; a flag, because
+# gc.get_freeze_count() walks every frozen object (~10 ms a call)
+_frozen = False
+
+
 def quiesce(spark: SparkSession) -> None:
     """Release everything a finished query can still pin, between
     independent queries in a long-lived session.
 
-    ``clear_persisted`` + JVM ``System.gc()`` alone is NOT enough: plan
-    objects on the Python side form reference cycles, and until CPython's
-    cyclic collector runs, their py4j bindings hold the JVM-side plans
-    (and hence every shuffle/broadcast those plans reference) alive —
-    ContextCleaner only removes shuffle files whose dependencies have
-    been garbage-collected.  Measured on the bench suite: without the
-    Python ``gc.collect()`` the accumulated shuffle state degraded the
-    final query ~4-10× (22.5s vs 6.0s); with it, steady-state timing.
-    The JVM ``System.gc()`` then runs after the Python collection, so
-    the plans whose bindings were just dropped are collectable and
-    ContextCleaner sees them this quiesce instead of the next.
+    - Shuffle files: each SQL execution deletes its own when it ends
+      (``spark.sql.classic.shuffleDependency.fileCleanup.enabled``).
+    - Cached and checkpointed RDDs: ``clear_persisted``, and the SQL
+      cache: ``catalog.clearCache``.
+    - JVM plans and the broadcasts they hold: plan objects on the Python
+      side form reference cycles (py4j's ``JavaObject._methods`` holds
+      a ``JavaMember`` whose ``container`` points back), and until
+      CPython's cyclic collector runs, their bindings keep the JVM-side
+      plans alive. ``gc.collect`` frees them; the JVM then collects the
+      plans in its own time, without a forced full GC.
+
+    The first call freezes (``gc.freeze``) what is alive then, so later
+    collections walk only what was made since: objects still alive at
+    the first ``quiesce`` are never cycle-collected.
     """
     import gc
+
+    global _frozen
 
     clear_persisted(spark)
     spark.catalog.clearCache()
     gc.collect()
-    spark.sparkContext._jvm.System.gc()
+    if not _frozen:
+        gc.freeze()
+        _frozen = True

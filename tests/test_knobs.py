@@ -160,6 +160,29 @@ class _Module:
                     self.aliases[a.asname or a.name] = (base, a.name)
 
 
+def _slot(e) -> str | None:
+    """The variable an expression names: ``x``, or ``x["key"]`` for a
+    constant key into a local dict."""
+    if isinstance(e, ast.Name):
+        return e.id
+    if (
+        isinstance(e, ast.Subscript)
+        and isinstance(e.value, ast.Name)
+        and isinstance(e.slice, ast.Constant)
+    ):
+        return f"{e.value.id}[{e.slice.value!r}]"
+    return None
+
+
+def _unpack(target, value):
+    """(target, value) pairs of an assignment, tuples unpacked pairwise."""
+    if not isinstance(target, ast.Tuple):
+        yield target, value
+    elif isinstance(value, ast.Tuple) and len(value.elts) == len(target.elts):
+        for t, v in zip(target.elts, value.elts):
+            yield from _unpack(t, v)
+
+
 def _reach(kept: list[str]) -> tuple[set[str], set[str], list[ast.Call]]:
     """(every package definition and method, the ones a checked path
     reaches, the calls on those paths), names relative to the package
@@ -168,8 +191,14 @@ def _reach(kept: list[str]) -> tuple[set[str], set[str], list[ast.Call]]:
     ``examples/``, ``perfbench/`` outside its tests and the definitions
     README keeps. A reached definition reaches every package definition
     its code names, through imports and re-exports; a reached class
-    reaches its dunder methods and every method whose name checked code
-    reads as an attribute; all to a fixed point."""
+    reaches its dunder methods, and a kept one all its methods. Any
+    other method is reached by an attribute read whose receiver
+    resolves to its class, a base or a subclass: ``self`` or ``cls`` in
+    the class's methods, the class, a call of it, or a name, constant
+    dict key, parameter or field assigned or annotated with one of
+    these. A read on any other receiver reaches no method, so a dead
+    method named like a DataFrame method stays dead. All to a fixed
+    point."""
     mods = {m.name: m for m in map(_Module, sorted(PACKAGE.rglob("*.py")))}
 
     def lookup(mod: str, name: str, hops: int = 0):
@@ -185,39 +214,124 @@ def _reach(kept: list[str]) -> tuple[set[str], set[str], list[ast.Call]]:
             return lookup(*target, hops + 1)
         return target
 
-    def refs(ctx: _Module, node):
-        for n in ast.walk(node):
-            attrs = []
-            while isinstance(n, ast.Attribute):
-                attrs.append(n.attr)
-                n = n.value
-            if not isinstance(n, ast.Name):
-                continue
-            if n.id in ctx.defs:
-                hit = (ctx.name, n.id)
-            else:
-                hit = ctx.aliases.get(n.id)
-                if hit and hit[1] is not None:
-                    hit = lookup(*hit)
-            for attr in reversed(attrs):
-                if hit is None or hit[1] is not None:
-                    break
-                hit = lookup(hit[0], attr)
+    def resolve(ctx: _Module, n):
+        """The package definition a name or dotted name denotes, else None."""
+        attrs = []
+        while isinstance(n, ast.Attribute):
+            attrs.append(n.attr)
+            n = n.value
+        if not isinstance(n, ast.Name):
+            return None
+        if n.id in ctx.defs:
+            hit = (ctx.name, n.id)
+        else:
+            hit = ctx.aliases.get(n.id)
             if hit and hit[1] is not None:
-                yield hit
+                hit = lookup(*hit)
+        for attr in reversed(attrs):
+            if hit is None or hit[1] is not None:
+                return None
+            hit = lookup(hit[0], attr)
+        return hit if hit and hit[1] is not None else None
 
-    read: set[str] = set()
+    classes = {(m.name, c): m for m in mods.values() for c in m.methods}
+    bases = {
+        k: {resolve(m, b) for b in m.defs[k[1]].bases} & classes.keys()
+        for k, m in classes.items()
+    }
+
+    def closure(c, step) -> set:
+        out, todo = {c}, [c]
+        while todo:
+            for j in step(todo.pop()) - out:
+                out.add(j)
+                todo.append(j)
+        return out
+
+    def family(c) -> set:
+        """``c``, its package bases and its package subclasses."""
+        return closure(c, bases.get) | closure(
+            c, lambda k: {s for s, bs in bases.items() if k in bs}
+        )
+
+    def methods(receivers, name: str):
+        for c in {k for r in receivers for k in family(r)}:
+            for fn in classes[c].methods[c[1]]:
+                if fn.name == name:
+                    yield c, fn
+
+    def annotated(ctx: _Module, ann) -> set:
+        """The package classes an annotation names."""
+        return {hit for n in ast.walk(ann) if (hit := resolve(ctx, n)) in classes}
+
+    # a class's fields: the names its body annotates
+    fields = {
+        (mod, cls): {
+            s.target.id: annotated(m, s.annotation)
+            for s in m.defs[cls].body
+            if isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)
+        }
+        for (mod, cls), m in classes.items()
+    }
+
+    def kinds(ctx: _Module, e, env: dict[str, set]) -> set:
+        """The package classes expression ``e`` may be an instance of."""
+        if _slot(e) in env:
+            return env[_slot(e)]
+        if isinstance(e, ast.Call):
+            return kinds(ctx, e.func, env)
+        if (hit := resolve(ctx, e)) in classes:
+            return {hit}
+        if isinstance(e, ast.Attribute):
+            return {
+                f for k in kinds(ctx, e.value, env) for j in family(k)
+                for f in fields[j].get(e.attr, ())
+            }
+        return set()
+
+    def scope(ctx: _Module, node, owner=None) -> dict[str, set]:
+        """Flow-insensitive name -> classes for one function or module."""
+        env: dict[str, set] = {}
+        args = getattr(node, "args", None)
+        if owner and args and not any(
+            getattr(d, "id", "") == "staticmethod" for d in node.decorator_list
+        ):
+            env[(args.posonlyargs + args.args)[0].arg] = {owner}
+        for n in ast.walk(node):
+            if isinstance(n, ast.arg) and n.annotation is not None:
+                env.setdefault(n.arg, set()).update(annotated(ctx, n.annotation))
+        for n in ast.walk(node):
+            if isinstance(n, ast.Assign):
+                pairs = [(t, n.value) for t in n.targets]
+            elif isinstance(n, ast.AnnAssign):
+                pairs = [(n.target, n.value)]
+                if isinstance(n.target, ast.Name):
+                    env.setdefault(n.target.id, set()).update(annotated(ctx, n.annotation))
+            elif isinstance(n, (ast.For, ast.comprehension)):
+                pairs = [(n.target, n.iter)]
+            else:
+                continue
+            for target, value in (q for t, v in pairs for q in _unpack(t, v)):
+                if _slot(target) and value is not None:
+                    env.setdefault(_slot(target), set()).update(kinds(ctx, value, env))
+        return env
+
     calls: list[ast.Call] = []
     todo: list[tuple[str, str]] = []
 
-    def visit(ctx: _Module, nodes) -> None:
+    def visit(ctx: _Module, nodes, owner=None) -> None:
         for node in nodes:
+            env = scope(ctx, node, owner)
             for n in ast.walk(node):
                 if isinstance(n, ast.Attribute):
-                    read.add(n.attr)
+                    todo.extend(
+                        (c[0], f"{c[1]}.{fn.name}")
+                        for c, fn in methods(kinds(ctx, n.value, env), n.attr)
+                    )
                 elif isinstance(n, ast.Call):
                     calls.append(n)
-            todo.extend(refs(ctx, node))
+                if (hit := resolve(ctx, n)) is not None:
+                    todo.append(hit)
 
     roots = [
         REPO / "bench.py",
@@ -237,35 +351,33 @@ def _reach(kept: list[str]) -> tuple[set[str], set[str], list[ast.Call]]:
         for d in getattr(node, "decorator_list", [])
         if isinstance(d, ast.Call) and getattr(d.func, "id", "") == "register"
     ]
-    todo += [
-        (f"{PACKAGE.name}.{k}".rsplit(".", 1)[0], k.rsplit(".", 1)[1]) for k in kept
-    ]
+    keep = {(f"{PACKAGE.name}.{k}".rsplit(".", 1)[0], k.rsplit(".", 1)[1]) for k in kept}
+    todo += keep
     reached: set[tuple[str, str]] = set()
-    methods: set[tuple[str, str]] = set()
-    while True:
-        while todo:
-            key = todo.pop()
-            if key in reached or key[1] not in getattr(mods.get(key[0]), "defs", {}):
-                continue
+    while todo:
+        key = todo.pop()
+        m = mods.get(key[0])
+        if key in reached or m is None:
+            continue
+        cls, _, name = key[1].partition(".")
+        if name:
+            fn = next((f for f in m.methods.get(cls, ()) if f.name == name), None)
+            if fn is not None:
+                reached.add(key)
+                visit(m, [fn], (key[0], cls))
+        elif cls in m.defs:
             reached.add(key)
-            ctx, node = mods[key[0]], mods[key[0]].defs[key[1]]
+            node = m.defs[cls]
             if isinstance(node, ast.ClassDef):
                 body = [s for s in node.body if not isinstance(s, _FUNCS)]
-                visit(ctx, [*node.decorator_list, *node.bases, *body])
+                visit(m, [*node.decorator_list, *node.bases, *body])
+                todo += [
+                    (key[0], f"{cls}.{f.name}")
+                    for f in m.methods[cls]
+                    if _dunder(f.name) or key in keep
+                ]
             else:
-                visit(ctx, [node])
-        new = [
-            ((mod, f"{cls}.{fn.name}"), fn)
-            for mod, cls in reached
-            for fn in mods[mod].methods.get(cls, ())
-            if (mod, f"{cls}.{fn.name}") not in methods
-            and (_dunder(fn.name) or fn.name in read)
-        ]
-        if not new:
-            break
-        for key, fn in new:
-            methods.add(key)
-            visit(mods[key[0]], [fn])
+                visit(m, [node])
     prefix = len(PACKAGE.name) + 1
     every = {(m.name, d) for m in mods.values() for d in m.defs}
     every |= {
@@ -277,7 +389,7 @@ def _reach(kept: list[str]) -> tuple[set[str], set[str], list[ast.Call]]:
     }
     return (
         {f"{mod[prefix:]}.{d}" for mod, d in every},
-        {f"{mod[prefix:]}.{d}" for mod, d in reached | methods},
+        {f"{mod[prefix:]}.{d}" for mod, d in reached},
         calls,
     )
 

@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import re
 import shutil
 import sys
 import tempfile
@@ -78,17 +77,11 @@ def oracle_memory_limit() -> int:
     """Bytes a DuckDB oracle connection may hold: half of the physical
     RAM that the Spark driver heap (``session.driver_mem()``) leaves, and
     at least 1 GiB. DuckDB's own default, 80% of RAM, ignores the driver
-    heap in the same process. A heap size without a unit is MiB, as
-    Spark reads ``spark.driver.memory`` (``<n>b`` is bytes)."""
-    from dropbox_duckdb_playground_spark.session import driver_mem
+    heap in the same process."""
+    from dropbox_duckdb_playground_spark.session import driver_mem, mem_bytes
 
-    mem = driver_mem().lower()
-    num, unit = re.fullmatch(r"(\d+)([kmgt]?)b?", mem).groups()
-    if not unit and not mem.endswith("b"):
-        unit = "m"
-    heap = int(num) * 1024 ** "_kmgt".index(unit or "_")
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return max(2**30, (ram - heap) // 2)
+    return max(2**30, (ram - mem_bytes(driver_mem())) // 2)
 
 
 def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
