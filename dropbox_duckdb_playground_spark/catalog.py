@@ -21,7 +21,11 @@ from pyspark.sql import functions as F
 
 from dropbox_duckdb_playground_spark.operators import dedup as D
 from dropbox_duckdb_playground_spark.operators import text as TX
-from dropbox_duckdb_playground_spark.operators.components import connected_components
+from dropbox_duckdb_playground_spark.operators.components import (
+    PR_DAMPING_PCT,
+    PR_ITERATIONS,
+    connected_components,
+)
 from dropbox_duckdb_playground_spark.operators.relational import (
     anti_diff,
     argmax_per_group,
@@ -47,7 +51,7 @@ DUCK_ID = "(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
 # from the SAME constants so the two engines agree bit-for-bit.
 MINHASH_MINS = ", ".join(
     f"min(({a}*h_hi + {b}*h_lo + {c}) % {D.MINHASH_PRIME}) AS mh{i}"
-    for i, (a, b, c) in enumerate(D.minhash_perm_constants(8))
+    for i, (a, b, c) in enumerate(D.minhash_perm_constants(D.NUM_PERM))
 )
 
 
@@ -830,8 +834,8 @@ def q24_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q25_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     sh = D.shingles(d, n=3)
-    sig = D.minhash_signatures(sh, num_perm=8)
-    return D.lsh_candidate_pairs(sig, num_perm=8, bands=4)
+    sig = D.minhash_signatures(sh)
+    return D.lsh_candidate_pairs(sig)
 
 
 @register(
@@ -1197,7 +1201,7 @@ def q34_er_doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q35_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = D.simhash(load(spark, sf_dir, "documents"))
-    out = D.hamming_neardup_pairs(sig, max_hamming=3, bits=60, blocks=4)
+    out = D.hamming_neardup_pairs(sig)
     return out.select("a_id", "b_id", F.col("hamming").cast("long").alias("hamming"))
 
 
@@ -1266,7 +1270,7 @@ def q36_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dropbox_duckdb_playground_spark.operators.similarity import lsh_ann_topk
 
     e = load(spark, sf_dir, "embeddings")
-    return lsh_ann_topk(e, e.filter(F.col("vec_id") < 10), dim=64, k=5, planes=8)
+    return lsh_ann_topk(e, e.filter(F.col("vec_id") < 10), dim=64, k=5)
 
 
 # ---------------------------------------------------------------------------
@@ -1434,7 +1438,7 @@ def q41_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags="text-fingerprint winnowing rolling-hash",
 )
 def q42_winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return TX.winnow_fingerprints(load(spark, sf_dir, "documents"), n=3, w=4)
+    return TX.winnow_fingerprints(load(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -2652,8 +2656,8 @@ def q65_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard LSH guard that bounds per-bucket work at cap²/2."""
     d = load(spark, sf_dir, "documents")
     sh = D.shingles(d, n=3)
-    sig = D.minhash_signatures(sh, num_perm=8)
-    return D.lsh_candidate_pairs(sig, num_perm=8, bands=4, max_bucket_size=3)
+    sig = D.minhash_signatures(sh)
+    return D.lsh_candidate_pairs(sig, max_bucket_size=3)
 
 
 @register(
@@ -2737,8 +2741,8 @@ def q67_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     permutations / 8) — the signature-only sketch answer web-scale
     dedup ships when exact shingle intersection is too expensive."""
     d = load(spark, sf_dir, "documents")
-    sig = D.minhash_signatures(D.shingles(d, n=3), num_perm=8)
-    return D.minhash_estimate_pairs(sig, num_perm=8, bands=4)
+    sig = D.minhash_signatures(D.shingles(d, n=3))
+    return D.minhash_estimate_pairs(sig)
 
 
 @register(
@@ -2796,7 +2800,7 @@ def q69_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_chars") * 10).cast("bigint").alias("duration_ms"),
         ).alias("meta"),
     )
-    return frame_sample_plan(media, every_ms=1000).select(
+    return frame_sample_plan(media).select(
         "media_id", F.col("frame_ts_ms").cast("long").alias("frame_ts_ms")
     )
 
@@ -4050,9 +4054,10 @@ _PR_SCALE = 1_000_000_000_000
 # is no unbounded collect left to cap.
 
 
-def _pagerank_oracle(iterations: int = 3) -> str:
+def _pagerank_oracle() -> str:
     """Unrolled integer-PageRank CTE chain mirroring operators.
-    components.pagerank step for step (same div-100 damping order)."""
+    components.pagerank step for step (same rounds, same div-100
+    damping order)."""
     parts = [
         f"""
     WITH e AS (
@@ -4070,7 +4075,7 @@ def _pagerank_oracle(iterations: int = 3) -> str:
                   CAST({_PR_SCALE} // nn.n AS BIGINT) AS r
            FROM nd LEFT JOIN deg ON nd.node = deg.node, nn)"""
     ]
-    for i in range(1, iterations + 1):
+    for i in range(1, PR_ITERATIONS + 1):
         p = i - 1
         parts.append(
             f""",
@@ -4081,15 +4086,15 @@ def _pagerank_oracle(iterations: int = 3) -> str:
     d{i} AS (SELECT CAST(coalesce(sum(r), 0) AS BIGINT) AS dang
            FROM r{p} WHERE outdeg IS NULL),
     r{i} AS (SELECT r{p}.node, r{p}.outdeg,
-                  CAST(((15 * ({_PR_SCALE} // nn.n)) // 100)
-                       + ((85 * (coalesce(c{i}.contrib, 0)
+                  CAST((({100 - PR_DAMPING_PCT} * ({_PR_SCALE} // nn.n)) // 100)
+                       + (({PR_DAMPING_PCT} * (coalesce(c{i}.contrib, 0)
                                  + (d{i}.dang // nn.n))) // 100)
                        AS BIGINT) AS r
            FROM r{p} LEFT JOIN c{i} ON r{p}.node = c{i}.node, d{i}, nn)"""
         )
     parts.append(
         f"""
-    SELECT node, r AS rank FROM r{iterations} WHERE node LIKE 'S%'
+    SELECT node, r AS rank FROM r{PR_ITERATIONS} WHERE node LIKE 'S%'
     """
     )
     return "".join(parts)
@@ -4097,7 +4102,7 @@ def _pagerank_oracle(iterations: int = 3) -> str:
 
 @register(
     "q92_pagerank",
-    oracle=_pagerank_oracle(3),
+    oracle=_pagerank_oracle(),
     tags="graph pagerank iterative E7-family",
 )
 def q92_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4145,7 +4150,7 @@ def q92_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    pr = pagerank(edges, nodes, iterations=3, scale=_PR_SCALE, damping_pct=85)
+    pr = pagerank(edges, nodes, scale=_PR_SCALE)
     return pr.filter(F.col("node") % 2 == 1).select(
         F.concat(
             F.lit("S"), ((F.col("node") - 1) / 2).cast("long").cast("string")
@@ -5379,10 +5384,7 @@ def q108_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = load(spark, sf_dir, "lineitem")
-    return histogram_quantiles(
-        li, value="l_extendedprice", group="l_returnflag", bins=64,
-        q_pcts=(25, 50, 90),
-    )
+    return histogram_quantiles(li, value="l_extendedprice", group="l_returnflag")
 
 
 @register(

@@ -80,18 +80,24 @@ class Engine:
             raise ValueError("Engine.root not set")
         return _join(self.root, f"{obj_id}.parquet")
 
+    def _write(self, obj_id: str, out_id: str) -> str:
+        """Write ``obj_id`` to ``out_id``'s Parquet path, overwriting, and
+        register ``out_id`` as the scan of what was written. The scan
+        takes the schema just written instead of inferring it, which
+        would launch a footer-reading job; file sources read every
+        column as nullable either way."""
+        out = self._path(out_id)
+        df = self.table(obj_id)
+        df.write.mode("overwrite").parquet(out)
+        self.register(out_id, self.spark.read.schema(df.schema).parquet(out))
+        return out
+
     def save(self, obj_id: str) -> str:
         """Materialize an object id as Parquet, overwriting, and re-register
         it as the materialized scan so downstream reads prune."""
-        out = self._path(obj_id)
-        self.table(obj_id).write.mode("overwrite").parquet(out)
-        self.register(obj_id, out)
-        return out
+        return self._write(obj_id, obj_id)
 
     def copy(self, obj_id: str, cache_id: str) -> str:
         """Snapshot ``obj_id`` under ``cache_id`` (run-level cache; reference
         batch_framework/etl.py:86-127)."""
-        out = self._path(cache_id)
-        self.table(obj_id).write.mode("overwrite").parquet(out)
-        self.register(cache_id, out)
-        return out
+        return self._write(obj_id, cache_id)

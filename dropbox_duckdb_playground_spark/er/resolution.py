@@ -21,9 +21,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dropbox_duckdb_playground_spark.er.blocking import block_table, candidate_pairs
-from dropbox_duckdb_playground_spark.er.clustering import cluster_pairs
+from dropbox_duckdb_playground_spark.er.clustering import cluster_pairs, combine_mappings
 from dropbox_duckdb_playground_spark.er.features import engineer_features
 from dropbox_duckdb_playground_spark.er.scoring import expression_scorer, select_matches
+from dropbox_duckdb_playground_spark.materialize import materialize
 from dropbox_duckdb_playground_spark.operators.relational import argmax_per_group
 
 #: scores a pair must exceed to match a canon record / another messy record
@@ -80,7 +81,8 @@ def resolve_entities(messy: DataFrame, canon: DataFrame | None) -> DataFrame:
     """Full resolution of (node_id, name) records over every engineered
     feature: returns the combined mapper (messy_id, new_id) where new_id
     is the canon match when present, else the dedup cluster id, else
-    absent (identity handled by `convert_ids`' COALESCE)."""
+    absent (identity handled by `convert_ids`' COALESCE). The mapper is
+    computed here, once, and returned materialized."""
     mf = engineer_features(messy)
     fields = [c for c in mf.columns if c != "node_id"]
     mappers: list[DataFrame] = []
@@ -95,6 +97,5 @@ def resolve_entities(messy: DataFrame, canon: DataFrame | None) -> DataFrame:
                             mf.node_id == F.col("messy_id"), "left_anti")
     cluster_map = dedup_messy(unmatched, fields)
     mappers.append(cluster_map.select("messy_id", F.col("cluster_id").alias("new_id")))
-    from dropbox_duckdb_playground_spark.er.clustering import combine_mappings
-
-    return combine_mappings(mappers)
+    # every id conversion reads it
+    return materialize(combine_mappings(mappers))

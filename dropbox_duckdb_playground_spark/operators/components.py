@@ -48,6 +48,9 @@ MAX_LEVELS = 3
 MAX_ITER = 30
 #: pagerank broadcasts rank slices up to this many nodes
 BROADCAST_NODE_LIMIT = 8_000_000
+#: pagerank's rounds and damping factor (percent)
+PR_ITERATIONS = 3
+PR_DAMPING_PCT = 85
 #: triangle_count broadcasts the adjacency up to this many edges
 #: (~16 bytes/adjacency entry -> 64MB)
 BROADCAST_EDGE_LIMIT = 4_000_000
@@ -285,11 +288,10 @@ def _compose_labels(nodes: DataFrame, mappings: list[DataFrame]) -> DataFrame:
 def pagerank(
     edges: DataFrame,
     nodes: DataFrame,
-    iterations: int = 3,
     scale: int = 1_000_000_000_000,
-    damping_pct: int = 85,
 ) -> DataFrame:
-    """PageRank over a directed edge list, all-integer arithmetic.
+    """PageRank over a directed edge list, all-integer arithmetic:
+    ``PR_ITERATIONS`` rounds at damping ``PR_DAMPING_PCT`` percent.
 
     Float PageRank is not reproducible across engines (per-partition sum
     order changes the low bits every run); here ranks are BIGINTs scaled
@@ -337,7 +339,7 @@ def pagerank(
     q62/q107's overlap free.
 
     The plan unrolls every round, so its analysis/planning time grows
-    with ``iterations``. NOTE: a caller that fires multiple actions on
+    with ``PR_ITERATIONS``. NOTE: a caller that fires multiple actions on
     the lazy result re-executes the unrolled plan per action —
     ``materialize`` the returned frame yourself in that case. Reference
     analog: the graph-resolution iteration loop
@@ -374,9 +376,9 @@ def pagerank(
     n_nodes = n.count()
     small = n_nodes <= BROADCAST_NODE_LIMIT
     init = scale // n_nodes
-    base = (100 - damping_pct) * init // 100
+    base = (100 - PR_DAMPING_PCT) * init // 100
     r = n.select("node", "outdeg", F.lit(init).cast("long").alias("r"))
-    for it in range(iterations):
+    for it in range(PR_ITERATIONS):
         rsrc = r.filter(F.col("outdeg").isNotNull()).select(
             F.col("node").alias("src"),
             F.expr("r div outdeg").alias("c"),
@@ -398,7 +400,7 @@ def pagerank(
                 (
                     F.lit(base)
                     + F.expr(
-                        f"({damping_pct} * (coalesce(contrib, 0)"
+                        f"({PR_DAMPING_PCT} * (coalesce(contrib, 0)"
                         f" + (dang div {n_nodes}))) div 100"
                     )
                 )
@@ -406,7 +408,7 @@ def pagerank(
                 .alias("r"),
             )
         )
-        if it + 1 < iterations:
+        if it + 1 < PR_ITERATIONS:
             # LAZY per-round persist (no forcing action): the rank
             # vector has three consumers next round (contribution
             # slice, dangling aggregate, final join). Exchange reuse

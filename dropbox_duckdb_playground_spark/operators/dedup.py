@@ -33,9 +33,12 @@ def _hex60(c: Column) -> Column:
 # MinHash permutations are universal hashes over the 60-bit shingle digest:
 # perm_i(h) = (a_i*(h>>30) + b_i*(h&2^30-1) + c_i) mod P. Products stay
 # under 2^60 so the arithmetic is exact int64 in both Spark and DuckDB —
-# one md5 per shingle instead of num_perm of them.
+# one md5 per shingle instead of NUM_PERM of them.
 MINHASH_PRIME = 2147483647
 _MASK30 = (1 << 30) - 1
+#: MinHash permutations per signature, and the LSH bands they split into
+NUM_PERM = 8
+LSH_BANDS = 4
 
 
 def minhash_perm_constants(num_perm: int) -> list[tuple[int, int, int]]:
@@ -100,13 +103,13 @@ def shingles(
     return src.select(F.col("doc_id"), F.explode(ngrams).alias("shingle"))
 
 
-def minhash_signatures(shingle_df: DataFrame, num_perm: int = 8) -> DataFrame:
+def minhash_signatures(shingle_df: DataFrame) -> DataFrame:
     """MinHash signature per document: (doc_id, mh0..mh{p-1}) bigints.
 
-    One 60-bit md5 digest per shingle, then ``num_perm`` integer
+    One 60-bit md5 digest per shingle, then ``NUM_PERM`` integer
     universal-hash permutations of it (see ``minhash_perm_constants``);
     min per doc approximates the Jaccard-preserving permutation minimum.
-    Map-side partial min keeps the shuffle at num_perm longs per doc."""
+    Map-side partial min keeps the shuffle at NUM_PERM longs per doc."""
     hashed = shingle_df.select(
         F.col("doc_id"),
         F.shiftright(_hex60(F.col("shingle")), 30).alias("h_hi"),
@@ -117,18 +120,13 @@ def minhash_signatures(shingle_df: DataFrame, num_perm: int = 8) -> DataFrame:
             (F.lit(a) * F.col("h_hi") + F.lit(b) * F.col("h_lo") + F.lit(c))
             % F.lit(MINHASH_PRIME)
         ).alias(f"mh{i}")
-        for i, (a, b, c) in enumerate(minhash_perm_constants(num_perm))
+        for i, (a, b, c) in enumerate(minhash_perm_constants(NUM_PERM))
     ]
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_candidate_pairs(
-    sig: DataFrame,
-    num_perm: int = 8,
-    bands: int = 4,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """LSH banding: split the signature into ``bands`` bands, hash each
+def lsh_candidate_pairs(sig: DataFrame, max_bucket_size: int | None = None) -> DataFrame:
+    """LSH banding: split the signature into ``LSH_BANDS`` bands, hash each
     band, self-join per (band_id, band_key) bucket with a < b. Output:
     distinct (a_id, b_id) candidate pairs.
 
@@ -144,7 +142,7 @@ def lsh_candidate_pairs(
     and the shingle+minhash pipeline scanning the corpus once PER
     SIDE — join-pushed predicates specialize each side's subtree, the
     failure mode established on bm25/simhash in r8). sig is
-    ``num_perm`` longs per document — the cheapest possible checkpoint.
+    ``NUM_PERM`` longs per document — the cheapest possible checkpoint.
     Measured wall-clock is a WASH locally (sf0.1 1.3->1.4s, sf1
     2.08->2.00s: the duplicate pipeline ran concurrently on idle
     cores), but the barrier halves the corpus CPU — the runtime plan
@@ -153,9 +151,9 @@ def lsh_candidate_pairs(
     sync. The join stays SMJ (not shuffle-hash) so a skewed partition
     spills instead of OOMing the build at scale."""
     sig = materialize(sig)
-    rows_per_band = num_perm // bands
+    rows_per_band = NUM_PERM // LSH_BANDS
     band_cols = []
-    for b in range(bands):
+    for b in range(LSH_BANDS):
         parts = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
         band_cols.append(
             F.struct(F.lit(b).alias("band_id"), F.md5(F.concat_ws("|", *parts)).alias("band_key"))
@@ -191,24 +189,22 @@ def lsh_candidate_pairs(
     )
 
 
-def minhash_estimate_pairs(
-    sig: DataFrame, num_perm: int = 8, bands: int = 4
-) -> DataFrame:
+def minhash_estimate_pairs(sig: DataFrame) -> DataFrame:
     """LSH candidates with their MinHash-estimated Jaccard: the
     signature-only sketch answer (est = matching permutations /
-    num_perm) that web-scale dedup ships when exact shingle
+    NUM_PERM) that web-scale dedup ships when exact shingle
     intersection is too expensive. Output: (a_id, b_id, est_jaccard),
     est rounded to 4 (exact /2^k arithmetic — engine-portable).
 
     Scale: same banded self-join as `lsh_candidate_pairs` (materialized
     signature table — see that docstring for why the self-join sides do
     NOT share an exchange at runtime — then SMJ); signatures ride the
-    bucket rows so the estimate costs ZERO extra joins — num_perm
+    bucket rows so the estimate costs ZERO extra joins — NUM_PERM
     integer equality checks per candidate."""
     sig = materialize(sig)
-    rows_per_band = num_perm // bands
+    rows_per_band = NUM_PERM // LSH_BANDS
     band_cols = []
-    for b in range(bands):
+    for b in range(LSH_BANDS):
         parts = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
         band_cols.append(
             F.struct(
@@ -216,14 +212,14 @@ def minhash_estimate_pairs(
                 F.md5(F.concat_ws("|", *parts)).alias("band_key"),
             )
         )
-    mh = [f"mh{i}" for i in range(num_perm)]
+    mh = [f"mh{i}" for i in range(NUM_PERM)]
     buckets = sig.select(
         F.col("doc_id"), *mh, F.explode(F.array(*band_cols)).alias("b")
     ).select("doc_id", *mh, "b.band_id", "b.band_key")
     l, r = buckets.alias("l"), buckets.hint("merge").alias("r")
     matches = sum(
         F.when(F.col(f"l.mh{i}") == F.col(f"r.mh{i}"), 1).otherwise(0)
-        for i in range(num_perm)
+        for i in range(NUM_PERM)
     )
     return (
         l.join(
@@ -235,7 +231,7 @@ def minhash_estimate_pairs(
         .select(
             F.col("l.doc_id").alias("a_id"),
             F.col("r.doc_id").alias("b_id"),
-            F.round(matches / F.lit(num_perm), 4).alias("est_jaccard"),
+            F.round(matches / F.lit(NUM_PERM), 4).alias("est_jaccard"),
         )
         .distinct()
     )
@@ -416,6 +412,10 @@ def ngram_jaccard_pairs(
 
 #: SimHash signature width: the 60-bit md5 digest prefix (``_hex60``)
 SIMHASH_BITS = 60
+#: hamming_neardup_pairs' radius and the signature chunks it joins on
+#: (a pair within the radius agrees on at least one chunk: radius < chunks)
+SIMHASH_RADIUS = 3
+SIMHASH_BLOCKS = 4
 
 
 def simhash(df: DataFrame) -> DataFrame:
@@ -449,12 +449,10 @@ def simhash(df: DataFrame) -> DataFrame:
     return with_sums.select(F.col("doc_id"), F.expr(sig).alias("simhash"))
 
 
-def hamming_neardup_pairs(
-    sig: DataFrame, max_hamming: int = 3, bits: int = 60, blocks: int = 4
-) -> DataFrame:
-    """SimHash near-dup pairs within a Hamming radius, via the standard
-    block-permutation trick: split the signature into ``blocks`` chunks;
-    any pair within radius ``max_hamming < blocks`` must agree on ≥1 chunk
+def hamming_neardup_pairs(sig: DataFrame) -> DataFrame:
+    """SimHash near-dup pairs within Hamming radius ``SIMHASH_RADIUS``,
+    via the standard block-permutation trick: split the signature into
+    ``SIMHASH_BLOCKS`` chunks; any pair within the radius must agree on ≥1 chunk
     → equi-join per chunk, then exact Hamming filter via bit_count(xor).
     The signature table is MATERIALIZED before the self-join: the
     "identical subplans canonicalize equal → ReusedExchange" assumption
@@ -467,14 +465,14 @@ def hamming_neardup_pairs(
     2.52s -> 1.36s for the pair join). The join stays sort-merge so a
     hot chunk spills instead of OOMing the build at scale."""
     sig = materialize(sig)
-    chunk = bits // blocks
+    chunk = SIMHASH_BITS // SIMHASH_BLOCKS
     mask = (1 << chunk) - 1
     chunk_cols = [
         F.struct(
             F.lit(i).alias("blk"),
             F.shiftright(F.col("simhash"), i * chunk).bitwiseAND(F.lit(mask)).alias("ck"),
         )
-        for i in range(blocks)
+        for i in range(SIMHASH_BLOCKS)
     ]
     keyed = sig.select(
         F.col("doc_id"), F.col("simhash"), F.explode(F.array(*chunk_cols)).alias("c")
@@ -493,7 +491,7 @@ def hamming_neardup_pairs(
             F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))).alias("hamming"),
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_RADIUS)
     )
 
 

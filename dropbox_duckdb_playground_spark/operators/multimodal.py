@@ -332,9 +332,13 @@ def resize_images(
     )
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per (media_id, frame_ts_ms)
-    given per-item duration metadata — the explode that fans a video into
+#: frame_sample_plan samples one frame per this many milliseconds
+FRAME_EVERY_MS = 1000
+
+
+def frame_sample_plan(media: DataFrame) -> DataFrame:
+    """Video frame-sampling *plan*: one row per (media_id, frame_ts_ms),
+    every ``FRAME_EVERY_MS``, given per-item duration metadata — the explode that fans a video into
     decode tasks. The actual frame extraction is the pluggable decode
     stage; this produces the distributed work list."""
     return media.select(
@@ -343,7 +347,7 @@ def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
             F.sequence(
                 F.lit(0),
                 F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)),
-                F.lit(every_ms),
+                F.lit(FRAME_EVERY_MS),
             )
         ).alias("frame_ts_ms"),
     )

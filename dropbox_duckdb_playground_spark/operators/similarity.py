@@ -155,20 +155,24 @@ def hyperplane_signature(vec: Column, dim: int, planes: int = 8) -> Column:
     return sig
 
 
+#: hyperplanes lsh_ann_topk buckets by
+ANN_PLANES = 8
+
+
 def lsh_ann_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     dim: int,
     k: int = 5,
-    planes: int = 8,
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's hyperplane bucket;
-    exact cosine re-rank within the bucket. ~2^planes candidate reduction.
+    exact cosine re-rank within the bucket. ~2^ANN_PLANES candidate
+    reduction.
 
     Output schema matches `cosine_topk` (query_id, cand_id, cosine)."""
     from dropbox_duckdb_playground_spark.operators.relational import fan_out
 
-    sig = hyperplane_signature(F.col("embedding"), dim, planes)
+    sig = hyperplane_signature(F.col("embedding"), dim, ANN_PLANES)
     embeddings = fan_out(embeddings)
     c = embeddings.select(
         F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_vec"), sig.alias("bucket"),

@@ -115,7 +115,7 @@ CM_WIDTH = 256
 
 
 def countmin_cells(
-    items: DataFrame, col: str = "tok", weight: str | None = None
+    items: DataFrame, col: str, weight: str | None = None
 ) -> DataFrame:
     """(i, bucket, cnt): the d x w counter matrix from an item stream.
     Each row fans out to d (row, bucket) increments in-plan (explode of
@@ -151,7 +151,7 @@ def countmin_cells(
 
 
 def countmin_estimates(
-    cells: DataFrame, keys: DataFrame, col: str = "tok"
+    cells: DataFrame, keys: DataFrame, col: str
 ) -> DataFrame:
     """(key, cm_estimate): min over the d cells each key hashes to.
     The key set is distinct-key-sized; the join is an equi-join on
@@ -313,17 +313,16 @@ def bloom_contains_bits(
     return s3.select(*cols, F.expr(cond).alias("in_bloom"))
 
 
-def histogram_quantiles(
-    df: DataFrame,
-    value: str,
-    group: str,
-    bins: int = 64,
-    q_pcts: tuple[int, ...] = (25, 50, 90),
-) -> DataFrame:
+#: histogram_quantiles' bins per group and the percentiles it estimates
+HIST_BINS = 64
+HIST_Q_PCTS = (25, 50, 90)
+
+
+def histogram_quantiles(df: DataFrame, value: str, group: str) -> DataFrame:
     """Mergeable equi-width-histogram quantile estimates per group — the
     deterministic, scale-path alternative to exact sort-based medians
     (q57): error is bounded by one bin width, the per-group state is at
-    most ``bins`` counters (mergeable across partitions AND groups,
+    most ``HIST_BINS`` counters (mergeable across partitions AND groups,
     because the bin edges are global), and the whole computation is two
     corpus passes (global min/max, then one map-side-combined
     (group, bin) count) no matter the data size. Engine-stable by
@@ -339,7 +338,7 @@ def histogram_quantiles(
         F.min(F.col(value).cast("double")).alias("mn"),
         F.max(F.col(value).cast("double")).alias("mx"),
     )
-    width = (F.col("mx") - F.col("mn")) / F.lit(float(bins))
+    width = (F.col("mx") - F.col("mn")) / F.lit(float(HIST_BINS))
     binned = (
         df.crossJoin(F.broadcast(mm))
         .select(
@@ -349,7 +348,7 @@ def histogram_quantiles(
             F.when(F.col("mx") == F.col("mn"), F.lit(0))
             .otherwise(
                 F.least(
-                    F.lit(bins - 1),
+                    F.lit(HIST_BINS - 1),
                     F.floor((F.col(value).cast("double") - F.col("mn")) / width),
                 )
             )
@@ -375,7 +374,7 @@ def histogram_quantiles(
         F.sum("cnt").over(wn).alias("n"),
     )
     qdf = cum.select(
-        "*", F.explode(F.array(*[F.lit(p) for p in q_pcts])).alias("q_pct")
+        "*", F.explode(F.array(*[F.lit(p) for p in HIST_Q_PCTS])).alias("q_pct")
     ).filter(F.col("cum") * 100 >= F.col("q_pct") * F.col("n"))
     first = qdf.groupBy("grp", "q_pct", "mn", "mx").agg(
         F.min("bin").alias("qbin")
@@ -385,6 +384,6 @@ def histogram_quantiles(
         "q_pct",
         (
             F.col("mn")
-            + (F.col("qbin") + 1) * ((F.col("mx") - F.col("mn")) / F.lit(float(bins)))
+            + (F.col("qbin") + 1) * ((F.col("mx") - F.col("mn")) / F.lit(float(HIST_BINS)))
         ).alias("est"),
     )

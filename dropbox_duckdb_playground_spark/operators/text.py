@@ -30,7 +30,7 @@ def tokens_col(text: str | Column = "text") -> Column:
     )
 
 
-def token_count(text: str | Column = "text") -> Column:
+def token_count(text: str | Column) -> Column:
     return F.size(tokens_col(text))
 
 
@@ -148,11 +148,17 @@ def fingerprint(df: DataFrame) -> DataFrame:
     return df.select(F.col("doc_id"), F.md5(norm).alias("fp"))
 
 
-def winnow_fingerprints(df: DataFrame, n: int = 3, w: int = 4) -> DataFrame:
+#: winnow_fingerprints' token n-gram length and window width
+WINNOW_N = 3
+WINNOW_W = 4
+
+
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., MOSS): hash every
-    token ``n``-gram with a rolling window of ``lead``s, then keep the min
-    hash of each window of ``w`` consecutive grams; the distinct mins are
-    the fingerprint set — robust to local edits, position-independent.
+    token ``WINNOW_N``-gram with a rolling window of ``lead``s, then keep
+    the min hash of each window of ``WINNOW_W`` consecutive grams; the
+    distinct mins are the fingerprint set — robust to local edits,
+    position-independent.
 
     Returns distinct (doc_id, fp bigint). Everything is JVM window execs over
     one partition-by-doc shuffle; at 100 TB docs are the natural partition
@@ -180,14 +186,14 @@ def winnow_fingerprints(df: DataFrame, n: int = 3, w: int = 4) -> DataFrame:
     )
     ww = Window.partitionBy("doc_id").orderBy("pos")
     gram = F.concat_ws(
-        " ", *([F.col("tok")] + [F.lead("tok", i).over(ww) for i in range(1, n)])
+        " ", *([F.col("tok")] + [F.lead("tok", i).over(ww) for i in range(1, WINNOW_N)])
     )
-    complete = F.lead("tok", n - 1).over(ww).isNotNull()
+    complete = F.lead("tok", WINNOW_N - 1).over(ww).isNotNull()
     hashed = toks.select(
         F.col("doc_id"), F.col("pos"), F.when(complete, _hex60(gram)).alias("h")
     ).filter(F.col("h").isNotNull())
-    wmin = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
-    full = F.lead("h", w - 1).over(Window.partitionBy("doc_id").orderBy("pos"))
+    wmin = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WINNOW_W - 1)
+    full = F.lead("h", WINNOW_W - 1).over(Window.partitionBy("doc_id").orderBy("pos"))
     return (
         hashed.select(
             F.col("doc_id"), F.min("h").over(wmin).alias("fp"), full.alias("_full")
@@ -206,7 +212,7 @@ EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 URL_PATTERN = r"https?://[^ ]+"
 
 
-def bpe_token_count(text: str | Column = "text") -> Column:
+def bpe_token_count(text: str | Column) -> Column:
     """Approximate LLM token count: matches of a BPE-ish regex (GPT-2
     pre-tokenizer shape). One codegen'd regex pass; complements the
     whitespace `token_count` with a count closer to what a subword

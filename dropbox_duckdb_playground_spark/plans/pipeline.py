@@ -13,7 +13,11 @@ per materialization boundary. Wiring rules kept from the reference:
   pre-registered in the Engine (DAGVertexNotFoundError semantics,
   tests/test_etl.py:65-98)
 - validators are first-class nodes (SURVEY §8.8): they run eagerly at
-  their topological position.
+  their topological position. A node that registers no output id is a
+  validator; each run of consecutive validators is one level whose
+  validators run concurrently, the ``materialize`` saves another, and
+  when several in a level fail, the error of the first in node order
+  is raised. A failing validator stops every later node and save.
 
 Scale: because nodes stay lazy, a 50-node pipeline compiles into a
 handful of Spark jobs at the ``materialize`` boundaries, with cross-node
@@ -24,9 +28,12 @@ intermediate to Parquet (SURVEY §8.7 anti-pattern).
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -39,6 +46,18 @@ class PipelineWiringError(Exception):
 
 class ValidationError(Exception):
     pass
+
+
+def run_concurrently(spark: SparkSession, thunks: Sequence[Callable[[], object]]) -> None:
+    """Run ``thunks`` on one thread each and wait for all of them (the
+    reference's multithreaded DAG executor, batch_framework/etl.py:
+    248-265). Each thread inherits the caller's job group, local
+    properties and session tags. If any failed, the error of the
+    lowest-index one is raised."""
+    with ThreadPoolExecutor(max_workers=max(len(thunks), 1)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    for f in futures:
+        f.result()
 
 
 class Node:
@@ -188,7 +207,13 @@ class Pipeline:
 
     def execute(self, engine: Engine) -> None:
         self.validate_wiring(engine)
+        level: list[Node] = []  # the validators since the last producing node
         for node in self.nodes:
-            node.run(engine)
-        for obj_id in self.materialize:
-            engine.save(obj_id)
+            if node.output_ids:
+                run_concurrently(engine.spark, [partial(v.run, engine) for v in level])
+                level = []
+                node.run(engine)
+            else:
+                level.append(node)
+        run_concurrently(engine.spark, [partial(v.run, engine) for v in level])
+        run_concurrently(engine.spark, [partial(engine.save, i) for i in self.materialize])

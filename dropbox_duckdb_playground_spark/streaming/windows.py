@@ -15,10 +15,12 @@ from pyspark.sql import functions as F
 
 #: how late an event may arrive on a stream before its window is final
 WATERMARK = "2 hours"
+#: windowed_counts' tumbling window width
+WINDOW = "1 hour"
 
 
-def windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
-    """Tumbling window counts + value sums per (window of ``ts``,
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """Tumbling window counts + value sums per (``WINDOW`` of ``ts``,
     event_type).
 
     On a streaming DataFrame the ``WATERMARK`` bounds state (late rows
@@ -26,6 +28,6 @@ def windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
     so batch and stream share this exact plan."""
     if events.isStreaming:
         events = events.withWatermark("ts", WATERMARK)
-    return events.groupBy(F.window("ts", window).alias("win"), "event_type").agg(
+    return events.groupBy(F.window("ts", WINDOW).alias("win"), "event_type").agg(
         F.count("*").alias("n"), F.sum("value").alias("sum_value")
     )

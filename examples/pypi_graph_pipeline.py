@@ -40,6 +40,7 @@ import os
 import shlex
 import sys
 import tempfile
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -50,6 +51,7 @@ from dropbox_duckdb_playground_spark.er.clustering import convert_ids
 from dropbox_duckdb_playground_spark.er.resolution import resolve_entities
 from dropbox_duckdb_playground_spark.graph.metagraph import MetaGraph
 from dropbox_duckdb_playground_spark.operators.relational import stable_id
+from dropbox_duckdb_playground_spark.plans.pipeline import run_concurrently
 from dropbox_duckdb_playground_spark.session import get_spark
 from dropbox_duckdb_playground_spark.sources.http import (
     fetch_json_table,
@@ -148,8 +150,8 @@ def main(out_root: str) -> None:
     })
     known = eng.table("package").select(F.col("node_id").alias("to_id"))
     eng.register("requires", eng.table("requires").join(known, "to_id", "semi"))
-    for v in mg.validators():
-        v.run(eng)  # raises ValidationError if any link dangles
+    # one thread per validator; raises ValidationError if any link dangles
+    run_concurrently(spark, [partial(v.run, eng) for v in mg.validators()])
     print(f"validated: {eng.table('requires').count()} requires edges survive")
 
     # 5. ER (E1-E9): cluster near-duplicate author spellings, then
@@ -171,8 +173,8 @@ def main(out_root: str) -> None:
         write_redisgraph_links_csv(
             mg.group_links(eng, link), f"{out_root}/csv/{link}")
     # persist the stage tables like the reference's storage layer
-    for obj_id in ("package", "author", "has_author", "requires"):
-        eng.save(obj_id)
+    run_concurrently(spark, [partial(eng.save, obj_id) for obj_id in
+                             ("package", "author", "has_author", "requires")])
     print(f"exported: RedisGraph CSVs + Parquet stages under {out_root}")
 
     # 7. bulk-load trigger (S11): one -n/-r flag per exported CSV

@@ -138,7 +138,7 @@ def main() -> None:
 
     # -- watermarked windowed counts (same plan batch and stream) -----
     print("hourly windowed counts:")
-    windowed_counts(all_events, window="1 hour").orderBy("win").show(truncate=False)
+    windowed_counts(all_events).orderBy("win").show(truncate=False)
 
 
 if __name__ == "__main__":

@@ -87,8 +87,8 @@ def main(sf_dir: str | None) -> None:
     #    guard — see SCALING.md on why the uncapped variant is only a
     #    measurement baseline).
     sh = D.shingles(docs, n=3)
-    sig = D.minhash_signatures(sh, num_perm=8)
-    pairs = D.lsh_candidate_pairs(sig, num_perm=8, bands=4, max_bucket_size=100)
+    sig = D.minhash_signatures(sh)
+    pairs = D.lsh_candidate_pairs(sig, max_bucket_size=100)
     survivors = D.neardup_survivors(docs, pairs).select("doc_id")
     docs = docs.join(survivors, "doc_id", "semi")
     print(f"after fuzzy dedup: {docs.count()}")

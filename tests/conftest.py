@@ -14,3 +14,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture()
+def jobs_in_group(spark):
+    """``count(group, fn)``: run ``fn()`` under Spark job group ``group``
+    and return how many Spark jobs the group launched."""
+    sc = spark.sparkContext
+
+    def count(group, fn) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        # the status tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

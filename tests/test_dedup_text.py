@@ -136,7 +136,7 @@ def test_simhash_identical_and_near(spark):
     sigs = {r.doc_id: r.simhash for r in D.simhash(df).collect()}
     assert sigs[1] == sigs[2]
     assert sigs[1] != sigs[3]
-    pairs = D.hamming_neardup_pairs(D.simhash(df), max_hamming=0).collect()
+    pairs = D.hamming_neardup_pairs(D.simhash(df)).collect()
     assert {(p.a_id, p.b_id) for p in pairs} == {(1, 2)}
 
 
@@ -223,7 +223,7 @@ def test_winnow_fingerprints_shared_for_common_run(spark):
             (3, "totally different words with no overlap at all here"),
         ],
     )
-    out = TX.winnow_fingerprints(df, n=3, w=4).collect()
+    out = TX.winnow_fingerprints(df).collect()
     fps = {}
     for r in out:
         fps.setdefault(r.doc_id, set()).add(r.fp)

@@ -121,3 +121,45 @@ def test_combine_mappings_priority_deterministic_on_overlap(spark):
     for mappers, want1 in [([a, b], 111), ([b, a], 999)]:
         got = {r.messy_id: r.new_id for r in combine_mappings(mappers).collect()}
         assert got[1] == want1 and got[2] == 222 and got[5] == 555
+
+
+def test_resolved_mapper_is_computed_once(spark, tmp_path, jobs_in_group):
+    """Two id conversions of one resolved mapper, each saved, run the
+    single-task union-find (its ``FlatMapGroupsInPandas``) in one SQL
+    execution: the mapper is materialized, not recomputed per consumer.
+    The job total is bounded too."""
+    from dropbox_duckdb_playground_spark.engine import Engine
+
+    names = ["John Smith", "john  smith", "Jane Doe", "jane doe", "Bob",
+             "Alice Liddell", "alice liddell"]
+    eng = Engine(spark=spark, root=str(tmp_path))
+    eng.register("author", _nodes(spark, list(enumerate(names))))
+    eng.register("has_author", spark.createDataFrame(
+        [(100 + i, i) for i in range(len(names))], ["from_id", "to_id"]))
+
+    def resolve_and_save():
+        mapper = resolve_entities(eng.table("author"), canon=None)
+        eng.register("has_author", convert_ids(eng.table("has_author"), mapper, ["to_id"]))
+        eng.register("author", convert_ids(eng.table("author"), mapper, ["node_id"])
+                     .groupBy("node_id").agg(F.min("name").alias("name")))
+        eng.save("author")
+        eng.save("has_author")
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions() -> dict:
+        found = store.executionsList()
+        return {e.executionId(): e for e in (found.apply(i) for i in range(found.size()))}
+
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    before = executions().keys()
+    n_jobs = jobs_in_group("resolve_twice", resolve_and_save)
+    union_finds = sum(
+        1 for i, e in executions().items()
+        if i not in before and "FlatMapGroupsInPandas" in e.physicalPlanDescription()
+    )
+    assert union_finds == 1
+    # 21 in a fresh session, 22 after the rest of the suite; 26 at the parent
+    assert n_jobs <= 22
+    assert eng.table("author").count() == 4
+    assert eng.table("has_author").select("to_id").distinct().count() == 4

@@ -397,9 +397,10 @@ def _reach(kept: list[str]) -> tuple[set[str], set[str], list[ast.Call]]:
 def _options():
     """Every parameter (of a function or method) and dataclass field in
     the package that has a default: ``(name, callee names, position,
-    keyword)``, where a call by one of the callee names sets it by that
-    keyword or by passing more than ``position`` positional arguments
-    (``None``: keyword only)."""
+    keyword, default)``, where a call by one of the callee names sets it
+    by passing a value other than ``default`` (an expression) by that
+    keyword or as positional argument ``position`` (``None``: keyword
+    only)."""
 
     def walk(node, qual: str, cls: ast.ClassDef | None = None):
         for child in ast.iter_child_nodes(node):
@@ -414,11 +415,11 @@ def _options():
                 a = child.args
                 pos = a.posonlyargs + a.args
                 first = len(pos) - len(a.defaults)
-                for i, arg in enumerate(pos[first:], first):
-                    yield f"{q}.{arg.arg}", callee, i - bound, arg.arg
+                for i, (arg, default) in enumerate(zip(pos[first:], a.defaults), first):
+                    yield f"{q}.{arg.arg}", callee, i - bound, arg.arg, default
                 for arg, default in zip(a.kwonlyargs, a.kw_defaults):
                     if default is not None:
-                        yield f"{q}.{arg.arg}", callee, None, arg.arg
+                        yield f"{q}.{arg.arg}", callee, None, arg.arg, default
                 yield from walk(child, q)
             elif isinstance(child, ast.ClassDef):
                 q = f"{qual}.{child.name}"
@@ -431,7 +432,7 @@ def _options():
                     ]
                     for i, s in enumerate(fields):
                         if s.value is not None:
-                            yield f"{q}.{s.target.id}", (child.name,), i, s.target.id
+                            yield f"{q}.{s.target.id}", (child.name,), i, s.target.id, s.value
                 yield from walk(child, q, child)
             else:
                 yield from walk(child, qual, cls)
@@ -449,18 +450,26 @@ def _unset(calls: list[ast.Call], kept: list[str]) -> tuple[int, list[str]]:
         name = getattr(c.func, "id", None) or getattr(c.func, "attr", None)
         by_name.setdefault(name, []).append(c)
 
-    def sets(c: ast.Call, position, keyword) -> bool:
-        if any(k.arg in (keyword, None) for k in c.keywords):
+    def other(value, default) -> bool:
+        return ast.dump(value) != ast.dump(default)
+
+    def sets(c: ast.Call, position, keyword, default) -> bool:
+        if any(k.arg is None or (k.arg == keyword and other(k.value, default))
+               for k in c.keywords):
             return True
-        return position is not None and (
-            len(c.args) > position or any(isinstance(a, ast.Starred) for a in c.args)
-        )
+        if position is None:
+            return False
+        if any(isinstance(a, ast.Starred) for a in c.args[: position + 1]):
+            return True
+        return len(c.args) > position and other(c.args[position], default)
 
     options = list(_options())
     unset = [
         name
-        for name, callee, position, keyword in options
-        if not any(sets(c, position, keyword) for n in callee for c in by_name.get(n, ()))
+        for name, callee, position, keyword, default in options
+        if not any(
+            sets(c, position, keyword, default) for n in callee for c in by_name.get(n, ())
+        )
         and not any(name == k or name.startswith(k + ".") for k in kept)
     ]
     return len(options), unset

@@ -48,7 +48,7 @@ def test_frame_sample_plan(spark):
         "media_id",
         F.struct(F.col("duration").alias("duration_ms")).alias("meta"),
     )
-    got = [r.frame_ts_ms for r in frame_sample_plan(df, every_ms=1000).collect()]
+    got = [r.frame_ts_ms for r in frame_sample_plan(df).collect()]
     assert got == [0, 1000, 2000, 3000]
 
 
@@ -56,7 +56,7 @@ def test_windowed_counts_batch(spark, sf_dir):
     from dropbox_duckdb_playground_spark.catalog import load
 
     e = load(spark, sf_dir, "events")
-    out = windowed_counts(e, window="1 hour")
+    out = windowed_counts(e)
     row = out.orderBy("win", "event_type").first()
     assert row.n >= 1 and row.win.start is not None
 

@@ -2,11 +2,18 @@
 
 from __future__ import annotations
 
+import datetime
+import os
+import time
+from dataclasses import dataclass
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
 from dropbox_duckdb_playground_spark.engine import Engine
 from dropbox_duckdb_playground_spark.plans.pipeline import (
+    Node,
     Pipeline,
     PipelineWiringError,
     PyNode,
@@ -14,6 +21,7 @@ from dropbox_duckdb_playground_spark.plans.pipeline import (
     ValidateLinkIds,
     ValidationError,
     assert_frames_equal,
+    run_concurrently,
 )
 from dropbox_duckdb_playground_spark.streaming.incremental import IncrementalCache
 
@@ -127,3 +135,97 @@ def test_incremental_cache_cycle(spark, engine):
         keys=["k"],
     )
     assert dict((r.k, r.v) for r in merged.collect()) == {1: "A", 2: "b"}
+
+
+@dataclass
+class _Failing(Node):
+    """A validator (no output ids) that raises ``msg`` after ``delay``
+    seconds."""
+
+    msg: str
+    delay: float = 0.0
+
+    def run(self, engine: Engine) -> None:
+        time.sleep(self.delay)
+        raise ValidationError(self.msg)
+
+
+def test_failing_validator_leaves_no_saved_output(spark, engine, tmp_path):
+    engine.register("v_nodes", spark.createDataFrame([(1,)], ["node_id"]))
+    engine.register("v_links", spark.createDataFrame([(1, 99)], ["from_id", "to_id"]))
+    pipe = Pipeline(
+        [
+            SQLNode(sqls={"v_out": "SELECT * FROM v_nodes"}, input_ids=["v_nodes"]),
+            ValidateLinkIds(link_id="v_links", node_id="v_nodes"),
+            ValidateLinkIds(link_id="v_links", node_id="v_nodes", fks=["from_id"]),
+        ],
+        materialize=["v_out"],
+    )
+    with pytest.raises(ValidationError, match="missing"):
+        pipe.execute(engine)
+    assert not os.path.exists(tmp_path / "v_out.parquet")
+
+
+def test_lowest_index_validator_error_wins(engine):
+    """Both validators of a level run; the first in node order fails
+    last, and its error is the one raised."""
+    pipe = Pipeline([_Failing("first", delay=0.5), _Failing("second")])
+    with pytest.raises(ValidationError, match="^first$"):
+        pipe.execute(engine)
+
+
+def test_concurrent_saves_match_serial_saves(spark, tmp_path):
+    from tools.check import frame_digest
+
+    tables = {
+        "c_ints": spark.range(500).selectExpr("id", "id % 7 AS m"),
+        "c_strs": spark.range(300).selectExpr("id", "concat('s', id) AS s"),
+        "c_agg": spark.range(1000).groupBy((F.col("id") % 13).alias("g")).count(),
+    }
+    digests = []
+    for mode in ("serial", "concurrent"):
+        eng = Engine(spark=spark, root=str(tmp_path / mode))
+        for obj_id, df in tables.items():
+            eng.register(obj_id, df)
+        if mode == "serial":
+            for obj_id in tables:
+                eng.save(obj_id)
+        else:
+            Pipeline([], sources=list(tables), materialize=list(tables)).execute(eng)
+        digests.append([
+            frame_digest(spark.read.parquet(str(tmp_path / mode / f"{t}.parquet")).toPandas())
+            for t in tables
+        ])
+    assert digests[0] == digests[1]
+
+
+def test_helper_threads_inherit_the_job_group(spark, jobs_in_group):
+    """Jobs launched on the helper's threads belong to the caller's job
+    group, as the same jobs launched on the caller's thread do. (A plain
+    Python thread runs its jobs on a JVM thread that inherits nothing.)"""
+    thunks = [lambda: spark.range(10).count(), lambda: spark.range(20).count()]
+    serial = jobs_in_group("serial_thunks", lambda: [t() for t in thunks])
+    assert serial >= 2
+    assert jobs_in_group("helper_threads", lambda: run_concurrently(spark, thunks)) == serial
+
+
+def test_save_launches_only_the_write(spark, engine, jobs_in_group):
+    engine.register("s_one", spark.range(100).selectExpr("id", "id * 2 AS x"))
+    assert jobs_in_group("save_one", lambda: engine.save("s_one")) == 1
+    assert engine.table("s_one").count() == 100
+
+
+def test_saved_scan_schema_equals_the_inferred_one(spark, engine, tmp_path):
+    """The re-registered scan carries the schema just written, made
+    nullable as file sources read it: the same schema inference gives."""
+    df = spark.createDataFrame(
+        [(1, ("a", [1, 2]), Decimal("1.25"), datetime.datetime(2024, 1, 2, 3, 4, 5))],
+        "id long not null, s struct<name: string not null, xs: array<int>> not null, "
+        "d decimal(18,6), ts timestamp",
+    )
+    assert not df.schema["id"].nullable
+    engine.register("s_types", df)
+    out = engine.save("s_types")
+    assert engine.table("s_types").schema == spark.read.parquet(out).schema
+    engine.copy("s_types", "s_types_copy")
+    assert engine.table("s_types_copy").schema == spark.read.parquet(out).schema

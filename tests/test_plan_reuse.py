@@ -47,7 +47,7 @@ def test_hamming_pairs_plan_reads_checkpoint_not_parquet(spark, tmp_path):
     from dropbox_duckdb_playground_spark.operators import dedup as D
 
     d = _docs_parquet(spark, tmp_path)
-    plan = _final_plan(D.hamming_neardup_pairs(D.simhash(d), max_hamming=3))
+    plan = _final_plan(D.hamming_neardup_pairs(D.simhash(d)))
     assert plan.count("Scan parquet") == 0, plan
 
 
@@ -56,9 +56,9 @@ def test_lsh_pairs_plan_reads_checkpoint_not_parquet(spark, tmp_path):
 
     d = _docs_parquet(spark, tmp_path)
     sig = D.minhash_signatures(D.shingles(d, n=2))
-    plan = _final_plan(D.lsh_candidate_pairs(sig, num_perm=8, bands=4))
+    plan = _final_plan(D.lsh_candidate_pairs(sig))
     assert plan.count("Scan parquet") == 0, plan
-    plan = _final_plan(D.minhash_estimate_pairs(sig, num_perm=8, bands=4))
+    plan = _final_plan(D.minhash_estimate_pairs(sig))
     assert plan.count("Scan parquet") == 0, plan
 
 

@@ -339,24 +339,24 @@ def test_lsh_bucket_cap_is_a_pure_subset(spark, texts):
     rows = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     sh = D.shingles(df, n=2)
-    sig = D.minhash_signatures(sh, num_perm=8)
+    sig = D.minhash_signatures(sh)
     if not sig.take(1):
         return  # all-blank corpus: no signatures, nothing to assert
     full = {
         (r.a_id, r.b_id)
-        for r in D.lsh_candidate_pairs(sig, num_perm=8, bands=4).collect()
+        for r in D.lsh_candidate_pairs(sig).collect()
     }
     capped = {
         (r.a_id, r.b_id)
         for r in D.lsh_candidate_pairs(
-            sig, num_perm=8, bands=4, max_bucket_size=2
+            sig, max_bucket_size=2
         ).collect()
     }
     assert capped <= full
     huge_cap = {
         (r.a_id, r.b_id)
         for r in D.lsh_candidate_pairs(
-            sig, num_perm=8, bands=4, max_bucket_size=10_000
+            sig, max_bucket_size=10_000
         ).collect()
     }
     assert huge_cap == full

@@ -147,8 +147,8 @@ class TestPageRank:
 
     def test_rank_order_and_determinism(self, spark, chain):
         e, n = chain
-        r1 = {r.node: r.rank for r in pagerank(e, n, iterations=3).collect()}
-        r2 = {r.node: r.rank for r in pagerank(e, n, iterations=3).collect()}
+        r1 = {r.node: r.rank for r in pagerank(e, n).collect()}
+        r2 = {r.node: r.rank for r in pagerank(e, n).collect()}
         assert r1 == r2  # bit-identical, not approximately equal
         # c receives b's mass which receives a's: c > b > a == d? a and d
         # both have no in-edges; a has out-edges, d dangles — same rank.
@@ -157,7 +157,7 @@ class TestPageRank:
 
     def test_mass_approximately_conserved(self, spark, chain):
         e, n = chain
-        total = sum(r.rank for r in pagerank(e, n, iterations=3).collect())
+        total = sum(r.rank for r in pagerank(e, n).collect())
         # integer floor-division leaks at most a few units per node/step
         assert abs(total - 1_000_000_000_000) < 1_000_000
 
@@ -182,12 +182,12 @@ class TestPageRank:
         n = spark.createDataFrame(nodes, ["node"])
         small = {
             r.node: r.rank
-            for r in pagerank(e, n, iterations=3).collect()
+            for r in pagerank(e, n).collect()
         }
         monkeypatch.setattr(components, "BROADCAST_NODE_LIMIT", 0)
         forced_shuffle = {
             r.node: r.rank
-            for r in pagerank(e, n, iterations=3).collect()
+            for r in pagerank(e, n).collect()
         }
         assert small == forced_shuffle
 
@@ -209,7 +209,7 @@ def test_histogram_quantiles_within_one_bin_of_exact(spark):
 
     vals = [(float((i * 37) % 1000), "g1" if i % 2 else "g2") for i in range(500)]
     df = spark.createDataFrame(vals, "v double, grp string")
-    out = histogram_quantiles(df, value="v", group="grp", bins=64).collect()
+    out = histogram_quantiles(df, value="v", group="grp").collect()
     width = (999.0 - 0.0) / 64
     arr = {g: sorted(v for v, gg in vals if gg == g) for g in ("g1", "g2")}
     assert len(out) == 6
