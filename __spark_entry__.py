@@ -23,7 +23,7 @@ from dropbox_duckdb_playground_spark import catalog
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1-shape pricing summary) on sf0.001."""
-    return catalog.q01_pricing_summary(spark, "/root/testdata/sf0.001")
+    return catalog.queries()["q01_pricing_summary"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -12,7 +12,9 @@ fails the job.
 So :func:`materialize` picks one of two strategies from the session
 master (:func:`_resolve`):
 
-- ``local``    — master starts with ``local``:
+- ``local``    — master ``local`` or ``local[...]``, Spark's own
+                 ``SparkContext.isLocal`` rule (``local-cluster[...]``
+                 runs separate executor JVMs, so it is not local):
                  ``df.localCheckpoint(eager=True)`` (in-memory executor
                  blocks, no replication, no disk write).
 - ``reliable`` — any other master: ``df.checkpoint(eager=True)`` into
@@ -35,10 +37,10 @@ from dropbox_duckdb_playground_spark.session import scratch_root
 
 
 def _resolve(df: DataFrame) -> str:
-    """The strategy for ``df``'s session: ``local`` on a local master,
-    else ``reliable``."""
+    """The strategy for ``df``'s session: ``local`` when the executors are
+    the driver JVM, else ``reliable``."""
     master = df.sparkSession.conf.get("spark.master", "local")
-    return "local" if master.startswith("local") else "reliable"
+    return "local" if master == "local" or master.startswith("local[") else "reliable"
 
 
 def _checkpoint_dir(df: DataFrame) -> str:

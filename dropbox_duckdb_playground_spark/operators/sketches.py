@@ -36,9 +36,9 @@ from pyspark.sql import functions as F
 
 def _phash(col: Column, salt: str) -> Column:
     """md5-derived 60-bit non-negative hash, bit-identical in DuckDB
-    (catalog.DUCK_ID) — the only hash allowed in oracle-checked
+    (sql.dialect.DUCK_ID) — the only hash allowed in oracle-checked
     sketches (xxhash64 is engine-private and not DuckDB-expressible).
-    Composed natively; compiles to the same plan as catalog.SPARK_ID."""
+    Composed natively; compiles to the same plan as sql.dialect.SPARK_ID."""
     h = F.concat(F.lit(salt), col.cast("string"))
     return F.conv(F.substring(F.md5(h), 1, 15), 16, 10).cast("bigint")
 

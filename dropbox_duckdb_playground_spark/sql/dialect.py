@@ -14,6 +14,14 @@ DuckDB-isms Spark SQL lacks (SURVEY §8.1-8.2):
    reference examples/meta.py:60 and 10+ sites; we keep the first row
    under an explicit total order so results are reproducible/testable)
 
+The catalog's oracle texts add four more, so a relational row can run
+its one DuckDB text on both engines (rewritten outside string literals):
+
+4. ``a // b``                -> ``a div b``
+5. ``VARCHAR``               -> ``STRING``
+6. ``json_extract_string(``  -> ``get_json_object(``
+7. ``DUCK_ID`` (the portable md5 id) -> ``SPARK_ID``, the same value
+
 This is intentionally a *string-level* shim for the patterns the
 reference emits, not a general SQL parser: Catalyst is the parser.
 """
@@ -21,6 +29,10 @@ reference emits, not a general SQL parser: Catalyst is the parser.
 from __future__ import annotations
 
 import re
+
+# Portable 60-bit id from a string expression (same value in Spark & DuckDB).
+SPARK_ID = "CAST(conv(substr(md5({x}), 1, 15), 16, 10) AS BIGINT)"
+DUCK_ID = "(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
 
 _HASH_RE = re.compile(r"\bHASH\s*\(", re.IGNORECASE)
 _EXCLUDE_RE = re.compile(r"(\*\s*)EXCLUDE\s*(\()", re.IGNORECASE)
@@ -252,8 +264,46 @@ def _rewrite_distinct_on(sql: str) -> str:
         sql = sql[: m.start()] + replacement + sql[end:]
 
 
+_QUOTED_RE = re.compile(r"('[^']*'|\"[^\"]*\")")
+_UNQUOTED_REWRITES = [
+    # Exact only for integer operands, the only ones the catalog divides
+    # this way: DuckDB 1.0 gives 7.5 // 2 = 3.75, Spark's div gives 3.
+    (re.compile(r"\s*//\s*"), " div "),
+    (re.compile(r"\bVARCHAR\b", re.IGNORECASE), "STRING"),
+    (re.compile(r"\bjson_extract_string\s*\(", re.IGNORECASE), "get_json_object("),
+]
+_DUCK_ID_HEAD, _DUCK_ID_TAIL = DUCK_ID.split("{x}")
+
+
+def _rewrite_unquoted(sql: str) -> str:
+    """Apply ``_UNQUOTED_REWRITES`` to the text outside quoted literals
+    and identifiers, so ``'http://x'`` survives."""
+    parts = _QUOTED_RE.split(sql)  # quoted text at the odd indices
+    for i in range(0, len(parts), 2):
+        for pat, repl in _UNQUOTED_REWRITES:
+            parts[i] = pat.sub(repl, parts[i])
+    return "".join(parts)
+
+
+def _rewrite_duck_id(sql: str) -> str:
+    """``DUCK_ID.format(x=e)`` -> ``SPARK_ID.format(x=e)``, for the exact
+    shape only; ``e`` may hold nested parentheses and literals."""
+    pos = 0
+    while (start := sql.find(_DUCK_ID_HEAD, pos)) >= 0:
+        md5_open = start + len(_DUCK_ID_HEAD) - 1
+        close = _match_paren(sql, md5_open)
+        if not sql.startswith(_DUCK_ID_TAIL, close):
+            pos = start + 1
+            continue
+        spark_id = SPARK_ID.format(x=sql[md5_open + 1 : close])
+        sql = sql[:start] + spark_id + sql[close + len(_DUCK_ID_TAIL) :]
+        pos = start + len(spark_id)
+    return sql
+
+
 def translate(sql: str) -> str:
     """Translate reference-dialect (DuckDB) SQL into Spark SQL."""
+    sql = _rewrite_duck_id(_rewrite_unquoted(sql))
     sql = _HASH_RE.sub("xxhash64(", sql)
     sql = _EXCLUDE_RE.sub(r"\1EXCEPT \2", sql)
     sql = _rewrite_distinct_on(sql)

@@ -26,11 +26,9 @@ import duckdb
 import pytest
 from pyspark.sql.types import ArrayType, MapType
 
+from dropbox_duckdb_playground_spark.catalog import TABLES
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 needs_data = pytest.mark.skipif(
     not os.path.isdir(SF_DIR), reason="driver-generated testdata absent"
@@ -95,6 +93,34 @@ def test_no_oracle_emits_list_or_map():
         f"oracle emits unsortable composite columns: {offenders} — "
         "serialize with array_to_string(...)"
     )
+
+
+@needs_data
+def test_sql_rows_give_their_oracle_digest_under_ansi(spark):
+    """A row registered with ``sql_row`` has no DataFrame form: Spark runs
+    its oracle text through the dialect shim. Compare each with DuckDB's
+    digest, ANSI-on as the driver runs, so a broken rewrite fails here."""
+    from dropbox_duckdb_playground_spark import catalog
+    from tools.check import frame_digest, oracle_connection
+
+    rows = {
+        name: qd
+        for name, qd in catalog.REGISTRY.items()
+        if getattr(qd.fn, "func", None) is catalog.run_sql
+    }
+    assert len(rows) >= 30
+    con = oracle_connection(SF_DIR)
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    differ = []
+    try:
+        for name, qd in rows.items():
+            got = frame_digest(qd.fn(spark, SF_DIR).toPandas())
+            if got != frame_digest(con.execute(qd.oracle).df()):
+                differ.append(name)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+    assert not differ, f"Spark's digest of the oracle text differs: {differ}"
 
 
 def test_query_order_is_frozen():

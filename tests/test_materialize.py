@@ -29,8 +29,20 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_auto_resolves_local_on_local_master(df):
+def test_auto_resolves_local_on_local_master(df, monkeypatch):
     assert mat._resolve(df) == "local"
+    conf = df.sparkSession.conf
+    get = conf.get
+    for master, strategy in [
+        ("local", "local"),
+        ("local[4,4]", "local"),
+        ("local-cluster[2,1,1024]", "reliable"),
+        ("spark://host:7077", "reliable"),
+    ]:
+        monkeypatch.setattr(
+            conf, "get", lambda k, d=None, m=master: m if k == "spark.master" else get(k, d)
+        )
+        assert mat._resolve(df) == strategy, master
 
 
 def test_local_mode_roundtrip(df, monkeypatch):

@@ -289,6 +289,22 @@ def test_ab_unresolved_forms_exit_2_without_spark(monkeypatch, capsys):
     assert all(f in err for f in forms[1:])
 
 
+def test_ab_file_form_may_define_a_dataclass(tmp_path, monkeypatch):
+    """A ``file.py:function`` form loads a module that defines a dataclass
+    under postponed annotations, as ``catalog.py`` does."""
+    import ab
+
+    src = tmp_path / "forms_dc.py"
+    src.write_text(
+        "from __future__ import annotations\n"
+        "from dataclasses import dataclass\n\n\n"
+        "@dataclass\nclass Row:\n    x: int\n\n\n"
+        "def form(spark, sf_dir):\n    return Row(1)\n"
+    )
+    monkeypatch.delitem(sys.modules, "forms_dc", raising=False)
+    assert ab._function(f"{src}:form")(None, None).x == 1
+
+
 def test_ab_smoke(spark, monkeypatch, capsys):
     """Same output through a catalog name and a module:function form ->
     one JSON line; differing outputs -> exit 1 with nothing timed."""
@@ -302,8 +318,8 @@ def test_ab_smoke(spark, monkeypatch, capsys):
         rc = ab.main(
             [
                 "--sf", sf, "--pairs", "2",
-                "q01_pricing_summary",
-                "dropbox_duckdb_playground_spark.catalog:q01_pricing_summary",
+                "q03_latest_order",
+                "dropbox_duckdb_playground_spark.catalog:q03_latest_order",
             ]
         )
         out = capsys.readouterr().out.strip().splitlines()

@@ -83,6 +83,8 @@ def _function(form: str):
             name = os.path.splitext(os.path.basename(target))[0]
             spec = importlib.util.spec_from_file_location(name, target)
             mod = importlib.util.module_from_spec(spec)
+            # dataclasses look their module up in sys.modules
+            sys.modules[name] = mod
             spec.loader.exec_module(mod)
         else:
             mod = importlib.import_module(target)

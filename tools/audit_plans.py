@@ -68,9 +68,6 @@ ALLOWED = {
     # same scalar-subquery idiom as q68: the broadcast side is the
     # 1-row global average-balance aggregate (TPC-H Q22 shape).
     "q76_dormant_customers": "cartesian",
-    # same scalar-subquery idiom as q68: the broadcast side is the
-    # 1-row global max-revenue aggregate.
-    "q85_tpch_q15": "cartesian",
     # reuses q28's brute-force exact-kNN baseline (bounded query block
     # broadcast x corpus); q36 LSH / q62 IVF are the scale paths.
     "q91_knn_classify": "cartesian",
@@ -99,10 +96,6 @@ ALLOWED = {
     # q116 docstring), i.e. the serialized rows cannot grow with corpus
     # size, only with vocabulary^2 after frequency pruning.
     "q116_bigram_pmi": ("cartesian", "global_window"),
-    # scalar-subquery idiom, six times over: each FK edge crossJoins
-    # its 1-row row-count aggregate with its 1-row orphan-count
-    # aggregate to form one report row.
-    "q119_fk_integrity": "cartesian",
 }
 
 

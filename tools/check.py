@@ -40,10 +40,7 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from dropbox_duckdb_playground_spark.catalog import TABLES  # noqa: E402
 
 
 def norm_cell(v) -> str:
@@ -176,7 +173,7 @@ def main(argv: list[str] | None = None) -> int:
                     i = neq.idxmax()
                     print(f"  first diff row {i}:\n   spark : {a.iloc[i].to_dict()}\n   oracle: {b.iloc[i].to_dict()}")
             n_fail += 1
-    print(f"\n{n_pass} pass, {n_fail} fail")
+    print(f"\n{n_pass} pass, {n_fail} fail on {spark.conf.get('spark.master')}")
     return 1 if n_fail else 0
 
 
